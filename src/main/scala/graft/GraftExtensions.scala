@@ -17,11 +17,21 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * analysis, so the functions resolve in plain SQL, views, and thrift-server
   * sessions alike.
   *
-  * Injected functions:
+  * Injected functions (21) — the only registration path; library code that
+  * must also run without the extension builds its Columns from the
+  * expression classes instead (e.g. [[graft.functions.BloomSketch]]):
   *  - `cosine_sim(array<double>, array<double>)` — codegen'd cosine
   *    similarity ([[graft.functions.CosineSim]])
   *  - `hll_approx(col)` — HyperLogLog distinct-count sketch aggregate
   *    ([[graft.functions.HllSketchAgg]])
+  *  - `hll_sketch`, `hll_union`, `hll_estimate`, `hll_union_pair` —
+  *    mergeable HLL sketch columns
+  *  - `hist_sketch`, `hist_union`, `hist_quantile` — mergeable histograms
+  *  - `freq_sketch`, `freq_union`, `freq_items` — Misra-Gries heavy hitters
+  *  - `bloom_sketch`, `bloom_union`, `bloom_contains` — Bloom filters
+  *  - `bitmap_sketch`, `bitmap_union`, `bitmap_count`, `bitmap_and_pair`,
+  *    `bitmap_contains` — exact bitmap sets
+  *  - `lev_bounded(a, b, k)` — banded edit distance
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

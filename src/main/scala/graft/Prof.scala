@@ -74,11 +74,7 @@ object Prof {
         case (tag, n) =>
           val root =
             s"${System.getProperty("java.io.tmpdir")}/graft_prof_kcdc_$tag/t"
-          def rmrf(f: java.io.File): Unit = {
-            val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf)
-            f.delete(); ()
-          }
-          rmrf(new java.io.File(s"${System.getProperty("java.io.tmpdir")}/graft_prof_kcdc_$tag"))
+          Tables.rmrf(s"${System.getProperty("java.io.tmpdir")}/graft_prof_kcdc_$tag")
           val t0 = System.nanoTime()
           SnapshotTable.commit(
             spark.range(n).select(col("id").as("k"), (col("id") % 997).cast("double").as("v"))
@@ -151,13 +147,8 @@ object Prof {
       // plus a checkpoint-manager I/O microbench.
       import org.apache.spark.sql.streaming.{OutputMode, Trigger}
       val dir = sfDir
-      val src = {
-        // same chunked source the i-band uses
-        val m = graft.operators.StreamingQueries.getClass.getDeclaredMethods
-          .find(_.getName == "chunkedSource").get
-        m.setAccessible(true)
-        m.invoke(graft.operators.StreamingQueries, spark, dir).asInstanceOf[String]
-      }
+      // same chunked source the i-band uses
+      val src = graft.operators.StreamingQueries.eventsById(spark, dir)
       val chunkSchema =
         "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE, props STRING"
       def agg(df: org.apache.spark.sql.DataFrame) = df
@@ -302,10 +293,7 @@ object Prof {
       val key = Tables.pathKey(sfDir)
       (1 to 2).foreach { pass =>
         val root = s"${System.getProperty("java.io.tmpdir")}/graft_prof_m45_$pass"
-        def rmrf(f: java.io.File): Unit = {
-          val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-        }
-        rmrf(new java.io.File(root))
+        Tables.rmrf(root)
         val name = s"m45prof_$pass"
         GraftDmlRegistry.unregister(name)
         t.orders.select(col("o_orderkey"), col("o_totalprice"))

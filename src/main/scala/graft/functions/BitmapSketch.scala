@@ -1,7 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.classic.GraftSqlBridge
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -208,16 +209,16 @@ object BitmapSketch {
     byteIdx < bm.length && (bm(byteIdx.toInt) & (1 << (v & 7)).toByte) != 0
   }
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bitmap_sketch", exprs => BitmapSketchAgg(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bitmap_union", exprs => BitmapUnionAgg(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bitmap_count", exprs => BitmapCount(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bitmap_and_pair", exprs => BitmapAndPair(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bitmap_contains", exprs => BitmapContains(exprs.head, exprs(1)), "built-in")
-  }
+  /** `bitmap_sketch` / `bitmap_union` / `bitmap_count` / `bitmap_contains`
+    * as Columns built from the expression classes: library code needs no
+    * registered function, so it works in a session built without
+    * [[graft.GraftExtensions]]. */
+  def sketchColumn(c: Column): Column =
+    GraftSqlBridge.column(BitmapSketchAgg(GraftSqlBridge.expression(c)).toAggregateExpression())
+  def unionColumn(bm: Column): Column =
+    GraftSqlBridge.column(BitmapUnionAgg(GraftSqlBridge.expression(bm)).toAggregateExpression())
+  def countColumn(bm: Column): Column =
+    GraftSqlBridge.column(BitmapCount(GraftSqlBridge.expression(bm)))
+  def containsColumn(bm: Column, v: Column): Column =
+    GraftSqlBridge.column(BitmapContains(GraftSqlBridge.expression(bm), GraftSqlBridge.expression(v)))
 }

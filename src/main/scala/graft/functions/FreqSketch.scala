@@ -5,7 +5,6 @@ import java.nio.charset.StandardCharsets
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -77,15 +76,6 @@ object FreqSketch {
       m.update(new String(arr, StandardCharsets.UTF_8), b.getLong())
     }
     (m, k)
-  }
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "freq_sketch", exprs => FreqSketchAgg(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "freq_union", exprs => FreqUnionAgg(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "freq_items", exprs => FreqItems(exprs.head), "built-in")
   }
 }
 

@@ -2,7 +2,6 @@ package graft.functions
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -77,17 +76,6 @@ object HistSketch {
       i += 1
     }
     lo + n * w
-  }
-
-  /** Session-local SQL registration (library path: GraftExtensions). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hist_sketch", exprs => HistSketchAgg(exprs.head, exprs(1), exprs(2), exprs(3)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hist_union", exprs => HistUnionAgg(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hist_quantile", exprs => HistQuantile(exprs.head, exprs(1)), "built-in")
   }
 }
 

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -177,19 +176,4 @@ case class HllUnionPair(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): HllUnionPair =
     copy(left = newLeft, right = newRight)
-}
-
-object HllSketch {
-  /** Session-local SQL registration of the sketch-column functions (the
-    * library path is `spark.sql.extensions=graft.GraftExtensions`). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hll_sketch", exprs => HllSketchBinAgg(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hll_union", exprs => HllUnionAgg(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hll_estimate", exprs => HllEstimate(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hll_union_pair", exprs => HllUnionPair(exprs.head, exprs(1)), "built-in")
-  }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -59,12 +58,4 @@ case class HllSketchAgg(
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildInternal(newChild: Expression): HllSketchAgg =
     copy(child = newChild)
-}
-
-object HllSketchAgg {
-  /** Make `hll_approx(x)` callable from SQL/expr in this session (the
-    * analyzer wraps a bare AggregateFunction in an AggregateExpression). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hll_approx", exprs => HllSketchAgg(exprs.head), "built-in")
 }

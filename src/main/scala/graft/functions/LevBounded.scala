@@ -64,10 +64,6 @@ object LevKernel {
     }
     math.min(prev(m), inf)
   }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lev_bounded", exprs => LevBounded(exprs.head, exprs(1), exprs(2)), "built-in")
 }
 
 /** `lev_bounded(a, b, k)` — codegen'd (static kernel call), stays inside

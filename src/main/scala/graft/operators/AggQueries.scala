@@ -67,7 +67,6 @@ object AggQueries extends QueryModule {
     // crosses the shuffle, register-max merge. Approximate → rows-only;
     // PropertySpec asserts error vs exact within tolerance.
     "h3_udaf_hll" -> ((s, dir) => {
-      graft.functions.HllSketchAgg.register(s)
       val t = Tables(s, dir)
       t.events.groupBy(col("event_type"))
         .agg(expr("hll_approx(user_id)").as("approx_users"))
@@ -82,7 +81,6 @@ object AggQueries extends QueryModule {
     // hll_approx over the raw rows (register-max is associative), which
     // SketchSpec asserts; approximate → rows-only.
     "h5_sketch_reagg" -> ((s, dir) => {
-      graft.functions.HllSketch.register(s)
       val t = Tables(s, dir)
       val daily = t.events
         .withColumn("day", to_date(col("ts")))
@@ -103,7 +101,6 @@ object AggQueries extends QueryModule {
     // hll query it is rows-only; SketchSpec bounds it against the exact
     // intersection (≤5% relative on the fixture).
     "h6_sketch_intersect" -> ((s, dir) => {
-      graft.functions.HllSketch.register(s)
       val t = Tables(s, dir)
       t.events
         .withColumn("day", to_date(col("ts")))
@@ -130,7 +127,6 @@ object AggQueries extends QueryModule {
     // bit per id in a bounded dense id space (dimension keys); unbounded or
     // hashed spaces stay on HLL.
     "h7_sketch_bitmap_exact" -> ((s, dir) => {
-      graft.functions.BitmapSketch.register(s)
       val t = Tables(s, dir)
       val daily = t.events
         .withColumn("day", to_date(col("ts")))
@@ -147,7 +143,6 @@ object AggQueries extends QueryModule {
     // approximate by inclusion-exclusion (and which therefore had no
     // oracle; this one hash-matches the exact SQL intersection).
     "h8_sketch_bitmap_intersect" -> ((s, dir) => {
-      graft.functions.BitmapSketch.register(s)
       val t = Tables(s, dir)
       t.events
         .withColumn("day", to_date(col("ts")))
@@ -170,7 +165,6 @@ object AggQueries extends QueryModule {
     // 820-byte blobs union per event_type — the persistable quantile-rollup
     // a 100 TB pipeline stores instead of raw values.
     "d14_hist_quantile" -> ((s, dir) => {
-      graft.functions.HistSketch.register(s)
       val t = Tables(s, dir)
       val daily = t.events
         .withColumn("day", to_date(col("ts")))

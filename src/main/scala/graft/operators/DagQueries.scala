@@ -93,8 +93,7 @@ object DagQueries extends QueryModule {
     // the restart-after-crash / backfill-only-what-changed pattern every
     // production orchestrator needs.
     "j5_dag_incremental" -> ((s, dir) => {
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_incr_" +
-        s"${Tables.pathKey(dir)}_${System.nanoTime()}"
+      val base = Tables.scratch("incr", dir) + s"_${System.nanoTime()}"
       val computes = new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicInteger]()
       def matJob(name: String, deps: Seq[String])(
           body: (org.apache.spark.sql.SparkSession, Map[String, org.apache.spark.sql.DataFrame]) => org.apache.spark.sql.DataFrame): Job =
@@ -126,12 +125,7 @@ object DagQueries extends QueryModule {
       mk().run(s, parallelism = 2)
       // the result derives from the local counters, not the parquet sinks —
       // delete the per-invocation tmp output so repeated runs don't leak
-      def rmrf(f: java.io.File): Unit = {
-        val cs = f.listFiles()
-        if (cs != null) cs.foreach(rmrf)
-        f.delete(); ()
-      }
-      rmrf(new java.io.File(base))
+      Tables.rmrf(base)
       val spark = s
       import spark.implicits._
       afterRun1.keys.toSeq.sorted.map { n =>
@@ -154,8 +148,7 @@ object DagQueries extends QueryModule {
     // always sees a complete version.
     "j6_dag_snapshot_incremental" -> ((s, dir) => {
       import graft.sources.SnapshotTable
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_snapdag_" +
-        s"${Tables.pathKey(dir)}_${System.nanoTime()}"
+      val base = Tables.scratch("snapdag", dir) + s"_${System.nanoTime()}"
       val srcRoot = s"$base/src_customer"
       val computes = new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicInteger]()
       // a node recomputes iff its input-version signature differs from the
@@ -212,10 +205,7 @@ object DagQueries extends QueryModule {
       val want = cust.groupBy(col("c_mktsegment")).agg(count(lit(1)).as("n"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       require(got == want, s"incremental result diverged: $got vs $want")
-      def rmrf(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-      }
-      rmrf(new java.io.File(base))
+      Tables.rmrf(base)
       ledger.orderBy("job")
     }),
 
@@ -368,8 +358,7 @@ object DagQueries extends QueryModule {
     // reads real data. At 100 TB the poll is a partition-listing against
     // the warehouse catalog — cost independent of data volume.
     "j10_dag_sensor_wait" -> ((s, dir) => {
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_sensor_" +
-        s"${Tables.pathKey(dir)}_${System.nanoTime()}"
+      val base = Tables.scratch("sensor", dir) + s"_${System.nanoTime()}"
       new java.io.File(base).mkdirs()
       val pokes = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
       // the "external system": delivers the partition when the sensor has
@@ -405,10 +394,7 @@ object DagQueries extends QueryModule {
           Tables(sp, dir).region)
       ))
       val (_, runs) = dag.run(s, parallelism = 2)
-      def rmrf(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-      }
-      rmrf(new java.io.File(base))
+      Tables.rmrf(base)
       val spark = s
       import spark.implicits._
       runs.map { r =>
@@ -701,11 +687,8 @@ object DagQueries extends QueryModule {
         // depends-on-past; that behavior is graded by j15 and the leg was
         // trimmed with it — see the dates comment above)
         val pokes = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_j16_${Tables.pathKey(dir)}_$date"
-        def rmrf(f: java.io.File): Unit = {
-          val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-        }
-        rmrf(new java.io.File(base))
+        val base = Tables.scratch("j16", dir) + s"_$date"
+        Tables.rmrf(base)
         val jobs = (etl ++ adhoc).map {
           case "sensor_docs" => Job("sensor_docs", Nil, 0, (sp, _) => {
             var n = 0
@@ -735,7 +718,7 @@ object DagQueries extends QueryModule {
             0, (sp, _) => q(name)(sp, dir))
         }
         val (dfs, runs) = new Dag(jobs).run(s, parallelism = 3)
-        rmrf(new java.io.File(base))
+        Tables.rmrf(base)
         runs.map { r =>
           (java.sql.Date.valueOf(date), r.name, pool(r.name), r.status,
             r.attempts, dfs.contains(r.name),
@@ -782,11 +765,8 @@ object DagQueries extends QueryModule {
             n -> (if (i == 0) Seq.empty[String] else Seq(sb(i - 1))) }
         }.toMap
       val dirty = Set("b1_project", "f5_fn_string", "d1_agg_hash")
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_j17_${Tables.pathKey(dir)}"
-      def rmrf(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-      }
-      rmrf(new java.io.File(base))
+      val base = Tables.scratch("j17", dir)
+      Tables.rmrf(base)
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(base))
       def marker(n: String) = java.nio.file.Paths.get(base, s"$n.fresh")
       // "yesterday's run" left every output current except the dirty three
@@ -817,7 +797,7 @@ object DagQueries extends QueryModule {
       // object, as in j16) prices the plan; the pool just drains 300+
       // metadata-read skip bodies without queueing behind each other
       val (dfs, runs) = new Dag(jobs).run(s, parallelism = 12)
-      rmrf(new java.io.File(base))
+      Tables.rmrf(base)
       // modeled fair-share start ticks: per-pool FIFO in name order, the
       // heavy pool holding 2 of the 3 modeled slots
       val byPool = names.groupBy(pool)

@@ -17,12 +17,6 @@ import org.apache.spark.sql.expressions.Window
   */
 object JoinQueries extends QueryModule {
 
-  // Keyed by sfDir so concurrent Verify/Bench runs at different scale
-  // factors can't race on the same materialized layouts (same convention
-  // as ScanFilterQueries.tmp).
-  private def tmp(name: String, dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_${name}_${Tables.pathKey(dir)}"
-
   val queries: Seq[(String, QFn)] = Seq(
     // C1: dim-to-fact equi-join; dim side broadcast (no shuffle of orders).
     "c1_join_broadcast" -> ((s, dir) => {
@@ -168,7 +162,7 @@ object JoinQueries extends QueryModule {
     // and a pure local merge per bucket.
     "c12_join_bucketed" -> ((s, dir) => {
       val t = Tables(s, dir)
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_bucketed_${Tables.pathKey(dir)}"
+      val base = Tables.scratch("bucketed", dir)
       def materialize(name: String, df: org.apache.spark.sql.DataFrame, key: String): String = {
         val tbl = s"graft_b_${name}_${Tables.pathKey(dir)}"
         if (!s.catalog.tableExists(tbl)) {
@@ -458,8 +452,8 @@ object JoinQueries extends QueryModule {
     // distinct key, so the inner join duplicates nothing).
     "c20_join_dpp" -> ((s, dir) => {
       val t = Tables(s, dir)
-      val factPath = tmp("orders_byyear", dir)
-      val dimPath = tmp("year_dim", dir)
+      val factPath = Tables.scratch("orders_byyear", dir)
+      val dimPath = Tables.scratch("year_dim", dir)
       if (!new java.io.File(s"$factPath/_SUCCESS").exists()) {
         t.orders.withColumn("o_year", year(col("o_orderdate")))
           .write.mode("overwrite").partitionBy("o_year").parquet(factPath)

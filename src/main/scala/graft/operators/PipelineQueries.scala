@@ -48,8 +48,7 @@ object PipelineQueries extends QueryModule {
     import graft.sources.SnapshotTable
     val t = Tables(s, dir)
     val bdocs = t.documents.filter(col("doc_id") < BenchmarkK)
-    val idxRoot = s"${System.getProperty("java.io.tmpdir")}/graft_benchidx_" +
-      s"${Tables.pathKey(dir)}"
+    val idxRoot = Tables.scratch("benchidx", dir)
     // CRC job memoized per (session, root, source-files size+mtime) — r22,
     // see Tables.memoFingerprint
     val fingerprint = Tables.memoFingerprint(bdocs, s"benchidx:$idxRoot") {
@@ -101,7 +100,6 @@ object PipelineQueries extends QueryModule {
     // instead re-materializes the 128 KiB binary per probe row: measured
     // 10× slower at sf0.1 — see BloomSketch.containsColumn.)
     "g27_contamination_bloom" -> ((s, dir) => {
-      graft.functions.BloomSketch.register(s)
       val t = Tables(s, dir)
       val bench = benchShingleIndex(s, dir).select(col("sh")).distinct()
       val blob = bench.agg(expr("bloom_sketch(sh, 1048576, 5)").as("bsk"))
@@ -347,7 +345,6 @@ object PipelineQueries extends QueryModule {
     // identical to g30's. Same de-skewed FuzzyBlocking join shape; this is
     // the kernel + blocking a 100 TB fuzzy dedup actually runs.
     "g30b_fuzzy_pairs_banded" -> ((s, dir) => {
-      graft.functions.LevKernel.register(s)
       val t = Tables(s, dir)
       val docs = t.documents.select(col("doc_id"), substring(col("text"), 1, 20).as("p"))
       import org.apache.spark.sql.classic.GraftSqlBridge
@@ -717,7 +714,6 @@ object PipelineQueries extends QueryModule {
     // scan here); the fusion is a 20∪20-row full-outer join — driver-free,
     // metadata-scale.
     "g74_hybrid_rrf" -> ((s, dir) => {
-      graft.functions.CosineSim.register(s)
       val spark = s
       import spark.implicits._
       val t = Tables(s, dir)

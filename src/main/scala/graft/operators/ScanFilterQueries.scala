@@ -10,11 +10,6 @@ import org.apache.spark.sql.functions._
   */
 object ScanFilterQueries extends QueryModule {
 
-  // Keyed by the sf dir so concurrent Verify/Bench runs at different scale
-  // factors can't race on the same round-trip directories (ADVICE r1).
-  private def tmp(name: String, dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_${name}_${Tables.pathKey(dir)}"
-
   /** The Kafka-shaped [[graft.sources.GraftLog]] fixture: events keyed into
     * 4 log partitions by user_id % 4, per-partition offsets following
     * event_id order — so offsets, record payloads, and (capped) micro-batch
@@ -33,17 +28,8 @@ object ScanFilterQueries extends QueryModule {
     // scaling runs set spark.graft.logPartitions=16 to demonstrate the
     // batch-read wall dropping with partition count (SCALING_r18 §item 7).
     val nParts = s.conf.get("spark.graft.logPartitions", "4").toInt
-    val root = tmp(s"log_src${if (nParts == 4) "" else s"_p$nParts"}", dir)
-    val ready = Paths.get(root, "_ready")
-    val src = new java.io.File(s"$dir/events.parquet")
-    val fingerprint = s"${src.length()}:${src.lastModified()}:p$nParts"
-    val fresh = Files.exists(ready) &&
-      new String(Files.readAllBytes(ready), "UTF-8").trim == fingerprint
-    if (!fresh) {
-      def rmrf(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-      }
-      rmrf(new java.io.File(root))
+    val root = Tables.scratch(s"log_src${if (nParts == 4) "" else s"_p$nParts"}", dir)
+    Tables.staged(root, s"${Tables.stamp(s"$dir/events.parquet")}:p$nParts") {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("p").orderBy("event_id")
       val ev = Tables(s, dir).events
@@ -66,12 +52,9 @@ object ScanFilterQueries extends QueryModule {
           StandardCopyOption.REPLACE_EXISTING)
         Files.write(Paths.get(root, s"p=$p", "_end"),
           part.count().toString.getBytes("UTF-8"))
-        rmrf(new java.io.File(stage))
+        Tables.rmrf(stage)
       }
-      Files.write(ready, fingerprint.getBytes("UTF-8"))
-      ()
     }
-    root
   }
 
   val queries: Seq[(String, QFn)] = Seq(
@@ -91,7 +74,7 @@ object ScanFilterQueries extends QueryModule {
     // lossless for these types).
     "a3_scan_csv" -> ((s, dir) => {
       val t = Tables(s, dir)
-      val path = tmp("csv_region", dir)
+      val path = Tables.scratch("csv_region", dir)
       t.region.coalesce(1).write.mode("overwrite").option("header", "true").csv(path)
       s.read.schema("r_regionkey INT, r_name STRING")
         .option("header", "true").csv(path)
@@ -107,18 +90,16 @@ object ScanFilterQueries extends QueryModule {
     // checksum; oracle is the known VALUES row (the fixture is
     // synthesized in-query, deterministically).
     "a13_scan_corrupt_records" -> ((s, dir) => {
-      val path = tmp("csv_corrupt", dir)
+      val path = Tables.scratch("csv_corrupt", dir)
       val lines = (0 until 50).map { i =>
         if (i % 10 == 7) s"$i,not_a_number"   // type-corrupt value
         else if (i % 10 == 3) s"$i"           // ragged: missing column
         else s"$i,${i * 2}"
       }
-      val p = java.nio.file.Paths.get(path)
-      if (!java.nio.file.Files.exists(p.resolve("_ready"))) {
-        java.nio.file.Files.createDirectories(p)
-        java.nio.file.Files.write(p.resolve("data.csv"),
-          lines.mkString("\n").getBytes("UTF-8"))
-        java.nio.file.Files.createFile(p.resolve("_ready"))
+      val csv = lines.mkString("\n")
+      Tables.staged(path, Integer.toHexString(csv.hashCode)) {
+        java.nio.file.Files.write(java.nio.file.Paths.get(path, "data.csv"),
+          csv.getBytes("UTF-8"))
       }
       s.read
         .schema("id INT, v INT, _corrupt_record STRING")
@@ -139,16 +120,13 @@ object ScanFilterQueries extends QueryModule {
     // ANALYZE fails loudly rather than passing as a plain scan.
     "a14_catalog_table" -> ((s, dir) => {
       val db = s"graft_cat_${Tables.pathKey(dir)}"
-      val loc = tmp("catalog_db", dir)
+      val loc = Tables.scratch("catalog_db", dir)
       s.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$loc'")
       s.sql(s"DROP TABLE IF EXISTS $db.orders_managed")
       // the in-memory catalog forgets tables across JVMs but their FILES
       // survive — clear the managed location or a fresh session's
       // saveAsTable dies with LOCATION_ALREADY_EXISTS
-      def rmrf(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-      }
-      rmrf(new java.io.File(s"$loc/orders_managed"))
+      Tables.rmrf(s"$loc/orders_managed")
       val t = Tables(s, dir)
       t.orders.filter(col("o_orderkey") % 11 === 0)
         .write.mode("overwrite").saveAsTable(s"$db.orders_managed")
@@ -170,7 +148,7 @@ object ScanFilterQueries extends QueryModule {
     // A3b: JSON round-trip over nation.
     "a3b_scan_json" -> ((s, dir) => {
       val t = Tables(s, dir)
-      val path = tmp("json_nation", dir)
+      val path = Tables.scratch("json_nation", dir)
       t.nation.coalesce(1).write.mode("overwrite").json(path)
       s.read.schema("n_nationkey INT, n_name STRING, n_regionkey INT").json(path)
         .orderBy("n_nationkey")
@@ -180,7 +158,7 @@ object ScanFilterQueries extends QueryModule {
     // parquet (round-trip is lossless for these types).
     "a3c_scan_orc" -> ((s, dir) => {
       val t = Tables(s, dir)
-      val path = tmp("orc_nation", dir)
+      val path = Tables.scratch("orc_nation", dir)
       t.nation.coalesce(1).write.mode("overwrite").orc(path)
       s.read.orc(path).orderBy("n_nationkey")
     }),
@@ -189,7 +167,7 @@ object ScanFilterQueries extends QueryModule {
     // column per line), the shape crawled corpora arrive in.
     "a3d_scan_text" -> ((s, dir) => {
       val t = Tables(s, dir)
-      val path = tmp("text_docs", dir)
+      val path = Tables.scratch("text_docs", dir)
       t.documents.select(col("text")).coalesce(1)
         .write.mode("overwrite").text(path)
       s.read.text(path).orderBy("value")
@@ -201,7 +179,7 @@ object ScanFilterQueries extends QueryModule {
     // original parquet (round-trip is lossless for these types).
     "a3e_scan_xml" -> ((s, dir) => {
       val t = Tables(s, dir)
-      val path = tmp("xml_nation", dir)
+      val path = Tables.scratch("xml_nation", dir)
       t.nation.coalesce(1).write.mode("overwrite")
         .option("rowTag", "nation").option("rootTag", "nations")
         .format("xml").save(path)
@@ -238,7 +216,7 @@ object ScanFilterQueries extends QueryModule {
     // A4: parquet sink round-trip (write → re-read → aggregate).
     "a4_sink_parquet_roundtrip" -> ((s, dir) => {
       val t = Tables(s, dir)
-      val path = tmp("sink_orders", dir)
+      val path = Tables.scratch("sink_orders", dir)
       t.orders.filter(col("o_totalprice") > 300000.0)
         .coalesce(1).write.mode("overwrite").parquet(path)
       s.read.parquet(path)
@@ -253,7 +231,7 @@ object ScanFilterQueries extends QueryModule {
     // on-disk layout every 100 TB table needs. Oracle filters the original.
     "a6_partition_pruning" -> ((s, dir) => {
       val t = Tables(s, dir)
-      val path = tmp("events_byday", dir)
+      val path = Tables.scratch("events_byday", dir)
       if (!new java.io.File(s"$path/_SUCCESS").exists()) {
         t.events.withColumn("day", date_trunc("day", col("ts")).cast("date"))
           .write.mode("overwrite").partitionBy("day").parquet(path)
@@ -271,7 +249,7 @@ object ScanFilterQueries extends QueryModule {
     // change without rewriting history. Oracle reproduces the union shape.
     "a7_schema_evolution" -> ((s, dir) => {
       val t = Tables(s, dir)
-      val path = tmp("evo_nation", dir)
+      val path = Tables.scratch("evo_nation", dir)
       t.nation.select(col("n_nationkey"), col("n_name"))
         .withColumn("v", lit("v1"))
         .coalesce(1).write.mode("overwrite").parquet(s"$path/p1")
@@ -290,7 +268,7 @@ object ScanFilterQueries extends QueryModule {
     // 3's values and overwrites just that partition (dynamic mode).
     "a8_upsert_dynamic_partition" -> ((s, dir) => {
       val t = Tables(s, dir)
-      val path = tmp("events_upsert", dir)
+      val path = Tables.scratch("events_upsert", dir)
       val modeKey = "spark.sql.sources.partitionOverwriteMode"
       val prev = s.conf.get(modeKey)
       val ev = t.events.withColumn("day", date_trunc("day", col("ts")).cast("date"))
@@ -315,7 +293,7 @@ object ScanFilterQueries extends QueryModule {
     // is the entire point — at 100 TB, file-count pathology kills scans.
     "a9_compact_small_files" -> ((s, dir) => {
       val t = Tables(s, dir)
-      val path = tmp("events_compact", dir)
+      val path = Tables.scratch("events_compact", dir)
       // The fragmented ingest layout is test SETUP (the pathology), not the
       // operator under measurement — materialize it once per sfDir, like a6.
       if (!new java.io.File(s"$path/frag/_SUCCESS").exists()) {
@@ -383,7 +361,7 @@ object ScanFilterQueries extends QueryModule {
     // aggregate directly, so the roundtrip must preserve every value.
     "a11_sink_custom_roundtrip" -> ((s, dir) => {
       val t = Tables(s, dir)
-      val path = tmp("graft_tsv_a11", dir)
+      val path = Tables.scratch("graft_tsv_a11", dir)
       t.orders
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n"), Tables.dsum(col("o_totalprice")).as("total"))
@@ -409,11 +387,8 @@ object ScanFilterQueries extends QueryModule {
     // documents row that generated the file.
     "a15_scan_binaryfile" -> ((s, dir) => {
       val t = Tables(s, dir)
-      val path = tmp("graft_bin_a15", dir)
-      def rmrf(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-      }
-      rmrf(new java.io.File(path)) // no stale drop-zone files across reruns
+      val path = Tables.scratch("graft_bin_a15", dir)
+      Tables.rmrf(path) // no stale drop-zone files across reruns
       new java.io.File(path).mkdirs()
       val bin = t.documents.filter(col("doc_id") < 64)
         .withColumn("h", expr("CAST(greatest(1, least(8, n_chars DIV 8)) AS INT)"))

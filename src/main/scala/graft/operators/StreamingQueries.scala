@@ -31,115 +31,74 @@ object StreamingQueries extends QueryModule {
   private val chunkSchema =
     "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE, props STRING"
 
-  /** Materialize events as 4 parquet files keyed by event_id quartile —
-    * each spans the full time range, so every batch after the first carries
-    * events behind the watermark (genuine late data). Idempotent per sfDir;
-    * the `_ready` marker records a fingerprint of the source fixture
-    * (size + mtime), so a driver-side fixture regeneration invalidates the
-    * cache instead of silently replaying stale chunks. */
-  private def chunkedSource(s: SparkSession, dir: String): String = {
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_stream_src_${Tables.pathKey(dir)}"
-    val ready = Paths.get(base, "_ready")
-    val src = new java.io.File(s"$dir/events.parquet")
-    val fingerprint = s"${src.length()}:${src.lastModified()}"
-    val fresh = Files.exists(ready) &&
-      new String(Files.readAllBytes(ready), "UTF-8").trim == fingerprint
-    if (!fresh) {
-      rmrfDir(new java.io.File(base))
-      val ev = Tables(s, dir).events.withColumn("ts", col("ts").cast("timestamp"))
-      val ids = ev.agg(max(col("event_id"))).head().getLong(0)
-      Files.createDirectories(Paths.get(base))
-      (0 until 4).foreach { i =>
-        val lo = ids * i / 4
-        val hi = if (i == 3) ids + 1 else ids * (i + 1) / 4
-        val tmpDir = s"$base/stage_$i"
-        ev.filter(col("event_id") >= lo && col("event_id") < hi)
-          .coalesce(1).write.mode("overwrite").parquet(tmpDir)
-        val part = Files.list(Paths.get(tmpDir)).filter(_.toString.endsWith(".parquet"))
-          .findFirst().get()
-        Files.move(part, Paths.get(base, f"chunk_$i%02d.parquet"), StandardCopyOption.REPLACE_EXISTING)
-        // modification order == chronological order for the file source
-        Thread.sleep(5)
-      }
-      Files.write(ready, fingerprint.getBytes("UTF-8"))
-    }
-    base
-  }
-
   /** Streaming-source schema for the chunked documents source (i14). */
   private val docChunkSchema =
     "doc_id LONG, ts TIMESTAMP, text STRING"
 
-  /** Materialize documents as 4 parquet files keyed by doc_id quartile with a
-    * synthetic event time (epoch + doc_id minutes) — id order IS arrival
-    * order, so the watermark advances monotonically and the band-dedup state
-    * resolves duplicates to the earliest chunk. Same fingerprint-guarded
-    * cache discipline as the events source. */
-  private def chunkedDocSource(s: SparkSession, dir: String): String = {
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_docstream_src_${Tables.pathKey(dir)}"
-    val ready = Paths.get(base, "_ready")
-    val src = new java.io.File(s"$dir/documents.parquet")
-    val fingerprint = s"${src.length()}:${src.lastModified()}"
-    val fresh = Files.exists(ready) &&
-      new String(Files.readAllBytes(ready), "UTF-8").trim == fingerprint
-    if (!fresh) {
-      rmrfDir(new java.io.File(base))
-      val docs = Tables(s, dir).documents
-        .select(col("doc_id"),
-          timestamp_seconds(col("doc_id") * 60).cast("timestamp").as("ts"),
-          col("text"))
-      val ids = docs.agg(max(col("doc_id"))).head().getLong(0)
-      Files.createDirectories(Paths.get(base))
-      (0 until 4).foreach { i =>
-        val lo = ids * i / 4
-        val hi = if (i == 3) ids + 1 else ids * (i + 1) / 4
+  /** Stage fixture `table` as 4 single-file parquet chunks `chunk_00..03`
+    * under the `name` scratch dir: `split` turns the table (in the stream's
+    * schema) into the 4 chunks in arrival order. Each chunk is moved into
+    * place 5 ms after the previous one, so modification order == chunk
+    * order for the file source. Built once per fixture stamp through
+    * [[Tables.staged]], whose per-root lock lets concurrent streams share
+    * one staging. */
+  private[graft] def chunkedSource(s: SparkSession, dir: String, table: String,
+      name: String)(split: Tables => Seq[DataFrame]): String = {
+    val base = Tables.scratch(name, dir)
+    Tables.staged(base, Tables.stamp(s"$dir/$table.parquet")) {
+      split(Tables(s, dir)).zipWithIndex.foreach { case (chunk, i) =>
         val tmpDir = s"$base/stage_$i"
-        docs.filter(col("doc_id") >= lo && col("doc_id") < hi)
-          .coalesce(1).write.mode("overwrite").parquet(tmpDir)
+        chunk.coalesce(1).write.mode("overwrite").parquet(tmpDir)
         val part = Files.list(Paths.get(tmpDir)).filter(_.toString.endsWith(".parquet"))
           .findFirst().get()
         Files.move(part, Paths.get(base, f"chunk_$i%02d.parquet"), StandardCopyOption.REPLACE_EXISTING)
         Thread.sleep(5)
       }
-      Files.write(ready, fingerprint.getBytes("UTF-8"))
     }
-    base
   }
 
-  /** Materialize events as 4 parquet files chunked by EVENT-TIME quartile —
-    * arrival order == time order, so the watermark advances monotonically
-    * and no row is ever late. Required by the timer sessionizer (i18): a
-    * late row would be watermark-dropped and break its batch-oracle parity.
-    * The ntile runs once at setup over the fixture (a single-partition sort
-    * — setup cost, not operator cost; a production job's ingest is already
-    * time-ordered). Same fingerprint-guarded cache discipline as the
-    * id-chunked source. */
-  private def chunkedTsSource(s: SparkSession, dir: String): String = {
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_tstream_src_${Tables.pathKey(dir)}"
-    val ready = Paths.get(base, "_ready")
-    val src = new java.io.File(s"$dir/events.parquet")
-    val fingerprint = s"${src.length()}:${src.lastModified()}"
-    val fresh = Files.exists(ready) &&
-      new String(Files.readAllBytes(ready), "UTF-8").trim == fingerprint
-    if (!fresh) {
-      rmrfDir(new java.io.File(base))
-      val ev = Tables(s, dir).events.withColumn("ts", col("ts").cast("timestamp"))
-        .withColumn("q", ntile(4).over(
-          org.apache.spark.sql.expressions.Window.orderBy(col("ts"), col("event_id"))) - 1)
-      Files.createDirectories(Paths.get(base))
-      (0 until 4).foreach { i =>
-        val tmpDir = s"$base/stage_$i"
-        ev.filter(col("q") === i).drop("q")
-          .coalesce(1).write.mode("overwrite").parquet(tmpDir)
-        val part = Files.list(Paths.get(tmpDir)).filter(_.toString.endsWith(".parquet"))
-          .findFirst().get()
-        Files.move(part, Paths.get(base, f"chunk_$i%02d.parquet"), StandardCopyOption.REPLACE_EXISTING)
-        Thread.sleep(5)
-      }
-      Files.write(ready, fingerprint.getBytes("UTF-8"))
+  /** `df` cut into 4 quartiles of `id`. */
+  private[graft] def idQuartiles(df: DataFrame, id: String): Seq[DataFrame] = {
+    val ids = df.agg(max(col(id))).head().getLong(0)
+    (0 until 4).map { i =>
+      val lo = ids * i / 4
+      val hi = if (i == 3) ids + 1 else ids * (i + 1) / 4
+      df.filter(col(id) >= lo && col(id) < hi)
     }
-    base
   }
+
+  private def streamEvents(t: Tables): DataFrame =
+    t.events.withColumn("ts", col("ts").cast("timestamp"))
+
+  /** Events chunked by event_id quartile — each chunk spans the full time
+    * range, so every batch after the first carries events behind the
+    * watermark (genuine late data). */
+  private[graft] def eventsById(s: SparkSession, dir: String): String =
+    chunkedSource(s, dir, "events", "stream_src")(t =>
+      idQuartiles(streamEvents(t), "event_id"))
+
+  /** Documents chunked by doc_id quartile with a synthetic event time
+    * (epoch + doc_id minutes) — id order IS arrival order, so the watermark
+    * advances monotonically and the band-dedup state resolves duplicates to
+    * the earliest chunk. */
+  private def docsById(s: SparkSession, dir: String): String =
+    chunkedSource(s, dir, "documents", "docstream_src")(t => idQuartiles(
+      t.documents.select(col("doc_id"),
+        timestamp_seconds(col("doc_id") * 60).cast("timestamp").as("ts"),
+        col("text")), "doc_id"))
+
+  /** Events chunked by EVENT-TIME quartile — arrival order == time order,
+    * so the watermark advances monotonically and no row is ever late.
+    * Required by the timer sessionizer (i18): a late row would be
+    * watermark-dropped and break its batch-oracle parity. The ntile runs
+    * once at setup over the fixture (a single-partition sort — setup cost,
+    * not operator cost; a production job's ingest is already time-ordered). */
+  private def eventsByTs(s: SparkSession, dir: String): String =
+    chunkedSource(s, dir, "events", "tstream_src") { t =>
+      val q = streamEvents(t).withColumn("q",
+        ntile(4).over(Window.orderBy(col("ts"), col("event_id"))) - 1)
+      (0 until 4).map(i => q.filter(col("q") === i).drop("q"))
+    }
 
   /** perBatch=true replays `filesPerTrigger` chunks per micro-batch
     * (watermark/late-data semantics need batch boundaries — i4/i8 keep 1
@@ -151,7 +110,7 @@ object StreamingQueries extends QueryModule {
       filesPerTrigger: Int = 1): DataFrame = {
     val r = s.readStream.schema(chunkSchema)
     (if (perBatch) r.option("maxFilesPerTrigger", filesPerTrigger.toString) else r)
-      .parquet(chunkedSource(s, dir))
+      .parquet(eventsById(s, dir))
   }
 
   /** Stateful micro-batches pay per state-store-instance overhead each
@@ -197,14 +156,13 @@ object StreamingQueries extends QueryModule {
     * oracle. Shard outputs land under `s<k>/b<batch>` idempotently. */
   private def annServe(s: SparkSession, dir: String, qname: String,
       shards: Int): DataFrame = {
-    graft.functions.CosineSim.register(s)
     val spark = s
     import spark.implicits._
     val t = Tables(s, dir)
-    val idx = s"${System.getProperty("java.io.tmpdir")}/graft_ivfidx_${Tables.pathKey(dir)}"
+    val idx = Tables.scratch("ivfidx", dir)
     graft.sources.IvfIndex.write(t.embeddings, idx)
     val out = s"$ckptRoot/graft_out_${qname}_${Tables.pathKey(dir)}"
-    rmrfDir(new java.io.File(out))
+    Tables.rmrf(out)
     val cents = graft.sources.IvfIndex.centroids(s, idx)
       .map { case (cell, c) => (cell, c.toSeq) }.toDF("clabel", "cv")
     val vd = expr("transform(embedding, x -> CAST(x AS DOUBLE))")
@@ -214,7 +172,7 @@ object StreamingQueries extends QueryModule {
     def startShard(shard: Int): (org.apache.spark.sql.streaming.StreamingQuery, String) = {
       val ckpt = s"$ckptRoot/graft_${qname}_s${shard}_${System.nanoTime()}"
       val st = s.readStream.schema(docChunkSchema)
-        .option("maxFilesPerTrigger", 2).parquet(chunkedDocSource(s, dir))
+        .option("maxFilesPerTrigger", 2).parquet(docsById(s, dir))
         .filter(if (shards == 1) col("doc_id") % 37 === 0
           else col("doc_id") % lit(37L * shards) === lit(37L * shard))
       val sq = withStreamShufflePartitions(s) {
@@ -259,7 +217,7 @@ object StreamingQueries extends QueryModule {
     finally {
       started.foreach(p =>
         try p._1.stop() catch { case _: Exception => () })
-      started.foreach(p => rmrfDir(new java.io.File(p._2)))
+      started.foreach(p => Tables.rmrf(p._2))
     }
     s.read.option("recursiveFileLookup", "true").parquet(out)
       .select(col("q_id"), col("rn"), col("b_id"), col("cos"))
@@ -306,14 +264,8 @@ object StreamingQueries extends QueryModule {
     // after this init and removed in the run helpers' finally blocks).
     val stale = System.currentTimeMillis() - 30L * 60 * 1000
     val prior = new java.io.File(root).listFiles()
-    if (prior != null) prior.filter(_.lastModified() < stale).foreach(rmrfDir)
+    if (prior != null) prior.filter(_.lastModified() < stale).foreach(Tables.rmrf)
     root
-  }
-
-  private def rmrfDir(f: java.io.File): Unit = {
-    val cs = f.listFiles()
-    if (cs != null) cs.foreach(rmrfDir)
-    f.delete(); ()
   }
 
   /** Recursive hardlink-or-copy of a staged fixture tree into a live root
@@ -335,22 +287,16 @@ object StreamingQueries extends QueryModule {
     } finally walk.close()
   }
 
-  /** i27's two-campaign log staging, built ONCE per fixture (fingerprint-
-    * guarded like the other stream sources): campaign 1 = each partition's
+  /** i27's two-campaign log staging, built ONCE per fixture (Tables.staged,
+    * like the chunked sources): campaign 1 = each partition's
     * first-half event_ids as the offset-0 segment, campaign 2 = the rest as
     * the follow-on segment (file name = its start offset, offsets
     * continuing), plus a `_meta` ledger of per-partition (n1, total) end
     * offsets. The query copies these into a fresh live root per invocation
     * so restart mechanics — not fixture builds — are what it times. */
   private def resumeStaging(s: SparkSession, dir: String): String = {
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_i27_stage_${Tables.pathKey(dir)}"
-    val ready = Paths.get(base, "_ready")
-    val src = new java.io.File(s"$dir/events.parquet")
-    val fingerprint = s"${src.length()}:${src.lastModified()}"
-    val fresh = Files.exists(ready) &&
-      new String(Files.readAllBytes(ready), "UTF-8").trim == fingerprint
-    if (!fresh) {
-      rmrfDir(new java.io.File(base))
+    val base = Tables.scratch("i27_stage", dir)
+    Tables.staged(base, Tables.stamp(s"$dir/events.parquet")) {
       val w = Window.partitionBy("p").orderBy("event_id")
       val ev = Tables(s, dir).events
         .withColumn("ts", col("ts").cast("timestamp"))
@@ -381,14 +327,12 @@ object StreamingQueries extends QueryModule {
           Files.createDirectories(Paths.get(base, s"c$c", s"p=$p"))
           Files.move(seg, Paths.get(base, s"c$c", s"p=$p", f"$start%020d.seg"),
             StandardCopyOption.REPLACE_EXISTING)
-          rmrfDir(new java.io.File(stageDir))
+          Tables.rmrf(stageDir)
         }
       }
       Files.write(Paths.get(base, "_meta"), meta.mkString("\n").getBytes("UTF-8"))
-      Files.write(ready, fingerprint.getBytes("UTF-8"))
       ()
     }
-    base
   }
 
   /** Run to completion (AvailableNow) into an in-memory table, return it.
@@ -416,7 +360,7 @@ object StreamingQueries extends QueryModule {
           .trigger(Trigger.AvailableNow()).start()
       } finally spark.conf.set(key, prevNoData)
     // finally: a failed/interrupted query must not leak its tmpfs checkpoint
-    try sq.awaitTermination() finally rmrfDir(new java.io.File(ckpt))
+    try sq.awaitTermination() finally Tables.rmrf(ckpt)
     spark.table(qn)
   }
 
@@ -431,12 +375,7 @@ object StreamingQueries extends QueryModule {
     // Lives under the same tmpfs root as the checkpoints: the sink demo's
     // semantics are the parquet-append pattern, not disk fsync latency.
     val out = s"$ckptRoot/graft_out_${name}_${Tables.pathKey(dir)}"
-    def rmrf(f: java.io.File): Unit = {
-      val cs = f.listFiles()
-      if (cs != null) cs.foreach(rmrf)
-      f.delete(); ()
-    }
-    rmrf(new java.io.File(out))
+    Tables.rmrf(out)
     val ckpt = s"$ckptRoot/graft_${name}_${System.nanoTime()}"
     val sq = withStreamShufflePartitions(spark, statePartitions) {
       q.writeStream.outputMode(OutputMode.Update())
@@ -446,7 +385,7 @@ object StreamingQueries extends QueryModule {
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow()).start()
     }
-    try sq.awaitTermination() finally rmrfDir(new java.io.File(ckpt))
+    try sq.awaitTermination() finally Tables.rmrf(ckpt)
     spark.read.parquet(out)
   }
 
@@ -679,7 +618,6 @@ object StreamingQueries extends QueryModule {
     // aggregation over the same windows (asserted in StreamingSpec); like
     // every hll query the gate records rows-only.
     "i11_stream_hll" -> ((s, dir) => {
-      graft.functions.HllSketchAgg.register(s)
       val q = stream(s, dir, perBatch = false)
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 day"), col("event_type"))
@@ -712,7 +650,7 @@ object StreamingQueries extends QueryModule {
     // work scales with the delta, untouched partitions never move.
     "i12_stream_upsert" -> ((s, dir) => {
       val out = s"$ckptRoot/graft_out_i12_${Tables.pathKey(dir)}"
-      rmrfDir(new java.io.File(out))
+      Tables.rmrf(out)
       val ckpt = s"$ckptRoot/graft_i12_${System.nanoTime()}"
       val q = stream(s, dir, filesPerTrigger = 2)
         .select(to_date(col("ts")).as("day"), col("value"))
@@ -769,7 +707,7 @@ object StreamingQueries extends QueryModule {
             .option("checkpointLocation", ckpt)
             .trigger(Trigger.AvailableNow()).start()
         }
-        try sq.awaitTermination() finally rmrfDir(new java.io.File(ckpt))
+        try sq.awaitTermination() finally Tables.rmrf(ckpt)
       } finally s.conf.set(modeKey, prevMode)
       s.read.parquet(out)
         .select(col("day"), col("n"), round(col("vsum").cast("double"), 6).as("val_sum"))
@@ -789,7 +727,7 @@ object StreamingQueries extends QueryModule {
     "i13_stream_snapshot" -> ((s, dir) => {
       import graft.sources.SnapshotTable
       val root = s"$ckptRoot/graft_snap_i13_${Tables.pathKey(dir)}"
-      rmrfDir(new java.io.File(root))
+      Tables.rmrf(root)
       val ckpt = s"$ckptRoot/graft_i13_${System.nanoTime()}"
       val q = stream(s, dir, filesPerTrigger = 2)
         .select(to_date(col("ts")).as("day"), col("value"))
@@ -817,7 +755,7 @@ object StreamingQueries extends QueryModule {
           .option("checkpointLocation", ckpt)
           .trigger(Trigger.AvailableNow()).start()
       }
-      try sq.awaitTermination() finally rmrfDir(new java.io.File(ckpt))
+      try sq.awaitTermination() finally Tables.rmrf(ckpt)
       SnapshotTable.read(s, root)
         .select(col("day"), col("n"), round(col("vsum").cast("double"), 6).as("val_sum"))
         .orderBy("day")
@@ -842,7 +780,7 @@ object StreamingQueries extends QueryModule {
     "i20_stream_cdc_apply" -> ((s, dir) => {
       import graft.sources.SnapshotTable
       val root = s"$ckptRoot/graft_snap_i20_${Tables.pathKey(dir)}"
-      rmrfDir(new java.io.File(root))
+      Tables.rmrf(root)
       val ckpt = s"$ckptRoot/graft_i20_${System.nanoTime()}"
       val q = stream(s, dir, filesPerTrigger = 2)
         .select(col("user_id"), col("event_id"), col("ts"), col("event_type"),
@@ -871,7 +809,7 @@ object StreamingQueries extends QueryModule {
           .option("checkpointLocation", ckpt)
           .trigger(Trigger.AvailableNow()).start()
       }
-      try sq.awaitTermination() finally rmrfDir(new java.io.File(ckpt))
+      try sq.awaitTermination() finally Tables.rmrf(ckpt)
       SnapshotTable.read(s, root)
         .filter(col("event_type") =!= "error")
         .select(col("user_id"), col("event_id").as("last_event_id"),
@@ -908,33 +846,26 @@ object StreamingQueries extends QueryModule {
         .select(col("doc_id"), substring(lower(col("text")), 1, 40).as("blk"),
           TF.shingles3("toks").as("sh"))
       // The v1 corpus index is a pure function of the fixture, so it is
-      // STAGED once per fixture (fingerprint-guarded — the chunkedSource /
-      // i27 discipline) and hardlink-copied into a fresh live root per
+      // STAGED once per fixture (Tables.staged, like the chunked sources
+      // and i27) and hardlink-copied into a fresh live root per
       // invocation: the campaign MUTATES its root (per-batch novel
       // appends), so exactly-once mechanics run against a cheap copy while
       // the 80%-corpus shingle+commit is paid once, not once per bench pass.
-      val stage = s"${System.getProperty("java.io.tmpdir")}/graft_i23_stage_${Tables.pathKey(dir)}"
-      val srcF = new java.io.File(s"$dir/documents.parquet")
-      val fingerprint = s"${srcF.length()}:${srcF.lastModified()}"
-      val readyP = Paths.get(stage, "_ready")
-      val fresh = Files.exists(readyP) &&
-        new String(Files.readAllBytes(readyP), "UTF-8").trim == fingerprint
-      if (!fresh) {
-        rmrfDir(new java.io.File(stage))
+      val stage = Tables.scratch("i23_stage", dir)
+      Tables.staged(stage, Tables.stamp(s"$dir/documents.parquet")) {
         SnapshotTable.commit(
           shingled(t.documents.filter(col("doc_id") % 5 =!= 0))
             .select(col("doc_id").as("e_id"), col("blk").as("e_blk"),
               col("sh").as("e_sh"))
             .repartition(n, col("e_blk")),
           stage, meta = "-1")
-        Files.write(readyP, fingerprint.getBytes("UTF-8"))
       }
       val idxRoot = s"$ckptRoot/graft_snap_i23_${Tables.pathKey(dir)}"
-      rmrfDir(new java.io.File(idxRoot))
+      Tables.rmrf(idxRoot)
       linkTree(Paths.get(stage), Paths.get(idxRoot))
       Files.deleteIfExists(Paths.get(idxRoot, "_ready"))
       val out = s"$ckptRoot/graft_out_i23_${Tables.pathKey(dir)}"
-      rmrfDir(new java.io.File(out))
+      Tables.rmrf(out)
       val pinned = SnapshotTable.latestVersion(idxRoot).get
       // The pinned version is IMMUTABLE for the whole campaign, so the serve
       // loop caches its blk-partitioned scan in memory ONCE instead of
@@ -954,7 +885,7 @@ object StreamingQueries extends QueryModule {
       // micro-batch count halves the per-batch index-join + commit fixed
       // cost, the i-band floor.
       val st = s.readStream.schema(docChunkSchema)
-        .option("maxFilesPerTrigger", 2).parquet(chunkedDocSource(s, dir))
+        .option("maxFilesPerTrigger", 2).parquet(docsById(s, dir))
         .filter(col("doc_id") % 5 === 0)
       val sq = withStreamShufflePartitions(s) {
         st.writeStream.outputMode(OutputMode.Append())
@@ -992,7 +923,7 @@ object StreamingQueries extends QueryModule {
       }
       try sq.awaitTermination() finally {
         existing.unpersist()
-        rmrfDir(new java.io.File(ckpt))
+        Tables.rmrf(ckpt)
       }
       s.read.option("recursiveFileLookup", "true").parquet(out)
         .select(col("doc_id"), col("n_matches"), col("first_match"),
@@ -1034,7 +965,7 @@ object StreamingQueries extends QueryModule {
       val root = s"$ckptRoot/graft_snap_i29_$key"
       val out = s"$ckptRoot/graft_out_i29_$key"
       val ckpt = s"$ckptRoot/graft_i29ck_$key"
-      Seq(root, out, ckpt).foreach(p => rmrfDir(new java.io.File(p)))
+      Seq(root, out, ckpt).foreach(Tables.rmrf)
       val base = t.orders.select(col("o_orderkey"), col("o_totalprice"))
       SnapshotTable.commit(base.filter(col("o_orderkey") % 30 === 0), root)
       SnapshotTable.append(base.filter(col("o_orderkey") % 30 === 1), root)
@@ -1089,7 +1020,7 @@ object StreamingQueries extends QueryModule {
       val root = s"$ckptRoot/graft_snap_i30_$key"
       val out = s"$ckptRoot/graft_out_i30_$key"
       val ckpt = s"$ckptRoot/graft_i30ck_$key"
-      Seq(root, out, ckpt).foreach(p => rmrfDir(new java.io.File(p)))
+      Seq(root, out, ckpt).foreach(Tables.rmrf)
       val base = t.orders.select(col("o_orderkey"), col("o_totalprice"))
       SnapshotTable.commit(base.filter(col("o_orderkey") % 30 === 0), root)
       SnapshotTable.append(base.filter(col("o_orderkey") % 30 === 1), root)
@@ -1160,8 +1091,8 @@ object StreamingQueries extends QueryModule {
       import spark.implicits._
       val tblRoot = s"$ckptRoot/graft_snap_i25t_${Tables.pathKey(dir)}"
       val qRoot = s"$ckptRoot/graft_snap_i25q_${Tables.pathKey(dir)}"
-      rmrfDir(new java.io.File(tblRoot))
-      rmrfDir(new java.io.File(qRoot))
+      Tables.rmrf(tblRoot)
+      Tables.rmrf(qRoot)
       val reason = when(col("value") > 80, "value_gt_80")
         .when(col("event_type") === "error", "error_event")
         .when(col("user_id") % 97 === 13, "blocked_user")
@@ -1190,7 +1121,7 @@ object StreamingQueries extends QueryModule {
           .option("checkpointLocation", ckpt)
           .trigger(Trigger.AvailableNow()).start()
       }
-      try sq.awaitTermination() finally rmrfDir(new java.io.File(ckpt))
+      try sq.awaitTermination() finally Tables.rmrf(ckpt)
       val committedN = SnapshotTable.read(s, tblRoot).count()
       val rules = Seq("value_gt_80", "error_event", "blocked_user").toDF("rule")
       val qCounts = SnapshotTable.read(s, qRoot)
@@ -1218,7 +1149,7 @@ object StreamingQueries extends QueryModule {
       val spark = s
       import spark.implicits._
       val st = s.readStream.schema(docChunkSchema)
-        .option("maxFilesPerTrigger", "1").parquet(chunkedDocSource(s, dir))
+        .option("maxFilesPerTrigger", "1").parquet(docsById(s, dir))
       val fps = st.select(col("doc_id"), col("ts"), lower(col("text")).as("txt"))
         .as[(Long, java.sql.Timestamp, String)]
         .map { case (id, ts, txt) => (id, ts, graft.functions.TextFunctions.simhash64(txt)) }
@@ -1305,12 +1236,7 @@ object StreamingQueries extends QueryModule {
     // file-fed i* queries this one carries a full value oracle.
     "i10_stream_rate" -> ((s, dir) => {
       val base = s"$ckptRoot/graft_i10_ckpt"
-      def rmrf(f: java.io.File): Unit = {
-        val cs = f.listFiles()
-        if (cs != null) cs.foreach(rmrf)
-        f.delete(); ()
-      }
-      rmrf(new java.io.File(base)) // a stale checkpoint would resume past batch 2
+      Tables.rmrf(base) // a stale checkpoint would resume past batch 2
       val qn = s"graft_i10_${System.nanoTime()}"
       (0 until 3).foreach { _ =>
         val sq = withStreamShufflePartitions(s, 2) {
@@ -1341,7 +1267,6 @@ object StreamingQueries extends QueryModule {
     // chunks is chunking-independent (OR is associative/commutative), so
     // unlike most of the i-band this carries a full value oracle.
     "i19_stream_bitmap_distinct" -> ((s, dir) => {
-      graft.functions.BitmapSketch.register(s)
       val q = stream(s, dir, filesPerTrigger = 2) // 2 micro-batches
         .groupBy(col("event_type"))
         .agg(expr("bitmap_count(bitmap_sketch(user_id))").as("exact_users"),
@@ -1402,10 +1327,10 @@ object StreamingQueries extends QueryModule {
     // partition and readers seek by segment name.
     "i27_stream_log_resume" -> ((s, dir) => {
       val stage = resumeStaging(s, dir)
-      val live = s"${System.getProperty("java.io.tmpdir")}/graft_i27_live_${Tables.pathKey(dir)}"
+      val live = Tables.scratch("i27_live", dir)
       val out = s"$ckptRoot/graft_out_i27_${Tables.pathKey(dir)}"
       val ckpt = s"$ckptRoot/graft_i27_${System.nanoTime()}"
-      rmrfDir(new java.io.File(live)); rmrfDir(new java.io.File(out))
+      Tables.rmrf(live); Tables.rmrf(out)
       def installCampaign(c: Int): Unit = {
         val meta = Files.readAllLines(Paths.get(stage, "_meta")).asScala
           .map(_.split(",")).map(a => a(0).toInt -> (a(1).toLong, a(2).toLong)).toMap
@@ -1444,7 +1369,7 @@ object StreamingQueries extends QueryModule {
       try {
         installCampaign(1); runOnce(1)
         installCampaign(2); runOnce(2) // SAME checkpoint: resume, not replay
-      } finally rmrfDir(new java.io.File(ckpt))
+      } finally Tables.rmrf(ckpt)
       val wseq = Window.partitionBy("run").orderBy("batch_id")
       s.read.parquet(out)
         .groupBy(col("run"), col("batch_id"))
@@ -1478,7 +1403,7 @@ object StreamingQueries extends QueryModule {
       // FINAL watermark — and the processor sorts within a batch, so the
       // chunking only sets fixed costs, not the answer
       val src = spark.readStream.schema(chunkSchema)
-        .option("maxFilesPerTrigger", "2").parquet(chunkedTsSource(s, dir))
+        .option("maxFilesPerTrigger", "2").parquet(eventsByTs(s, dir))
       val q = src
         .withWatermark("ts", "0 seconds")
         .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("event_id"))
@@ -1548,7 +1473,7 @@ object StreamingQueries extends QueryModule {
       // determined (every session with end + gap ≤ the FINAL watermark),
       // identical at any chunking — fewer batches is pure fixed-cost savings
       val src = spark.readStream.schema(chunkSchema)
-        .option("maxFilesPerTrigger", "2").parquet(chunkedTsSource(s, dir))
+        .option("maxFilesPerTrigger", "2").parquet(eventsByTs(s, dir))
       val q = src
         .filter(col("ts") >= cutoff) // suffix only — history is not replayed
         .withWatermark("ts", "0 seconds")

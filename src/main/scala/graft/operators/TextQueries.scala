@@ -21,52 +21,30 @@ object TextQueries extends QueryModule {
   /** The pinned (doc_id, sh) shingle-set table shared by the exact
     * set-similarity twins g53/g53b — both consume the IDENTICAL expression,
     * so it is computed and localCheckpointed ONCE per (session, fixture)
-    * instead of once per query per bench pass. Keyed on the fixture file's
-    * (size, mtime) fingerprint so a driver-side regeneration invalidates
-    * (the chunkedSource discipline); one bounded entry per live (session,
-    * fixture) pair. This is the in-session equivalent of the persisted
-    * bucketed shingle index a 100 TB deployment builds once (g49-style)
-    * and every exact-join consumer reads. */
-  private val shingleSetsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.DataFrame]()
+    * instead of once per query per bench pass: [[Tables.pinned]] on the
+    * documents fixture's stamp (a regenerated fixture invalidates), hard-
+    * capped at 8 entries. This is the in-session equivalent of the
+    * persisted bucketed shingle index a 100 TB deployment builds once
+    * (g49-style) and every exact-join consumer reads. */
+  private val shingleSetsCache = Tables.pinCache[org.apache.spark.sql.DataFrame](8)
   private def shingleSets(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
-    val f = new java.io.File(s"$dir/documents.parquet")
-    val prefix = s"${System.identityHashCode(s)}:${Tables.pathKey(dir)}:"
-    val key = s"$prefix${f.length()}:${f.lastModified()}"
-    // identityHashCode is not unique: serve a hit ONLY when the cached
-    // frame really belongs to this session (recompute on a collision), and
-    // evict entries whose session's context has stopped so a JVM serving
-    // many short-lived sessions cannot accumulate dead pins unboundedly
-    val hit = shingleSetsCache.get(key)
-    if (hit != null && (hit.sparkSession eq s)) return hit
-    // a REGENERATED fixture changes the fingerprint: drop this (session,
-    // fixture)'s stale entry NOW — stopped-session sweeping alone would pin
-    // the dead localCheckpoint blocks for the live session's lifetime
-    shingleSetsCache.keySet.removeIf(k => k.startsWith(prefix) && k != key)
-    if (shingleSetsCache.size > 8) {
-      val it = shingleSetsCache.entrySet().iterator()
-      while (it.hasNext) {
-        if (it.next().getValue.sparkSession.sparkContext.isStopped) it.remove()
-      }
+      dir: String): org.apache.spark.sql.DataFrame =
+    Tables.pinned(shingleSetsCache, s, Tables.pathKey(dir),
+        Tables.stamp(s"$dir/documents.parquet")) {
+      Tables(s, dir).documents
+        .withColumn("toks", TF.tokens(lower(col("text"))))
+        .filter(size(col("toks")) >= 3)
+        .select(col("doc_id"), TF.shingles3("toks").as("sh"))
+        .localCheckpoint()
     }
-    val built = Tables(s, dir).documents
-      .withColumn("toks", TF.tokens(lower(col("text"))))
-      .filter(size(col("toks")) >= 3)
-      .select(col("doc_id"), TF.shingles3("toks").as("sh"))
-      .localCheckpoint()
-    shingleSetsCache.put(key, built)
-    built
-  }
 
   /** The DICTIONARY-ENCODED shingle index shared by the exact set-similarity
     * twins g53/g53b (r22, guide §2.3 shuffle fewer bytes): each distinct
     * shingle gets a dense long id, docs re-encode as long arrays (8 B/elem vs
-    * ~25-B strings) and the candidate-join key becomes a long. Same pinning
-    * discipline as [[shingleSets]] (one encode job per (session, fixture)
-    * instead of one per query per bench pass — the judge-prescribed shared
-    * encode): fingerprint-keyed, session-identity-checked, stale entries
-    * dropped eagerly, stopped-session sweep. Returns (intSets, prefix):
+    * ~25-B strings) and the candidate-join key becomes a long. Pinned like
+    * [[shingleSets]] (one encode job per (session, fixture) instead of one
+    * per query per bench pass — the judge-prescribed shared encode), through
+    * the same [[Tables.pinned]] rule and cap. Returns (intSets, prefix):
     *  - intSets: (doc_id, shi) — the long-encoded shingle set per doc
     *  - prefix:  (doc_id, len, r, tid) — the AllPairs prefix positions in
     *    global-rarity order, threshold arithmetic all-integer as in g53.
@@ -74,48 +52,36 @@ object TextQueries extends QueryModule {
     * intersection sizes, integer set sizes, and the rounded Jaccard doubles
     * are identical to the string-payload pipeline — proven by g53b passing
     * g53's all-pairs oracle hash since r20. */
-  private val dictIndexCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)]()
-  private def dictIndex(s: org.apache.spark.sql.SparkSession,
-      dir: String): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    val f = new java.io.File(s"$dir/documents.parquet")
-    val prefix = s"${System.identityHashCode(s)}:${Tables.pathKey(dir)}:"
-    val key = s"$prefix${f.length()}:${f.lastModified()}"
-    val hit = dictIndexCache.get(key)
-    if (hit != null && (hit._1.sparkSession eq s)) return hit
-    dictIndexCache.keySet.removeIf(k => k.startsWith(prefix) && k != key)
-    if (dictIndexCache.size > 8) {
-      val it = dictIndexCache.entrySet().iterator()
-      while (it.hasNext) {
-        if (it.next().getValue._1.sparkSession.sparkContext.isStopped) it.remove()
-      }
+  private[graft] val dictIndexCache = Tables.pinCache[
+    (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)](8)
+  private[graft] def dictIndex(s: org.apache.spark.sql.SparkSession,
+      dir: String): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =
+    Tables.pinned(dictIndexCache, s, Tables.pathKey(dir),
+        Tables.stamp(s"$dir/documents.parquet")) {
+      val sets = shingleSets(s, dir)
+      val exploded = sets
+        .select(col("doc_id"), size(col("sh")).as("len"), explode(col("sh")).as("tok"))
+      // one table carries BOTH dictionary id and global frequency; pinned so
+      // monotonically_increasing_id never re-evaluates to a different layout
+      val dict = exploded.groupBy(col("tok")).agg(count(lit(1)).as("f"))
+        .withColumn("tid", monotonically_increasing_id())
+        .localCheckpoint()
+      val encoded = exploded.join(dict, "tok")
+        .select(col("doc_id"), col("len"), col("f"), col("tid"))
+      val intSets = encoded.groupBy(col("doc_id"))
+        .agg(collect_list(col("tid")).as("shi"))
+        .localCheckpoint()
+      val w = Window.partitionBy(col("doc_id")).orderBy(col("f"), col("tid"))
+      // prefix filter: any pair with jac ≥ 2/5 must share its globally-rarest
+      // common shingle within both docs' first |s| − ceil(2|s|/5) + 1 elements
+      // (pigeonhole on the ≥ ceil(2|s|/5) overlap); all-integer ceil as in g53
+      val pfx = encoded
+        .withColumn("r", row_number().over(w))
+        .filter(col("r") <= col("len") - expr("(2 * len + 4) div 5") + 1)
+        .select(col("doc_id"), col("len"), col("r"), col("tid"))
+        .localCheckpoint()
+      (intSets, pfx)
     }
-    val sets = shingleSets(s, dir)
-    val exploded = sets
-      .select(col("doc_id"), size(col("sh")).as("len"), explode(col("sh")).as("tok"))
-    // one table carries BOTH dictionary id and global frequency; pinned so
-    // monotonically_increasing_id never re-evaluates to a different layout
-    val dict = exploded.groupBy(col("tok")).agg(count(lit(1)).as("f"))
-      .withColumn("tid", monotonically_increasing_id())
-      .localCheckpoint()
-    val encoded = exploded.join(dict, "tok")
-      .select(col("doc_id"), col("len"), col("f"), col("tid"))
-    val intSets = encoded.groupBy(col("doc_id"))
-      .agg(collect_list(col("tid")).as("shi"))
-      .localCheckpoint()
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("f"), col("tid"))
-    // prefix filter: any pair with jac ≥ 2/5 must share its globally-rarest
-    // common shingle within both docs' first |s| − ceil(2|s|/5) + 1 elements
-    // (pigeonhole on the ≥ ceil(2|s|/5) overlap); all-integer ceil as in g53
-    val pfx = encoded
-      .withColumn("r", row_number().over(w))
-      .filter(col("r") <= col("len") - expr("(2 * len + 4) div 5") + 1)
-      .select(col("doc_id"), col("len"), col("r"), col("tid"))
-      .localCheckpoint()
-    val built = (intSets, pfx)
-    dictIndexCache.put(key, built)
-    built
-  }
 
   /** The shared candidate+verify kernel of g53/g53b over the long-encoded
     * index: AllPairs length filter + PPJoin positional filter on the prefix
@@ -204,8 +170,7 @@ object TextQueries extends QueryModule {
   private def pairIndex(s: org.apache.spark.sql.SparkSession, dir: String) = {
     import graft.sources.SnapshotTable
     val t = Tables(s, dir)
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_pairidx_" +
-      s"${Tables.pathKey(dir)}"
+    val root = Tables.scratch("pairidx", dir)
     // CRC job memoized per (session, root, source-files size+mtime) — r22,
     // see Tables.memoFingerprint
     val fingerprint = Tables.memoFingerprint(t.documents, s"pairidx:$root") {
@@ -497,8 +462,7 @@ object TextQueries extends QueryModule {
       // being served from the stale index — count + crc32-sum over the text
       // closes that hole for one cheap scan (a deployment keys the index
       // version on its ingest ledger instead of hashing the corpus).
-      val idxRoot = s"${System.getProperty("java.io.tmpdir")}/graft_shidx_docs_" +
-        s"${Tables.pathKey(dir)}"
+      val idxRoot = Tables.scratch("shidx_docs", dir)
       // CRC job memoized per (session, root, source-files size+mtime) —
       // r22, see Tables.memoFingerprint
       val fingerprint = Tables.memoFingerprint(t.documents, s"shidx:$idxRoot") {
@@ -708,7 +672,6 @@ object TextQueries extends QueryModule {
     // k-sized blobs per shard. Survivor sets are merge-order dependent →
     // rows-only (top-20 row count is stable), bound is spec-verified.
     "g26_vocab_heavyhitters" -> ((s, dir) => {
-      graft.functions.FreqSketch.register(s)
       val t = Tables(s, dir)
       val toks = t.documents
         .select(col("source"), explode(split(lower(col("text")), " ")).as("term"))

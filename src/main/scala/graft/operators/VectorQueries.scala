@@ -232,7 +232,6 @@ object VectorQueries extends QueryModule {
     // the custom-Expression extension tier. Identical fold order → identical
     // doubles → same oracle formulation as G3.
     "g3b_sim_cosine_native" -> ((s, dir) => {
-      graft.functions.CosineSim.register(s)
       val t = Tables(s, dir)
       val e = t.embeddings.select(col("vec_id"), col("label"), vd.as("v"))
       val a = e.select(col("vec_id").as("a_id"), col("label"), col("v").as("va"))
@@ -416,7 +415,6 @@ object VectorQueries extends QueryModule {
     // ascending-index accumulation order, so the doubles (and the oracle
     // hash) are bit-identical to the aggregate(zip_with(...)) form.
     "g68_hard_negative_mining" -> ((s, dir) => {
-      graft.functions.CosineSim.register(s)
       val t = Tables(s, dir)
       val e = t.embeddings.select(col("vec_id"), col("label"), vd.as("v"))
       val anchors = e.filter(col("vec_id") < 100)
@@ -456,14 +454,13 @@ object VectorQueries extends QueryModule {
     // scan of the pool scored by the fused codegen cosine, per-probe top-k
     // as a window — the same shapes g4/g4b run at 100 TB.
     "g69_ann_recall" -> ((s, dir) => {
-      graft.functions.CosineSim.register(s)
       val spark = s
       import spark.implicits._
       val t = Tables(s, dir)
       // grade THE index a query would actually hit: the persisted learned
       // IVF (sources/IvfIndex — KMeans cells, fingerprint-cached build,
       // shared with g71's serve path)
-      val idx = s"${System.getProperty("java.io.tmpdir")}/graft_ivfidx_${Tables.pathKey(dir)}"
+      val idx = Tables.scratch("ivfidx", dir)
       graft.sources.IvfIndex.write(t.embeddings, idx)
       val cents = graft.sources.IvfIndex.centroids(s, idx)
         .map { case (cell, c) => (cell, c.toSeq) }.toDF("clabel", "cv")
@@ -514,11 +511,10 @@ object VectorQueries extends QueryModule {
     // iterations, reassigns every vector, and replays probe selection and
     // the top-10 cut exactly.
     "g71_ann_index_serve" -> ((s, dir) => {
-      graft.functions.CosineSim.register(s)
       val spark = s
       import spark.implicits._
       val t = Tables(s, dir)
-      val idx = s"${System.getProperty("java.io.tmpdir")}/graft_ivfidx_${Tables.pathKey(dir)}"
+      val idx = Tables.scratch("ivfidx", dir)
       graft.sources.IvfIndex.write(t.embeddings, idx)
       val query = queryVec(t)
       val probes = topCells(graft.sources.IvfIndex.centroids(s, idx), query, 2)
@@ -550,7 +546,7 @@ object VectorQueries extends QueryModule {
       val spark = s
       import spark.implicits._
       val t = Tables(s, dir)
-      val idx = s"${System.getProperty("java.io.tmpdir")}/graft_ivfpq_${Tables.pathKey(dir)}"
+      val idx = Tables.scratch("ivfpq", dir)
       graft.sources.IvfPqIndex.write(t.embeddings, idx)
       val query = queryVec(t)
       val probes = topCells(graft.sources.IvfPqIndex.centroids(s, idx), query, 2)
@@ -601,7 +597,7 @@ object VectorQueries extends QueryModule {
       val spark = s
       import spark.implicits._
       val t = Tables(s, dir)
-      val idx = s"${System.getProperty("java.io.tmpdir")}/graft_pqseg_${Tables.pathKey(dir)}"
+      val idx = Tables.scratch("pqseg", dir)
       graft.sources.IvfPqIndex.write(
         t.embeddings.filter(col("vec_id") % 10 =!= 9), idx)
       graft.sources.IvfPqIndex.appendSegment(
@@ -652,11 +648,10 @@ object VectorQueries extends QueryModule {
     // Plan shape at 100 TB: identical to g71 plus one pushed predicate —
     // filtered serving costs LESS than unfiltered, never more.
     "g75_ann_filtered" -> ((s, dir) => {
-      graft.functions.CosineSim.register(s)
       val spark = s
       import spark.implicits._
       val t = Tables(s, dir)
-      val idx = s"${System.getProperty("java.io.tmpdir")}/graft_ivfidx_${Tables.pathKey(dir)}"
+      val idx = Tables.scratch("ivfidx", dir)
       graft.sources.IvfIndex.write(t.embeddings, idx)
       val query = queryVec(t)
       val probes = topCells(graft.sources.IvfIndex.centroids(s, idx), query, 2)
@@ -684,11 +679,10 @@ object VectorQueries extends QueryModule {
     // the rounded codebook, unions, and replays probe + top-10. The ANN
     // twin of i23's pinned-index streaming dedup.
     "g76_ann_index_append" -> ((s, dir) => {
-      graft.functions.CosineSim.register(s)
       val spark = s
       import spark.implicits._
       val t = Tables(s, dir)
-      val idx = s"${System.getProperty("java.io.tmpdir")}/graft_ivfseg_${Tables.pathKey(dir)}"
+      val idx = Tables.scratch("ivfseg", dir)
       graft.sources.IvfIndex.write(t.embeddings.filter(col("vec_id") % 10 =!= 9), idx)
       graft.sources.IvfIndex.appendSegment(
         t.embeddings.filter(col("vec_id") % 10 === 9), idx, "d1")
@@ -716,11 +710,10 @@ object VectorQueries extends QueryModule {
     // base∪delta answer — same oracle as g76 (VectorSpec additionally pins
     // the pointer flip, the dropped segment, and single-scan serving).
     "g78_ann_index_compact" -> ((s, dir) => {
-      graft.functions.CosineSim.register(s)
       val spark = s
       import spark.implicits._
       val t = Tables(s, dir)
-      val idx = s"${System.getProperty("java.io.tmpdir")}/graft_ivfcmp_${Tables.pathKey(dir)}"
+      val idx = Tables.scratch("ivfcmp", dir)
       graft.sources.IvfIndex.write(t.embeddings.filter(col("vec_id") % 10 =!= 9), idx)
       graft.sources.IvfIndex.appendSegment(
         t.embeddings.filter(col("vec_id") % 10 === 9), idx, "d1")
@@ -748,11 +741,10 @@ object VectorQueries extends QueryModule {
     // oracle-backed: DuckDB replays training, the cell ranking, all four
     // candidate cuts, and the exact baseline.
     "g79_ann_probe_sweep" -> ((s, dir) => {
-      graft.functions.CosineSim.register(s)
       val spark = s
       import spark.implicits._
       val t = Tables(s, dir)
-      val idx = s"${System.getProperty("java.io.tmpdir")}/graft_ivfidx_${Tables.pathKey(dir)}"
+      val idx = Tables.scratch("ivfidx", dir)
       graft.sources.IvfIndex.write(t.embeddings, idx)
       val query = queryVec(t)
       val ranked = topCells(graft.sources.IvfIndex.centroids(s, idx), query,
@@ -804,7 +796,6 @@ object VectorQueries extends QueryModule {
     // partition counts (per-bucket pair enumeration is quadratic —
     // invisible to AQE), truth as anchors broadcast onto one corpus scan.
     "g82_embed_lsh_recall" -> ((s, dir) => {
-      graft.functions.CosineSim.register(s)
       val spark = s
       import spark.implicits._
       val t = Tables(s, dir)
@@ -862,11 +853,10 @@ object VectorQueries extends QueryModule {
     // compaction as the physical fold. Deleted vectors must be unfindable:
     // the oracle serves the probed cells with the tombstone set excluded.
     "g80_ann_index_delete" -> ((s, dir) => {
-      graft.functions.CosineSim.register(s)
       val spark = s
       import spark.implicits._
       val t = Tables(s, dir)
-      val idx = s"${System.getProperty("java.io.tmpdir")}/graft_ivfdel_${Tables.pathKey(dir)}"
+      val idx = Tables.scratch("ivfdel", dir)
       graft.sources.IvfIndex.write(t.embeddings, idx)
       graft.sources.IvfIndex.delete(
         t.embeddings.filter(col("vec_id") % 101 === 7).select(col("vec_id")), idx)
@@ -898,7 +888,6 @@ object VectorQueries extends QueryModule {
     // fused 16-dim kernels, no shuffle, no explode — n×16 FLOPs, not n×16
     // rows), then the global top-10.
     "g77_colbert_maxsim" -> ((s, dir) => {
-      graft.functions.CosineSim.register(s)
       val spark = s
       import spark.implicits._
       val t = Tables(s, dir)
@@ -936,7 +925,6 @@ object VectorQueries extends QueryModule {
     // and the top-10 cut all replay in SQL; recall vs the exact top-10
     // additionally asserted in VectorSpec.
     "g4b_sim_topk_ivf" -> ((s, dir) => {
-      graft.functions.CosineSim.register(s)
       val spark = s
       import spark.implicits._
       val t = Tables(s, dir)
@@ -1166,7 +1154,6 @@ object VectorQueries extends QueryModule {
     // rows-only; emitted ⊆ exact and recall vs g15's brute force are
     // asserted in VectorSpec.
     "g42_kmeans_dedup" -> ((s, dir) => {
-      graft.functions.CosineSim.register(s)
       val t = Tables(s, dir)
       val nPart = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
       // spread the per-row assignment kernel across cores: the fixture

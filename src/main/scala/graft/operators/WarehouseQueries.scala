@@ -75,7 +75,7 @@ object WarehouseQueries extends QueryModule {
     // full-scan answer.
     "m3_zonemap_skip" -> ((s, dir) => {
       val t = Tables(s, dir)
-      val zpath = s"${System.getProperty("java.io.tmpdir")}/graft_zonemap_orders_${Tables.pathKey(dir)}"
+      val zpath = Tables.scratch("zonemap_orders", dir)
       ZoneMap.writeClustered(t.orders, zpath, "o_orderdate", nFiles = 8)
       val lo = lit("1997-01-01 00:00:00").cast("timestamp")
       val hi = lit("1997-06-30 23:59:59").cast("timestamp")
@@ -134,11 +134,8 @@ object WarehouseQueries extends QueryModule {
     // prepare-and-swap proven in WarehouseSpec). The oracle replays both
     // versions relationally from the source table.
     "m6_snapshot_commit" -> ((s, dir) => {
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_snap_${Tables.pathKey(dir)}"
-      def rmrf(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-      }
-      rmrf(new java.io.File(root)) // fresh table: commits replay deterministically
+      val root = Tables.scratch("snap", dir)
+      Tables.rmrf(root) // fresh table: commits replay deterministically
       val t = Tables(s, dir)
       val v1 = t.orders.filter(col("o_orderkey") % 7 === 0)
         .select(col("o_orderkey"), col("o_totalprice"))
@@ -168,11 +165,8 @@ object WarehouseQueries extends QueryModule {
     // (proved in WarehouseSpec). The oracle replays the three cumulative
     // slices relationally.
     "m8_snapshot_append" -> ((s, dir) => {
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_m8a_${Tables.pathKey(dir)}"
-      def rmrf(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-      }
-      rmrf(new java.io.File(root))
+      val root = Tables.scratch("m8a", dir)
+      Tables.rmrf(root)
       val t = Tables(s, dir)
       def slice(r: Int) = t.orders.filter(col("o_orderkey") % 5 === r)
         .select(col("o_orderkey"), col("o_totalprice"))
@@ -198,11 +192,8 @@ object WarehouseQueries extends QueryModule {
     // post-compaction versions; identical numbers ARE the contract
     // (compaction must be content-invariant).
     "m9_snapshot_compact" -> ((s, dir) => {
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_m9_${Tables.pathKey(dir)}"
-      def rmrf(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-      }
-      rmrf(new java.io.File(root))
+      val root = Tables.scratch("m9", dir)
+      Tables.rmrf(root)
       val t = Tables(s, dir)
       def slice(r: Int) = t.orders.filter(col("o_orderkey") % 8 === r)
         .select(col("o_orderkey"), col("o_totalprice"))
@@ -227,11 +218,8 @@ object WarehouseQueries extends QueryModule {
     // the rest upsert a doubled price (matched %12 keys update, unmatched
     // insert). Output is a per-bucket summary of the final table.
     "m7_merge_into" -> ((s, dir) => {
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_m7_${Tables.pathKey(dir)}"
-      def rmrf(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-      }
-      rmrf(new java.io.File(root))
+      val root = Tables.scratch("m7", dir)
+      Tables.rmrf(root)
       val t = Tables(s, dir)
       val target = t.orders.filter(col("o_orderkey") % 3 === 0)
         .select(col("o_orderkey"), col("o_totalprice"))
@@ -313,7 +301,7 @@ object WarehouseQueries extends QueryModule {
     // drop is asserted in WarehouseSpec.
     "m10_bloom_index_lookup" -> ((s, dir) => {
       val t = Tables(s, dir)
-      val bpath = s"${System.getProperty("java.io.tmpdir")}/graft_bloomidx_orders_${Tables.pathKey(dir)}"
+      val bpath = Tables.scratch("bloomidx_orders", dir)
       BloomIndex.writeIndexed(t.orders, bpath, "o_custkey", "o_orderkey", nFiles = 16)
       BloomIndex.prunedRead(s, bpath, "o_custkey", Seq("1", "7", "25"))
         .select(col("o_orderkey"), col("o_custkey"),
@@ -335,11 +323,8 @@ object WarehouseQueries extends QueryModule {
     // violations), not a collect — at 100 TB it costs one pass over the
     // STAGED DELTA files only if the table is append-committed (m8).
     "m12_write_audit_publish" -> ((s, dir) => {
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_wap_${Tables.pathKey(dir)}"
-      def rmrf(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-      }
-      rmrf(new java.io.File(root)) // fresh table: the WAP replay is deterministic
+      val root = Tables.scratch("wap", dir)
+      Tables.rmrf(root) // fresh table: the WAP replay is deterministic
       val t = Tables(s, dir)
       val base = t.orders.filter(col("o_orderkey") % 3 === 0)
         .select(col("o_orderkey"), col("o_totalprice"))
@@ -419,11 +404,8 @@ object WarehouseQueries extends QueryModule {
     // nondeterministic; logical dates are how real lakehouse tests pin
     // time travel too.
     "m14_time_travel_asof" -> ((s, dir) => {
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_asof_${Tables.pathKey(dir)}"
-      def rmrf(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-      }
-      rmrf(new java.io.File(root))
+      val root = Tables.scratch("asof", dir)
+      Tables.rmrf(root)
       val t = Tables(s, dir)
       def slice(mod: Int) = t.orders.filter(col("o_orderkey") % mod === 0)
         .select(col("o_orderkey"), col("o_totalprice"))
@@ -504,12 +486,9 @@ object WarehouseQueries extends QueryModule {
     // files byte-identical across both delete commits, purge rewrote a
     // strict subset of files, DV'd read == plain filter row-for-row.
     "m16_deletion_vectors" -> ((s, dir) => {
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_m16_${Tables.pathKey(dir)}"
-      def rmrf(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-      }
-      rmrf(new java.io.File(root))
-      rmrf(new java.io.File(s"${root}_dv"))
+      val root = Tables.scratch("m16", dir)
+      Tables.rmrf(root)
+      Tables.rmrf(s"${root}_dv")
       val t = Tables(s, dir)
       val target = t.orders.filter(col("o_orderkey") % 3 === 0)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
@@ -560,12 +539,9 @@ object WarehouseQueries extends QueryModule {
     // masked files drop. Oracle: CASE WHEN on the predicate. The update is
     // price*2 — integer-exact in double, the m7 discipline.
     "m17_dv_update" -> ((s, dir) => {
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_m17_${Tables.pathKey(dir)}"
-      def rmrf(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-      }
-      rmrf(new java.io.File(root))
-      rmrf(new java.io.File(s"${root}_dv"))
+      val root = Tables.scratch("m17", dir)
+      Tables.rmrf(root)
+      Tables.rmrf(s"${root}_dv")
       val t = Tables(s, dir)
       val target = t.orders.filter(col("o_orderkey") % 3 === 0)
         .select(col("o_orderkey"), col("o_totalprice"), col("o_orderdate"))
@@ -596,11 +572,8 @@ object WarehouseQueries extends QueryModule {
     // evolved rows group by their real priority. Oracle: CASE WHEN on the
     // generation predicate over the raw table.
     "m18_schema_evolution" -> ((s, dir) => {
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_m18_${Tables.pathKey(dir)}"
-      def rmrf(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-      }
-      rmrf(new java.io.File(root))
+      val root = Tables.scratch("m18", dir)
+      Tables.rmrf(root)
       val t = Tables(s, dir)
       SnapshotTable.commit(
         t.orders.filter(col("o_orderkey") % 4 === 1)
@@ -633,11 +606,8 @@ object WarehouseQueries extends QueryModule {
     // Oracle: the logical content is generation-independent, so DuckDB
     // recomputes it straight from the raw table.
     "m19_schema_evo_rename_widen" -> ((s, dir) => {
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_m19_${Tables.pathKey(dir)}"
-      def rmrf(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-      }
-      rmrf(new java.io.File(root))
+      val root = Tables.scratch("m19", dir)
+      Tables.rmrf(root)
       val t = Tables(s, dir)
       def gen(n: Int) = t.orders.filter(col("o_orderkey") % 4 === n)
       val key = EvoField(1, "o_orderkey", "bigint")
@@ -686,11 +656,8 @@ object WarehouseQueries extends QueryModule {
     // crash-order discipline (files before manifest, LATEST never eligible)
     // is proven in WarehouseSpec.
     "m20_snapshot_expire" -> ((s, dir) => {
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_m20_${Tables.pathKey(dir)}"
-      def rmrf(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-      }
-      rmrf(new java.io.File(root))
+      val root = Tables.scratch("m20", dir)
+      Tables.rmrf(root)
       val t = Tables(s, dir)
       def slice(r: Int) = t.orders.filter(col("o_orderkey") % 3 === r)
         .select(col("o_orderkey"), col("o_totalprice"))
@@ -730,11 +697,8 @@ object WarehouseQueries extends QueryModule {
     "m21_expectations_quarantine" -> ((s, dir) => {
       val spark = s
       import spark.implicits._
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_m21_${Tables.pathKey(dir)}"
-      def rmrf(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-      }
-      rmrf(new java.io.File(root))
+      val root = Tables.scratch("m21", dir)
+      Tables.rmrf(root)
       val t = Tables(s, dir)
       val src = t.lineitem.select(col("l_orderkey"), col("l_linenumber"),
         col("l_quantity"), col("l_discount"), col("l_tax"), col("l_returnflag"))
@@ -774,11 +738,8 @@ object WarehouseQueries extends QueryModule {
     // never deletes foreign files (expire skips absolute entries —
     // WarehouseSpec proves the source survives an expire on the clone).
     "m22_shallow_clone" -> ((s, dir) => {
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_m22_${Tables.pathKey(dir)}"
-      def rmrf(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-      }
-      rmrf(new java.io.File(base))
+      val base = Tables.scratch("m22", dir)
+      Tables.rmrf(base)
       val src = s"$base/src"
       val dst = s"$base/clone"
       val t = Tables(s, dir)
@@ -817,11 +778,8 @@ object WarehouseQueries extends QueryModule {
     "m23_concurrent_writers" -> ((s, dir) => {
       val spark = s
       import spark.implicits._
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_m23_${Tables.pathKey(dir)}"
-      def rmrf(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-      }
-      rmrf(new java.io.File(root))
+      val root = Tables.scratch("m23", dir)
+      Tables.rmrf(root)
       val t = Tables(s, dir)
       def slice(r: Int) = t.orders.filter(col("o_orderkey") % 4 === r)
         .select(col("o_orderkey"), col("o_totalprice"))
@@ -889,11 +847,8 @@ object WarehouseQueries extends QueryModule {
     // the sweep. Metadata-scale at 100 TB: one snapshot-dir read + one
     // data-dir walk, no data bytes read.
     "m24_orphan_cleanup" -> ((s, dir) => {
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_m24_${Tables.pathKey(dir)}"
-      def rmrf(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-      }
-      rmrf(new java.io.File(root))
+      val root = Tables.scratch("m24", dir)
+      Tables.rmrf(root)
       val t = Tables(s, dir)
       def slice(r: Int) = t.orders.filter(col("o_orderkey") % 3 === r)
         .select(col("o_orderkey"), col("o_totalprice"))
@@ -926,11 +881,8 @@ object WarehouseQueries extends QueryModule {
     // content (== v2 exactly, re-derived by the oracle), the still-readable
     // bad version's row count, the new version number, and the audit note.
     "m26_snapshot_rollback" -> ((s, dir) => {
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_m26_${Tables.pathKey(dir)}"
-      def rmrf(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-      }
-      rmrf(new java.io.File(root))
+      val root = Tables.scratch("m26", dir)
+      Tables.rmrf(root)
       val t = Tables(s, dir)
       def slice(r: Int) = t.orders.filter(col("o_orderkey") % 3 === r)
         .select(col("o_orderkey"), col("o_totalprice"))
@@ -1005,20 +957,11 @@ object WarehouseQueries extends QueryModule {
     // the oracle from the raw table: spec evolution must never change an
     // answer, only the scan cost.
     "m25_partition_evolution" -> ((s, dir) => {
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_m25_${Tables.pathKey(dir)}"
+      val root = Tables.scratch("m25", dir)
       // the two-generation layout is SETUP, not the graded operator (the
       // spec-translated read is) — build it once per fixture, fingerprint-
       // guarded like a6/c20's layouts, instead of rewriting per invocation
-      val ready = java.nio.file.Paths.get(root, "_ready")
-      val src = new java.io.File(s"$dir/orders.parquet")
-      val fingerprint = s"${src.length()}:${src.lastModified()}"
-      val fresh = java.nio.file.Files.exists(ready) && new String(
-        java.nio.file.Files.readAllBytes(ready), "UTF-8").trim == fingerprint
-      if (!fresh) {
-        def rmrf(f: java.io.File): Unit = {
-          val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-        }
-        rmrf(new java.io.File(root))
+      Tables.staged(root, Tables.stamp(s"$dir/orders.parquet")) {
         val t = Tables(s, dir)
         val base = t.orders.select(col("o_orderkey"), col("o_totalprice"),
           col("o_orderdate"), year(col("o_orderdate")).as("yr"),
@@ -1027,7 +970,6 @@ object WarehouseQueries extends QueryModule {
           base.filter(col("o_orderkey") % 2 === 0).drop("mo"), root, Seq("yr"))
         SnapshotTable.appendPartitioned(
           base.filter(col("o_orderkey") % 2 === 1), root, Seq("yr", "mo"))
-        java.nio.file.Files.write(ready, fingerprint.getBytes("UTF-8"))
         ()
       }
       m25Read(s, root)
@@ -1083,11 +1025,8 @@ object WarehouseQueries extends QueryModule {
     "m30_sql_dml" -> ((s, dir) => {
       import graft.plans.GraftDmlRegistry
       val t = Tables(s, dir)
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_m30_${Tables.pathKey(dir)}"
-      def rmrf(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-      }
-      rmrf(new java.io.File(root))
+      val root = Tables.scratch("m30", dir)
+      Tables.rmrf(root)
       val name = s"m30t_${Tables.pathKey(dir)}"
       val base = t.orders.select(col("o_orderkey"), col("o_custkey"),
         col("o_totalprice"), col("o_orderstatus"))
@@ -1141,11 +1080,8 @@ object WarehouseQueries extends QueryModule {
     "m31_sql_merge_cols" -> ((s, dir) => {
       import graft.plans.GraftDmlRegistry
       val t = Tables(s, dir)
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_m31_${Tables.pathKey(dir)}"
-      def rmrf(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-      }
-      rmrf(new java.io.File(root))
+      val root = Tables.scratch("m31", dir)
+      Tables.rmrf(root)
       val name = s"m31t_${Tables.pathKey(dir)}"
       val base = t.orders.select(col("o_orderkey"), col("o_custkey"),
         col("o_totalprice"), col("o_orderstatus"))
@@ -1181,11 +1117,8 @@ object WarehouseQueries extends QueryModule {
     "m33_sql_insert" -> ((s, dir) => {
       import graft.plans.GraftDmlRegistry
       val t = Tables(s, dir)
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_m33_${Tables.pathKey(dir)}"
-      def rmrf(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-      }
-      rmrf(new java.io.File(root))
+      val root = Tables.scratch("m33", dir)
+      Tables.rmrf(root)
       val name = s"m33t_${Tables.pathKey(dir)}"
       val base = t.orders.select(col("o_orderkey"), col("o_custkey"),
         col("o_totalprice"), col("o_orderstatus"))
@@ -1220,11 +1153,8 @@ object WarehouseQueries extends QueryModule {
     "m34_sql_history" -> ((s, dir) => {
       import graft.plans.GraftDmlRegistry
       val t = Tables(s, dir)
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_m34_${Tables.pathKey(dir)}"
-      def rmrf(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-      }
-      rmrf(new java.io.File(root))
+      val root = Tables.scratch("m34", dir)
+      Tables.rmrf(root)
       val name = s"m34t_${Tables.pathKey(dir)}"
       val base = t.orders.select(col("o_orderkey"), col("o_totalprice"))
       SnapshotTable.commit(base.filter(col("o_orderkey") % 7 === 0), root,
@@ -1255,11 +1185,8 @@ object WarehouseQueries extends QueryModule {
     "m35_sql_maintenance" -> ((s, dir) => {
       import graft.plans.GraftDmlRegistry
       val t = Tables(s, dir)
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_m35_${Tables.pathKey(dir)}"
-      def rmrf(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-      }
-      rmrf(new java.io.File(root))
+      val root = Tables.scratch("m35", dir)
+      Tables.rmrf(root)
       val name = s"m35t_${Tables.pathKey(dir)}"
       GraftDmlRegistry.unregister(name) // reruns in one JVM re-CTAS cleanly
       val base = t.orders.select(col("o_orderkey"), col("o_totalprice"))
@@ -1307,11 +1234,8 @@ object WarehouseQueries extends QueryModule {
     "m37_sql_merge_full_sync" -> ((s, dir) => {
       import graft.plans.GraftDmlRegistry
       val t = Tables(s, dir)
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_m37_${Tables.pathKey(dir)}"
-      def rmrf(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-      }
-      rmrf(new java.io.File(root))
+      val root = Tables.scratch("m37", dir)
+      Tables.rmrf(root)
       val name = s"m37t_${Tables.pathKey(dir)}"
       val base = t.orders.select(col("o_orderkey"), col("o_totalprice"),
         col("o_orderstatus"))
@@ -1354,13 +1278,10 @@ object WarehouseQueries extends QueryModule {
       import graft.plans.GraftDmlRegistry
       val t = Tables(s, dir)
       val key = Tables.pathKey(dir)
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_m38_$key"
-      val landing = s"${System.getProperty("java.io.tmpdir")}/graft_m38land_$key"
-      val staging = s"${System.getProperty("java.io.tmpdir")}/graft_m38stage_$key"
-      def rmrf(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-      }
-      Seq(root, landing, staging).foreach(p => rmrf(new java.io.File(p)))
+      val root = Tables.scratch("m38", dir)
+      val landing = Tables.scratch("m38land", dir)
+      val staging = Tables.scratch("m38stage", dir)
+      Seq(root, landing, staging).foreach(Tables.rmrf)
       val name = s"m38t_$key"
       val base = t.orders.select(col("o_orderkey"), col("o_totalprice"))
       SnapshotTable.commit(base.filter(col("o_orderkey") % 5 === 1), root)
@@ -1409,12 +1330,9 @@ object WarehouseQueries extends QueryModule {
       import graft.plans.{GraftMvDdlRegistry, GraftMvRewriteRule, MvRegistry}
       val t = Tables(s, dir)
       val key = Tables.pathKey(dir)
-      val srcDir = s"${System.getProperty("java.io.tmpdir")}/graft_m36src_$key"
-      val mvPath = s"${System.getProperty("java.io.tmpdir")}/graft_m36mv_$key"
-      def rmrf(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-      }
-      rmrf(new java.io.File(srcDir)); rmrf(new java.io.File(mvPath))
+      val srcDir = Tables.scratch("m36src", dir)
+      val mvPath = Tables.scratch("m36mv", dir)
+      Tables.rmrf(srcDir); Tables.rmrf(mvPath)
       ensureMvRule(s)
       // self-containment: this query owns BOTH registries (clearing only
       // the rewrite side would desync DROP/REFRESH from what the rule
@@ -1474,13 +1392,10 @@ object WarehouseQueries extends QueryModule {
         GraftMvRewriteRule, MvRegistry}
       val t = Tables(s, dir)
       val key = Tables.pathKey(dir)
-      val metaDir = s"${System.getProperty("java.io.tmpdir")}/graft_m39meta_$key"
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_m39t_$key"
-      val mvPath = s"${System.getProperty("java.io.tmpdir")}/graft_m39mv_$key"
-      def rmrf(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-      }
-      Seq(metaDir, root, mvPath).foreach(p => rmrf(new java.io.File(p)))
+      val metaDir = Tables.scratch("m39meta", dir)
+      val root = Tables.scratch("m39t", dir)
+      val mvPath = Tables.scratch("m39mv", dir)
+      Seq(metaDir, root, mvPath).foreach(Tables.rmrf)
       ensureMvRule(s)
       val name = s"m39t_$key"
       val mv = s"m39v_$key"
@@ -1544,11 +1459,8 @@ object WarehouseQueries extends QueryModule {
       import graft.plans.GraftDmlRegistry
       val t = Tables(s, dir)
       val key = Tables.pathKey(dir)
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_m40t_$key"
-      def rmrf(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-      }
-      rmrf(new java.io.File(root))
+      val root = Tables.scratch("m40t", dir)
+      Tables.rmrf(root)
       val name = s"m40t_$key"
       GraftDmlRegistry.unregister(name)
       t.orders.select(col("o_orderkey"), col("o_totalprice"),
@@ -1595,11 +1507,8 @@ object WarehouseQueries extends QueryModule {
       import graft.plans.GraftDmlRegistry
       val t = Tables(s, dir)
       val key = Tables.pathKey(dir)
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_m41t_$key"
-      def rmrf(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-      }
-      rmrf(new java.io.File(root))
+      val root = Tables.scratch("m41t", dir)
+      Tables.rmrf(root)
       val name = s"m41t_$key"
       GraftDmlRegistry.unregister(name)
       val base = t.lineitem.select(col("l_orderkey"), col("l_linenumber"),
@@ -1652,11 +1561,8 @@ object WarehouseQueries extends QueryModule {
       import graft.plans.GraftDmlRegistry
       val t = Tables(s, dir)
       val key = Tables.pathKey(dir)
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_m42t_$key"
-      def rmrf(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-      }
-      rmrf(new java.io.File(root))
+      val root = Tables.scratch("m42t", dir)
+      Tables.rmrf(root)
       val name = s"m42t_$key"
       GraftDmlRegistry.unregister(name)
       t.orders.select(col("o_orderkey"), col("o_totalprice"),
@@ -1702,11 +1608,8 @@ object WarehouseQueries extends QueryModule {
       import graft.plans.GraftDmlRegistry
       val t = Tables(s, dir)
       val key = Tables.pathKey(dir)
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_m43t_$key"
-      def rmrf(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-      }
-      rmrf(new java.io.File(root))
+      val root = Tables.scratch("m43t", dir)
+      Tables.rmrf(root)
       val name = s"m43t_$key"
       GraftDmlRegistry.unregister(name)
       t.orders.select(col("o_orderkey"), col("o_totalprice"),
@@ -1749,11 +1652,8 @@ object WarehouseQueries extends QueryModule {
       import graft.plans.GraftDmlRegistry
       val t = Tables(s, dir)
       val key = Tables.pathKey(dir)
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_m44t_$key"
-      def rmrf(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-      }
-      rmrf(new java.io.File(root))
+      val root = Tables.scratch("m44t", dir)
+      Tables.rmrf(root)
       val name = s"m44t_$key"
       GraftDmlRegistry.unregister(name)
       t.orders.select(col("o_orderkey"), col("o_totalprice"))
@@ -1794,11 +1694,8 @@ object WarehouseQueries extends QueryModule {
       import graft.plans.GraftDmlRegistry
       val t = Tables(s, dir)
       val key = Tables.pathKey(dir)
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_m45t_$key"
-      def rmrf(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-      }
-      rmrf(new java.io.File(root))
+      val root = Tables.scratch("m45t", dir)
+      Tables.rmrf(root)
       val name = s"m45t_$key"
       GraftDmlRegistry.unregister(name)
       t.orders.select(col("o_orderkey"), col("o_totalprice"))
@@ -1837,11 +1734,8 @@ object WarehouseQueries extends QueryModule {
       import graft.sources.SnapshotTable
       val t = Tables(s, dir)
       val key = Tables.pathKey(dir)
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_m46t_$key"
-      def rmrf(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-      }
-      rmrf(new java.io.File(root))
+      val root = Tables.scratch("m46t", dir)
+      Tables.rmrf(root)
       val name = s"m46t_$key"
       GraftDmlRegistry.unregister(name)
       val src = t.orders.select(col("o_orderkey"), col("o_totalprice"))
@@ -1883,11 +1777,8 @@ object WarehouseQueries extends QueryModule {
       import graft.sources.SnapshotTable
       val t = Tables(s, dir)
       val key = Tables.pathKey(dir)
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_m47t_$key"
-      def rmrf(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-      }
-      rmrf(new java.io.File(root))
+      val root = Tables.scratch("m47t", dir)
+      Tables.rmrf(root)
       val name = s"m47t_$key"
       GraftDmlRegistry.unregister(name)
       val src = t.orders.select(col("o_orderkey"), col("o_totalprice"))
@@ -1950,7 +1841,7 @@ object WarehouseQueries extends QueryModule {
     * definition) — shared with PlanSpec, which pins the rewritten plan. */
   def m27Pipeline(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
     val t = Tables(s, dir)
-    val mvPath = s"${System.getProperty("java.io.tmpdir")}/graft_m27_${Tables.pathKey(dir)}"
+    val mvPath = Tables.scratch("m27", dir)
     def viewDef = t.orders
       .groupBy(year(col("o_orderdate")).as("yr"), month(col("o_orderdate")).as("mo"))
       .agg(count(lit(1)).as("n_orders"),
@@ -1966,7 +1857,7 @@ object WarehouseQueries extends QueryModule {
     * coarser yearly rollup the rule serves by re-aggregating the MV. */
   def m28Pipeline(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
     val t = Tables(s, dir)
-    val mvPath = s"${System.getProperty("java.io.tmpdir")}/graft_m28_${Tables.pathKey(dir)}"
+    val mvPath = Tables.scratch("m28", dir)
     def fine = t.orders
       .groupBy(year(col("o_orderdate")).as("yr"), month(col("o_orderdate")).as("mo"))
       .agg(count(lit(1)).as("n_orders"),
@@ -1987,7 +1878,7 @@ object WarehouseQueries extends QueryModule {
     * rewrite refuses nullable-child averages without this partial). */
   def m29Pipeline(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
     val t = Tables(s, dir)
-    val mvPath = s"${System.getProperty("java.io.tmpdir")}/graft_m29_${Tables.pathKey(dir)}"
+    val mvPath = Tables.scratch("m29", dir)
     def fine = t.orders
       .join(t.customer, col("o_custkey") === col("c_custkey"))
       .groupBy(col("c_mktsegment"), year(col("o_orderdate")).as("yr"))
@@ -2013,7 +1904,7 @@ object WarehouseQueries extends QueryModule {
     * pushed onto the MV scan (tier 4). */
   def m32Pipeline(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
     val t = Tables(s, dir)
-    val mvPath = s"${System.getProperty("java.io.tmpdir")}/graft_m32_${Tables.pathKey(dir)}"
+    val mvPath = Tables.scratch("m32", dir)
     def fine = t.orders
       .groupBy(year(col("o_orderdate")).as("yr"), month(col("o_orderdate")).as("mo"))
       .agg(count(lit(1)).as("n_orders"),

@@ -294,12 +294,11 @@ object GraftOps {
       smallKey: String,
       mBits: Int = 1 << 20,
       kHashes: Int = 5): DataFrame = {
-    import org.apache.spark.sql.functions.{col, expr}
-    val spark = large.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]].sparkSession
-    graft.functions.BloomSketch.register(spark)
+    import org.apache.spark.sql.functions.col
     val blob = small
       .select(col(smallKey).cast("string").as("__graft_bk"))
-      .agg(expr(s"bloom_sketch(__graft_bk, $mBits, $kHashes)").as("__graft_bsk"))
+      .agg(graft.functions.BloomSketch.sketchColumn(col("__graft_bk"), mBits, kHashes)
+        .as("__graft_bsk"))
       .head().getAs[Array[Byte]](0)
     large
       .filter(graft.functions.BloomSketch.containsColumn(blob,

@@ -38,47 +38,38 @@ object BloomIndex {
     * DIFFERENT column than the indexed one — the realistic layout where the
     * index key is scattered across every file), and persist the per-file
     * Bloom index on `keyCol` alongside (`_bloomidx/`, underscore-hidden
-    * from table scans). Idempotent per target path via the same
-    * content-fingerprint `_ready` discipline as [[ZoneMap.writeClustered]].
+    * from table scans). Idempotent per target path: built through
+    * [[graft.Tables.staged]] on the input's row count.
     */
   def writeIndexed(df: DataFrame, path: String, keyCol: String,
       layoutCol: String, nFiles: Int): Unit = {
-    val ready = Paths.get(path, "_ready")
-    val fingerprint = df.count().toString
-    val stale = Files.exists(ready) &&
-      new String(Files.readAllBytes(ready), "UTF-8") != fingerprint
-    if (!Files.exists(ready) || stale) {
-      val spark = df.sparkSession
-      BloomSketch.register(spark)
+    graft.Tables.staged(path, df.count().toString) {
       df.repartition(nFiles, col(layoutCol))
         .write.mode("overwrite").parquet(path)
-      spark.read.parquet(path)
-        .groupBy(col("_metadata.file_path").as("file"))
-        .agg(expr(s"bloom_sketch(CAST($keyCol AS STRING), $MBits, $KHashes)")
-          .as("bloom"))
+      fileSketches(df.sparkSession, path, keyCol)
         .write.mode("overwrite").parquet(s"$path/_bloomidx")
-      Files.write(ready, fingerprint.getBytes("UTF-8"))
-      ()
     }
+    ()
   }
 
   /** The persisted index (normal path), else one recomputation pass. */
-  def index(spark: SparkSession, path: String, keyCol: String): DataFrame = {
-    BloomSketch.register(spark)
+  def index(spark: SparkSession, path: String, keyCol: String): DataFrame =
     if (Files.exists(Paths.get(path, "_bloomidx")))
       spark.read.parquet(s"$path/_bloomidx")
-    else
-      spark.read.parquet(path)
-        .groupBy(col("_metadata.file_path").as("file"))
-        .agg(expr(s"bloom_sketch(CAST($keyCol AS STRING), $MBits, $KHashes)")
-          .as("bloom"))
-  }
+    else fileSketches(spark, path, keyCol)
+
+  /** One distributed pass: (file, bloom) per data file. */
+  private def fileSketches(spark: SparkSession, path: String, keyCol: String): DataFrame =
+    spark.read.parquet(path)
+      .groupBy(col("_metadata.file_path").as("file"))
+      .agg(BloomSketch.sketchColumn(col(keyCol).cast("string"), MBits, KHashes)
+        .as("bloom"))
 
   /** Files whose filter fires for ANY of `values` — the scan list after
     * skipping. The collect is file-level METADATA, never data. */
   def prunedFiles(spark: SparkSession, path: String, keyCol: String,
       values: Seq[String]): Seq[String] = {
-    val probe = values.map(v => expr(s"bloom_contains(bloom, '$v')"))
+    val probe = values.map(v => BloomSketch.probeColumn(col("bloom"), lit(v)))
       .reduce(_ || _)
     index(spark, path, keyCol).filter(probe)
       .select(col("file")).collect().map(_.getString(0)).toSeq.sorted

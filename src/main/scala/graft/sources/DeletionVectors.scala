@@ -48,10 +48,9 @@ object DeletionVectors {
   /** One deletion vector per affected file for rows matching `pred`:
     * `(file, dv, n_deleted)`. Files with no matching row get no DV row. */
   def build(table: DataFrame, pred: Column): DataFrame = {
-    BitmapSketch.register(table.sparkSession)
     withPos(table).filter(pred)
       .groupBy(col("__dv_file").as("file"))
-      .agg(expr("bitmap_sketch(__dv_pos)").as("dv"),
+      .agg(BitmapSketch.sketchColumn(col("__dv_pos")).as("dv"),
         count(lit(1)).as("n_deleted"))
   }
 
@@ -59,13 +58,12 @@ object DeletionVectors {
     * batches can land in any order — the Bitmap blob is a mergeable
     * summary, same discipline as the h5 sketch rollup). */
   def merge(a: DataFrame, b: DataFrame): DataFrame = {
-    BitmapSketch.register(a.sparkSession)
     a.unionByName(b)
       .groupBy(col("file"))
-      .agg(expr("bitmap_union(dv)").as("dv"))
+      .agg(BitmapSketch.unionColumn(col("dv")).as("dv"))
       // popcount of the merged bitmap, NOT a sum of the inputs' counts — a
       // row deleted by both batches must count once
-      .withColumn("n_deleted", expr("bitmap_count(dv)"))
+      .withColumn("n_deleted", BitmapSketch.countColumn(col("dv")))
   }
 
   /** Merge-on-read: scan `table`, anti-apply `dvs`. The DV side is
@@ -73,7 +71,6 @@ object DeletionVectors {
     * (null-DV rows survive via the coalesce). Output columns = the data
     * columns, metadata helpers dropped. */
   def applyTo(table: DataFrame, dvs: DataFrame): DataFrame = {
-    BitmapSketch.register(table.sparkSession)
     val dataCols = table.columns.toSeq.map(col)
     // the DV side joins under reserved __dv_* names so a data table that
     // itself has `file`/`dv` columns can never make the condition ambiguous
@@ -81,7 +78,8 @@ object DeletionVectors {
       .join(broadcast(dvs.select(col("file").as("__dv_key"),
           col("dv").as("__dv_bm"))),
         col("__dv_file") === col("__dv_key"), "left")
-      .filter(coalesce(!expr("bitmap_contains(__dv_bm, __dv_pos)"), lit(true)))
+      .filter(coalesce(!BitmapSketch.containsColumn(col("__dv_bm"), col("__dv_pos")),
+        lit(true)))
       .select(dataCols: _*)
   }
 

@@ -27,10 +27,10 @@ import graft.Tables
   * the trained codebook is bit-identical at any executor count AND
   * SQL-replayable, the g40 discipline) and assigns every vector to its
   * nearest learned centroid. The persisted centroids are the Lloyd-final
-  * vectors rounded to 6dp — what probe selection reads. Rebuilds are gated
-  * by the content-fingerprint `_ready` discipline (BloomIndex/ZoneMap,
-  * hardened by the r14 sf10 gate): a regenerated corpus under the same
-  * path recommits instead of silently serving the stale index.
+  * vectors rounded to 6dp — what probe selection reads. Rebuilds go
+  * through [[graft.Tables.staged]] on a content fingerprint (hardened by
+  * the r14 sf10 gate): a regenerated corpus under the same path recommits
+  * instead of silently serving the stale index.
   *
   * Scale notes (100 TB): the index build is `iters` single-scan Lloyd
   * passes (k×d driver doubles between passes) plus one partitioned
@@ -39,25 +39,27 @@ import graft.Tables
   */
 object IvfIndex {
 
-  /** Build + persist (idempotent per content fingerprint). */
-  def write(emb: DataFrame, path: String): Unit = {
-    val spark = emb.sparkSession
-    val ready = Paths.get(path, "_ready")
-    // label rides in the fingerprint because the index CONTENT (cells,
-    // centroids, postings partitioning) derives from it — any column the
-    // index depends on must flip the `_ready` marker on change; the CRC
-    // job is memoized per (session, path, source-files size+mtime), see
-    // Tables.memoFingerprint (r22)
-    val fingerprint = Tables.memoFingerprint(emb, s"ivf:$path") {
+  /** Row count + CRC sum over (vec_id, label, embedding) of an embeddings
+    * frame. label rides along because the index CONTENT (cells, centroids,
+    * postings partitioning) derives from it — any column the index depends
+    * on must change the fingerprint. The CRC job is memoized per session
+    * and source-file stamps ([[Tables.memoFingerprint]]). */
+  private[sources] def contentFingerprint(emb: DataFrame, tag: String): String =
+    Tables.memoFingerprint(emb, tag) {
       val fpRow = emb.agg(count(lit(1)),
         coalesce(sum(crc32(concat_ws(",", col("vec_id"), col("label"),
           concat_ws(",", transform(col("embedding"), x => x.cast("string"))))
           .cast("binary"))), lit(0L))).head()
       s"${fpRow.getLong(0)}:${fpRow.getLong(1)}"
     }
-    val stale = Files.exists(ready) &&
-      new String(Files.readAllBytes(ready), "UTF-8") != fingerprint
-    if (!Files.exists(ready) || stale) {
+
+  /** Build + persist (idempotent per content fingerprint). */
+  def write(emb: DataFrame, path: String): Unit = {
+    val spark = emb.sparkSession
+    val fingerprint = contentFingerprint(emb, s"ivf:$path")
+    // a rebuild starts a fresh index generation from an empty root:
+    // segments, tombstones, compactions and the postings pointer reset
+    Tables.staged(path, fingerprint) {
       val vd = expr("transform(embedding, x -> CAST(x AS DOUBLE))")
       val base = emb.select(col("vec_id"), col("label"), col("embedding"),
         vd.as("__x"))
@@ -78,27 +80,8 @@ object IvfIndex {
       val (cid, _) = graft.plans.KMeans.assignCols("__x", cents)
       base.select(cid.as("cell"), col("vec_id"), col("label"), col("embedding"))
         .write.mode("overwrite").partitionBy("cell").parquet(s"$path/postings")
-      // a rebuild starts a fresh index generation: stale segments,
-      // compactions, and the postings pointer all reset with it
-      Files.deleteIfExists(Paths.get(path, "_postings"))
-      rmrfDir(new java.io.File(s"$path/segments"))
-      rmrfDir(new java.io.File(s"$path/tombstones"))
-      val dir = new java.io.File(path)
-      val stray = dir.listFiles()
-      if (stray != null) {
-        stray.filter(f => f.getName.startsWith("_seg_") ||
-          f.getName.startsWith("_compacted_") ||
-          f.getName == "_tombstones_ready").foreach(_.delete())
-        // stale compacted generations from the previous index content
-        stray.filter(_.getName.startsWith("postings_g")).foreach(rmrfDir)
-      }
-      Files.write(ready, fingerprint.getBytes("UTF-8"))
-      ()
     }
-  }
-
-  private def rmrfDir(f: java.io.File): Unit = {
-    val cs = f.listFiles(); if (cs != null) cs.foreach(rmrfDir); f.delete(); ()
+    ()
   }
 
   /** COMPACTION — fold live segments back into the base (the index twin of
@@ -154,10 +137,9 @@ object IvfIndex {
     Files.move(tmp, Paths.get(path, "_postings"),
       java.nio.file.StandardCopyOption.ATOMIC_MOVE,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    // cleanup tolerates already-deleted paths (rmrfDir no-ops on missing)
-    segs.foreach(n => rmrfDir(new java.io.File(s"$path/segments/$n")))
-    rmrfDir(new java.io.File(s"$path/tombstones"))
-    Files.deleteIfExists(Paths.get(path, "_tombstones_ready"))
+    // cleanup tolerates already-deleted paths (Tables.rmrf no-ops on missing)
+    segs.foreach(n => Tables.rmrf(s"$path/segments/$n"))
+    Tables.rmrf(s"$path/tombstones")
     ()
   }
 
@@ -180,14 +162,10 @@ object IvfIndex {
     * back into the base on a compaction schedule (m9's compact shape). */
   def appendSegment(delta: DataFrame, path: String, name: String): Unit = {
     val spark = delta.sparkSession
+    // the marker sits beside segments/, not inside: compact deletes the
+    // segment dir but the marker must survive so a re-run does not re-append
     val segReady = Paths.get(path, s"_seg_${name}_ready")
-    val fingerprint = Tables.memoFingerprint(delta, s"ivfseg:$path:$name") {
-      val fpRow = delta.agg(count(lit(1)),
-        coalesce(sum(crc32(concat_ws(",", col("vec_id"), col("label"),
-          concat_ws(",", transform(col("embedding"), x => x.cast("string"))))
-          .cast("binary"))), lit(0L))).head()
-      s"${fpRow.getLong(0)}:${fpRow.getLong(1)}"
-    }
+    val fingerprint = contentFingerprint(delta, s"ivfseg:$path:$name")
     val stale = Files.exists(segReady) &&
       new String(Files.readAllBytes(segReady), "UTF-8") != fingerprint
     if (!Files.exists(segReady) || stale) {
@@ -220,26 +198,22 @@ object IvfIndex {
     * like m16's deletion vectors fold into a purge). Idempotent per
     * tombstone-set fingerprint. */
   def delete(ids: DataFrame, path: String): Unit = {
-    val ready = Paths.get(path, "_tombstones_ready")
     val fingerprint = Tables.memoFingerprint(ids, s"ivftomb:$path") {
       val fpRow = ids.agg(count(lit(1)),
         coalesce(sum(crc32(col("vec_id").cast("string").cast("binary"))),
           lit(0L))).head()
       s"${fpRow.getLong(0)}:${fpRow.getLong(1)}"
     }
-    val stale = Files.exists(ready) &&
-      new String(Files.readAllBytes(ready), "UTF-8") != fingerprint
-    if (!Files.exists(ready) || stale) {
+    Tables.staged(s"$path/tombstones", fingerprint) {
       ids.select(col("vec_id").as("__dead_id"))
         .coalesce(1).write.mode("overwrite").parquet(s"$path/tombstones")
-      Files.write(ready, fingerprint.getBytes("UTF-8"))
-      ()
     }
+    ()
   }
 
   /** The committed tombstones (empty if none were ever deleted). */
   def tombstones(spark: SparkSession, path: String): DataFrame =
-    if (Files.exists(Paths.get(path, "_tombstones_ready")))
+    if (Files.exists(Paths.get(path, "tombstones", "_ready")))
       spark.read.parquet(s"$path/tombstones")
     else spark.emptyDataFrame.withColumn("__dead_id", lit(0L)).limit(0)
 

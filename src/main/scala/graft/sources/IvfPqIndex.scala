@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.Tables
@@ -46,19 +44,8 @@ object IvfPqIndex {
   def write(emb: DataFrame, path: String): Unit = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val ready = Paths.get(path, "_ready")
-    // CRC job memoized per (session, path, source-files size+mtime) — r22,
-    // see Tables.memoFingerprint
-    val fingerprint = Tables.memoFingerprint(emb, s"ivfpq:$path") {
-      val fpRow = emb.agg(count(lit(1)),
-        coalesce(sum(crc32(concat_ws(",", col("vec_id"), col("label"),
-          concat_ws(",", transform(col("embedding"), x => x.cast("string"))))
-          .cast("binary"))), lit(0L))).head()
-      s"${fpRow.getLong(0)}:${fpRow.getLong(1)}"
-    }
-    val stale = Files.exists(ready) &&
-      new String(Files.readAllBytes(ready), "UTF-8") != fingerprint
-    if (!Files.exists(ready) || stale) {
+    // a rebuild starts a fresh index generation from an empty root
+    Tables.staged(path, IvfIndex.contentFingerprint(emb, s"ivfpq:$path")) {
       val vd = expr("transform(embedding, x -> CAST(x AS DOUBLE))")
       val base = (0 until subs).foldLeft(
         emb.select(col("vec_id"), col("label"), col("embedding"), vd.as("__x"))) {
@@ -91,17 +78,8 @@ object IvfPqIndex {
       base.select(cellCol.as("cell") +: col("vec_id") +: col("label") +:
         col("embedding") +: codeCols: _*)
         .write.mode("overwrite").partitionBy("cell").parquet(s"$path/postings")
-      // a rebuild starts a fresh index generation — stale segments reset
-      def rmrfDir(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rmrfDir); f.delete(); ()
-      }
-      rmrfDir(new java.io.File(s"$path/segments"))
-      val stray = new java.io.File(path).listFiles()
-      if (stray != null)
-        stray.filter(_.getName.startsWith("_seg_")).foreach(_.delete())
-      Files.write(ready, fingerprint.getBytes("UTF-8"))
-      ()
     }
+    ()
   }
 
   /** INCREMENTAL update — FAISS's `add()` semantics as a lakehouse segment:
@@ -115,17 +93,8 @@ object IvfPqIndex {
     * compaction folds segments back (the IvfIndex.compact shape). */
   def appendSegment(delta: DataFrame, path: String, name: String): Unit = {
     val spark = delta.sparkSession
-    val segReady = Paths.get(path, s"_seg_${name}_ready")
-    val fingerprint = Tables.memoFingerprint(delta, s"ivfpqseg:$path:$name") {
-      val fpRow = delta.agg(count(lit(1)),
-        coalesce(sum(crc32(concat_ws(",", col("vec_id"), col("label"),
-          concat_ws(",", transform(col("embedding"), x => x.cast("string"))))
-          .cast("binary"))), lit(0L))).head()
-      s"${fpRow.getLong(0)}:${fpRow.getLong(1)}"
-    }
-    val stale = Files.exists(segReady) &&
-      new String(Files.readAllBytes(segReady), "UTF-8") != fingerprint
-    if (!Files.exists(segReady) || stale) {
+    Tables.staged(s"$path/segments/$name",
+        IvfIndex.contentFingerprint(delta, s"ivfpqseg:$path:$name")) {
       val coarse = centroids(spark, path).map(_._2).toArray
       val cbs = codebooks(spark, path)
       val vd = expr("transform(embedding, x -> CAST(x AS DOUBLE))")
@@ -142,9 +111,8 @@ object IvfPqIndex {
         col("embedding") +: codeCols: _*)
         .write.mode("overwrite").partitionBy("cell")
         .parquet(s"$path/segments/$name")
-      Files.write(segReady, fingerprint.getBytes("UTF-8"))
-      ()
     }
+    ()
   }
 
   /** A segment's coded postings; `cell` filters prune like the base. */

@@ -51,34 +51,27 @@ object SnapshotTable {
 
   private def snapDir(root: String): Path = Paths.get(root, "_snapshots")
 
-  /** Analyzed-scan cache for committed version reads — the same metastore
-    * discipline as Tables.readCached (r21): `spark.read.parquet` pays
-    * ~60-90 ms of driver-side source resolution + footer inference per call,
-    * and lifecycle queries re-read each version many times (every DML
+  /** Analyzed-scan cache for committed version reads, under the one
+    * session-cache rule ([[graft.Tables.pinned]], the Tables.readCached
+    * metastore discipline of r21): `spark.read.parquet` pays ~60-90 ms of
+    * driver-side source resolution + footer inference per call, and
+    * lifecycle queries re-read each version many times (every DML
     * statement, every CHANGES sub-window). The cached object is the
     * immutable analyzed plan — no rows, no results; every execution still
-    * scans the version's parquet files. Keyed on (session, root, version,
-    * CRC of the manifest BYTES): a version is immutable once committed, but
-    * a table whose root is rebuilt (rmrf + recommit, the per-run fixture
+    * scans the version's parquet files. Scope (root, version), stamp = CRC
+    * of the manifest BYTES: a version is immutable once committed, but a
+    * table whose root is rebuilt (rmrf + recommit, the per-run fixture
     * reset) restarts version numbers with NEW part-file names, so the
     * manifest CRC is what detects it. Manifest existence is re-checked on
     * every hit so an [[expire]]d version fails loudly, exactly like the
-    * uncached read. */
-  // bounded access-order LRU (r22): a long-lived session reading more than
-  // 256 distinct (root, version) pairs evicts LRU instead of growing forever
-  private val scanCache = graft.Tables.boundedLru[DataFrame](256)
+    * uncached read. Bounded LRU of 256 entries. */
+  private val scanCache = graft.Tables.pinCache[DataFrame](256)
   private def cachedScan(spark: SparkSession, root: String, tag: String,
       v: Long, manifestBytes: Array[Byte])(build: => DataFrame): DataFrame = {
     val crc = new java.util.zip.CRC32
     crc.update(manifestBytes)
-    val prefix = s"${System.identityHashCode(spark)}:$root:$tag:v$v:"
-    val key = s"$prefix${java.lang.Long.toHexString(crc.getValue)}"
-    val hit = scanCache.get(key)
-    if (hit != null && (hit.sparkSession eq spark)) return hit
-    scanCache.keySet.removeIf(k => k.startsWith(prefix) && k != key)
-    val df = build
-    scanCache.put(key, df)
-    df
+    graft.Tables.pinned(scanCache, spark, s"$root:$tag:v$v",
+      java.lang.Long.toHexString(crc.getValue))(build)
   }
 
   /** Children of `p`, stream CLOSED on exit — every directory walk must

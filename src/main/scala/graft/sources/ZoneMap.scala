@@ -39,7 +39,6 @@ object ZoneMap {
     * spanning the whole domain.
     */
   def writeClustered(df: DataFrame, path: String, clusterCol: String, nFiles: Int): Unit = {
-    val ready = Paths.get(path, "_ready")
     // the marker carries a content fingerprint, so a caller that regenerates
     // the INPUT under the same target path gets a fresh clustered copy +
     // zone map instead of silently reading the stale one; an unchanged input
@@ -55,17 +54,14 @@ object ZoneMap {
           lit(0L))).head()
       s"${fpRow.getLong(0)}:${fpRow.getLong(1)}"
     }
-    val stale = Files.exists(ready) &&
-      new String(Files.readAllBytes(ready), "UTF-8") != fingerprint
-    if (!Files.exists(ready) || stale) {
+    graft.Tables.staged(path, fingerprint) {
       df.repartitionByRange(nFiles, col(clusterCol))
         .sortWithinPartitions(clusterCol)
         .write.mode("overwrite").parquet(path)
       computeStats(df.sparkSession, path, clusterCol)
         .write.mode("overwrite").parquet(s"$path/_zonemap")
-      Files.write(ready, fingerprint.getBytes("UTF-8"))
-      ()
     }
+    ()
   }
 
   /** One distributed pass over the data: (file, lo, hi) per file. */

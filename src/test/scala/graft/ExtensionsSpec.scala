@@ -20,6 +20,16 @@ class ExtensionsSpec extends AnyFunSuite {
         .withExtensions(new GraftExtensions)
         .getOrCreate()
       try {
+        // every injected function resolves: the extension is the one
+        // registration path (no per-query register calls anywhere)
+        val injected = Seq("cosine_sim", "hll_approx", "hll_sketch", "hll_union",
+          "hll_estimate", "hll_union_pair", "hist_sketch", "hist_union",
+          "hist_quantile", "freq_sketch", "freq_union", "freq_items",
+          "bloom_sketch", "bloom_union", "bloom_contains", "bitmap_sketch",
+          "bitmap_union", "bitmap_count", "bitmap_and_pair", "bitmap_contains",
+          "lev_bounded")
+        assert(injected.distinct.size == 21)
+        injected.foreach(f => assert(s2.catalog.functionExists(f), s"$f is not injected"))
         val cos = s2.sql(
           "SELECT cosine_sim(array(1.0D, 0.0D), array(1.0D, 0.0D)) AS c")
           .head().getDouble(0)

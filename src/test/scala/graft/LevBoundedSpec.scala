@@ -42,7 +42,6 @@ class LevBoundedSpec extends AnyFunSuite {
   test("codegen'd lev_bounded equals interpreted and Spark's levenshtein under the bound") {
     val s = spark
     import s.implicits._
-    graft.functions.LevKernel.register(s)
     import org.apache.spark.sql.functions._
     val rnd = new scala.util.Random(7)
     def word() = (0 until rnd.nextInt(15)).map(_ => ('a' + rnd.nextInt(4)).toChar).mkString

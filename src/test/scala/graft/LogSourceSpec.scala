@@ -13,10 +13,6 @@ import graft.sources.{GraftLog, GraftLogSource}
 class LogSourceSpec extends AnyFunSuite {
   import TestSpark._
 
-  private def rmrf(f: java.io.File): Unit = {
-    val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-  }
-
   test("append assigns consecutive offsets and batch read round-trips") {
     val root = java.nio.file.Files.createTempDirectory("graft_logspec").toString
     GraftLog.append(root, 0, Seq((1000L, 7L, "click", 1.5), (2000L, 8L, "view", 2.5)))
@@ -30,7 +26,7 @@ class LogSourceSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
     assert(rows == Seq((0L, 0L, 7L, 1.5), (0L, 1L, 8L, 2.5), (0L, 2L, 9L, 3.5),
       (1L, 0L, 4L, 4.5)))
-    rmrf(new java.io.File(root))
+    Tables.rmrf(root)
   }
 
   test("offset map JSON round-trips through the checkpoint format") {
@@ -68,7 +64,7 @@ class LogSourceSpec extends AnyFunSuite {
     val delta = all.filter(col("user_id") >= 991L)
       .orderBy("offset").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(delta == Seq((1L, 5L), (1L, 6L), (1L, 7L)))
-    Seq(root, out, ckpt).foreach(d => rmrf(new java.io.File(d)))
+    Seq(root, out, ckpt).foreach(Tables.rmrf)
   }
 
   test("admission control caps per-partition advance per micro-batch") {
@@ -91,6 +87,6 @@ class LogSourceSpec extends AnyFunSuite {
     val per = spark.read.parquet(out).groupBy("batch_id").count()
       .orderBy("batch_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(per == Seq((0L, 4L), (1L, 4L), (2L, 4L)), s"got $per")
-    Seq(root, out, ckpt).foreach(d => rmrf(new java.io.File(d)))
+    Seq(root, out, ckpt).foreach(Tables.rmrf)
   }
 }

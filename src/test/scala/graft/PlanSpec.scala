@@ -481,10 +481,7 @@ class PlanSpec extends AnyFunSuite {
     import graft.sources.{DeletionVectors, SnapshotTable}
     val root = s"${System.getProperty("java.io.tmpdir")}/graft_dv_plan_${Tables.pathKey(sfDir)}"
     val dvRoot = s"${root}_dv"
-    def rmrf(f: java.io.File): Unit = {
-      val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-    }
-    rmrf(new java.io.File(root)); rmrf(new java.io.File(dvRoot))
+    Tables.rmrf(root); Tables.rmrf(dvRoot)
     val t = Tables(spark, sfDir)
     SnapshotTable.commit(
       t.orders.select("o_orderkey", "o_custkey").repartition(4, col("o_orderkey")), root)

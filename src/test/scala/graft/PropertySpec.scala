@@ -109,7 +109,6 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("h3: imperative HLL sketch within 2% of exact (p=14 rsd is 0.81%)") {
-    graft.functions.HllSketchAgg.register(spark)
     val t = Tables(spark, sfDir)
     val r = t.events.groupBy("event_type")
       .agg(expr("hll_approx(user_id)").as("a"),

@@ -119,6 +119,78 @@ class SetSimSpec extends AnyFunSuite {
     assert(twin == full)
   }
 
+  /** A directory fixture: `<tmp>/documents.parquet/` with one part file per
+    * row group of `rows`. */
+  private def dirFixture(rows: Seq[(Long, String)], parts: Int): String = {
+    val d = java.nio.file.Files.createTempDirectory("graft_dirfix").toString
+    val s = spark
+    import s.implicits._
+    rows.toDF("doc_id", "text").repartition(parts)
+      .write.parquet(s"$d/documents.parquet")
+    d
+  }
+
+  private val fixtureDocs = Seq(
+    1L -> "the quick brown fox jumps over the lazy dog",
+    2L -> "the quick brown fox jumps over a lazy cat",
+    3L -> "a slow green turtle walks under the busy bridge",
+    4L -> "a slow green turtle walks under a quiet bridge")
+
+  test("an in-place part-file rewrite in a directory fixture invalidates readCached and dictIndex") {
+    val d = dirFixture(fixtureDocs, 2)
+    try {
+      val path = s"$d/documents.parquet"
+      val scan = Tables.readCached(spark, path)
+      val idx = operators.TextQueries.dictIndex(spark, d)
+      assert(Tables.readCached(spark, path) eq scan)
+      assert(operators.TextQueries.dictIndex(spark, d) eq idx)
+      // overwrite one part file with different rows under the same name,
+      // then put the directory's own mtime back
+      val dirF = new java.io.File(path)
+      val dirMtime = dirF.lastModified()
+      val part = dirF.listFiles().filter(_.getName.endsWith(".parquet")).minBy(_.getName)
+      val repl = dirFixture(Seq(9L -> "an entirely new document about other things",
+        10L -> "an entirely new document about other stuff"), 1)
+      val src = new java.io.File(s"$repl/documents.parquet").listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      java.nio.file.Files.copy(src.toPath, part.toPath,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      new java.io.File(dirF, s".${part.getName}.crc").delete()
+      Tables.rmrf(repl)
+      assert(dirF.setLastModified(dirMtime) && dirF.lastModified() == dirMtime)
+      val scan2 = Tables.readCached(spark, path)
+      assert(!(scan2 eq scan), "a stale analyzed scan was served")
+      assert(scan2.filter(col("doc_id") >= 9).count() == 2)
+      val idx2 = operators.TextQueries.dictIndex(spark, d)
+      assert(!(idx2 eq idx), "a stale dictionary index was served")
+      assert(idx2._1.filter(col("doc_id") >= 9).count() == 2)
+    } finally Tables.rmrf(d)
+  }
+
+  test("Tables.pinned never serves one session's value to another") {
+    val s2 = spark.newSession()
+    val path = s"$sfDir/region.parquet"
+    val a = Tables.readCached(spark, path)
+    val b = Tables.readCached(s2, path)
+    assert((a.sparkSession eq spark) && (b.sparkSession eq s2))
+    assert(Tables.readCached(spark, path) eq a)
+    val cache = Tables.pinCache[String](4)
+    assert(Tables.pinned(cache, spark, "k", "1")("first") == "first")
+    assert(Tables.pinned(cache, s2, "k", "1")("second") == "second")
+    assert(Tables.pinned(cache, spark, "k", "1")("unused") == "first")
+    // a new stamp drops every stale entry of that scope at once
+    assert(Tables.pinned(cache, spark, "k", "2")("third") == "third")
+    assert(cache.size() == 1)
+  }
+
+  test("dictIndex holds at most its cap of 8 entries in one live session") {
+    val dirs = (1 to 10).map(_ => dirFixture(fixtureDocs, 1))
+    try {
+      dirs.foreach(d => operators.TextQueries.dictIndex(spark, d))
+      assert(operators.TextQueries.dictIndexCache.size() <= 8)
+    } finally dirs.foreach(Tables.rmrf)
+  }
+
   test("Tables.boundedLru caps the scan caches for a single long-lived session") {
     // r21 verdict #10: the old sweep only removed stopped-session entries, so
     // one session reading >cap distinct paths grew the map forever

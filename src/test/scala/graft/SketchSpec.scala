@@ -13,8 +13,6 @@ class SketchSpec extends AnyFunSuite {
   private def t = Tables(spark, sfDir)
 
   test("union of per-day sketches equals one global sketch, estimate-for-estimate") {
-    graft.functions.HllSketch.register(spark)
-    graft.functions.HllSketchAgg.register(spark)
     val ev = t.events.withColumn("day", to_date(col("ts")))
     val viaUnion = ev
       .groupBy(col("event_type"), col("day"))
@@ -29,7 +27,6 @@ class SketchSpec extends AnyFunSuite {
   }
 
   test("estimates track exact distincts within 2%") {
-    graft.functions.HllSketch.register(spark)
     val ev = t.events.withColumn("day", to_date(col("ts")))
     val est = ev.groupBy(col("event_type"), col("day"))
       .agg(expr("hll_sketch(user_id)").as("sk"))
@@ -46,7 +43,6 @@ class SketchSpec extends AnyFunSuite {
   }
 
   test("union is merge-order independent and skips nulls/empties") {
-    graft.functions.HllSketch.register(spark)
     val ev = t.events.withColumn("day", to_date(col("ts")))
     val daily = ev.groupBy(col("event_type"), col("day"))
       .agg(expr("hll_sketch(user_id)").as("sk"))
@@ -67,7 +63,6 @@ class SketchSpec extends AnyFunSuite {
   }
 
   test("histogram: union of per-day partials equals one global sketch, byte-for-byte") {
-    graft.functions.HistSketch.register(spark)
     val ev = t.events.withColumn("day", to_date(col("ts")))
     val viaUnion = ev.groupBy(col("event_type"), col("day"))
       .agg(expr("hist_sketch(value, 0.0D, 500.0D, 100)").as("sk"))
@@ -81,7 +76,6 @@ class SketchSpec extends AnyFunSuite {
   }
 
   test("histogram quantile edges bound the exact percentile from above within one bin") {
-    graft.functions.HistSketch.register(spark)
     val edges = t.events.groupBy(col("event_type"))
       .agg(expr("hist_sketch(value, 0.0D, 500.0D, 100)").as("sk"))
       .select(col("event_type"), expr("hist_quantile(sk, 0.5D)").as("p50"))
@@ -98,7 +92,6 @@ class SketchSpec extends AnyFunSuite {
   }
 
   test("histogram union rejects mismatched headers") {
-    graft.functions.HistSketch.register(spark)
     val a = t.events.agg(expr("hist_sketch(value, 0.0D, 500.0D, 100)").as("sk"))
     val b = t.events.agg(expr("hist_sketch(value, 0.0D, 500.0D, 50)").as("sk"))
     val e = intercept[Exception] {
@@ -110,7 +103,6 @@ class SketchSpec extends AnyFunSuite {
   }
 
   test("hist_sketch rejects bad literal args at analysis time, not mid-aggregation") {
-    graft.functions.HistSketch.register(spark)
     def analysisMessage(sql: String): String = {
       val e = intercept[Exception](t.events.createOrReplaceTempView("ev_hist_args")
         match { case _ => spark.sql(sql).collect() })
@@ -137,7 +129,6 @@ class SketchSpec extends AnyFunSuite {
   }
 
   test("freq_union fails fast on sketches built with different k") {
-    graft.functions.FreqSketch.register(spark)
     val a = t.documents.agg(expr("freq_sketch(source, 64)").as("sk"))
     val b = t.documents.agg(expr("freq_sketch(source, 128)").as("sk"))
     val e = intercept[Exception] {
@@ -151,7 +142,6 @@ class SketchSpec extends AnyFunSuite {
   }
 
   test("misra-gries: merged per-source sketches keep every heavy hitter within the n/k bound") {
-    graft.functions.FreqSketch.register(spark)
     val toks = t.documents
       .select(col("source"), explode(split(lower(col("text")), " ")).as("term"))
     val k = 256
@@ -251,7 +241,6 @@ class SketchSpec extends AnyFunSuite {
 
   test("hll set algebra: inclusion-exclusion intersection within 5% of exact") {
     import org.apache.spark.sql.functions._
-    graft.functions.HllSketch.register(spark)
     val t = Tables(spark, sfDir)
     val approx = SparkEntry.queries("h6_sketch_intersect")(spark, sfDir)
       .select(col("day"), col("approx_both")).collect()
@@ -275,7 +264,6 @@ class SketchSpec extends AnyFunSuite {
   }
 
   test("bloom: no false negatives — every inserted member probes true") {
-    graft.functions.BloomSketch.register(spark)
     val terms = t.documents
       .select(explode(split(lower(col("text")), " ")).as("term")).distinct()
     val bloom = terms.agg(expr("bloom_sketch(term, 262144, 5)").as("sk"))
@@ -286,7 +274,6 @@ class SketchSpec extends AnyFunSuite {
   }
 
   test("bloom: false-positive rate stays near the analytic bound") {
-    graft.functions.BloomSketch.register(spark)
     val n = 20000
     val m = 262144
     val k = 5
@@ -304,7 +291,6 @@ class SketchSpec extends AnyFunSuite {
   }
 
   test("bloom: union of per-source partials is byte-identical to one global sketch") {
-    graft.functions.BloomSketch.register(spark)
     val terms = t.documents
       .select(col("source"), explode(split(lower(col("text")), " ")).as("term"))
     val viaUnion = terms.groupBy(col("source"))
@@ -318,7 +304,6 @@ class SketchSpec extends AnyFunSuite {
   }
 
   test("bloom: mismatched headers fail fast; bad literal args fail at analysis") {
-    graft.functions.BloomSketch.register(spark)
     val a = t.documents.agg(expr("bloom_sketch(source, 1024, 3)").as("sk"))
     val b = t.documents.agg(expr("bloom_sketch(source, 2048, 3)").as("sk"))
     val e = intercept[Exception] {
@@ -334,7 +319,6 @@ class SketchSpec extends AnyFunSuite {
   }
 
   test("bloom: the scan-side probe runs inside whole-stage codegen") {
-    graft.functions.BloomSketch.register(spark)
     val blob = t.documents.agg(expr("bloom_sketch(source, 4096, 3)"))
       .head().getAs[Array[Byte]](0)
     val df = t.documents.filter(
@@ -389,7 +373,6 @@ class SketchSpec extends AnyFunSuite {
   test("bitmap sketch: growth, length-tolerant union, exact AND") {
     val s = spark
     import s.implicits._
-    graft.functions.BitmapSketch.register(s)
     // group a's blob spans bit 1,000,000 (growth path); b's stays tiny —
     // the union must OR across the length mismatch and count exactly
     val df = Seq((1L, "a"), (9L, "a"), (1000000L, "a"), (9L, "b"), (2L, "b"))

@@ -25,6 +25,42 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed === batch)
   }
 
+  test("chunkedSource: two concurrent callers on an empty root build once and both read 4 complete chunks") {
+    // two i-band streams of one Dag pass stage the same source at once; the
+    // staging lock must make the second caller wait for, then reuse, the
+    // first caller's chunks instead of wiping them mid-build
+    val name = s"conc_src_${System.nanoTime()}"
+    val root = Tables.scratch(name, sfDir)
+    Tables.rmrf(root)
+    val builds = new java.util.concurrent.atomic.AtomicInteger()
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val results = new java.util.concurrent.ConcurrentLinkedQueue[(Seq[String], Long)]()
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = Seq.fill(2)(new Thread(() =>
+      try {
+        start.await()
+        val base = operators.StreamingQueries.chunkedSource(spark, sfDir, "events", name) { t =>
+          builds.incrementAndGet()
+          operators.StreamingQueries.idQuartiles(t.events, "event_id")
+        }
+        val chunks = new java.io.File(base).list().filter(_.startsWith("chunk_")).sorted.toSeq
+        results.add((chunks, spark.read.parquet(chunks.map(c => s"$base/$c"): _*).count()))
+      } catch { case e: Throwable => errors.add(e) }))
+    try {
+      threads.foreach(_.start())
+      start.countDown()
+      threads.foreach(_.join())
+      assert(errors.isEmpty, s"a concurrent caller failed: ${errors.peek()}")
+      assert(builds.get == 1, "the staged build must run exactly once")
+      val expected = (0 until 4).map(i => f"chunk_$i%02d.parquet")
+      results.forEach { case (chunks, n) =>
+        assert(chunks == expected)
+        assert(n == totalEvents)
+      }
+      assert(results.size == 2)
+    } finally Tables.rmrf(root)
+  }
+
   test("i23: pinned-version serving + exactly-once appends grow the index by exactly the novel docs") {
     import org.apache.spark.sql.functions._
     import graft.sources.SnapshotTable
@@ -218,7 +254,6 @@ class StreamingSpec extends AnyFunSuite {
     val streamed = SparkEntry.queries("i11_stream_hll")(spark, sfDir)
       .collect().map(r => (r.get(0).toString -> r.getString(1), r.getLong(2))).toMap
     assert(streamed.nonEmpty)
-    graft.functions.HllSketchAgg.register(spark)
     val batch = Tables(spark, sfDir).events
       .groupBy(window(col("ts"), "1 day"), col("event_type"))
       .agg(expr("hll_approx(user_id)").as("approx_users"))
@@ -503,10 +538,7 @@ class StreamingSpec extends AnyFunSuite {
         case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
         case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
       }
-      def rmrf(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-      }
-      rmrf(new java.io.File(base))
+      Tables.rmrf(base)
     }
   }
 
@@ -572,10 +604,7 @@ class StreamingSpec extends AnyFunSuite {
       assert(got == Seq((1L, 15L), (2L, 20L), (3L, 7L)),
         s"post-restart table diverged from the batch aggregate: $got")
     } finally {
-      def rmrf(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-      }
-      rmrf(new java.io.File(base))
+      Tables.rmrf(base)
     }
   }
 

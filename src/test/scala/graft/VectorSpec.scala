@@ -145,7 +145,6 @@ class VectorSpec extends AnyFunSuite {
     // path. fallback=false turns that silent downgrade into a hard error.
     val s = spark
     import s.implicits._
-    graft.functions.CosineSim.register(s)
     val prev = s.conf.get("spark.sql.codegen.fallback", "true")
     s.conf.set("spark.sql.codegen.fallback", "false")
     try {

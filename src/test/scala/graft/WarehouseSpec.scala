@@ -504,10 +504,7 @@ class WarehouseSpec extends AnyFunSuite {
     val t = Tables(spark, sfDir)
     val root = s"${System.getProperty("java.io.tmpdir")}/graft_dv_spec_${Tables.pathKey(sfDir)}"
     val dvRoot = s"${root}_dv"
-    def rmrf(f: java.io.File): Unit = {
-      val cs = f.listFiles(); if (cs != null) cs.foreach(rmrf); f.delete(); ()
-    }
-    rmrf(new java.io.File(root)); rmrf(new java.io.File(dvRoot))
+    Tables.rmrf(root); Tables.rmrf(dvRoot)
     val target = t.orders.filter(col("o_orderkey") % 3 === 0)
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"))
     SnapshotTable.commit(target.repartitionByRange(8, col("o_orderdate")), root)
@@ -606,7 +603,6 @@ class WarehouseSpec extends AnyFunSuite {
   }
 
   test("bitmap_contains: bit probes, trailing-zero blobs, and out-of-range positions") {
-    graft.functions.BitmapSketch.register(spark)
     val rows = spark.sql(
       "SELECT bitmap_contains(bm, 0L) a, bitmap_contains(bm, 9L) b, " +
         "bitmap_contains(bm, 1L) c, bitmap_contains(bm, 10000L) d " +

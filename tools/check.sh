@@ -7,6 +7,16 @@ set -e
 cd /root/repo
 SF="${1:-0.01}"
 shift 2>/dev/null || true
+# One owner per lifecycle decision: scratch deletion and session-cache
+# identity live in graft.Tables, SQL function registration in
+# graft.GraftExtensions. Fail fast when a copy grows back elsewhere.
+owned() { grep -rnE "$1" src/main --include='*.scala' | grep -v "^src/main/scala/graft/$2:" || true; }
+strays="$(owned 'def rmrf\b|System\.identityHashCode' Tables.scala)$(owned 'createOrReplaceTempFunction' GraftExtensions.scala)"
+if [ -n "$strays" ]; then
+  echo "check.sh: lifecycle code outside its owner:" >&2
+  echo "$strays" >&2
+  exit 1
+fi
 SFDIR="/root/testdata/sf$SF"
 OUT="/tmp/graft_verify_sf$SF"
 sbt -batch --error "set Compile/run/javaOptions += \"-Dderby.stream.error.file=/tmp/derby.log\"; runMain graft.Verify $SFDIR $OUT $*"
