@@ -42,6 +42,9 @@ class NoForkRawLocalFileSystem extends RawLocalFileSystem {
 
   override def setPermission(p: Path, permission: FsPermission): Unit = {
     val m: Int = permission.toShort.toInt
+    // setuid/setgid/sticky have no PosixFilePermission: those (rare) modes
+    // take the parent's path, which applies every bit
+    if ((m & 0xE00) != 0) return super.setPermission(p, permission)
     val perms = java.util.EnumSet.noneOf(classOf[PosixFilePermission])
     import PosixFilePermission._
     val bits = Seq(OWNER_READ, OWNER_WRITE, OWNER_EXECUTE,

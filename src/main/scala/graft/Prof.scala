@@ -156,23 +156,22 @@ object Prof {
         .agg(count(lit(1)).as("n"))
       def run(tag: String, parts: Int, sink: String): Unit = (1 to 3).foreach { p =>
         val t0 = System.nanoTime()
-        val prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-        val qn = s"px_${tag}_$p${System.nanoTime()}"
-        val ckpt = s"/dev/shm/graft_px/$qn"
-        val q = agg(spark.readStream.schema(chunkSchema).parquet(src))
-        val sq = sink match {
-          case "memory" =>
-            q.writeStream.format("memory").queryName(qn).outputMode("complete")
-              .option("checkpointLocation", ckpt).trigger(Trigger.AvailableNow()).start()
-          case "noop" =>
-            q.writeStream.outputMode(OutputMode.Complete())
-              .foreachBatch((df: org.apache.spark.sql.DataFrame, _: Long) =>
-                { df.write.format("noop").mode("overwrite").save() })
-              .option("checkpointLocation", ckpt).trigger(Trigger.AvailableNow()).start()
+        Tables.withConf(spark, "spark.sql.shuffle.partitions" -> parts.toString) { c =>
+          val qn = s"px_${tag}_$p${System.nanoTime()}"
+          val ckpt = s"/dev/shm/graft_px/$qn"
+          val q = agg(c.readStream.schema(chunkSchema).parquet(src))
+          val sq = sink match {
+            case "memory" =>
+              q.writeStream.format("memory").queryName(qn).outputMode("complete")
+                .option("checkpointLocation", ckpt).trigger(Trigger.AvailableNow()).start()
+            case "noop" =>
+              q.writeStream.outputMode(OutputMode.Complete())
+                .foreachBatch((df: org.apache.spark.sql.DataFrame, _: Long) =>
+                  { df.write.format("noop").mode("overwrite").save() })
+                .option("checkpointLocation", ckpt).trigger(Trigger.AvailableNow()).start()
+          }
+          sq.awaitTermination()
         }
-        sq.awaitTermination()
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         println(f"streamx $tag%-28s pass$p ${(System.nanoTime() - t0) / 1e9}%6.3f s")
       }
       // batch floor: identical agg over the same files, batch engine
@@ -192,19 +191,19 @@ object Prof {
       // cost may scale down with parallelism at 95k sessions
       def runSess(tag: String, parts: Int): Unit = (1 to 3).foreach { p =>
         val t0 = System.nanoTime()
-        val prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-        val qn = s"pxs_${tag}_$p${System.nanoTime()}"
-        val ckpt = s"/dev/shm/graft_px/$qn"
-        val q = spark.readStream.schema(chunkSchema).parquet(src)
-          .withWatermark("ts", "1 hour")
-          .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-          .agg(count(lit(1)).as("n"))
-        val sq = q.writeStream.format("memory").queryName(qn).outputMode("append")
-          .option("checkpointLocation", ckpt).trigger(Trigger.AvailableNow()).start()
-        sq.awaitTermination()
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        println(f"streamx $tag%-28s pass$p ${(System.nanoTime() - t0) / 1e9}%6.3f s rows=${spark.table(qn).count()}")
+        val rows = Tables.withConf(spark, "spark.sql.shuffle.partitions" -> parts.toString) { c =>
+          val qn = s"pxs_${tag}_$p${System.nanoTime()}"
+          val ckpt = s"/dev/shm/graft_px/$qn"
+          val q = c.readStream.schema(chunkSchema).parquet(src)
+            .withWatermark("ts", "1 hour")
+            .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
+            .agg(count(lit(1)).as("n"))
+          val sq = q.writeStream.format("memory").queryName(qn).outputMode("append")
+            .option("checkpointLocation", ckpt).trigger(Trigger.AvailableNow()).start()
+          sq.awaitTermination()
+          c.table(qn).count()
+        }
+        println(f"streamx $tag%-28s pass$p ${(System.nanoTime() - t0) / 1e9}%6.3f s rows=$rows")
       }
       if (!sys.env.contains("PROF_SKIP_VARIANTS")) {
       runSess("sess_2part", 2)
@@ -254,26 +253,6 @@ object Prof {
         val t0 = System.nanoTime()
         val n = graft.plans.ConnectedComponents.labels(edges).count()
         println(f"cc labels synthetic pass$p ${(System.nanoTime() - t0) / 1e9}%6.3f s rows=$n jobs=${jobs.get()}")
-      }
-      (1 to 3).foreach { p =>
-        jobs.set(0)
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        val t0 = System.nanoTime()
-        val n = try graft.plans.ConnectedComponents.labels(edges).count()
-          finally spark.conf.set("spark.sql.adaptive.enabled", "true")
-        println(f"cc labels noAQE pass$p ${(System.nanoTime() - t0) / 1e9}%6.3f s rows=$n jobs=${jobs.get()}")
-      }
-      (1 to 3).foreach { p =>
-        jobs.set(0)
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        val t0 = System.nanoTime()
-        val n = try graft.plans.ConnectedComponents.labels(edges).count()
-          finally {
-            spark.conf.set("spark.sql.adaptive.enabled", "true")
-            spark.conf.set("spark.sql.shuffle.partitions", "32")
-          }
-        println(f"cc labels noAQE p8 pass$p ${(System.nanoTime() - t0) / 1e9}%6.3f s rows=$n jobs=${jobs.get()}")
       }
       // the real g24 edge set
       val t = Tables(spark, sfDir)

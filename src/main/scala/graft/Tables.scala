@@ -5,7 +5,8 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.classic.GraftSqlBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -67,6 +68,45 @@ object Tables {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     new Tables(spark, sfDir)
   }
+
+  /** The one owner of a scoped conf override for batch work: `body` runs on
+    * a clone of `spark` (same SparkContext, cache manager and catalog, its
+    * own copy of the conf) with `confs` set. The caller's conf is never
+    * written, so a concurrent job on the caller (a `plans.Dag` runs many on
+    * one session) never plans under another job's scope, and nested or
+    * overlapping scopes cannot restore a stale value.
+    *
+    * A frame built on the caller enters the clone through [[rehome]]. A
+    * Dataset the body returns is rehomed onto the caller, so everything
+    * downstream plans under the caller's conf. Build inputs on the caller
+    * before the scope: [[pinned]] caches key on the session object, so a
+    * read on the clone misses them.
+    *
+    * The one remaining shared-conf window is a stream start, which has to
+    * happen on the caller's session; `StreamingQueries.startStream` owns it
+    * and serializes it per session. */
+  def withConf[T](spark: SparkSession, confs: (String, String)*)(
+      body: SparkSession => T): T =
+    body(confSession(spark, confs: _*)) match {
+      case ds: Dataset[_] => rehome(spark, ds.toDF()).as(ds.encoder).asInstanceOf[T]
+      case r => r
+    }
+
+  /** A clone of `spark` with `confs` set, for a declared query whose result
+    * must keep planning under them after it is returned (its caller runs
+    * it later). Same isolation as [[withConf]]; the result stays on the
+    * clone. */
+  def confSession(spark: SparkSession, confs: (String, String)*): SparkSession = {
+    val c = GraftSqlBridge.cloneSession(spark)
+    confs.foreach { case (k, v) => c.conf.set(k, v) }
+    c
+  }
+
+  /** `df`'s plan as a frame on `spark` — how a frame crosses into or out of
+    * a [[withConf]] scope. The plan is re-analyzed (a no-op for the
+    * resolved parts) and optimized under `spark`'s conf. */
+  def rehome(spark: SparkSession, df: DataFrame): DataFrame =
+    GraftSqlBridge.ofRows(spark, df.queryExecution.logical)
 
   /** Analyzed-scan cache for the fixture tables — the in-session equivalent
     * of a metastore catalog entry. Measured (r21): every bare

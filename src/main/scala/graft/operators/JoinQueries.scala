@@ -369,24 +369,25 @@ object JoinQueries extends QueryModule {
     // might_contain probe into the large side's scan, so at 100 TB the fact
     // table drops non-matching rows BEFORE the shuffle (a semi-join reduction
     // the optimizer derives, not hand-written). Local fixtures are far below
-    // the default 10 GB application-side threshold, so the query runs in a
-    // cloned session (`newSession` — isolated conf, shared context) with the
-    // threshold floored and broadcast disabled; on a real cluster the default
-    // thresholds trigger by themselves. PlanSpec asserts the injected
-    // might_contain/bloom aggregate is actually in the executed plan.
+    // the default 10 GB application-side threshold, so the query is built on
+    // the caller and planned on a clone of its session (Tables.confSession —
+    // own conf, shared context) with the threshold floored and broadcast
+    // disabled; on a real cluster the default thresholds trigger by
+    // themselves. PlanSpec asserts the injected might_contain/bloom
+    // aggregate is actually in the executed plan.
     "c17_join_bloom_runtime" -> ((s, dir) => {
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      s2.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
-      s2.conf.set("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "100MB")
-      s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val t = Tables(s2, dir)
+      val t = Tables(s, dir)
       val sel = t.orders.filter(col("o_orderpriority") === "1-URGENT")
         .select(col("o_orderkey"), col("o_orderdate"))
-      t.lineitem.join(sel, col("l_orderkey") === col("o_orderkey"))
+      val q = t.lineitem.join(sel, col("l_orderkey") === col("o_orderkey"))
         .groupBy(year(col("o_orderdate")).as("yr"))
         .agg(count(lit(1)).as("n_items"), Tables.dsum(col("l_extendedprice")).as("sum_price"))
         .orderBy("yr")
+      Tables.rehome(Tables.confSession(s,
+        "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1"), q)
     }),
 
     // C18: as-of join with tolerance — each purchase matched to the same
@@ -478,19 +479,17 @@ object JoinQueries extends QueryModule {
     // joined first, the selective filtered dimension last — and
     // CostBasedJoinReorder must rewrite it to join the filtered dimension
     // first, driven ONLY by the ANALYZE statistics (row counts + column
-    // NDVs), not the query text. Runs in a cloned session (isolated CBO
-    // flags, shared catalog) against catalog tables analyzed once per
-    // fixture; PlanSpec pins that the optimized innermost join is
-    // customer ⋈ nation under CBO and the syntactic pair without it. The
+    // NDVs), not the query text. Runs on a clone of the session
+    // (Tables.confSession — own CBO flags, shared catalog) against catalog
+    // tables analyzed once per fixture; PlanSpec pins that the optimized
+    // innermost join is customer ⋈ nation under CBO and the syntactic pair without it. The
     // answer must equal the raw-parquet join regardless of order — that is
     // the oracle, making the reorder answer-preserving by construction.
     "c22_join_cbo_reorder" -> ((s, dir) => {
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.cbo.enabled", "true")
-      s2.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-      s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val names = c22Tables(s2, dir)
-      s2.sql(c22Sql(names))
+      val cbo = Tables.confSession(s, "spark.sql.cbo.enabled" -> "true",
+        "spark.sql.cbo.joinReorder.enabled" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+      cbo.sql(c22Sql(c22Tables(cbo, dir)))
     })
   )
 

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryModule, Tables}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** SURVEY §2 A (scans/sources/sinks) + B (projection/filter).
@@ -269,17 +270,13 @@ object ScanFilterQueries extends QueryModule {
     "a8_upsert_dynamic_partition" -> ((s, dir) => {
       val t = Tables(s, dir)
       val path = Tables.scratch("events_upsert", dir)
-      val modeKey = "spark.sql.sources.partitionOverwriteMode"
-      val prev = s.conf.get(modeKey)
       val ev = t.events.withColumn("day", date_trunc("day", col("ts")).cast("date"))
-      try {
-        s.conf.set(modeKey, "static")
-        ev.write.mode("overwrite").partitionBy("day").parquet(path)
-        s.conf.set(modeKey, "dynamic")
-        ev.filter(col("day") === lit("2024-01-03").cast("date"))
-          .withColumn("value", col("value") * 2)
-          .write.mode("overwrite").partitionBy("day").parquet(path)
-      } finally s.conf.set(modeKey, prev)
+      def overwrite(mode: String, df: DataFrame): Unit =
+        Tables.withConf(s, "spark.sql.sources.partitionOverwriteMode" -> mode)(c =>
+          Tables.rehome(c, df).write.mode("overwrite").partitionBy("day").parquet(path))
+      overwrite("static", ev)
+      overwrite("dynamic", ev.filter(col("day") === lit("2024-01-03").cast("date"))
+        .withColumn("value", col("value") * 2))
       s.read.parquet(path)
         .groupBy(col("day"))
         .agg(count(lit(1)).as("n"), Tables.dsum(col("value")).as("val_sum"))

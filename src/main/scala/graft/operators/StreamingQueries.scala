@@ -6,10 +6,11 @@ import scala.jdk.CollectionConverters._
 
 import graft.{QueryModule, Tables}
 import graft.functions.{TextFunctions => TF}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.classic.GraftSqlBridge
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery, Trigger}
 
 /** SURVEY §2 I (Structured Streaming I1–I8, +i9 stream-stream join, +i10
   * rate source). File-fed queries whose output depends on micro-batch
@@ -113,36 +114,88 @@ object StreamingQueries extends QueryModule {
       .parquet(eventsById(s, dir))
   }
 
-  /** Stateful micro-batches pay per state-store-instance overhead each
-    * trigger: with P shuffle partitions every stateful operator maintains P
-    * HDFS-backed stores and snapshots them per batch. At fixture scale the
-    * state is tiny, so fewer, fatter state partitions win; a real 100 TB
-    * deployment sizes this to keep per-store state in memory instead. The
-    * conf is captured at query START, so setting it around start() scopes it
-    * to the streaming query without touching the batch session default.
-    */
-  private def withStreamShufflePartitions[T](s: SparkSession, n: Int = 4)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    // Local checkpoint roots only (every root here lives under ckptRoot /
-    // tmpdir): the shell-exec-free manager removes ~40 ms of fork overhead
-    // PER metadata write (offsets WAL, commit log, source log, state-store
-    // delta — measured in Prof streamx: 42 ms default vs 0.07 ms nio; the
-    // native Hadoop lib is absent so every Hadoop local create execs chmod).
-    // Captured at query START like the partition conf, so batch sessions and
-    // non-local deployments (HDFS/S3 checkpoints) are untouched — see the
-    // manager's scaladoc for the production posture.
-    val cmKey = "spark.sql.streaming.checkpointFileManagerClass"
-    val prev = s.conf.get(key)
-    val prevCm = s.conf.getOption(cmKey)
-    s.conf.set(key, n.toString)
-    s.conf.set(cmKey, classOf[graft.streaming.LocalFsCheckpointFileManager].getName)
-    try body finally {
-      s.conf.set(key, prev)
-      prevCm match {
-        case Some(v) => s.conf.set(cmKey, v)
-        case None => s.conf.unset(cmKey)
+  /** How a stream's sink is configured (format, mode, query name) before
+    * [[startStream]] adds the checkpoint and the trigger. */
+  private type Sink = DataStreamWriter[Row] => DataStreamWriter[Row]
+
+  private val startLocks = new java.util.WeakHashMap[SparkSession, AnyRef]()
+
+  /** The one stream-start path: `sink(q.writeStream)` checkpointed at
+    * `ckpt`, `Trigger.AvailableNow`, started under the stream confs —
+    *
+    *  - `spark.sql.shuffle.partitions = partitions`: stateful micro-batches
+    *    pay per state-store-instance overhead each trigger (P partitions =
+    *    P stores snapshotted per batch); at fixture scale the state is
+    *    tiny, so fewer, fatter state partitions win, where a 100 TB
+    *    deployment sizes this to keep per-store state in memory;
+    *  - the checkpoint manager [[graft.streaming.LocalFsCheckpointFileManager]]
+    *    (every root here is local): it removes ~40 ms of `chmod` fork
+    *    overhead PER metadata write (offsets WAL, commit log, source log,
+    *    state-store delta — measured in Prof streamx: 42 ms default vs
+    *    0.07 ms nio); HDFS/S3 checkpoints keep Spark's managers;
+    *  - `confs`, the caller's extras (state store provider, no-data batches,
+    *    partition overwrite mode of the batch writes).
+    *
+    * Streams start on the CALLER's session, not a clone: a stream started
+    * on a clone reports nothing to the caller's StreamingQueryListeners
+    * (measured on Spark 4.1.2: 0 events against 3), and the perfbench
+    * trace and Prof's stream mode read them. StreamExecution copies the
+    * session conf while start() constructs it, so the confs are set on the
+    * caller only around that synchronous call, under a per-session lock
+    * (two starts never interleave their set and restore), and restored
+    * with getOption/unset. This is the one remaining window in which the
+    * caller's conf carries a scoped value: a batch job planning on the same
+    * session during a start() sees the stream's confs. Batch scopes never
+    * write the caller's conf ([[Tables.withConf]]). */
+  private def startStream(q: DataFrame, ckpt: String, partitions: Int = 4,
+      confs: Seq[(String, String)] = Nil)(sink: Sink): StreamingQuery = {
+    val s = q.sparkSession
+    val all = Seq(
+      "spark.sql.shuffle.partitions" -> partitions.toString,
+      "spark.sql.streaming.checkpointFileManagerClass" ->
+        classOf[graft.streaming.LocalFsCheckpointFileManager].getName) ++ confs
+    val lock = startLocks.synchronized(startLocks.computeIfAbsent(s, _ => new AnyRef))
+    lock.synchronized {
+      val prev = all.map { case (k, _) => k -> s.conf.getOption(k) }
+      all.foreach { case (k, v) => s.conf.set(k, v) }
+      try sink(q.writeStream).option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow()).start()
+      finally prev.foreach {
+        case (k, Some(v)) => s.conf.set(k, v)
+        case (k, None) => s.conf.unset(k)
       }
     }
+  }
+
+  /** Run `streams` to completion through [[startStream]], each on a fresh
+    * checkpoint under [[ckptRoot]]. All start before any is awaited, so
+    * several run concurrently; if one fails, the survivors STOP before the
+    * checkpoints are removed — deleting live state out from under a running
+    * query would cascade the failure (and could leak detached queries into
+    * later runs). The checkpoints go in the finally: a failed or
+    * interrupted query must not leak tmpfs. */
+  private def runStreams(name: String, partitions: Int = 4,
+      confs: Seq[(String, String)] = Nil)(streams: (DataFrame, Sink)*): Unit = {
+    val ckpts = streams.indices.map(i => s"$ckptRoot/graft_${name}_${i}_${System.nanoTime()}")
+    val started = scala.collection.mutable.ArrayBuffer[StreamingQuery]()
+    try {
+      streams.zip(ckpts).foreach { case ((q, sink), ckpt) =>
+        started += startStream(q, ckpt, partitions, confs)(sink)
+      }
+      started.foreach(_.awaitTermination())
+    } finally {
+      started.foreach(sq => try sq.stop() catch { case _: Exception => () })
+      ckpts.foreach(Tables.rmrf)
+    }
+  }
+
+  /** A memory sink's table as a frame, with its temp view dropped from the
+    * caller's catalog (the frame is analyzed already, so it keeps reading
+    * the sink). */
+  private def sinkTable(s: SparkSession, qn: String): DataFrame = {
+    val out = s.table(qn)
+    s.catalog.dropTempView(qn)
+    out
   }
 
   /** The ANN serving loop behind i24 (shards = 1) and i28 (shards = K):
@@ -169,14 +222,12 @@ object StreamingQueries extends QueryModule {
     // 2 files per trigger: the serve loop is batch-count-INDEPENDENT (the
     // index is pinned, union-of-batches == single-shot — that is what the
     // oracle grades), so fewer micro-batches is pure fixed-cost savings
-    def startShard(shard: Int): (org.apache.spark.sql.streaming.StreamingQuery, String) = {
-      val ckpt = s"$ckptRoot/graft_${qname}_s${shard}_${System.nanoTime()}"
+    def serveShard(shard: Int): (DataFrame, Sink) = {
       val st = s.readStream.schema(docChunkSchema)
         .option("maxFilesPerTrigger", 2).parquet(docsById(s, dir))
         .filter(if (shards == 1) col("doc_id") % 37 === 0
           else col("doc_id") % lit(37L * shards) === lit(37L * shard))
-      val sq = withStreamShufflePartitions(s) {
-        st.writeStream.outputMode(OutputMode.Append())
+      st -> (_.outputMode(OutputMode.Append())
           .foreachBatch { (df: DataFrame, batchId: Long) =>
             val sp = df.sparkSession
             val qs = df.select(col("doc_id").as("q_id"))
@@ -202,46 +253,24 @@ object StreamingQueries extends QueryModule {
               .select(col("q_id"), col("rn"), col("b_id"), col("cos"))
             top.write.mode("overwrite").parquet(f"$out/s$shard/b$batchId%04d")
             ()
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-      }
-      (sq, ckpt)
+          })
     }
-    // start ALL shards, then await: concurrency is the point. If one
-    // shard fails, STOP the survivors before touching their checkpoints —
-    // deleting live state out from under a running query would cascade
-    // the failure (and could leak detached queries into later runs)
-    val started = (0 until shards).map(startShard)
-    try started.foreach(_._1.awaitTermination())
-    finally {
-      started.foreach(p =>
-        try p._1.stop() catch { case _: Exception => () })
-      started.foreach(p => Tables.rmrf(p._2))
-    }
+    // all shards start before any is awaited: concurrency is the point
+    runStreams(qname)((0 until shards).map(serveShard): _*)
     s.read.option("recursiveFileLookup", "true").parquet(out)
       .select(col("q_id"), col("rn"), col("b_id"), col("cos"))
       .orderBy("q_id", "rn")
   }
 
-  /** transformWithState requires the RocksDB state store; the conf is
-    * captured at query START, so scoping it around start() leaves the
-    * HDFS-backed default in place for every other streaming query. */
-  private def withRocksDbStateStore[T](s: SparkSession)(body: => T): T = {
-    val confs = Seq(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      // incremental changelog checkpoints instead of a full snapshot upload
-      // every micro-batch — the production setting for large state
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-        "true")
-    val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try body finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
-  }
+  /** transformWithState requires the RocksDB state store ([[startStream]]
+    * confs, so every other streaming query keeps the HDFS-backed default). */
+  private val rocksDb = Seq(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    // incremental changelog checkpoints instead of a full snapshot upload
+    // every micro-batch — the production setting for large state
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
+      "true")
 
   /** Checkpoint root for the run-to-completion helpers. Offset/commit WAL
     * and state-store delta writes are fsync-bound; tmpfs (when present)
@@ -342,33 +371,22 @@ object StreamingQueries extends QueryModule {
     * (window/session aggs, dedup — i3/i4/i5) need it; complete-mode aggs
     * re-emit everything each batch and inner stream-stream joins emit
     * eagerly on match, so for them the extra batch is a pure state-store
-    * round-trip. The conf is captured at query START, so scoping it around
-    * start() never affects other streaming queries.
+    * round-trip.
     */
   private def runMemory(q: DataFrame, mode: String, name: String,
-      needsFinalFlush: Boolean = true, statePartitions: Int = 4): DataFrame = {
-    val spark = q.sparkSession
+      needsFinalFlush: Boolean = true, statePartitions: Int = 4,
+      confs: Seq[(String, String)] = Nil): DataFrame = {
     val qn = s"graft_${name}_${System.nanoTime()}"
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prevNoData = spark.conf.get(key)
-    spark.conf.set(key, needsFinalFlush.toString)
-    val ckpt = s"$ckptRoot/$qn"
-    val sq =
-      try withStreamShufflePartitions(spark, statePartitions) {
-        q.writeStream.format("memory").queryName(qn).outputMode(mode)
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-      } finally spark.conf.set(key, prevNoData)
-    // finally: a failed/interrupted query must not leak its tmpfs checkpoint
-    try sq.awaitTermination() finally Tables.rmrf(ckpt)
-    spark.table(qn)
+    runStreams(name, statePartitions,
+      ("spark.sql.streaming.noDataMicroBatches.enabled" -> needsFinalFlush.toString) +: confs)(
+      q -> (_.format("memory").queryName(qn).outputMode(mode)))
+    sinkTable(q.sparkSession, qn)
   }
 
   /** Run to completion via foreachBatch into a fresh parquet dir, return the
     * read-back (I8's sink pattern, reused by the stateful op). */
   private def runForeachBatch(q: DataFrame, name: String, dir: String,
       statePartitions: Int = 8): DataFrame = {
-    val spark = q.sparkSession
     // deterministic per-(query, fixture) path, cleared up front: reruns
     // overwrite instead of accumulating tmp output (each invocation's
     // result is consumed eagerly, so clearing at the NEXT run is safe).
@@ -376,17 +394,11 @@ object StreamingQueries extends QueryModule {
     // semantics are the parquet-append pattern, not disk fsync latency.
     val out = s"$ckptRoot/graft_out_${name}_${Tables.pathKey(dir)}"
     Tables.rmrf(out)
-    val ckpt = s"$ckptRoot/graft_${name}_${System.nanoTime()}"
-    val sq = withStreamShufflePartitions(spark, statePartitions) {
-      q.writeStream.outputMode(OutputMode.Update())
-        .foreachBatch { (df: DataFrame, id: Long) =>
-          df.withColumn("batch_id", lit(id)).write.mode("append").parquet(out)
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-    }
-    try sq.awaitTermination() finally Tables.rmrf(ckpt)
-    spark.read.parquet(out)
+    runStreams(name, statePartitions)(q -> (_.outputMode(OutputMode.Update())
+      .foreachBatch { (df: DataFrame, id: Long) =>
+        df.withColumn("batch_id", lit(id)).write.mode("append").parquet(out)
+      }))
+    q.sparkSession.read.parquet(out)
   }
 
   /** State-store partition count sized by the fixture: 2 state stores floor
@@ -448,25 +460,25 @@ object StreamingQueries extends QueryModule {
     // (145 s at sf10, flat in state parallelism — the r15 finding); the
     // timer shape is one state-map round-trip per active key per batch.
     "i3b_stream_session_native" -> ((s, dir) => {
-      val flag = graft.plans.GraftSessionRewriteRule.Flag
-      s.conf.set(flag, "true")
-      try {
-        val q = stream(s, dir, perBatch = false)
+      val src = stream(s, dir, perBatch = false)
+      // the rewrite fires during analysis: analyze on a flag-on clone, then
+      // run the ANALYZED plan on the caller's session
+      val analyzed = Tables.withConf(s, graft.plans.GraftSessionRewriteRule.Flag -> "true")(c =>
+        Tables.rehome(c, src)
           .withWatermark("ts", "1 hour")
           .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
           .agg(count(lit(1)).as("n"))
-        // a silent non-fire would still answer correctly through the
-        // built-in — refuse to measure the wrong shape
-        require(q.queryExecution.analyzed.collectFirst {
-          case n if n.nodeName == "TransformWithState" => n
-        }.isDefined, "i3b: session_window auto-rewrite did not fire")
-        withRocksDbStateStore(s) {
-          runMemory(q, "append", "i3b", statePartitions = statePar(dir))
-        }
-          .select(col("session_window.start").cast("timestamp_ntz").as("s_start"),
-            col("user_id"), col("n"))
-          .orderBy("s_start", "user_id")
-      } finally s.conf.unset(flag)
+          .queryExecution.analyzed)
+      val q = GraftSqlBridge.ofRows(s, analyzed)
+      // a silent non-fire would still answer correctly through the
+      // built-in — refuse to measure the wrong shape
+      require(q.queryExecution.analyzed.collectFirst {
+        case n if n.nodeName == "TransformWithState" => n
+      }.isDefined, "i3b: session_window auto-rewrite did not fire")
+      runMemory(q, "append", "i3b", statePartitions = statePar(dir), confs = rocksDb)
+        .select(col("session_window.start").cast("timestamp_ntz").as("s_start"),
+          col("user_id"), col("n"))
+        .orderBy("s_start", "user_id")
     }),
 
     // I4: watermark late-drop — hourly tumbling counts in append mode; events
@@ -536,9 +548,8 @@ object StreamingQueries extends QueryModule {
       // counter emits once per (user, data batch), batches are the two
       // deterministic id-range halves, and transformWithState never drops
       // input below the watermark — the ledger replays in SQL
-      withRocksDbStateStore(s) {
-        runMemory(q, "update", "i6", needsFinalFlush = false, statePartitions = statePar(dir))
-      }
+      runMemory(q, "update", "i6", needsFinalFlush = false, statePartitions = statePar(dir),
+        confs = rocksDb)
         .groupBy(col("user_id")).agg(max(col("n_so_far")).as("n_total"),
           count(lit(1)).as("n_updates"))
         .orderBy("user_id")
@@ -651,15 +662,11 @@ object StreamingQueries extends QueryModule {
     "i12_stream_upsert" -> ((s, dir) => {
       val out = s"$ckptRoot/graft_out_i12_${Tables.pathKey(dir)}"
       Tables.rmrf(out)
-      val ckpt = s"$ckptRoot/graft_i12_${System.nanoTime()}"
       val q = stream(s, dir, filesPerTrigger = 2)
         .select(to_date(col("ts")).as("day"), col("value"))
-      val modeKey = "spark.sql.sources.partitionOverwriteMode"
-      val prevMode = s.conf.get(modeKey, "static")
-      s.conf.set(modeKey, "dynamic")
-      try {
-        val sq = withStreamShufflePartitions(s) {
-          q.writeStream.outputMode(OutputMode.Append())
+      // the micro-batches' partition overwrites are dynamic
+      runStreams("i12", confs = Seq("spark.sql.sources.partitionOverwriteMode" -> "dynamic"))(
+        q -> (_.outputMode(OutputMode.Append())
             .foreachBatch { (df: DataFrame, batchId: Long) =>
               // idempotence guard: the read-merge-overwrite below is NOT a
               // transaction, so a RETRIED micro-batch would double-apply its
@@ -703,12 +710,7 @@ object StreamingQueries extends QueryModule {
                   java.nio.file.StandardCopyOption.REPLACE_EXISTING)
               }
               ()
-            }
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow()).start()
-        }
-        try sq.awaitTermination() finally Tables.rmrf(ckpt)
-      } finally s.conf.set(modeKey, prevMode)
+            }))
       s.read.parquet(out)
         .select(col("day"), col("n"), round(col("vsum").cast("double"), 6).as("val_sum"))
         .orderBy("day")
@@ -728,11 +730,9 @@ object StreamingQueries extends QueryModule {
       import graft.sources.SnapshotTable
       val root = s"$ckptRoot/graft_snap_i13_${Tables.pathKey(dir)}"
       Tables.rmrf(root)
-      val ckpt = s"$ckptRoot/graft_i13_${System.nanoTime()}"
       val q = stream(s, dir, filesPerTrigger = 2)
         .select(to_date(col("ts")).as("day"), col("value"))
-      val sq = withStreamShufflePartitions(s) {
-        q.writeStream.outputMode(OutputMode.Append())
+      runStreams("i13")(q -> (_.outputMode(OutputMode.Append())
           .foreachBatch { (df: DataFrame, batchId: Long) =>
             val applied = SnapshotTable.latestMeta(root).map(_.toLong).getOrElse(-1L)
             if (batchId > applied) {
@@ -751,11 +751,7 @@ object StreamingQueries extends QueryModule {
               SnapshotTable.commit(merged, root, meta = batchId.toString)
               ()
             }
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-      }
-      try sq.awaitTermination() finally Tables.rmrf(ckpt)
+          }))
       SnapshotTable.read(s, root)
         .select(col("day"), col("n"), round(col("vsum").cast("double"), 6).as("val_sum"))
         .orderBy("day")
@@ -781,12 +777,10 @@ object StreamingQueries extends QueryModule {
       import graft.sources.SnapshotTable
       val root = s"$ckptRoot/graft_snap_i20_${Tables.pathKey(dir)}"
       Tables.rmrf(root)
-      val ckpt = s"$ckptRoot/graft_i20_${System.nanoTime()}"
       val q = stream(s, dir, filesPerTrigger = 2)
         .select(col("user_id"), col("event_id"), col("ts"), col("event_type"),
           col("value"))
-      val sq = withStreamShufflePartitions(s) {
-        q.writeStream.outputMode(OutputMode.Append())
+      runStreams("i20")(q -> (_.outputMode(OutputMode.Append())
           .foreachBatch { (df: DataFrame, batchId: Long) =>
             val applied = SnapshotTable.latestMeta(root).map(_.toLong).getOrElse(-1L)
             if (batchId > applied) {
@@ -805,11 +799,7 @@ object StreamingQueries extends QueryModule {
               SnapshotTable.commit(merged, root, meta = batchId.toString)
               ()
             }
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-      }
-      try sq.awaitTermination() finally Tables.rmrf(ckpt)
+          }))
       SnapshotTable.read(s, root)
         .filter(col("event_type") =!= "error")
         .select(col("user_id"), col("event_id").as("last_event_id"),
@@ -874,7 +864,6 @@ object StreamingQueries extends QueryModule {
       // 100 TB this is the warm block-partitioned index executors hold.
       val existing = SnapshotTable.readVersion(s, idxRoot, pinned)
         .repartition(n, col("e_blk")).persist()
-      val ckpt = s"$ckptRoot/graft_i23_${System.nanoTime()}"
       // 2 files per trigger (r22 — the i24 argument): matching PINS index
       // v1 for the whole campaign, so each doc's verdict depends only on
       // (doc, v1) and the union ledger is batch-count-INDEPENDENT — same
@@ -887,8 +876,7 @@ object StreamingQueries extends QueryModule {
       val st = s.readStream.schema(docChunkSchema)
         .option("maxFilesPerTrigger", 2).parquet(docsById(s, dir))
         .filter(col("doc_id") % 5 === 0)
-      val sq = withStreamShufflePartitions(s) {
-        st.writeStream.outputMode(OutputMode.Append())
+      try runStreams("i23")(st -> (_.outputMode(OutputMode.Append())
           .foreachBatch { (df: DataFrame, batchId: Long) =>
             val applied = SnapshotTable.latestMeta(idxRoot)
               .map(_.toLong).getOrElse(-2L)
@@ -917,14 +905,8 @@ object StreamingQueries extends QueryModule {
               SnapshotTable.append(novel, idxRoot, meta = batchId.toString)
               ()
             }
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-      }
-      try sq.awaitTermination() finally {
-        existing.unpersist()
-        Tables.rmrf(ckpt)
-      }
+          }))
+      finally existing.unpersist()
       s.read.option("recursiveFileLookup", "true").parquet(out)
         .select(col("doc_id"), col("n_matches"), col("first_match"),
           col("best_jac"))
@@ -969,21 +951,15 @@ object StreamingQueries extends QueryModule {
       val base = t.orders.select(col("o_orderkey"), col("o_totalprice"))
       SnapshotTable.commit(base.filter(col("o_orderkey") % 30 === 0), root)
       SnapshotTable.append(base.filter(col("o_orderkey") % 30 === 1), root)
-      def campaign(tag: String): Unit = {
-        val sq = withStreamShufflePartitions(s) {
-          s.readStream.format("graft.sources.GraftTableStream")
-            .option("path", root).load()
-            .writeStream.outputMode(OutputMode.Append())
-            .foreachBatch { (df: DataFrame, batchId: Long) =>
-              df.withColumn("campaign", lit(tag))
-                .write.mode("overwrite").parquet(f"$out/${tag}_b$batchId%04d")
-              ()
-            }
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow()).start()
-        }
-        sq.awaitTermination()
-      }
+      def feed = s.readStream.format("graft.sources.GraftTableStream")
+        .option("path", root).load()
+      def campaign(tag: String): Unit =
+        startStream(feed, ckpt)(_.outputMode(OutputMode.Append())
+          .foreachBatch { (df: DataFrame, batchId: Long) =>
+            df.withColumn("campaign", lit(tag))
+              .write.mode("overwrite").parquet(f"$out/${tag}_b$batchId%04d")
+            ()
+          }).awaitTermination()
       campaign("c1")
       SnapshotTable.append(base.filter(col("o_orderkey") % 30 === 2), root)
       campaign("c2") // resumes from the checkpointed version
@@ -1024,21 +1000,15 @@ object StreamingQueries extends QueryModule {
       val base = t.orders.select(col("o_orderkey"), col("o_totalprice"))
       SnapshotTable.commit(base.filter(col("o_orderkey") % 30 === 0), root)
       SnapshotTable.append(base.filter(col("o_orderkey") % 30 === 1), root)
-      def campaign(tag: String): Unit = {
-        val sq = withStreamShufflePartitions(s) {
-          s.readStream.format("graft.sources.GraftTableStream")
-            .option("path", root).option("readChangeFeed", "true").load()
-            .writeStream.outputMode(OutputMode.Append())
-            .foreachBatch { (df: DataFrame, batchId: Long) =>
-              df.withColumn("campaign", lit(tag))
-                .write.mode("overwrite").parquet(f"$out/${tag}_b$batchId%04d")
-              ()
-            }
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow()).start()
-        }
-        sq.awaitTermination()
-      }
+      def feed = s.readStream.format("graft.sources.GraftTableStream")
+        .option("path", root).option("readChangeFeed", "true").load()
+      def campaign(tag: String): Unit =
+        startStream(feed, ckpt)(_.outputMode(OutputMode.Append())
+          .foreachBatch { (df: DataFrame, batchId: Long) =>
+            df.withColumn("campaign", lit(tag))
+              .write.mode("overwrite").parquet(f"$out/${tag}_b$batchId%04d")
+            ()
+          }).awaitTermination()
       campaign("c1") // v1 + v2: pure insert changes, O(delta) each
       // the REWRITE a row feed cannot follow: UPDATE-shaped full rewrite —
       // every 60-multiple's price bumped by 10, all other rows carried
@@ -1096,14 +1066,12 @@ object StreamingQueries extends QueryModule {
       val reason = when(col("value") > 80, "value_gt_80")
         .when(col("event_type") === "error", "error_event")
         .when(col("user_id") % 97 === 13, "blocked_user")
-      val ckpt = s"$ckptRoot/graft_i25_${System.nanoTime()}"
       // 2 files per trigger (r22): the rules are STATELESS, so the union of
       // batch splits equals the single-shot split at any chunking (the
       // query's own oracle argument) — the per-table exactly-once appends
       // are still exercised across 2 batches; halving the batch count
       // halves the per-batch split + two-append fixed cost.
-      val sq = withStreamShufflePartitions(s) {
-        stream(s, dir, filesPerTrigger = 2).writeStream.outputMode(OutputMode.Append())
+      runStreams("i25")(stream(s, dir, filesPerTrigger = 2) -> (_.outputMode(OutputMode.Append())
           .foreachBatch { (df: DataFrame, batchId: Long) =>
             val tagged = df.withColumn("__reason", reason).localCheckpoint()
             def appliedAt(root: String) =
@@ -1117,11 +1085,7 @@ object StreamingQueries extends QueryModule {
                 tagged.filter(col("__reason").isNotNull),
                 qRoot, meta = batchId.toString)
             ()
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-      }
-      try sq.awaitTermination() finally Tables.rmrf(ckpt)
+          }))
       val committedN = SnapshotTable.read(s, tblRoot).count()
       val rules = Seq("value_gt_80", "error_event", "blocked_user").toDF("rule")
       val qCounts = SnapshotTable.read(s, qRoot)
@@ -1189,9 +1153,8 @@ object StreamingQueries extends QueryModule {
           org.apache.spark.sql.streaming.TimeMode.None(),
           OutputMode.Update())
         .toDF("user_id", "seq", "n_kept", "val_sum_micro")
-      withRocksDbStateStore(s) {
-        runMemory(q, "update", "i15", needsFinalFlush = false, statePartitions = statePar(dir))
-      }
+      runMemory(q, "update", "i15", needsFinalFlush = false, statePartitions = statePar(dir),
+        confs = rocksDb)
         .groupBy(col("user_id"))
         .agg(max(struct(col("seq"), col("n_kept"), col("val_sum_micro"))).as("last"))
         .select(col("user_id"), col("last.n_kept").as("n_kept"),
@@ -1216,9 +1179,8 @@ object StreamingQueries extends QueryModule {
           org.apache.spark.sql.streaming.TimeMode.None(),
           OutputMode.Update())
         .toDF("user_id", "seq", "event_type", "n")
-      withRocksDbStateStore(s) {
-        runMemory(q, "update", "i16", needsFinalFlush = false, statePartitions = statePar(dir))
-      }
+      runMemory(q, "update", "i16", needsFinalFlush = false, statePartitions = statePar(dir),
+        confs = rocksDb)
         .groupBy(col("user_id"), col("event_type"))
         .agg(max(struct(col("seq"), col("n"))).as("last"))
         .select(col("user_id"), col("event_type"), col("last.n").as("n"))
@@ -1238,21 +1200,15 @@ object StreamingQueries extends QueryModule {
       val base = s"$ckptRoot/graft_i10_ckpt"
       Tables.rmrf(base) // a stale checkpoint would resume past batch 2
       val qn = s"graft_i10_${System.nanoTime()}"
-      (0 until 3).foreach { _ =>
-        val sq = withStreamShufflePartitions(s, 2) {
-          s.readStream.format("rate-micro-batch")
-            .option("rowsPerBatch", "2000").option("numPartitions", "2")
-            .option("startTimestamp", "0").option("advanceMillisPerBatch", "60000")
-            .load()
-            .groupBy(window(col("timestamp"), "2 minutes"))
-            .agg(count(lit(1)).as("n"), sum(col("value")).as("value_sum"))
-            .writeStream.format("memory").queryName(qn).outputMode("complete")
-            .option("checkpointLocation", base)
-            .trigger(Trigger.AvailableNow()).start()
-        }
-        sq.awaitTermination()
-      }
-      s.table(qn)
+      val q = s.readStream.format("rate-micro-batch")
+        .option("rowsPerBatch", "2000").option("numPartitions", "2")
+        .option("startTimestamp", "0").option("advanceMillisPerBatch", "60000")
+        .load()
+        .groupBy(window(col("timestamp"), "2 minutes"))
+        .agg(count(lit(1)).as("n"), sum(col("value")).as("value_sum"))
+      (0 until 3).foreach(_ => startStream(q, base, 2)(
+        _.format("memory").queryName(qn).outputMode("complete")).awaitTermination())
+      sinkTable(s, qn)
         .select(col("window.start").cast("timestamp_ntz").as("w_start"),
           col("n"), col("value_sum"))
         .orderBy("w_start")
@@ -1355,16 +1311,11 @@ object StreamingQueries extends QueryModule {
           .option("path", live)
           .option("maxRowsPerBatch", (4 * perPart).toString).load()
           .select(col("p"), col("offset"), col("value"))
-        val sq = withStreamShufflePartitions(s, 8) {
-          q.writeStream.outputMode(OutputMode.Update())
-            .foreachBatch { (df: DataFrame, id: Long) =>
-              df.withColumn("run", lit(run)).withColumn("batch_id", lit(id))
-                .write.mode("append").parquet(out)
-            }
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow()).start()
-        }
-        sq.awaitTermination()
+        startStream(q, ckpt, 8)(_.outputMode(OutputMode.Update())
+          .foreachBatch { (df: DataFrame, id: Long) =>
+            df.withColumn("run", lit(run)).withColumn("batch_id", lit(id))
+              .write.mode("append").parquet(out)
+          }).awaitTermination()
       }
       try {
         installCampaign(1); runOnce(1)
@@ -1414,9 +1365,7 @@ object StreamingQueries extends QueryModule {
           org.apache.spark.sql.streaming.TimeMode.EventTime(),
           OutputMode.Append())
         .toDF("user_id", "s_start_us", "s_end_us", "n_events")
-      withRocksDbStateStore(s) {
-        runMemory(q, "append", "i18", statePartitions = statePar(dir))
-      }
+      runMemory(q, "append", "i18", statePartitions = statePar(dir), confs = rocksDb)
         .select(col("user_id"),
           timestamp_micros(col("s_start_us")).cast("timestamp_ntz").as("s_start"),
           timestamp_micros(col("s_end_us")).cast("timestamp_ntz").as("s_end"),
@@ -1486,9 +1435,8 @@ object StreamingQueries extends QueryModule {
           OutputMode.Append(),
           bootstrap)
         .toDF("user_id", "s_start_us", "s_end_us", "n_events")
-      val streamed = withRocksDbStateStore(s) {
-        runMemory(q, "append", "i22", statePartitions = statePar(dir))
-      }
+      val streamed = runMemory(q, "append", "i22", statePartitions = statePar(dir),
+        confs = rocksDb)
       closedInPrefix.unionByName(streamed)
         .select(col("user_id"),
           timestamp_micros(col("s_start_us")).cast("timestamp_ntz").as("s_start"),

@@ -918,12 +918,11 @@ object WarehouseQueries extends QueryModule {
     // refresh and an 84-row file read; freshness is the registrar's
     // contract (re-register on refresh — the m2/m11 incremental-MV
     // discipline supplies the versioned refresh).
-    // The declared lambda materializes the served answer EAGERLY and resets
-    // the rewrite flag in try/finally, so no declared query leaves session-
-    // global optimizer state flipped for whatever runs next in the same
-    // Verify/Bench pass (the live rewritten plan itself is pinned by
-    // PlanSpec against the m27Pipeline helper).
-    "m27_mv_auto_rewrite" -> ((s, dir) => eagerWithMvReset(s, m27Pipeline(s, dir))),
+    // The declared lambda materializes the served answer EAGERLY on a
+    // flag-on clone of the session (`served`), so no declared query flips
+    // optimizer state on the caller's session (the live rewritten plan
+    // itself is pinned by PlanSpec against the m27Pipeline helper).
+    "m27_mv_auto_rewrite" -> ((s, dir) => served(s, m27Pipeline(s, dir))),
 
     // M28: MV CONTAINMENT REWRITE — the second tier of m27's rule, the one
     // that makes a single MV serve a whole family of dashboards: the query
@@ -940,7 +939,7 @@ object WarehouseQueries extends QueryModule {
     // them Opaque by construction). The 60M-row fact shuffle becomes an
     // 84-row re-aggregation; the oracle computes the yearly rollup from
     // the raw facts and the answers must hash-match.
-    "m28_mv_containment" -> ((s, dir) => eagerWithMvReset(s, m28Pipeline(s, dir))),
+    "m28_mv_containment" -> ((s, dir) => served(s, m28Pipeline(s, dir))),
 
     // M25: PARTITION-SPEC EVOLUTION — Iceberg's evolving hidden
     // partitioning, the layout verb m19's column-identity evolution
@@ -992,7 +991,7 @@ object WarehouseQueries extends QueryModule {
     // the raw join; PlanSpec pins that the served plan reads the MV path,
     // that rewritten == unrewritten at full precision, and the refusal
     // negative controls.
-    "m29_mv_join_containment" -> ((s, dir) => eagerWithMvReset(s, m29Pipeline(s, dir))),
+    "m29_mv_join_containment" -> ((s, dir) => served(s, m29Pipeline(s, dir))),
 
     // M32: MV FILTERED CONTAINMENT (tier 4) — the dashboard slices BEFORE
     // rolling up (`WHERE year = 1996 GROUP BY month`), and the rule serves
@@ -1005,7 +1004,7 @@ object WarehouseQueries extends QueryModule {
     // REFUSED — PlanSpec pins both directions. At 100 TB this turns every
     // sliced dashboard variant of a registered rollup into a metadata-sized
     // read; the oracle recomputes the slice from the raw facts.
-    "m32_mv_filtered_containment" -> ((s, dir) => eagerWithMvReset(s, m32Pipeline(s, dir))),
+    "m32_mv_filtered_containment" -> ((s, dir) => served(s, m32Pipeline(s, dir))),
 
     // M30: SQL DML STATEMENT SURFACE — the warehouse band reachable from
     // plain `spark.sql(...)`: MERGE INTO / UPDATE / DELETE / VERSION AS OF
@@ -1345,9 +1344,8 @@ object WarehouseQueries extends QueryModule {
       // quarter slices keep the source-copy I/O (the query's dominant
       // fixed cost) small; the lifecycle semantics are slice-size-free
       base.filter(col("o_orderkey") % 4 === 0).write.parquet(srcDir)
-      def refreshView(): Unit = // re-list the dir (file indexes are pinned)
-        s.read.parquet(srcDir).createOrReplaceTempView("m36_src")
-      refreshView()
+      // a fresh read re-lists the dir (file indexes are pinned)
+      s.read.parquet(srcDir).createOrReplaceTempView("m36_src")
       // revenue as the EXACT integer floor of the decimal sum (the §7.4
       // magnitude rule: monthly sums pass 2^31 at sf1, where a rounded
       // double's 6th decimal is engine-ambiguous; every value ≤ 2^53 is
@@ -1357,20 +1355,21 @@ object WarehouseQueries extends QueryModule {
         "CAST(floor(sum(CAST(o_totalprice AS DECIMAL(27,6)))) AS BIGINT) AS revenue " +
         "FROM m36_src GROUP BY year(o_orderdate), month(o_orderdate)"
       s.sql(s"CREATE MATERIALIZED VIEW $name LOCATION '$mvPath' AS $defSql")
-      def eager(df: org.apache.spark.sql.DataFrame) = eagerDf(s, df)
-      try {
-        s.conf.set(GraftMvRewriteRule.Flag, "true")
-        val fresh = eager(s.sql(defSql).withColumn("phase", lit("fresh")))
-        base.filter(col("o_orderkey") % 4 === 1).write.mode("append").parquet(srcDir)
-        refreshView()
-        val stale = eager(s.sql(defSql).withColumn("phase", lit("stale")))
-        s.sql(s"REFRESH MATERIALIZED VIEW $name")
-        val refreshed = eager(s.sql(defSql).withColumn("phase", lit("refreshed")))
+      val appended = base.filter(col("o_orderkey") % 4 === 1)
+      // the lifecycle runs on a flag-on clone; its temp view is the clone's
+      Tables.withConf(s, GraftMvRewriteRule.Flag -> "true") { c =>
+        def phase(p: String) = eagerDf(c, c.sql(defSql).withColumn("phase", lit(p)))
+        val fresh = phase("fresh")
+        appended.write.mode("append").parquet(srcDir)
+        c.read.parquet(srcDir).createOrReplaceTempView("m36_src")
+        val stale = phase("stale")
+        c.sql(s"REFRESH MATERIALIZED VIEW $name")
+        val refreshed = phase("refreshed")
         fresh.unionByName(stale).unionByName(refreshed)
           .select(col("phase"), col("yr"), col("mo"), col("n_orders"),
             col("revenue"))
           .orderBy("phase", "yr", "mo")
-      } finally s.conf.set(GraftMvRewriteRule.Flag, "false")
+      }
     }),
 
     // M39: DURABLE CATALOG — the piece that turns the SQL surface from a
@@ -1404,18 +1403,17 @@ object WarehouseQueries extends QueryModule {
       t.orders.select(col("o_orderkey"), col("o_totalprice"),
           col("o_orderstatus"))
         .createOrReplaceTempView("m39_src")
-      val prevMeta = s.conf.get(GraftMetastore.DirKey, "")
-      s.conf.set(GraftMetastore.DirKey, metaDir)
-      try {
+      // the whole scenario runs on a clone recording into `metaDir`
+      Tables.withConf(s, GraftMetastore.DirKey -> metaDir) { c =>
         // 1/30 slices: the catalog semantics are slice-size-FREE (the m36
         // discipline) — the graded content is the restart reload, not I/O
-        s.sql(s"CREATE SNAPSHOT TABLE $name LOCATION '$root' AS " +
+        c.sql(s"CREATE SNAPSHOT TABLE $name LOCATION '$root' AS " +
           "SELECT * FROM m39_src WHERE o_orderkey % 30 = 0")
-        s.sql(s"INSERT INTO $name SELECT * FROM m39_src WHERE o_orderkey % 30 = 1")
+        c.sql(s"INSERT INTO $name SELECT * FROM m39_src WHERE o_orderkey % 30 = 1")
         val defSql = s"SELECT o_orderstatus, count(*) AS n, " +
           "CAST(floor(sum(CAST(o_totalprice AS DECIMAL(27,6)))) AS BIGINT) " +
           s"AS revenue FROM $name GROUP BY o_orderstatus"
-        s.sql(s"CREATE MATERIALIZED VIEW $mv LOCATION '$mvPath' AS $defSql")
+        c.sql(s"CREATE MATERIALIZED VIEW $mv LOCATION '$mvPath' AS $defSql")
         // ---- simulated restart: the JVM forgets, the metastore remembers
         GraftDmlRegistry.unregister(name)
         GraftMvDdlRegistry.remove(mv); MvRegistry.unregister(mv)
@@ -1424,22 +1422,17 @@ object WarehouseQueries extends QueryModule {
         // parse and the names resolve again, table first (history + raw
         // read), then the MV (flag-on aggregate served from the stored
         // parquet; 'direct' and 'mv' phases must agree value-for-value)
-        val hist = s.sql(s"DESCRIBE HISTORY $name")
+        val hist = c.sql(s"DESCRIBE HISTORY $name")
           .agg(count(lit(1)).as("n_versions"),
             max(col("version")).as("current_version"))
-        val direct = eagerDf(s, s.sql(defSql).withColumn("phase", lit("direct")))
-        val served = try {
-          s.conf.set(GraftMvRewriteRule.Flag, "true")
-          eagerDf(s, s.sql(defSql).withColumn("phase", lit("mv")))
-        } finally s.conf.set(GraftMvRewriteRule.Flag, "false")
+        val direct = eagerDf(c, c.sql(defSql).withColumn("phase", lit("direct")))
+        val served = Tables.withConf(c, GraftMvRewriteRule.Flag -> "true")(on =>
+          eagerDf(on, on.sql(defSql).withColumn("phase", lit("mv"))))
         direct.unionByName(served)
           .crossJoin(hist)
           .select(col("phase"), col("o_orderstatus"), col("n"), col("revenue"),
             col("n_versions"), col("current_version"))
           .orderBy("phase", "o_orderstatus")
-      } finally {
-        if (prevMeta.isEmpty) s.conf.unset(GraftMetastore.DirKey)
-        else s.conf.set(GraftMetastore.DirKey, prevMeta)
       }
     }),
 
@@ -1804,30 +1797,32 @@ object WarehouseQueries extends QueryModule {
       df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     s.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
 
-  /** Materialize `df` eagerly (the rewrite happens NOW, under the flag),
-    * then reset the session-global rewrite flag — declared queries must not
-    * leave optimizer state flipped for whatever runs next. */
-  private def eagerWithMvReset(s: org.apache.spark.sql.SparkSession,
-      df: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    try eagerDf(s, df)
-    finally s.conf.set(graft.plans.GraftMvRewriteRule.Flag, "false")
+  /** The served answer of an MV pipeline: `df` planned and collected on a
+    * clone of `s` with the rewrite flag on (the rewrite happens NOW), so
+    * the caller's flag is never written. */
+  private def served(s: org.apache.spark.sql.SparkSession,
+      df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    Tables.withConf(s, graft.plans.GraftMvRewriteRule.Flag -> "true")(c =>
+      eagerDf(c, Tables.rehome(c, df)))
 
   /** Shared registration discipline for the declared MV pipelines: inject
     * the rule, take exclusive ownership of BOTH MV registries (the rewrite
     * match-keys AND the SQL DDL definitions — clearing only the rewrite
     * side would leave DROP/REFRESH claiming views the rule no longer
-    * serves), build the view parquet with the flag OFF (the registration
-    * query must not itself be rewritten against a stale sibling), register,
-    * and turn the flag on for the serving phase. */
+    * serves), then build and register the view on a flag-OFF clone (the
+    * registration query must not itself be rewritten against a stale
+    * sibling). Serving needs the flag on: [[served]] sets it for the
+    * declared queries, PlanSpec on its own session. */
   private def registerMv(s: org.apache.spark.sql.SparkSession, name: String,
       mvPath: String, viewDef: org.apache.spark.sql.DataFrame): Unit = {
     ensureMvRule(s)
     graft.plans.MvRegistry.clear()
     graft.plans.GraftMvDdlRegistry.clear()
-    s.conf.set(graft.plans.GraftMvRewriteRule.Flag, "false")
-    viewDef.coalesce(1).write.mode("overwrite").parquet(mvPath)
-    graft.plans.MvRegistry.register(name, viewDef, mvPath)
-    s.conf.set(graft.plans.GraftMvRewriteRule.Flag, "true")
+    Tables.withConf(s, graft.plans.GraftMvRewriteRule.Flag -> "false") { c =>
+      val view = Tables.rehome(c, viewDef)
+      view.coalesce(1).write.mode("overwrite").parquet(mvPath)
+      graft.plans.MvRegistry.register(name, view, mvPath)
+    }
   }
 
   /** Append the flag-gated rewrite rule to the session's user batch once

@@ -96,21 +96,22 @@ object WindowQueries extends QueryModule {
 
     // E1d: the same top-3-per-customer written the CANONICAL way (plain `rn`
     // alias, no opt-in marker) — rewritten to the native operator by the
-    // injected optimizer rule graft.plans.GraftTopKMarkRule. Runs on a cloned
-    // session (isolated conf + experimental slots) so the autoRewrite flag
-    // never leaks into any other query in the run. Same oracle as E1.
+    // injected optimizer rule graft.plans.GraftTopKMarkRule. Built on the
+    // caller and planned on a clone of its session (Tables.confSession — own
+    // conf + experimental slots) so the autoRewrite flag never leaks into
+    // any other query in the run. Same oracle as E1.
     "e1d_win_topk_autorewrite" -> ((s, dir) => {
-      val s2 = s.newSession()
-      s2.conf.set(graft.plans.GraftTopKMarkRule.Flag, "true")
-      s2.experimental.extraOptimizations = Seq(graft.plans.GraftTopKMarkRule)
-      s2.experimental.extraStrategies = Seq(graft.plans.GraftTopKStrategy)
-      val t = Tables(s2, dir)
+      val t = Tables(s, dir)
       val w = Window.partitionBy("o_custkey")
         .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-      t.orders.withColumn("rn", row_number().over(w))
+      val q = t.orders.withColumn("rn", row_number().over(w))
         .filter(col("rn") <= 3)
         .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"), col("rn"))
         .orderBy("o_custkey", "rn")
+      val s2 = Tables.confSession(s, graft.plans.GraftTopKMarkRule.Flag -> "true")
+      s2.experimental.extraOptimizations = Seq(graft.plans.GraftTopKMarkRule)
+      s2.experimental.extraStrategies = Seq(graft.plans.GraftTopKStrategy)
+      Tables.rehome(s2, q)
     }),
 
     // E2: rank / dense_rank / ntile(4) per priority.

@@ -3,6 +3,8 @@ package graft.plans
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** Connected components over an edge DataFrame — the step a real dedup
   * pipeline needs AFTER pair detection: near-dup pairs form a graph, and
   * each document must resolve to one canonical group id (the component's
@@ -45,21 +47,18 @@ object ConnectedComponents {
     */
   def labels(edges: DataFrame, maxIter: Int = 50,
       eagerCheckpoint: Boolean = false): DataFrame = {
-    // Scope AQE OFF for the loop's actions (restored in the finally): with
-    // AQE on, every shuffle stage of every round materializes as its own
-    // Spark job — measured (Prof PROF_MODE=cc, r22): 23 jobs vs 8 for one
-    // labels() call on a metadata-scale graph, ~0.4 s of pure per-job
-    // overhead. The loop does not benefit from AQE's two levers here: its
-    // join sides are label tables whose partitioning the loop pins itself,
-    // and skew inside a round is bounded by the doubling shortcut. The
-    // session conf is captured per ACTION, so the scope covers exactly the
-    // loop's own jobs.
-    val spark = edges.sparkSession
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prevAqe = spark.conf.get(aqeKey)
-    spark.conf.set(aqeKey, "false")
-    try labelsLoop(edges, maxIter, eagerCheckpoint)
-    finally spark.conf.set(aqeKey, prevAqe)
+    // AQE OFF for the loop's actions, on a clone of the caller's session
+    // (Tables.withConf — the caller's conf is untouched, and the returned
+    // labels plan under it again): with AQE on, every shuffle stage of
+    // every round materializes as its own Spark job — measured (r22): 23
+    // jobs vs 8 for one labels() call on a metadata-scale graph, ~0.4 s of
+    // pure per-job overhead. The loop does not benefit from AQE's two
+    // levers here: its join sides are label tables whose partitioning the
+    // loop pins itself, and skew inside a round is bounded by the doubling
+    // shortcut.
+    Tables.withConf(edges.sparkSession, "spark.sql.adaptive.enabled" -> "false") { c =>
+      labelsLoop(Tables.rehome(c, edges), maxIter, eagerCheckpoint)
+    }
   }
 
   private def labelsLoop(edges: DataFrame, maxIter: Int,

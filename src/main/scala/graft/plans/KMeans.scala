@@ -22,21 +22,14 @@ import graft.Tables
   */
 object KMeans {
 
-  /** Scope AQE OFF across the Lloyd loop's actions (r22 — the
-    * ConnectedComponents finding): with AQE on, every per-iteration
-    * aggregate runs its shuffle stage as a SEPARATE job, roughly doubling
-    * the per-iteration scheduling overhead on metadata-scale aggregates
-    * whose partitioning the loop's inputs already pin (callers cache /
-    * repartition the base). Decimal sums are merge-order independent, so
-    * AQE on/off cannot move a digit; the session conf is captured per
-    * action and restored in the finally. */
-  private def withoutAqe[T](df: DataFrame)(body: => T): T = {
-    val spark = df.sparkSession
-    val key = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try body finally spark.conf.set(key, prev)
-  }
+  /** AQE OFF for the Lloyd loop's actions (r22 — the ConnectedComponents
+    * finding): with AQE on, every per-iteration aggregate runs its shuffle
+    * stage as a SEPARATE job, roughly doubling the per-iteration scheduling
+    * overhead on metadata-scale aggregates whose partitioning the loop's
+    * inputs already pin (callers cache / repartition the base). Decimal
+    * sums are merge-order independent, so AQE on/off cannot move a digit.
+    * Scoped through [[Tables.withConf]]: the caller's conf is untouched. */
+  private val aqeOff = "spark.sql.adaptive.enabled" -> "false"
 
   /** Squared-L2 distances to ALL centroids, as one sequential fold per
     * centroid (bit-stable). The centroid matrix rides in as a SINGLE
@@ -76,39 +69,41 @@ object KMeans {
     * @param iters  fixed Lloyd iterations
     * @return (final centroids, per-iteration inertia — decimal-exact sums,
     *         non-increasing by Lloyd's monotonicity) */
-  def fit(df: DataFrame, idCol: String, xCol: String, d: Int, k: Int,
-      iters: Int): (Array[Array[Double]], Seq[Double]) = withoutAqe(df) {
-    var cents: Array[Array[Double]] = df.orderBy(col(idCol)).limit(k)
-      .select(col(xCol)).collect()
-      .map(_.getSeq[Double](0).toArray)
-    require(cents.length == k, s"need >= $k rows to seed $k clusters")
-    val inertias = Seq.newBuilder[Double]
-    val vecsum = udaf(graft.functions.DecVecSumAgg)
-    for (_ <- 1 to iters) {
-      val (cid, dist) = assignCols(xCol, cents)
-      // one pass, k output rows: per-cluster decimal vector sum (one
-      // d-element buffer per cluster crosses the shuffle — not n×d exploded
-      // rows), row count, and the decimal inertia contribution
-      val stats = df.select(col(xCol), cid.as("cid"), dist.as("d2"))
-        .groupBy(col("cid"))
-        .agg(vecsum(col(xCol)).as("sx"), count(lit(1)).as("n"),
-          sum(col("d2").cast(Tables.decHi)).cast("double").as("d2sum"))
-        .collect()
-      val next = cents.map(_.clone())
-      stats.foreach { r =>
-        val c = r.getInt(0)
-        val sx = r.getSeq[java.math.BigDecimal](1)
-        val n = r.getLong(2)
-        var i = 0
-        // decimal→double then the double divide: bit-identical to
-        // sum(CAST(v AS DECIMAL(38,12))).cast(double) / count
-        while (i < sx.length) { next(c)(i) = sx(i).doubleValue() / n; i += 1 }
+  def fit(input: DataFrame, idCol: String, xCol: String, d: Int, k: Int,
+      iters: Int): (Array[Array[Double]], Seq[Double]) =
+    Tables.withConf(input.sparkSession, aqeOff) { c =>
+      val df = Tables.rehome(c, input)
+      var cents: Array[Array[Double]] = df.orderBy(col(idCol)).limit(k)
+        .select(col(xCol)).collect()
+        .map(_.getSeq[Double](0).toArray)
+      require(cents.length == k, s"need >= $k rows to seed $k clusters")
+      val inertias = Seq.newBuilder[Double]
+      val vecsum = udaf(graft.functions.DecVecSumAgg)
+      for (_ <- 1 to iters) {
+        val (cid, dist) = assignCols(xCol, cents)
+        // one pass, k output rows: per-cluster decimal vector sum (one
+        // d-element buffer per cluster crosses the shuffle — not n×d exploded
+        // rows), row count, and the decimal inertia contribution
+        val stats = df.select(col(xCol), cid.as("cid"), dist.as("d2"))
+          .groupBy(col("cid"))
+          .agg(vecsum(col(xCol)).as("sx"), count(lit(1)).as("n"),
+            sum(col("d2").cast(Tables.decHi)).cast("double").as("d2sum"))
+          .collect()
+        val next = cents.map(_.clone())
+        stats.foreach { r =>
+          val c = r.getInt(0)
+          val sx = r.getSeq[java.math.BigDecimal](1)
+          val n = r.getLong(2)
+          var i = 0
+          // decimal→double then the double divide: bit-identical to
+          // sum(CAST(v AS DECIMAL(38,12))).cast(double) / count
+          while (i < sx.length) { next(c)(i) = sx(i).doubleValue() / n; i += 1 }
+        }
+        cents = next
+        inertias += stats.sortBy(_.getInt(0)).map(_.getDouble(3)).sum
       }
-      cents = next
-      inertias += stats.sortBy(_.getInt(0)).map(_.getDouble(3)).sum
+      (cents, inertias.result())
     }
-    (cents, inertias.result())
-  }
 
   /** Fit INDEPENDENT k-means models over several vector columns of the same
     * rows in ONE distributed pass per iteration — the product-quantization
@@ -124,37 +119,39 @@ object KMeans {
     * independent, so the extra grouping key cannot move a digit. (r21: cut
     * g55's PQ training from 12 jobs to 3 over the same cached base.)
     * Returns the final centroids per column, in `xCols` order. */
-  def fitMany(df: DataFrame, idCol: String, xCols: Seq[String], k: Int,
-      iters: Int): Seq[Array[Array[Double]]] = withoutAqe(df) {
-    val seedRows = df.orderBy(col(idCol)).limit(k)
-      .select(xCols.map(col): _*).collect()
-    require(seedRows.length == k, s"need >= $k rows to seed $k clusters")
-    var cents: Array[Array[Array[Double]]] = xCols.indices.map { j =>
-      seedRows.map(_.getSeq[Double](j).toArray)
-    }.toArray
-    val vecsum = udaf(graft.functions.DecVecSumAgg)
-    for (_ <- 1 to iters) {
-      val pairs = xCols.zipWithIndex.map { case (xc, j) =>
-        val (cid, _) = assignCols(xc, cents(j))
-        struct(lit(j).as("j"), cid.as("cid"), col(xc).as("x"))
+  def fitMany(input: DataFrame, idCol: String, xCols: Seq[String], k: Int,
+      iters: Int): Seq[Array[Array[Double]]] =
+    Tables.withConf(input.sparkSession, aqeOff) { c =>
+      val df = Tables.rehome(c, input)
+      val seedRows = df.orderBy(col(idCol)).limit(k)
+        .select(xCols.map(col): _*).collect()
+      require(seedRows.length == k, s"need >= $k rows to seed $k clusters")
+      var cents: Array[Array[Array[Double]]] = xCols.indices.map { j =>
+        seedRows.map(_.getSeq[Double](j).toArray)
+      }.toArray
+      val vecsum = udaf(graft.functions.DecVecSumAgg)
+      for (_ <- 1 to iters) {
+        val pairs = xCols.zipWithIndex.map { case (xc, j) =>
+          val (cid, _) = assignCols(xc, cents(j))
+          struct(lit(j).as("j"), cid.as("cid"), col(xc).as("x"))
+        }
+        val stats = df
+          .select(explode(array(pairs: _*)).as("p"))
+          .select(col("p.j").as("j"), col("p.cid").as("cid"), col("p.x").as("x"))
+          .groupBy(col("j"), col("cid"))
+          .agg(vecsum(col("x")).as("sx"), count(lit(1)).as("n"))
+          .collect()
+        val next = cents.map(_.map(_.clone()))
+        stats.foreach { r =>
+          val j = r.getInt(0)
+          val c = r.getInt(1)
+          val sx = r.getSeq[java.math.BigDecimal](2)
+          val n = r.getLong(3)
+          var i = 0
+          while (i < sx.length) { next(j)(c)(i) = sx(i).doubleValue() / n; i += 1 }
+        }
+        cents = next
       }
-      val stats = df
-        .select(explode(array(pairs: _*)).as("p"))
-        .select(col("p.j").as("j"), col("p.cid").as("cid"), col("p.x").as("x"))
-        .groupBy(col("j"), col("cid"))
-        .agg(vecsum(col("x")).as("sx"), count(lit(1)).as("n"))
-        .collect()
-      val next = cents.map(_.map(_.clone()))
-      stats.foreach { r =>
-        val j = r.getInt(0)
-        val c = r.getInt(1)
-        val sx = r.getSeq[java.math.BigDecimal](2)
-        val n = r.getLong(3)
-        var i = 0
-        while (i < sx.length) { next(j)(c)(i) = sx(i).doubleValue() / n; i += 1 }
-      }
-      cents = next
+      cents.toSeq
     }
-    cents.toSeq
-  }
 }

@@ -6,6 +6,8 @@ import java.util.Base64
 
 import org.apache.spark.sql.SparkSession
 
+import graft.Tables
+
 /** DURABLE CATALOG for the SQL surface — what turns the session-scoped
   * name registries ([[GraftDmlRegistry]], [[GraftMvDdlRegistry]]) into a
   * warehouse: every table and materialized view CREATEd through SQL while
@@ -121,8 +123,6 @@ object GraftMetastore {
     readLines(mvsFile(dir)).foreach { line =>
       line.split("\t", 3) match {
         case Array(name, path, sql64) if GraftMvDdlRegistry.get(name).isEmpty =>
-          val flag = session.conf.get(GraftMvRewriteRule.Flag, "false")
-          session.conf.set(GraftMvRewriteRule.Flag, "false")
           // PER-ENTRY fault isolation: one MV whose definition no longer
           // analyzes (its source table was dropped after the MV was
           // recorded) or whose base64 is corrupt must not block every
@@ -130,11 +130,12 @@ object GraftMetastore {
           // (its next CREATE/REFRESH will surface the real error)
           try {
             val sql = new String(Base64.getDecoder.decode(sql64), UTF_8)
-            MvRegistry.register(name.toLowerCase, session.sql(sql), path)
+            Tables.withConf(session, GraftMvRewriteRule.Flag -> "false")(c =>
+              MvRegistry.register(name.toLowerCase, c.sql(sql), path))
             GraftMvDdlRegistry.put(name, sql, path)
           } catch {
             case e: Exception => logWarn(name, e)
-          } finally session.conf.set(GraftMvRewriteRule.Flag, flag)
+          }
         case Array(_, _, _) => // already registered in-session: session wins
         case _ => Console.err.println(
           s"[graft metastore] skipping unparseable mvs.catalog line: ${line.take(80)}")

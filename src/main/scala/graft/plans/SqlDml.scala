@@ -11,6 +11,7 @@ import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructType}
 
+import graft.Tables
 import graft.operators.MergeInto
 import graft.sources.SnapshotTable
 
@@ -822,20 +823,17 @@ case class GraftCreateMvCommand(name: String, path: String, sourceSql: String,
   override def run(spark: SparkSession): Seq[Row] = {
     if (!isRefresh) require(GraftMvDdlRegistry.get(name).isEmpty,
       s"CREATE MATERIALIZED VIEW: '$name' already exists in this session")
-    val flag = spark.conf.get(GraftMvRewriteRule.Flag, "false")
-    spark.conf.set(GraftMvRewriteRule.Flag, "false")
-    try {
-      val df = spark.sql(sourceSql)
+    Tables.withConf(spark, GraftMvRewriteRule.Flag -> "false") { c =>
+      val df = c.sql(sourceSql)
       df.write.mode("overwrite").parquet(path)
       // MvRegistry keys are case-sensitive; the SQL layer is
       // case-insensitive — normalize here so REFRESH REPLACES (same key)
       // and DROP under any casing unregisters the entry CREATE made
       MvRegistry.register(name.toLowerCase, df, path)
       GraftMvDdlRegistry.put(name, sourceSql, path)
-      GraftMetastore.recordMv(spark, name, sourceSql, path)
-      val n = spark.read.parquet(path).count()
-      Seq(Row(n))
-    } finally spark.conf.set(GraftMvRewriteRule.Flag, flag)
+      GraftMetastore.recordMv(c, name, sourceSql, path)
+      Seq(Row(c.read.parquet(path).count()))
+    }
   }
 }
 

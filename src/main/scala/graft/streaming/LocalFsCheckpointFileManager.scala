@@ -30,7 +30,7 @@ import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedChe
   * path and skips the checksum sidecars Spark's own FileSystem manager
   * already skips on HDFS.
   *
-  * Scope: configured by the streaming helpers ONLY around local-checkpoint
+  * Scope: set by `StreamingQueries.startStream` ONLY around local-checkpoint
   * query starts (`spark.sql.streaming.checkpointFileManagerClass` is
   * captured per query). A production deployment checkpointing to HDFS/S3
   * keeps Spark's default managers — this class refuses non-local schemes
@@ -69,10 +69,14 @@ class LocalFsCheckpointFileManager(root: Path, hadoopConf: Configuration)
       if (overwriteIfPossible)
         Files.move(src, dst, StandardCopyOption.ATOMIC_MOVE,
           StandardCopyOption.REPLACE_EXISTING)
-      else if (Files.exists(dst)) // pre-check: ATOMIC_MOVE may replace anyway
-        throw new FileAlreadyExistsException(
-          s"rename destination $dstPath already exists")
-      else Files.move(src, dst, StandardCopyOption.ATOMIC_MOVE)
+      else {
+        // fail-if-exists in ONE step: link(2) refuses an existing name, so
+        // of two racing writers exactly one publishes (a check followed by
+        // a rename would let both pass the check and the second replace
+        // the first); the temp name is dropped once the link stands
+        Files.createLink(dst, src)
+        Files.delete(src)
+      }
     } catch {
       case e: NioExists =>
         throw new FileAlreadyExistsException(

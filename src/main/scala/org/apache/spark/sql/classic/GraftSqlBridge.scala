@@ -12,8 +12,16 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * repo reaches across the `private[sql]` boundary.
   */
 object GraftSqlBridge {
-  def ofRows(spark: SparkSession, plan: LogicalPlan): Dataset[org.apache.spark.sql.Row] =
-    Dataset.ofRows(spark, plan)
+  def ofRows(spark: org.apache.spark.sql.SparkSession,
+      plan: LogicalPlan): Dataset[org.apache.spark.sql.Row] =
+    Dataset.ofRows(ClassicConversions.castToImpl(spark), plan)
+
+  /** A session that shares `spark`'s SparkContext, shared state (cache
+    * manager, external catalog) and job tags, over a COPY of its session
+    * state (conf, temp views, functions, experimental rules) — the scope
+    * [[graft.Tables.withConf]] runs in. */
+  def cloneSession(spark: org.apache.spark.sql.SparkSession): SparkSession =
+    ClassicConversions.castToImpl(spark).cloneSession()
 
   /** Spark 4's api Column wraps a ColumnNode, not an Expression; this is the
     * classic converter back to a (resolved, when the Column came from a

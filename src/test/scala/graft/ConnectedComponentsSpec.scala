@@ -10,6 +10,27 @@ import org.scalatest.funsuite.AnyFunSuite
 class ConnectedComponentsSpec extends AnyFunSuite {
   import TestSpark._
 
+  /** Spark jobs scheduled while `body` runs. */
+  private def countJobs(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      // listener bus is async — wait for the count to go stationary
+      var prev = -1
+      var waited = 0
+      while (jobs.get() != prev && waited < 5000) {
+        prev = jobs.get(); Thread.sleep(200); waited += 200
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get()
+  }
+
   test("100-node path graph converges to the single min label") {
     val s = spark
     import s.implicits._
@@ -51,25 +72,6 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     // the eagerCheckpoint=true shape it replaced.
     val s = spark
     import s.implicits._
-    def countJobs(body: => Unit): Int = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-      }
-      s.sparkContext.addSparkListener(listener)
-      try {
-        body
-        // listener bus is async — wait for the count to go stationary
-        var prev = -1
-        var waited = 0
-        while (jobs.get() != prev && waited < 5000) {
-          prev = jobs.get(); Thread.sleep(200); waited += 200
-        }
-      } finally s.sparkContext.removeSparkListener(listener)
-      jobs.get()
-    }
     val edges = (1L until 100L).map(i => (i, i + 1)).toDF("u", "v")
     val eager = countJobs {
       graft.plans.ConnectedComponents.labels(edges, eagerCheckpoint = true)
@@ -93,5 +95,42 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     val expected = ((10L until 15L).map(i => (i, 10L)) ++
       (40L until 45L).map(i => (i, 40L))).toSet
     assert(got == expected)
+  }
+
+  test("labels() scopes AQE off on a clone: the caller's conf and a concurrent probe stay adaptive") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions._
+    val key = "spark.sql.adaptive.enabled"
+    assert(s.conf.get(key) == "true")
+    val edges = (1L until 100L).map(i => (i, i + 1)).toDF("u", "v")
+    // the AQE-off loop's job count on this graph, measured with labels()
+    // scoping the caller's own conf (the shape it had before the clone)
+    assert(countJobs(graft.plans.ConnectedComponents.labels(edges)) == 14)
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    @volatile var failure: Throwable = null
+    val runner = new Thread(() =>
+      try graft.plans.ConnectedComponents.labels(edges).collect()
+      catch { case e: Throwable => failure = e }
+      finally done.set(true))
+    runner.start()
+    val reads = scala.collection.mutable.ArrayBuffer[String]()
+    var probes = 0
+    var adaptive = 0
+    while (!done.get()) {
+      reads += s.conf.get(key)
+      val probe = s.range(1000).groupBy((col("id") % 7).as("k")).count()
+      probe.queryExecution.executedPlan match {
+        case _: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => adaptive += 1
+        case _ =>
+      }
+      probes += 1
+    }
+    runner.join()
+    assert(failure == null, String.valueOf(failure))
+    assert(probes > 0)
+    assert(reads.forall(_ == "true"), s"caller's conf flipped: ${reads.distinct}")
+    assert(adaptive == probes, s"$adaptive of $probes concurrent probes planned adaptively")
+    assert(s.conf.get(key) == "true")
   }
 }

@@ -262,10 +262,12 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("m27: the re-issued view definition reads the MV, not the facts") {
-    // the declared query materializes eagerly and resets the flag; the live
-    // rewritten plan is pinned here against the pipeline helper
-    val df = operators.WarehouseQueries.m27Pipeline(spark, sfDir)
+    // the declared query materializes eagerly on a flag-on clone; the live
+    // rewritten plan is pinned here against the pipeline helper, served
+    // from this session with the flag on
+    spark.conf.set(graft.plans.GraftMvRewriteRule.Flag, "true")
     try {
+      val df = operators.WarehouseQueries.m27Pipeline(spark, sfDir)
       df.collect()
       val p = df.queryExecution.executedPlan.toString
       assert(p.contains("graft_m27_"), s"MV path absent from the scan:\n$p")
@@ -288,8 +290,10 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("m28: the coarser rollup re-aggregates the MV instead of scanning the facts") {
-    val df = operators.WarehouseQueries.m28Pipeline(spark, sfDir)
+    // the pipeline registers the MV; serving needs the flag on this session
+    spark.conf.set(graft.plans.GraftMvRewriteRule.Flag, "true")
     try {
+      val df = operators.WarehouseQueries.m28Pipeline(spark, sfDir)
       df.collect()
       val p = df.queryExecution.executedPlan.toString
       assert(p.contains("graft_m28_"), s"MV path absent from the scan:\n$p")
@@ -373,8 +377,10 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("m29: the coarser join rollup (incl avg) re-aggregates the join MV") {
-    val df = operators.WarehouseQueries.m29Pipeline(spark, sfDir)
+    // the pipeline registers the MV; serving needs the flag on this session
+    spark.conf.set(graft.plans.GraftMvRewriteRule.Flag, "true")
     try {
+      val df = operators.WarehouseQueries.m29Pipeline(spark, sfDir)
       df.collect()
       val p = df.queryExecution.executedPlan.toString
       assert(p.contains("graft_m29_"), s"MV path absent from the scan:\n$p")
@@ -417,8 +423,10 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("m32: a group-column slice is pushed onto the MV scan (tier 4)") {
-    val df = operators.WarehouseQueries.m32Pipeline(spark, sfDir)
+    // the pipeline registers the MV; serving needs the flag on this session
+    spark.conf.set(graft.plans.GraftMvRewriteRule.Flag, "true")
     try {
+      val df = operators.WarehouseQueries.m32Pipeline(spark, sfDir)
       df.collect()
       val p = df.queryExecution.executedPlan.toString
       assert(p.contains("graft_m32_"), s"MV path absent from the scan:\n$p")

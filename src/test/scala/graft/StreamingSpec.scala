@@ -139,6 +139,90 @@ class StreamingSpec extends AnyFunSuite {
     assert(n == totalEvents)
   }
 
+  test("i1 leaves no memory-sink temp view on the caller's session") {
+    SparkEntry.queries("i1_stream_tumbling")(spark, sfDir).collect()
+    val views = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("graft_i1_"))
+    assert(views.isEmpty, s"leaked sink views: ${views.toSeq}")
+  }
+
+  test("a StreamingQueryListener on the caller's session sees i1 start, progress and terminate") {
+    // guards the choice to start streams on the caller's session: a stream
+    // started on a clone reports nothing to the caller's listeners
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import StreamingQueryListener._
+    val ids = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
+    val progress = new java.util.concurrent.atomic.AtomicInteger(0)
+    val terminated = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit =
+        if (Option(e.name).exists(_.startsWith("graft_i1_"))) { ids.add(e.id); () }
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (ids.contains(e.progress.id)) { progress.incrementAndGet(); () }
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        if (ids.contains(e.id)) { terminated.incrementAndGet(); () }
+    }
+    spark.streams.addListener(listener)
+    try {
+      SparkEntry.queries("i1_stream_tumbling")(spark, sfDir).collect()
+      // the listener bus is asynchronous
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (terminated.get() == 0 && System.nanoTime() < deadline) Thread.sleep(50)
+    } finally spark.streams.removeListener(listener)
+    assert(ids.size == 1, s"started events: ${ids.size}")
+    assert(progress.get() >= 1, "no progress event")
+    assert(terminated.get() == 1, s"terminated events: ${terminated.get()}")
+  }
+
+  test("checkpoint manager: of two racing fail-if-exists renames to one name exactly one wins") {
+    import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
+    val root = java.nio.file.Files.createTempDirectory("graft_cm_race")
+    val cm = new graft.streaming.LocalFsCheckpointFileManager(
+      new Path(root.toString), new org.apache.hadoop.conf.Configuration())
+    try (0 until 300).foreach { i =>
+      val dst = new Path(s"$root/$i")
+      val barrier = new java.util.concurrent.CyclicBarrier(2)
+      val outcome = new Array[String](2)
+      val writers = (0 until 2).map { w =>
+        val tmp = root.resolve(s".$i.$w.tmp")
+        java.nio.file.Files.write(tmp, s"w$w".getBytes("UTF-8"))
+        new Thread(() => {
+          barrier.await()
+          outcome(w) =
+            try { cm.renameTempFile(new Path(tmp.toString), dst, false); "won" }
+            catch { case _: FileAlreadyExistsException => "lost" }
+        })
+      }
+      writers.foreach(_.start())
+      writers.foreach(_.join())
+      assert(outcome.toSeq.sorted == Seq("lost", "won"), s"round $i: ${outcome.toSeq}")
+      val winner = outcome.indexOf("won")
+      assert(new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$root/$i")),
+        "UTF-8") == s"w$winner")
+    } finally Tables.rmrf(root.toString)
+  }
+
+  test("NoForkLocalFileSystem: a sticky-bit permission reaches the parent implementation") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.hadoop.fs.permission.FsPermission
+    val fs = new NoForkLocalFileSystem
+    fs.initialize(java.net.URI.create("file:///"), new org.apache.hadoop.conf.Configuration())
+    val dir = java.nio.file.Files.createTempDirectory("graft_sticky")
+    try {
+      fs.setPermission(new Path(dir.toString),
+        new FsPermission(Integer.parseInt("1777", 8).toShort))
+      val mode = java.nio.file.Files.getAttribute(dir, "unix:mode").asInstanceOf[Int]
+      assert((mode & Integer.parseInt("7777", 8)) == Integer.parseInt("1777", 8),
+        f"mode ${mode & 4095}%o")
+      // plain modes stay on the fork-free path with the same bits
+      fs.setPermission(new Path(dir.toString),
+        new FsPermission(Integer.parseInt("750", 8).toShort))
+      val plain = java.nio.file.Files.getAttribute(dir, "unix:mode").asInstanceOf[Int]
+      assert((plain & Integer.parseInt("7777", 8)) == Integer.parseInt("750", 8),
+        f"mode ${plain & 4095}%o")
+    } finally Tables.rmrf(dir.toString)
+  }
+
   test("i4: append mode with watermark drops late chunks") {
     val n = SparkEntry.queries("i4_stream_watermark_late")(spark, sfDir)
       .agg(org.apache.spark.sql.functions.sum("n")).head().getLong(0)

@@ -30,6 +30,20 @@ class WarehouseSpec extends AnyFunSuite {
     assert(SnapshotTable.read(spark, root2).count() == 2L)
   }
 
+  test("m27 leaves the caller's MV-rewrite flag as it found it, set or unset") {
+    val flag = graft.plans.GraftMvRewriteRule.Flag
+    val m27 = SparkEntry.queries("m27_mv_auto_rewrite")
+    try {
+      spark.conf.set(flag, "true")
+      val preset = m27(spark, sfDir).collect().toSeq
+      assert(spark.conf.get(flag) == "true")
+      spark.conf.unset(flag)
+      val unset = m27(spark, sfDir).collect().toSeq
+      assert(spark.conf.getOption(flag).isEmpty, s"flag now ${spark.conf.getOption(flag)}")
+      assert(preset == unset)
+    } finally spark.conf.unset(flag)
+  }
+
   test("scd2: changed keys split into closed + current, others keep one open row") {
     val s = spark
     import s.implicits._

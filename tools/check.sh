@@ -7,11 +7,20 @@ set -e
 cd /root/repo
 SF="${1:-0.01}"
 shift 2>/dev/null || true
-# One owner per lifecycle decision: scratch deletion and session-cache
-# identity live in graft.Tables, SQL function registration in
-# graft.GraftExtensions. Fail fast when a copy grows back elsewhere.
-owned() { grep -rnE "$1" src/main --include='*.scala' | grep -v "^src/main/scala/graft/$2:" || true; }
-strays="$(owned 'def rmrf\b|System\.identityHashCode' Tables.scala)$(owned 'createOrReplaceTempFunction' GraftExtensions.scala)"
+# One owner per lifecycle decision: scratch deletion, session-cache
+# identity and scoped conf (Tables.withConf) live in graft.Tables, SQL
+# function registration in graft.GraftExtensions, and the one conf write on
+# a caller's session — around a stream start — in StreamingQueries'
+# startStream. newSession() would bypass the conf owner. Fail fast when a
+# copy grows back elsewhere.
+owned() { grep -rnE "$1" src/main --include='*.scala' | grep -vE "^src/main/scala/graft/($2):" || true; }
+strays="$(owned 'def rmrf\b|System\.identityHashCode' Tables.scala
+  owned 'createOrReplaceTempFunction' GraftExtensions.scala
+  owned 'conf\.(set|unset)\(' 'Tables.scala|operators/StreamingQueries.scala'
+  awk '/ def startStream\(/ {h = 1} h && /^  }$/ {h = 0}
+    !h && /conf\.(set|unset)\(/ {print FILENAME ":" FNR ":" $0}' \
+    src/main/scala/graft/operators/StreamingQueries.scala
+  owned 'newSession\(\)' '')"
 if [ -n "$strays" ]; then
   echo "check.sh: lifecycle code outside its owner:" >&2
   echo "$strays" >&2
