@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{QueryModule, Tables}
 import graft.functions.{TextFunctions => TF}
+import graft.sources.Ann
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -714,8 +715,6 @@ object PipelineQueries extends QueryModule {
     // scan here); the fusion is a 20∪20-row full-outer join — driver-free,
     // metadata-scale.
     "g74_hybrid_rrf" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
       val t = Tables(s, dir)
       // lexical leg — g58's BM25 (rational idf ×2, k1=1, b=½, fixed-order
       // 3-term sum), cut to a ranked top-20
@@ -748,14 +747,10 @@ object PipelineQueries extends QueryModule {
         .withColumn("rank_lex", row_number().over(wLex))
         .select("doc_id", "rank_lex")
       // semantic leg — exact cosine top-20 vs doc 0's embedding
-      val query = t.embeddings.filter(col("vec_id") === 0)
-        .select(col("embedding")).as[Seq[Float]].head().map(_.toDouble).toSeq
       val wVec = Window.orderBy(col("cos").desc, col("doc_id"))
-      val vec = t.embeddings.filter(col("vec_id") =!= 0)
-        .withColumn("qv", typedLit(query))
-        .select(col("vec_id").as("doc_id"),
-          round(expr("cosine_sim(transform(embedding, x -> CAST(x AS DOUBLE)), qv)"), 6).as("cos"))
-        .orderBy(col("cos").desc, col("doc_id")).limit(20)
+      val vec = Ann.exactTopK(t.embeddings.filter(col("vec_id") =!= 0),
+          Ann.queryVec(t), 20)
+        .select(col("vec_id").as("doc_id"), col("cos"))
         .withColumn("rank_vec", row_number().over(wVec))
         .select("doc_id", "rank_vec")
       // RRF fusion: fixed lex + vec order, absent legs contribute 0

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{QueryModule, Tables}
 import graft.functions.{MinHashLSH, TextFunctions => TF}
+import graft.sources.Lsh
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -604,15 +605,6 @@ object TextQueries extends QueryModule {
         array((0 until bands).map(b =>
           concat_ws("|", (0 until rpb).map(r => col("mh")(b * rpb + r)): _*)): _*))
         .as(Seq("band", "bkey")))
-      // pinned partition count: per-bucket pair enumeration is quadratic in
-      // bucket size — invisible to AQE coalescing (see jaccardPairs)
-      val n = s.conf.get("spark.sql.shuffle.partitions", "200").toInt
-      val cand = keyed.repartition(n, col("band"), col("bkey"))
-        .join(keyed.select(col("doc_id").as("v"), col("band").as("band_b"),
-            col("bkey").as("bkey_b")).repartition(n, col("band_b"), col("bkey_b")),
-          col("band") === col("band_b") && col("bkey") === col("bkey_b") &&
-            col("doc_id") < col("v"))
-        .select(col("doc_id").as("u"), col("v")).distinct()
       val anchors = base.filter(col("doc_id") < 50)
         .select(col("doc_id").as("a_id"), col("sh").as("sha"))
       val tru = base.select(col("doc_id").as("b_id"), col("sh").as("shb"))
@@ -620,15 +612,7 @@ object TextQueries extends QueryModule {
         .filter(TF.jaccard(col("sha"), col("shb")) >= 0.4)
         .select(col("a_id"), least(col("a_id"), col("b_id")).as("u"),
           greatest(col("a_id"), col("b_id")).as("v"))
-      val fnd = tru.join(cand, Seq("u", "v"), "left_semi")
-      tru.groupBy(col("a_id")).agg(count(lit(1)).as("n_true"))
-        .join(fnd.groupBy(col("a_id")).agg(count(lit(1)).as("n_found")),
-          Seq("a_id"), "left")
-        .select(col("a_id"), col("n_true"),
-          coalesce(col("n_found"), lit(0L)).as("n_found"))
-        .withColumn("recall_pct",
-          expr("CAST(n_found * 100 div n_true AS INT)"))
-        .orderBy("a_id")
+      Lsh.recall(tru, Lsh.bandedPairs(keyed, "doc_id"))
     }),
 
     // G2c: SimHash near-dup — 64-bit fingerprints from token hashes, banded

@@ -2,6 +2,8 @@ package graft.operators
 
 import graft.{QueryModule, Tables}
 import graft.functions.VecSumAgg
+import graft.sources.{Ann, IvfIndex, IvfPqIndex, Lsh}
+import graft.sources.Ann.{dotd, queryVec, round6, topCells, vd}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
@@ -18,10 +20,6 @@ import org.apache.spark.sql.types.DecimalType
   * even shuffle).
   */
 object VectorQueries extends QueryModule {
-
-  /** embedding float[] → double[] (all math in double; float formatting
-    * diverges between engines). */
-  private def vd = expr("transform(embedding, x -> CAST(x AS DOUBLE))")
 
   /** Sequential left-fold dot product — index order fixed, so the double
     * result is bit-identical across engines evaluating the same order. */
@@ -40,36 +38,6 @@ object VectorQueries extends QueryModule {
     }
     (0 until 16).map(i => (0 until 64).map(j => sign(j, i))
       .mkString("array(", ", ", ")")).mkString("array(", ", ", ")")
-  }
-
-  private def dotd(x: Array[Double], y: Array[Double]): Double = {
-    var acc = 0.0; var i = 0
-    while (i < x.length) { acc += x(i) * y(i); i += 1 }
-    acc
-  }
-
-  /** HALF_UP 6dp — what Spark's round() does, so kernel output matches the
-    * declarative form (and the DuckDB oracle) bit-for-bit. */
-  private def round6(x: Double): Double =
-    java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-
-  /** Query vector lookup shared by the ANN serving family: vec 0's
-    * embedding as driver doubles (one row — metadata scale). */
-  private def queryVec(t: Tables): Array[Double] =
-    t.embeddings.filter(col("vec_id") === 0).select(col("embedding"))
-      .head().getSeq[Float](0).map(_.toDouble).toArray
-
-  /** Driver-side probe selection shared by every persisted-index serve:
-    * rank cells on the HALF_UP-6dp-ROUNDED cosine with cell-id ties low —
-    * the exact ordering every oracle replays — and keep the top p. ONE
-    * definition so the serving family cannot drift from its oracles. */
-  private def topCells(cents: Seq[(Int, Array[Double])],
-      query: Array[Double], p: Int): Seq[Int] = {
-    val qn = math.sqrt(dotd(query, query))
-    cents.map { case (cell, c) =>
-      (cell, BigDecimal(dotd(query, c) / (qn * math.sqrt(dotd(c, c))))
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP))
-    }.sortBy { case (cell, sim) => (-sim, cell) }.take(p).map(_._1)
   }
 
   /** EXACT k-NN (k=5) with no driver collect and no full-set broadcast — the
@@ -358,13 +326,6 @@ object VectorQueries extends QueryModule {
       val t = Tables(s, dir)
       val planes = lshPlanes(4, 64)
       val bcPlanes = s.sparkContext.broadcast(planes.toArray)
-      def dotd(x: Array[Double], y: Array[Double]): Double = {
-        var acc = 0.0; var i = 0
-        while (i < x.length) { acc += x(i) * y(i); i += 1 }
-        acc
-      }
-      def round6(x: Double): Double =
-        java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
       t.embeddings.select(col("vec_id"), col("embedding")).as[(Long, Seq[Float])]
         .map { case (id, vf) =>
           val v = vf.map(_.toDouble).toArray
@@ -444,49 +405,37 @@ object VectorQueries extends QueryModule {
     // batch, so like g68's anchor batch it must not scale with the pool;
     // a %-of-pool rule makes the scoring quadratic), the overlap between the IVF
     // 2-probe top-10 (g4b's index shape) and the exact top-10 (g4's
-    // brute-force shape), per probe, as integers. Both sides rank on the
-    // 6dp-rounded cosine with vec_id tiebreak (g4's engine-stable cut) and
-    // the codebook is the PERSISTED LEARNED one (IvfIndex's deterministic
-    // Lloyd training — bit-replayable, the g40 discipline), so the whole
-    // computation — training, assignment, probe selection, both top-k's,
-    // the intersection — replays in SQL. Plan shape: codebook is a k×d
+    // brute-force shape), per probe, as integers. Both sides cut by the
+    // sources/Ann contract and the codebook is the PERSISTED LEARNED one
+    // (IvfIndex's deterministic Lloyd training — bit-replayable, the g40
+    // discipline), so the whole computation — training, assignment, probe
+    // selection, both top-k's, the intersection — replays in SQL. Plan
+    // shape: codebook is a k×d
     // driver literal (never the corpus), probes broadcast onto ONE streamed
     // scan of the pool scored by the fused codegen cosine, per-probe top-k
     // as a window — the same shapes g4/g4b run at 100 TB.
     "g69_ann_recall" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
       val t = Tables(s, dir)
       // grade THE index a query would actually hit: the persisted learned
       // IVF (sources/IvfIndex — KMeans cells, fingerprint-cached build,
       // shared with g71's serve path)
       val idx = Tables.scratch("ivfidx", dir)
-      graft.sources.IvfIndex.write(t.embeddings, idx)
-      val cents = graft.sources.IvfIndex.centroids(s, idx)
-        .map { case (cell, c) => (cell, c.toSeq) }.toDF("clabel", "cv")
-      val post = graft.sources.IvfIndex.postings(s, idx)
+      IvfIndex.write(t.embeddings, idx)
+      val post = IvfIndex.postings(s, idx)
         .select(col("vec_id"), col("cell"), vd.as("v"))
       val probes = post.filter(col("vec_id") < 50)
         .select(col("vec_id").as("q_id"), col("v").as("qv"))
-      // probe → its 2 nearest cells, ranked on the rounded centroid cosine
-      val probed = probes.crossJoin(broadcast(cents))
-        .select(col("q_id").as("pq_id"), col("clabel"),
-          round(expr("cosine_sim(qv, cv)"), 6).as("sim"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("pq_id").orderBy(col("sim").desc, col("clabel"))))
-        .filter(col("rn") <= 2).select(col("pq_id"), col("clabel"))
+      val probed = Ann.probeCells(probes, Ann.centroidFrame(s, idx), 2)
+        .select(col("q_id").as("pq_id"), col("clabel"))
       val scored = post
         .select(col("vec_id").as("b_id"), col("cell").as("b_cell"), col("v").as("bv"))
         .join(broadcast(probes), col("q_id") =!= col("b_id"))
         .select(col("q_id"), col("b_id"), col("b_cell"),
           round(expr("cosine_sim(qv, bv)"), 6).as("cos"))
-      val wk = Window.partitionBy("q_id").orderBy(col("cos").desc, col("b_id"))
-      val exact = scored.withColumn("rn", row_number().over(wk))
-        .filter(col("rn") <= 10).select("q_id", "b_id")
-      val approx = scored.join(broadcast(probed),
-          col("q_id") === col("pq_id") && col("b_cell") === col("clabel"))
-        .withColumn("rn", row_number().over(wk))
-        .filter(col("rn") <= 10).select("q_id", "b_id")
+      val exact = Ann.topKPerQuery(scored, "cos", "b_id", 10).select("q_id", "b_id")
+      val approx = Ann.topKPerQuery(scored.join(broadcast(probed),
+          col("q_id") === col("pq_id") && col("b_cell") === col("clabel")),
+        "cos", "b_id", 10).select("q_id", "b_id")
       val hits = exact.join(approx, Seq("q_id", "b_id"))
         .groupBy("q_id").agg(count(lit(1)).as("hits"))
       probes.select(col("q_id"))
@@ -511,21 +460,12 @@ object VectorQueries extends QueryModule {
     // iterations, reassigns every vector, and replays probe selection and
     // the top-10 cut exactly.
     "g71_ann_index_serve" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
       val t = Tables(s, dir)
       val idx = Tables.scratch("ivfidx", dir)
-      graft.sources.IvfIndex.write(t.embeddings, idx)
+      IvfIndex.write(t.embeddings, idx)
       val query = queryVec(t)
-      val probes = topCells(graft.sources.IvfIndex.centroids(s, idx), query, 2)
-      graft.sources.IvfIndex.postings(s, idx)
-        .filter(col("cell").isin(probes.map(Integer.valueOf): _*) &&
-          col("vec_id") =!= 0)
-        .withColumn("qv", typedLit(query.toSeq))
-        .select(col("vec_id"), col("label"),
-          round(expr("cosine_sim(transform(embedding, x -> CAST(x AS DOUBLE)), qv)"), 6).as("cos"))
-        .orderBy(col("cos").desc, col("vec_id").asc)
-        .limit(10)
+      Ann.ivfServe(IvfIndex.postings(s, idx), query,
+        topCells(IvfIndex.centroids(s, idx), query, 2), 10)
     }),
 
     // G73: ANN served from the PERSISTED IVF-PQ index (sources/IvfPqIndex)
@@ -533,9 +473,8 @@ object VectorQueries extends QueryModule {
     // pruned inverted-list read with g55's product quantization, and unlike
     // the in-query g55 FULLY ORACLE-BACKED: coarse cells and all four
     // subspace codebooks come from deterministic Lloyd (bit-replayable),
-    // every persisted number is 6dp-rounded, the ADC lookup table is an
-    // ordered driver-side fold, and the two cuts (ADC top-50 shortlist,
-    // exact top-10 re-rank) order on rounded values with vec_id ties — so
+    // every persisted number is 6dp-rounded, and the two cuts (ADC top-50
+    // shortlist, exact top-10 re-rank) follow the sources/Ann contract — so
     // DuckDB unrolls the 5+4×3 training iterations, re-encodes the corpus,
     // and replays probe selection, ADC scoring, and both cuts exactly.
     // Plan shape at 100 TB: k×64 + 4×16×16 driver doubles; ONE scan of the
@@ -543,43 +482,12 @@ object VectorQueries extends QueryModule {
     // lookups + 3 adds per row, no vector math; 50 raw vectors touched for
     // the exact re-rank.
     "g73_ann_ivfpq_serve" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
       val t = Tables(s, dir)
       val idx = Tables.scratch("ivfpq", dir)
-      graft.sources.IvfPqIndex.write(t.embeddings, idx)
+      IvfPqIndex.write(t.embeddings, idx)
       val query = queryVec(t)
-      val probes = topCells(graft.sources.IvfPqIndex.centroids(s, idx), query, 2)
-      // ADC lookup table: exact subspace sq-L2 query↔rounded-centroid,
-      // driver-side ordered fold (16 terms ascending — the oracle's
-      // list_reduce order)
-      val cbs = graft.sources.IvfPqIndex.codebooks(s, idx)
-      val lut = cbs.zipWithIndex.map { case (cb, m) =>
-        val q = query.slice(m * 16, m * 16 + 16)
-        cb.toIndexedSeq.map { c =>
-          var acc = 0.0; var i = 0
-          while (i < 16) { val d = q(i) - c(i); acc += d * d; i += 1 }
-          acc
-        }
-      }.toIndexedSeq
-      val lutCol = typedLit(lut)
-      val adist = (0 until 4).map(m =>
-        element_at(element_at(lutCol, m + 1), col(s"c$m") + 1)).reduce(_ + _)
-      val qv = typedLit(query.toIndexedSeq)
-      graft.sources.IvfPqIndex.postings(s, idx)
-        .filter(col("cell").isin(probes.map(Integer.valueOf): _*) &&
-          col("vec_id") =!= 0)
-        .select(col("vec_id"), col("label"), col("embedding"),
-          round(adist, 6).as("adist"))
-        .orderBy(col("adist").asc, col("vec_id").asc)
-        .limit(50)
-        .withColumn("qv", qv)
-        .withColumn("dist", round(expr(
-          "aggregate(zip_with(transform(embedding, x -> CAST(x AS DOUBLE)), qv, " +
-            "(a, b) -> (a - b) * (a - b)), 0D, (s, v) -> s + v)"), 6))
-        .select(col("vec_id"), col("label"), col("adist"), col("dist"))
-        .orderBy(col("dist").asc, col("vec_id").asc)
-        .limit(10)
+      Ann.pqServe(IvfPqIndex.postings(s, idx), query,
+        topCells(IvfIndex.centroids(s, idx), query, 2), IvfPqIndex.codebooks(s, idx))
     }),
 
     // G81: PQ INDEX APPEND — FAISS's `add()` for the deployable artifact:
@@ -594,44 +502,15 @@ object VectorQueries extends QueryModule {
     // base AND delta against the rounded codebooks, and replays probe
     // selection, ADC, and both cuts bit-for-bit.
     "g81_pq_index_append" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
       val t = Tables(s, dir)
       val idx = Tables.scratch("pqseg", dir)
-      graft.sources.IvfPqIndex.write(
-        t.embeddings.filter(col("vec_id") % 10 =!= 9), idx)
-      graft.sources.IvfPqIndex.appendSegment(
+      IvfPqIndex.write(t.embeddings.filter(col("vec_id") % 10 =!= 9), idx)
+      IvfPqIndex.appendSegment(
         t.embeddings.filter(col("vec_id") % 10 === 9), idx, "d1")
       val query = queryVec(t)
-      val probes = topCells(graft.sources.IvfPqIndex.centroids(s, idx), query, 2)
-      val cbs = graft.sources.IvfPqIndex.codebooks(s, idx)
-      val lut = cbs.zipWithIndex.map { case (cb, m) =>
-        val q = query.slice(m * 16, m * 16 + 16)
-        cb.toIndexedSeq.map { c =>
-          var acc = 0.0; var i = 0
-          while (i < 16) { val d = q(i) - c(i); acc += d * d; i += 1 }
-          acc
-        }
-      }.toIndexedSeq
-      val lutCol = typedLit(lut)
-      val adist = (0 until 4).map(m =>
-        element_at(element_at(lutCol, m + 1), col(s"c$m") + 1)).reduce(_ + _)
-      val qv = typedLit(query.toIndexedSeq)
-      graft.sources.IvfPqIndex.postings(s, idx)
-        .unionByName(graft.sources.IvfPqIndex.segment(s, idx, "d1"))
-        .filter(col("cell").isin(probes.map(Integer.valueOf): _*) &&
-          col("vec_id") =!= 0)
-        .select(col("vec_id"), col("label"), col("embedding"),
-          round(adist, 6).as("adist"))
-        .orderBy(col("adist").asc, col("vec_id").asc)
-        .limit(50)
-        .withColumn("qv", qv)
-        .withColumn("dist", round(expr(
-          "aggregate(zip_with(transform(embedding, x -> CAST(x AS DOUBLE)), qv, " +
-            "(a, b) -> (a - b) * (a - b)), 0D, (s, v) -> s + v)"), 6))
-        .select(col("vec_id"), col("label"), col("adist"), col("dist"))
-        .orderBy(col("dist").asc, col("vec_id").asc)
-        .limit(10)
+      Ann.pqServe(
+        IvfPqIndex.postings(s, idx).unionByName(IvfIndex.segment(s, idx, "d1")),
+        query, topCells(IvfIndex.centroids(s, idx), query, 2), IvfPqIndex.codebooks(s, idx))
     }),
 
     // G75: FILTERED ANN — top-k under a metadata predicate, the serving
@@ -648,21 +527,12 @@ object VectorQueries extends QueryModule {
     // Plan shape at 100 TB: identical to g71 plus one pushed predicate —
     // filtered serving costs LESS than unfiltered, never more.
     "g75_ann_filtered" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
       val t = Tables(s, dir)
       val idx = Tables.scratch("ivfidx", dir)
-      graft.sources.IvfIndex.write(t.embeddings, idx)
+      IvfIndex.write(t.embeddings, idx)
       val query = queryVec(t)
-      val probes = topCells(graft.sources.IvfIndex.centroids(s, idx), query, 2)
-      graft.sources.IvfIndex.postings(s, idx)
-        .filter(col("cell").isin(probes.map(Integer.valueOf): _*) &&
-          col("label") % 3 === 1 && col("vec_id") =!= 0)
-        .withColumn("qv", typedLit(query.toSeq))
-        .select(col("vec_id"), col("label"),
-          round(expr("cosine_sim(transform(embedding, x -> CAST(x AS DOUBLE)), qv)"), 6).as("cos"))
-        .orderBy(col("cos").desc, col("vec_id").asc)
-        .limit(10)
+      Ann.ivfServe(IvfIndex.postings(s, idx).filter(col("label") % 3 === 1),
+        query, topCells(IvfIndex.centroids(s, idx), query, 2), 10)
     }),
 
     // G76: INCREMENTAL INDEX UPDATE — the segment discipline: a 10% delta
@@ -679,24 +549,15 @@ object VectorQueries extends QueryModule {
     // the rounded codebook, unions, and replays probe + top-10. The ANN
     // twin of i23's pinned-index streaming dedup.
     "g76_ann_index_append" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
       val t = Tables(s, dir)
       val idx = Tables.scratch("ivfseg", dir)
-      graft.sources.IvfIndex.write(t.embeddings.filter(col("vec_id") % 10 =!= 9), idx)
-      graft.sources.IvfIndex.appendSegment(
+      IvfIndex.write(t.embeddings.filter(col("vec_id") % 10 =!= 9), idx)
+      IvfIndex.appendSegment(
         t.embeddings.filter(col("vec_id") % 10 === 9), idx, "d1")
       val query = queryVec(t)
-      val probes = topCells(graft.sources.IvfIndex.centroids(s, idx), query, 2)
-      graft.sources.IvfIndex.postings(s, idx)
-        .unionByName(graft.sources.IvfIndex.segment(s, idx, "d1"))
-        .filter(col("cell").isin(probes.map(Integer.valueOf): _*) &&
-          col("vec_id") =!= 0)
-        .withColumn("qv", typedLit(query.toSeq))
-        .select(col("vec_id"), col("label"),
-          round(expr("cosine_sim(transform(embedding, x -> CAST(x AS DOUBLE)), qv)"), 6).as("cos"))
-        .orderBy(col("cos").desc, col("vec_id").asc)
-        .limit(10)
+      Ann.ivfServe(
+        IvfIndex.postings(s, idx).unionByName(IvfIndex.segment(s, idx, "d1")),
+        query, topCells(IvfIndex.centroids(s, idx), query, 2), 10)
     }),
 
     // G78: INDEX COMPACTION — the lifecycle close of g76's segment append
@@ -710,25 +571,16 @@ object VectorQueries extends QueryModule {
     // base∪delta answer — same oracle as g76 (VectorSpec additionally pins
     // the pointer flip, the dropped segment, and single-scan serving).
     "g78_ann_index_compact" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
       val t = Tables(s, dir)
       val idx = Tables.scratch("ivfcmp", dir)
-      graft.sources.IvfIndex.write(t.embeddings.filter(col("vec_id") % 10 =!= 9), idx)
-      graft.sources.IvfIndex.appendSegment(
+      IvfIndex.write(t.embeddings.filter(col("vec_id") % 10 =!= 9), idx)
+      IvfIndex.appendSegment(
         t.embeddings.filter(col("vec_id") % 10 === 9), idx, "d1")
-      graft.sources.IvfIndex.compact(s, idx, Seq("d1"))
+      IvfIndex.compact(s, idx, Seq("d1"))
       val query = queryVec(t)
-      val probes = topCells(graft.sources.IvfIndex.centroids(s, idx), query, 2)
       // ONE pruned scan again — the whole point of compacting
-      graft.sources.IvfIndex.postings(s, idx)
-        .filter(col("cell").isin(probes.map(Integer.valueOf): _*) &&
-          col("vec_id") =!= 0)
-        .withColumn("qv", typedLit(query.toSeq))
-        .select(col("vec_id"), col("label"),
-          round(expr("cosine_sim(transform(embedding, x -> CAST(x AS DOUBLE)), qv)"), 6).as("cos"))
-        .orderBy(col("cos").desc, col("vec_id").asc)
-        .limit(10)
+      Ann.ivfServe(IvfIndex.postings(s, idx), query,
+        topCells(IvfIndex.centroids(s, idx), query, 2), 10)
     }),
 
     // G79: PROBE SWEEP — the recall/latency tuning curve a deployment reads
@@ -745,26 +597,13 @@ object VectorQueries extends QueryModule {
       import spark.implicits._
       val t = Tables(s, dir)
       val idx = Tables.scratch("ivfidx", dir)
-      graft.sources.IvfIndex.write(t.embeddings, idx)
+      IvfIndex.write(t.embeddings, idx)
       val query = queryVec(t)
-      val ranked = topCells(graft.sources.IvfIndex.centroids(s, idx), query,
-        graft.sources.IvfIndex.cellsK)
-      val qv = typedLit(query.toSeq)
-      val scored = t.embeddings.filter(col("vec_id") =!= 0)
-        .withColumn("qv", qv)
-        .select(col("vec_id"),
-          round(expr("cosine_sim(transform(embedding, x -> CAST(x AS DOUBLE)), qv)"), 6).as("cos"))
-      val exact = scored.orderBy(col("cos").desc, col("vec_id").asc)
-        .limit(10).select("vec_id")
+      val ranked = topCells(IvfIndex.centroids(s, idx), query, IvfIndex.cellsK)
+      val exact = Ann.exactTopK(t.embeddings.filter(col("vec_id") =!= 0), query, 10)
+        .select("vec_id")
       val legs = (1 to 4).map { p =>
-        graft.sources.IvfIndex.postings(s, idx)
-          .filter(col("cell").isin(ranked.take(p).map(Integer.valueOf): _*) &&
-            col("vec_id") =!= 0)
-          .withColumn("qv", qv)
-          .select(col("vec_id"),
-            round(expr("cosine_sim(transform(embedding, x -> CAST(x AS DOUBLE)), qv)"), 6).as("cos"))
-          .orderBy(col("cos").desc, col("vec_id").asc)
-          .limit(10)
+        Ann.ivfServe(IvfIndex.postings(s, idx), query, ranked.take(p), 10)
           .select(lit(p).as("probes"), col("vec_id"))
       }
       // left-join from the full probe range (the g69 pattern) so a probe
@@ -803,8 +642,7 @@ object VectorQueries extends QueryModule {
         .select(col("vec_id"), col("embedding")).as[(Long, Seq[Float])]
         .collect().sortBy(_._1).map(_._2.map(_.toDouble).toSeq)
       require(refs.length == 32, s"need vec_ids 1..32 as references")
-      val dv = expr("transform(embedding, x -> CAST(x AS DOUBLE))")
-      val base = t.embeddings.select(col("vec_id"), dv.as("v"))
+      val base = t.embeddings.select(col("vec_id"), vd.as("v"))
       val bits = (0 until 16).map { j =>
         (round(expr(s"cosine_sim(v, ref_a_$j)"), 6) >
           round(expr(s"cosine_sim(v, ref_b_$j)"), 6)).cast("int").as(s"bit_$j")
@@ -818,13 +656,6 @@ object VectorQueries extends QueryModule {
       }
       val keyed = withRefs.select(col("vec_id") +: bits: _*)
         .select(col("vec_id"), posexplode(array(keyExprs: _*)).as(Seq("band", "bkey")))
-      val n = s.conf.get("spark.sql.shuffle.partitions", "200").toInt
-      val cand = keyed.repartition(n, col("band"), col("bkey"))
-        .join(keyed.select(col("vec_id").as("v_id"), col("band").as("band_b"),
-            col("bkey").as("bkey_b")).repartition(n, col("band_b"), col("bkey_b")),
-          col("band") === col("band_b") && col("bkey") === col("bkey_b") &&
-            col("vec_id") < col("v_id"))
-        .select(col("vec_id").as("u"), col("v_id").as("v")).distinct()
       val anchors = base.filter(col("vec_id") < 50)
         .select(col("vec_id").as("a_id"), col("v").as("av"))
       val tru = base.select(col("vec_id").as("b_id"), col("v").as("bv"))
@@ -832,15 +663,7 @@ object VectorQueries extends QueryModule {
         .filter(round(expr("cosine_sim(av, bv)"), 6) >= 0.45)
         .select(col("a_id"), least(col("a_id"), col("b_id")).as("u"),
           greatest(col("a_id"), col("b_id")).as("v"))
-      val fnd = tru.join(cand, Seq("u", "v"), "left_semi")
-      tru.groupBy(col("a_id")).agg(count(lit(1)).as("n_true"))
-        .join(fnd.groupBy(col("a_id")).agg(count(lit(1)).as("n_found")),
-          Seq("a_id"), "left")
-        .select(col("a_id"), col("n_true"),
-          coalesce(col("n_found"), lit(0L)).as("n_found"))
-        .withColumn("recall_pct",
-          expr("CAST(n_found * 100 div n_true AS INT)"))
-        .orderBy("a_id")
+      Lsh.recall(tru, Lsh.bandedPairs(keyed, "vec_id"))
     }),
 
     // G80: TOMBSTONE DELETE — the index-CRUD verb g71/g76/g78 leave open
@@ -853,25 +676,16 @@ object VectorQueries extends QueryModule {
     // compaction as the physical fold. Deleted vectors must be unfindable:
     // the oracle serves the probed cells with the tombstone set excluded.
     "g80_ann_index_delete" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
       val t = Tables(s, dir)
       val idx = Tables.scratch("ivfdel", dir)
-      graft.sources.IvfIndex.write(t.embeddings, idx)
-      graft.sources.IvfIndex.delete(
+      IvfIndex.write(t.embeddings, idx)
+      IvfIndex.delete(
         t.embeddings.filter(col("vec_id") % 101 === 7).select(col("vec_id")), idx)
       val query = queryVec(t)
-      val probes = topCells(graft.sources.IvfIndex.centroids(s, idx), query, 2)
-      graft.sources.IvfIndex.postings(s, idx)
-        .filter(col("cell").isin(probes.map(Integer.valueOf): _*) &&
-          col("vec_id") =!= 0)
-        .join(broadcast(graft.sources.IvfIndex.tombstones(s, idx)),
-          col("vec_id") === col("__dead_id"), "left_anti")
-        .withColumn("qv", typedLit(query.toSeq))
-        .select(col("vec_id"), col("label"),
-          round(expr("cosine_sim(transform(embedding, x -> CAST(x AS DOUBLE)), qv)"), 6).as("cos"))
-        .orderBy(col("cos").desc, col("vec_id").asc)
-        .limit(10)
+      Ann.ivfServe(
+        IvfIndex.postings(s, idx).join(broadcast(IvfIndex.tombstones(s, idx)),
+          col("vec_id") === col("__dead_id"), "left_anti"),
+        query, topCells(IvfIndex.centroids(s, idx), query, 2), 10)
     }),
 
     // G77: MULTI-VECTOR LATE INTERACTION (ColBERT-style MaxSim) — the
@@ -888,14 +702,10 @@ object VectorQueries extends QueryModule {
     // fused 16-dim kernels, no shuffle, no explode — n×16 FLOPs, not n×16
     // rows), then the global top-10.
     "g77_colbert_maxsim" -> ((s, dir) => {
-      val spark = s
-      import spark.implicits._
       val t = Tables(s, dir)
-      val query = t.embeddings.filter(col("vec_id") === 0)
-        .select(col("embedding")).as[Seq[Float]].head().map(_.toDouble).toArray
+      val query = queryVec(t)
       val base = (0 until 4).foldLeft(
-        t.embeddings.filter(col("vec_id") =!= 0)
-          .withColumn("dv", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))) {
+        t.embeddings.filter(col("vec_id") =!= 0).withColumn("dv", vd)) {
         case (df, i) =>
           df.withColumn(s"q$i", typedLit(query.slice(i * 16, i * 16 + 16).toSeq))
       }
@@ -928,15 +738,6 @@ object VectorQueries extends QueryModule {
       val spark = s
       import spark.implicits._
       val t = Tables(s, dir)
-      def dotd(x: Array[Double], y: Array[Double]): Double = {
-        var acc = 0.0; var i = 0
-        while (i < x.length) { acc += x(i) * y(i); i += 1 }
-        acc
-      }
-      // same fused single-pass accumulation order as the CosineSim codegen,
-      // so driver-side probe selection and executor-side assignment agree
-      def cos(a: Array[Double], b: Array[Double]): Double =
-        dotd(a, b) / (math.sqrt(dotd(a, a)) * math.sqrt(dotd(b, b)))
       // codebook: mean vector per label (any k-means-style codebook works;
       // the label field gives a deterministic one). Built DISTRIBUTED with
       // the same two-phase partial-agg plan as g6 — only the k×dim codebook
@@ -955,13 +756,8 @@ object VectorQueries extends QueryModule {
             cells.foreach { case (_, pos, v) => c(pos) = v }
             (l, c)
           }
-      val query = t.embeddings.filter(col("vec_id") === 0)
-        .select(col("embedding")).as[Seq[Float]].head().map(_.toDouble).toArray
-      val probed = codebook
-        .map { case (l, c) =>
-          (l, BigDecimal(cos(query, c)).setScale(6, BigDecimal.RoundingMode.HALF_UP))
-        }
-        .sortBy { case (l, sim) => (-sim, l) }.take(2).map(_._1)
+      val query = queryVec(t)
+      val probed = topCells(codebook, query, 2)
       // one typed literal column per centroid + the query vector — exact
       // doubles (no string round-trip), all folded into the scan projection
       val withSims = codebook.zipWithIndex
@@ -1016,13 +812,6 @@ object VectorQueries extends QueryModule {
       val planesPerBand = 2
       val planes = lshPlanes(nBands * planesPerBand, 64)
       val bcPlanes = s.sparkContext.broadcast(planes.toArray)
-      def dotd(x: Array[Double], y: Array[Double]): Double = {
-        var acc = 0.0; var i = 0
-        while (i < x.length) { acc += x(i) * y(i); i += 1 }
-        acc
-      }
-      def round6(x: Double): Double =
-        java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
       t.embeddings.select(col("vec_id"), col("embedding")).as[(Long, Seq[Float])]
         .flatMap { case (id, vf) =>
           val v = vf.map(_.toDouble).toArray
@@ -1480,31 +1269,8 @@ object VectorQueries extends QueryModule {
       val codes = pqSubCols.zip(codebooks).map { case (sub, cb) =>
         graft.plans.KMeans.assignCols(sub, cb)._1
       }
-      // ADC lookup table: exact subspace distances query↔centroid, driver-side
-      val lut = codebooks.zipWithIndex.map { case (cb, j) =>
-        val q = query.slice(j * 16, (j + 1) * 16)
-        cb.map { c =>
-          var acc = 0.0; var i = 0
-          while (i < 16) { val d = q(i) - c(i); acc += d * d; i += 1 }
-          acc
-        }.toIndexedSeq
-      }.toIndexedSeq
-      val lutCol = typedLit(lut)
-      val adist = codes.zipWithIndex.map { case (code, j) =>
-        element_at(element_at(lutCol, j + 1), code + 1)
-      }.reduce(_ + _)
-      val qv = typedLit(query.toIndexedSeq)
-      val exactDist = expr(
-        "aggregate(zip_with(x, qv, (a, b) -> (a - b) * (a - b)), 0D, (s, v) -> s + v)")
-      val out = base.filter(col("vec_id") =!= 0)
-        .select(col("vec_id"), col("label"), col("x"), round(adist, 6).as("adist"))
-        .orderBy(col("adist").asc, col("vec_id").asc)
-        .limit(50)
-        .withColumn("qv", qv)
-        .withColumn("dist", round(exactDist, 6))
-        .select(col("vec_id"), col("label"), col("adist"), col("dist"))
-        .orderBy(col("dist").asc, col("vec_id").asc)
-        .limit(10)
+      val out = Ann.adcRerank(base.filter(col("vec_id") =!= 0), "x", codes,
+          codebooks, query)
         .localCheckpoint()
       base.unpersist()
       out
@@ -1585,11 +1351,7 @@ object VectorQueries extends QueryModule {
     val codebooks = graft.plans.KMeans.fitMany(
       base.select((col("vec_id") +: pqSubCols.map(col)): _*),
       "vec_id", pqSubCols, 16, g55PqIters)
-    val spark = t.spark
-    import spark.implicits._
-    val query = t.embeddings.filter(col("vec_id") === 0)
-      .select(vd).as[Seq[Double]].head().toArray
-    (codebooks, query)
+    (codebooks, queryVec(t))
   }
 
   /** Deterministic pseudo-random unit hyperplanes (splitmix64 from a fixed

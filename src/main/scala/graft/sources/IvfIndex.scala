@@ -60,29 +60,41 @@ object IvfIndex {
     // a rebuild starts a fresh index generation from an empty root:
     // segments, tombstones, compactions and the postings pointer reset
     Tables.staged(path, fingerprint) {
-      val vd = expr("transform(embedding, x -> CAST(x AS DOUBLE))")
-      val base = emb.select(col("vec_id"), col("label"), col("embedding"),
-        vd.as("__x"))
+      val base = withX(emb)
       // train the coarse quantizer: k cells, `iters` deterministic Lloyd
       // passes (each ONE distributed scan; the driver holds k×d doubles)
       val (cents, _) =
         graft.plans.KMeans.fit(base, "vec_id", "__x", dim, cellsK, lloydIters)
-      import spark.implicits._
-      cents.toSeq.zipWithIndex
-        .flatMap { case (c, cell) => c.toSeq.zipWithIndex.map { case (v, pos) =>
-          (cell, pos, java.math.BigDecimal.valueOf(v)
-            .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue())
-        } }
-        .toDF("cell", "pos", "c")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-      // postings: every vector under its LEARNED cell — the partitioned
-      // re-write whose directories are the inverted lists
+      writeCentroids(spark, cents, path)
+      // postings: every vector under its LEARNED cell
       val (cid, _) = graft.plans.KMeans.assignCols("__x", cents)
-      base.select(cid.as("cell"), col("vec_id"), col("label"), col("embedding"))
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$path/postings")
+      writeCells(base.select(cid.as("cell"), col("vec_id"), col("label"),
+        col("embedding")), s"$path/postings")
     }
     ()
   }
+
+  /** (vec_id, label, embedding) plus the double vector `__x` both index
+    * builds train and assign on. */
+  private[sources] def withX(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id"), col("label"), col("embedding"), Ann.vd.as("__x"))
+
+  /** Persist the coarse codebook as the flat rounded (cell, pos, c) table
+    * [[centroids]] reads. */
+  private[sources] def writeCentroids(spark: SparkSession,
+      cents: Array[Array[Double]], path: String): Unit = {
+    import spark.implicits._
+    cents.toSeq.zipWithIndex
+      .flatMap { case (c, cell) => c.toSeq.zipWithIndex.map { case (v, pos) =>
+        (cell, pos, Ann.round6(v)) } }
+      .toDF("cell", "pos", "c")
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
+  }
+
+  /** Write postings partitioned by `cell` — each directory is one inverted
+    * list, so a `cell` filter on the read prunes to the probed lists. */
+  private[sources] def writeCells(postings: DataFrame, dir: String): Unit =
+    postings.write.mode("overwrite").partitionBy("cell").parquet(dir)
 
   /** COMPACTION — fold live segments back into the base (the index twin of
     * m9's file compaction): the merged postings (base ∪ segments, MINUS any
@@ -127,8 +139,7 @@ object IvfIndex {
           .filter(_.startsWith("postings_g"))
           .map(_.stripPrefix("postings_g").toInt)
           .foldLeft(0)(math.max)
-        merged.write.mode("overwrite").partitionBy("cell")
-          .parquet(s"$path/postings_g$g")
+        writeCells(merged, s"$path/postings_g$g")
         Files.write(marker, s"postings_g$g".getBytes("UTF-8"))
         s"postings_g$g"
       }
@@ -173,19 +184,16 @@ object IvfIndex {
       // selection itself reads — a serving node never sees the raw
       // Lloyd-final doubles
       val cents = centroids(spark, path).map(_._2).toArray
-      val vd = expr("transform(embedding, x -> CAST(x AS DOUBLE))")
-      val base = delta.select(col("vec_id"), col("label"), col("embedding"),
-        vd.as("__x"))
       val (cid, _) = graft.plans.KMeans.assignCols("__x", cents)
-      base.select(cid.as("cell"), col("vec_id"), col("label"), col("embedding"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$path/segments/$name")
+      writeCells(withX(delta).select(cid.as("cell"), col("vec_id"), col("label"),
+        col("embedding")), s"$path/segments/$name")
       Files.write(segReady, fingerprint.getBytes("UTF-8"))
       ()
     }
   }
 
-  /** A segment's postings; filter on `cell` prunes exactly like the base. */
+  /** A segment's postings (of either index kind); filter on `cell` prunes
+    * exactly like the base. */
   def segment(spark: SparkSession, path: String, name: String): DataFrame =
     spark.read.parquet(s"$path/segments/$name")
 
@@ -224,8 +232,9 @@ object IvfIndex {
   val lloydIters = 5
   val dim = 64
 
-  /** Driver-side codebook from the persisted centroids: (cell, 64 rounded
-    * components in pos order). k×64 rows — metadata scale. */
+  /** Driver-side codebook from the persisted centroids (of either index
+    * kind): (cell, 64 rounded components in pos order). k×64 rows —
+    * metadata scale. */
   def centroids(spark: SparkSession, path: String): Seq[(Int, Array[Double])] =
     spark.read.parquet(s"$path/centroids")
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))

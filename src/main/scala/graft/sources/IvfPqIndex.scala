@@ -17,7 +17,9 @@ import org.apache.spark.sql.functions._
   * g73 a fully oracle-backed IVF-PQ, unlike the in-query rows-only g55.
   *
   * Layout under `path`:
-  *  - `centroids/`   — flat (cell, pos, c): k×64 rounded coarse means;
+  *  - `centroids/`   — flat (cell, pos, c): k×64 rounded coarse means, the
+  *    table [[IvfIndex]] writes, so [[IvfIndex.centroids]] reads it (and
+  *    [[IvfIndex.segment]] an appended segment);
   *  - `pqcodebooks/` — flat (m, cid, pos, c): 4×16×16 rounded subspace
   *    centroids (metadata scale — 1k doubles);
   *  - `postings/`    — (vec_id, label, embedding, c0..c3) PARTITIONED BY
@@ -32,13 +34,24 @@ import org.apache.spark.sql.functions._
   */
 object IvfPqIndex {
 
-  val cellsK = 8; val lloydIters = 5; val dim = 64
   val subs = 4; val subDim = 16; val pqK = 16; val pqIters = 3
 
-  /** Spark/DuckDB-portable HALF_UP 6dp rounding (what `round(c, 6)` does). */
-  private def round6(v: Double): Double =
-    java.math.BigDecimal.valueOf(v)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+  /** [[IvfIndex.withX]] plus the `subs` subvector slices `__s<m>`. */
+  private def withSubs(emb: DataFrame): DataFrame =
+    (0 until subs).foldLeft(IvfIndex.withX(emb)) { case (d, m) =>
+      d.withColumn(s"__s$m", expr(s"slice(__x, ${m * subDim + 1}, $subDim)"))
+    }
+
+  /** The coded postings row: learned cell, the raw columns, c0..c3. */
+  private def coded(base: DataFrame, coarse: Array[Array[Double]],
+      cbs: Seq[Array[Array[Double]]]): DataFrame = {
+    val cellCol = graft.plans.KMeans.assignCols("__x", coarse)._1
+    val codeCols = (0 until subs).map { m =>
+      graft.plans.KMeans.assignCols(s"__s$m", cbs(m))._1.as(s"c$m")
+    }
+    base.select(cellCol.as("cell") +: col("vec_id") +: col("label") +:
+      col("embedding") +: codeCols: _*)
+  }
 
   /** Build + persist (idempotent per content fingerprint). */
   def write(emb: DataFrame, path: String): Unit = {
@@ -46,38 +59,23 @@ object IvfPqIndex {
     import spark.implicits._
     // a rebuild starts a fresh index generation from an empty root
     Tables.staged(path, IvfIndex.contentFingerprint(emb, s"ivfpq:$path")) {
-      val vd = expr("transform(embedding, x -> CAST(x AS DOUBLE))")
-      val base = (0 until subs).foldLeft(
-        emb.select(col("vec_id"), col("label"), col("embedding"), vd.as("__x"))) {
-        case (d, m) =>
-          d.withColumn(s"__s$m", expr(s"slice(__x, ${m * subDim + 1}, $subDim)"))
-      }
-      val (cents, _) =
-        graft.plans.KMeans.fit(base, "vec_id", "__x", dim, cellsK, lloydIters)
+      val base = withSubs(emb)
+      val (cents, _) = graft.plans.KMeans.fit(base, "vec_id", "__x",
+        IvfIndex.dim, IvfIndex.cellsK, IvfIndex.lloydIters)
       // 4 independent subspace codebooks; persisted ROUNDED, and the encode
       // below uses the SAME rounded values — self-consistent and replayable
       val cbs = (0 until subs).map { m =>
         graft.plans.KMeans.fit(base.select(col("vec_id"), col(s"__s$m")),
-          "vec_id", s"__s$m", subDim, pqK, pqIters)._1.map(_.map(round6))
+          "vec_id", s"__s$m", subDim, pqK, pqIters)._1.map(_.map(Ann.round6))
       }
-      cents.toSeq.zipWithIndex
-        .flatMap { case (c, cell) => c.toSeq.zipWithIndex.map {
-          case (v, pos) => (cell, pos, round6(v)) } }
-        .toDF("cell", "pos", "c")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
+      IvfIndex.writeCentroids(spark, cents, path)
       cbs.zipWithIndex
         .flatMap { case (cb, m) => cb.toSeq.zipWithIndex.flatMap {
           case (c, cid) => c.toSeq.zipWithIndex.map {
             case (v, pos) => (m, cid, pos, v) } } }
         .toDF("m", "cid", "pos", "c")
         .coalesce(1).write.mode("overwrite").parquet(s"$path/pqcodebooks")
-      val cellCol = graft.plans.KMeans.assignCols("__x", cents)._1
-      val codeCols = (0 until subs).map { m =>
-        graft.plans.KMeans.assignCols(s"__s$m", cbs(m))._1.as(s"c$m")
-      }
-      base.select(cellCol.as("cell") +: col("vec_id") +: col("label") +:
-        col("embedding") +: codeCols: _*)
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$path/postings")
+      IvfIndex.writeCells(coded(base, cents, cbs), s"$path/postings")
     }
     ()
   }
@@ -95,40 +93,12 @@ object IvfPqIndex {
     val spark = delta.sparkSession
     Tables.staged(s"$path/segments/$name",
         IvfIndex.contentFingerprint(delta, s"ivfpqseg:$path:$name")) {
-      val coarse = centroids(spark, path).map(_._2).toArray
-      val cbs = codebooks(spark, path)
-      val vd = expr("transform(embedding, x -> CAST(x AS DOUBLE))")
-      val base = (0 until subs).foldLeft(
-        delta.select(col("vec_id"), col("label"), col("embedding"), vd.as("__x"))) {
-        case (d, m) =>
-          d.withColumn(s"__s$m", expr(s"slice(__x, ${m * subDim + 1}, $subDim)"))
-      }
-      val cellCol = graft.plans.KMeans.assignCols("__x", coarse)._1
-      val codeCols = (0 until subs).map { m =>
-        graft.plans.KMeans.assignCols(s"__s$m", cbs(m))._1.as(s"c$m")
-      }
-      base.select(cellCol.as("cell") +: col("vec_id") +: col("label") +:
-        col("embedding") +: codeCols: _*)
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$path/segments/$name")
+      val coarse = IvfIndex.centroids(spark, path).map(_._2).toArray
+      IvfIndex.writeCells(coded(withSubs(delta), coarse, codebooks(spark, path)),
+        s"$path/segments/$name")
     }
     ()
   }
-
-  /** A segment's coded postings; `cell` filters prune like the base. */
-  def segment(spark: SparkSession, path: String, name: String): DataFrame =
-    spark.read.parquet(s"$path/segments/$name")
-
-  /** Driver-side coarse codebook: (cell, 64 rounded components). */
-  def centroids(spark: SparkSession, path: String): Seq[(Int, Array[Double])] =
-    spark.read.parquet(s"$path/centroids")
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
-      .groupBy(_._1).toSeq.sortBy(_._1)
-      .map { case (cell, rows) =>
-        val c = new Array[Double](rows.map(_._2).max + 1)
-        rows.foreach { case (_, pos, v) => c(pos) = v }
-        (cell, c)
-      }
 
   /** Driver-side PQ codebooks: codebooks(m)(cid) = 16 rounded components. */
   def codebooks(spark: SparkSession, path: String): Seq[Array[Array[Double]]] =

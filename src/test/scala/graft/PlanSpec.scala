@@ -553,6 +553,36 @@ class PlanSpec extends AnyFunSuite {
       s"expected cell partition pruning in both union legs, found $pruned:\n$p")
   }
 
+  test("g78-g81: kernel-served IVF plans keep their cell-pruned postings scans and join shapes") {
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    object aqe extends AdaptiveSparkPlanHelper
+    // (query, cell-pruned postings scans, broadcast anti-joins) in the final
+    // plan: g78 serves from ONE compacted generation, g79 from one scan per
+    // probe leg, g80 anti-joins its broadcast tombstones, g81 prunes both
+    // the base and the segment under the union
+    Seq(("g78_ann_index_compact", 1, 0), ("g79_ann_probe_sweep", 4, 0),
+      ("g80_ann_index_delete", 1, 1), ("g81_pq_index_append", 2, 0)).foreach {
+      case (q, scans, antiJoins) =>
+        val df = SparkEntry.queries(q)(spark, sfDir)
+        df.collect()
+        val plan = df.queryExecution.executedPlan
+        val pruned = aqe.collect(plan) {
+          case s: FileSourceScanExec
+              if s.partitionFilters.exists(_.references.exists(_.name == "cell")) => s
+        }
+        assert(pruned.size == scans,
+          s"$q: expected $scans cell-pruned postings scans, found ${pruned.size}:\n$plan")
+        val anti = aqe.collect(plan) {
+          case j: BroadcastHashJoinExec if j.joinType == LeftAnti => j
+        }
+        assert(anti.size == antiJoins,
+          s"$q: expected $antiJoins broadcast anti-joins, found ${anti.size}:\n$plan")
+    }
+  }
+
   test("s8: LATERAL + per-row LIMIT decorrelates to a window group-limit, not a nested loop") {
     val p = finalPlan("s8_sql_lateral")
     assert(p.contains("WindowGroupLimit"), p)

@@ -1143,6 +1143,19 @@ class StreamingSpec extends AnyFunSuite {
     } finally graft.plans.GraftDmlRegistry.unregister(name)
   }
 
+  test("i24's window probe serves query 0 exactly g71's driver-probed top-10") {
+    import org.apache.spark.sql.functions.col
+    // two probe paths over one persisted index: i24 ranks cells per query
+    // in a SQL window, g71 on the driver (Ann.topCells) — same cut
+    val i24 = SparkEntry.queries("i24_stream_ann_serve")(spark, sfDir)
+      .filter(col("q_id") === 0).orderBy("rn").collect()
+      .map(r => (r.getAs[Long]("b_id"), r.getAs[Double]("cos"))).toSeq
+    val g71 = SparkEntry.queries("g71_ann_index_serve")(spark, sfDir).collect()
+      .map(r => (r.getAs[Long]("vec_id"), r.getAs[Double]("cos"))).toSeq
+    assert(g71.size == 10, s"g71 served ${g71.size} rows")
+    assert(i24 == g71, s"i24 q_id 0 diverged from g71:\n$i24\n$g71")
+  }
+
   test("i28 sharded ANN serving: disjoint shards, concurrent queries, i24-identical answer") {
     val sharded = SparkEntry.queries("i28_stream_ann_shard_serve")(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq

@@ -361,25 +361,25 @@ class VectorSpec extends AnyFunSuite {
     val base = t.embeddings.filter(col("vec_id") % 10 =!= 9)
     val delta = t.embeddings.filter(col("vec_id") % 10 === 9)
     graft.sources.IvfPqIndex.write(base, idx)
-    val coarseBefore = graft.sources.IvfPqIndex.centroids(spark, idx)
+    val coarseBefore = graft.sources.IvfIndex.centroids(spark, idx)
       .map { case (c, v) => (c, v.toSeq) }
     val cbsBefore = graft.sources.IvfPqIndex.codebooks(spark, idx)
       .map(_.map(_.toSeq).toSeq)
     graft.sources.IvfPqIndex.appendSegment(delta, idx, "d1")
-    assert(graft.sources.IvfPqIndex.centroids(spark, idx)
+    assert(graft.sources.IvfIndex.centroids(spark, idx)
       .map { case (c, v) => (c, v.toSeq) } == coarseBefore,
       "append retrained the coarse codebook")
     assert(graft.sources.IvfPqIndex.codebooks(spark, idx)
       .map(_.map(_.toSeq).toSeq) == cbsBefore,
       "append retrained a subspace codebook")
-    val seg = graft.sources.IvfPqIndex.segment(spark, idx, "d1")
+    val seg = graft.sources.IvfIndex.segment(spark, idx, "d1")
     assert(seg.count() == delta.count())
     // every segment row carries valid codes for all 4 subspaces
     assert(seg.filter((0 until 4).map(m =>
       col(s"c$m") < 0 || col(s"c$m") >= 16).reduce(_ || _)).count() == 0)
     // idempotent re-append
     graft.sources.IvfPqIndex.appendSegment(delta, idx, "d1")
-    assert(graft.sources.IvfPqIndex.segment(spark, idx, "d1").count() == delta.count())
+    assert(graft.sources.IvfIndex.segment(spark, idx, "d1").count() == delta.count())
   }
 
   test("g80: tombstone delete never rewrites postings and makes deleted ids unfindable") {

@@ -11,8 +11,9 @@ shift 2>/dev/null || true
 # identity and scoped conf (Tables.withConf) live in graft.Tables, SQL
 # function registration in graft.GraftExtensions, and the one conf write on
 # a caller's session — around a stream start — in StreamingQueries'
-# startStream. newSession() would bypass the conf owner. Fail fast when a
-# copy grows back elsewhere.
+# startStream. newSession() would bypass the conf owner. The vector
+# numerics and the serve cut (HALF_UP 6dp cosine, lower-id ties) live in
+# graft.sources.Ann. Fail fast when a copy grows back elsewhere.
 owned() { grep -rnE "$1" src/main --include='*.scala' | grep -vE "^src/main/scala/graft/($2):" || true; }
 strays="$(owned 'def rmrf\b|System\.identityHashCode' Tables.scala
   owned 'createOrReplaceTempFunction' GraftExtensions.scala
@@ -20,9 +21,11 @@ strays="$(owned 'def rmrf\b|System\.identityHashCode' Tables.scala
   awk '/ def startStream\(/ {h = 1} h && /^  }$/ {h = 0}
     !h && /conf\.(set|unset)\(/ {print FILENAME ":" FNR ":" $0}' \
     src/main/scala/graft/operators/StreamingQueries.scala
-  owned 'newSession\(\)' '')"
+  owned 'newSession\(\)' ''
+  owned 'def (dotd|round6|topCells|queryVec)\b|cosine_sim\(transform\(embedding' \
+    sources/Ann.scala)"
 if [ -n "$strays" ]; then
-  echo "check.sh: lifecycle code outside its owner:" >&2
+  echo "check.sh: code outside its owner:" >&2
   echo "$strays" >&2
   exit 1
 fi
