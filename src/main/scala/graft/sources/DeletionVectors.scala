@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.BitmapSketch
@@ -94,30 +94,14 @@ object DeletionVectors {
       .withColumn("n_deleted", coalesce(col("n_deleted"), lit(0L)))
       .withColumn("frac", col("n_deleted").cast("double") / col("n_rows"))
 
-  /** Files whose deleted fraction ≥ `threshold` — the rewrite list.
-    * Metadata-scale collect (file names only, never data). */
+  /** Files whose deleted fraction ≥ `threshold` — the rewrite list: the
+    * purge commits [[applyTo]] over these files through
+    * [[SnapshotTable.commitRewrite]], carrying the cold files over, so the
+    * DV table keeps serving the cold files' deletes (rewritten files miss
+    * the DV join and pass through clean). Metadata-scale collect (file
+    * names only, never data). */
   def purgeCandidates(table: DataFrame, dvs: DataFrame,
       threshold: Double): Seq[String] =
     stats(table, dvs).filter(col("frac") >= threshold)
       .select(col("file")).collect().map(_.getString(0)).toSeq.sorted
-
-  /** PURGE rewrite: apply the DVs to `hotFiles` only and write the
-    * survivors as new immutable files under `destDir` (typically
-    * `<root>/data/v<next>`). Returns the new files' NAMES for the caller's
-    * metadata-only [[SnapshotTable.commitFiles]] — the cold files carry
-    * over into the next manifest verbatim, so a purge commit moves zero
-    * cold bytes and the DV table keeps serving the cold files' deletes
-    * (rewritten files simply miss the DV join and pass through clean). */
-  def rewriteFiles(spark: SparkSession, hotFiles: Seq[String],
-      dvs: DataFrame, destDir: String): Seq[String] = {
-    // a purge with nothing over threshold is a no-op, not an error — the
-    // caller commits the carried-over manifest unchanged
-    if (hotFiles.isEmpty) return Seq.empty
-    applyTo(spark.read.parquet(hotFiles: _*), dvs)
-      .write.mode("overwrite").parquet(destDir)
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.list(java.nio.file.Paths.get(destDir))
-      .iterator().asScala.map(_.getFileName.toString)
-      .filter(_.endsWith(".parquet")).toSeq.sorted
-  }
 }

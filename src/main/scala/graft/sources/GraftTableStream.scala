@@ -430,9 +430,8 @@ private[sources] class GraftTableStreamSource(ctx: SQLContext, root: String,
         // startingVersion 0) would otherwise be force-read under the wrong
         // names and silently NULL-fill renamed columns
         delta.foreach { f =>
-          val gen = "data/v(\\d+)/".r.findFirstMatchIn(f).map(_.group(1).toLong)
-            .getOrElse(0L)
-          require(SnapshotTable.schemaAt(root, gen) == startSchemaGen,
+          require(SnapshotTable.schemaAt(root, SnapshotTable.entryGeneration(f)) ==
+              startSchemaGen,
             s"graft table stream: file $f of $root was written under a " +
               "different schema than the stream started with — a stream " +
               "cannot re-shape emitted rows; restart it (startingVersion) " +

@@ -372,7 +372,9 @@ class ExtensionsSpec extends AnyFunSuite {
       java.nio.file.Files.copy(w2.toPath,
         java.nio.file.Paths.get(landing, w2.getName))
       val staged = SnapshotTable.latestVersion(root).get + 1
-      SnapshotTable.writeCopiedSidecar(root, staged, Seq(w2.getName))
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(root, "_snapshots", s"v$staged.copied"),
+        w2.getName.getBytes("UTF-8"))
       val c4 = spark.sql(s"COPY INTO $name FROM '$landing'").head()
       assert(c4.getLong(1) == 1L && c4.getLong(2) == 6L,
         "a crashed (unswapped) load's sidecar permanently skipped its files")
@@ -1039,8 +1041,8 @@ class ExtensionsSpec extends AnyFunSuite {
         .write.parquet(landing)
       val f = new java.io.File(landing).listFiles()
         .filter(_.getName.endsWith(".parquet")).head.getName
-      SnapshotTable.writeCopiedSidecar(root,
-        SnapshotTable.latestVersion(root).get + 1, Seq(f))
+      java.nio.file.Files.write(java.nio.file.Paths.get(root, "_snapshots",
+        s"v${SnapshotTable.latestVersion(root).get + 1}.copied"), f.getBytes("UTF-8"))
       spark.sql(s"INSERT INTO $name VALUES (999, 9.9)").collect()
       assert(!SnapshotTable.copiedFiles(root).contains(f),
         "INSERT adopted the dead COPY's ledger — landing file lost")

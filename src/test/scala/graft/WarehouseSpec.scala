@@ -397,6 +397,74 @@ class WarehouseSpec extends AnyFunSuite {
     assert(SnapshotTable.prepare(Seq((9L, 9.0)).toDF("k", "v"), root) == 3L)
   }
 
+  test("snapshot table: orphan sweep reclaims sidecars of a writer that died before its manifest") {
+    val s = spark
+    import s.implicits._
+    import graft.sources.SnapshotTable
+    import java.nio.file.{Files => JF, Paths => JP}
+    val root = JF.createTempDirectory("graft_snap_orphan_meta").toString
+    SnapshotTable.commit(Seq((1L, 1.0)).toDF("k", "v"), root)
+    SnapshotTable.append(Seq((2L, 2.0)).toDF("k", "v"), root) // LATEST = 2
+    JF.write(JP.get(root, "_snapshots", "v3.meta"), "dead".getBytes("UTF-8"))
+    JF.write(JP.get(root, "_snapshots", "v3.sizes"), "".getBytes("UTF-8"))
+    val removed = SnapshotTable.removeOrphans(root)
+    assert(removed == Seq("_snapshots/v3.meta", "_snapshots/v3.sizes"), removed.toString)
+    assert(SnapshotTable.removeOrphans(root).isEmpty)
+    assert(SnapshotTable.read(s, root).count() == 2L)
+  }
+
+  test("snapshot table: no writer kind adopts a dead writer's sidecars") {
+    val s = spark
+    import s.implicits._
+    import graft.sources.{EvoField, SnapshotTable => ST}
+    import java.nio.file.{Files => JF, Paths => JP}
+    val base = Seq((1L, 1.0), (2L, 2.0))
+    val own = Seq((7L, 7.0), (8L, 8.0))
+    def frame(rows: Seq[(Long, Double)]) = rows.toDF("k", "v").coalesce(1)
+    val fields = Seq(EvoField(1, "k", "bigint"), EvoField(2, "v", "double"))
+    val src = JF.createTempDirectory("graft_snap_adopt_src").toString
+    ST.commit(frame(own), src)
+    // (writer, its own meta, its own schema, the rows its version holds);
+    // every writer runs on a table whose v1 holds `base`, except the clone,
+    // whose target has no commit yet
+    val writers: Seq[(String, String => Long, Option[String],
+        Option[Seq[EvoField]], Seq[(Long, Double)])] = Seq(
+      ("commit", r => ST.commit(frame(own), r, meta = "mine"), Some("mine"), None, own),
+      ("append", r => ST.append(frame(own), r), None, None, base ++ own),
+      ("commitFiles", r => ST.commitFiles(r, ST.manifestFiles(r, 1L)), None, None, base),
+      ("commitRewrite", r => ST.commitRewrite(frame(own), r, Nil), None, None, own),
+      ("commitEvo", r => ST.commitEvo(frame(own), r, fields), None, Some(fields), own),
+      ("appendEvo", r => ST.appendEvo(frame(own), r, fields), None, Some(fields), base ++ own),
+      ("commitSchemaChange", r => ST.commitSchemaChange(r, fields, "alter"),
+        Some("alter"), Some(fields), base),
+      ("commitPartitioned", r => ST.commitPartitioned(frame(own), r, Seq("k")),
+        Some("partspec:k"), None, own),
+      ("cloneFrom", r => ST.cloneFrom(src, r), None, None, own),
+      ("rollbackTo", r => ST.rollbackTo(r, 1L), Some("rollback:1"), None, base),
+      ("commitIfUnchanged", r => ST.commitIfUnchanged(frame(own), r, 1L),
+        None, None, own))
+    writers.foreach { case (kind, write, meta, schema, rows) =>
+      val root = JF.createTempDirectory(s"graft_snap_adopt_$kind").toString
+      if (kind != "cloneFrom") ST.commit(frame(base), root)
+      // a dead writer staged version n with every sidecar kind, never swapped
+      val n = ST.prepare(frame(Seq((99L, 99.0))), root, meta = "dead")
+      JF.write(JP.get(root, "_snapshots", s"v$n.schema"),
+        "1,zz,bigint\n2,yy,double".getBytes("UTF-8"))
+      JF.write(JP.get(root, "_snapshots", s"v$n.copied"), "dead.parquet".getBytes("UTF-8"))
+      assert(write(root) == n, kind)
+      assert(ST.versionMeta(root, n) == meta, kind)
+      assert(ST.schemaAt(root, n) == schema, kind)
+      assert(ST.copiedFiles(root).isEmpty, kind)
+      val read =
+        if (kind == "commitPartitioned") ST.partitionedGenerations(root).map {
+          case (_, _, fs, dir) => s.read.option("basePath", dir)
+            .parquet(fs.map(ST.resolveEntry(root, _)): _*).select("k", "v")
+        }.reduce(_ unionByName _)
+        else ST.readCurrent(s, root)
+      assert(read.as[(Long, Double)].collect().toSeq.sorted == rows, kind)
+    }
+  }
+
   test("snapshot table: commit metadata becomes visible atomically with the data") {
     val s = spark
     import s.implicits._
@@ -557,9 +625,8 @@ class WarehouseSpec extends AnyFunSuite {
       s"expected a strict hot subset, got ${hot.size} of ${allFiles.size}")
     val rel = (p: String) => new java.net.URI(p).getPath.stripPrefix(s"$root/")
     val cold = allFiles.filterNot(hot.toSet).map(rel)
-    val rewritten = DeletionVectors
-      .rewriteFiles(spark, hot, dvs, s"$root/data/v2").map(n => s"data/v2/$n")
-    val v2 = SnapshotTable.commitFiles(root, cold ++ rewritten)
+    val v2 = SnapshotTable.commitRewrite(
+      DeletionVectors.applyTo(spark.read.parquet(hot: _*), dvs), root, cold)
     assert(v2 == 2L)
     assert(keys(DeletionVectors.applyTo(SnapshotTable.read(spark, root), dvs)) == want,
       "post-purge view != plain filter")
