@@ -5,9 +5,10 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.classic.GraftSqlBridge
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** Sources (SURVEY.md §2 A): all fixture tables for one scale-factor dir.
@@ -183,21 +184,27 @@ object Tables {
     }
   }
 
-  /** In-session memo for CONTENT-FINGERPRINT jobs (r22, §1.2 don't recompute
-    * what cannot have changed): the persisted-index freshness checks
-    * (IvfIndex/IvfPqIndex `_ready`, the pair-index commit meta, g49's index
-    * fingerprint) each run a small distributed CRC aggregation over their
-    * source table PER INVOCATION — ~0.1-0.2 s of pure re-verification per
-    * query per bench pass. The memo is [[pinned]] on the caller tag and the
-    * source scan's input FILES with their [[stamp]]s — all metadata — and
-    * stores the computed fingerprint string: while the underlying files are
-    * byte-identical the fingerprint is a pure function of them, so the
-    * memoized value IS the recomputation's result. An input without
-    * resolvable files (in-memory test frames) skips the memo and computes
-    * directly. */
+  /** `"<rows>:<crc32 sum of content>"` over `df` — the content fingerprint
+    * a derived index is staged or committed on. A row count alone is not
+    * content-sensitive: a regenerated same-cardinality input (the sf10 gate
+    * caught one on g49's shingle index) must change it too.
+    *
+    * The CRC job is memoized in-session (r22, §1.2 don't recompute what
+    * cannot have changed — it cost ~0.1-0.2 s per query per bench pass):
+    * [[pinned]] on `tag`, `df`'s plan, `content`, and `df`'s input FILES
+    * with their [[stamp]]s, all metadata. While those files are
+    * byte-identical the fingerprint is a pure function of them and the
+    * plan, so the memoized value IS the recomputation's result. An input
+    * without resolvable files (an in-memory frame) skips the memo and
+    * computes directly. */
   private val fpMemo = pinCache[String](256)
-  private[graft] def memoFingerprint(df: DataFrame, tag: String)(
-      compute: => String): String = {
+  private[graft] def contentFingerprint(df: DataFrame, tag: String)(
+      content: Column): String = {
+    def compute = {
+      val r = df.agg(count(lit(1)),
+        coalesce(sum(crc32(content.cast("binary"))), lit(0L))).head()
+      s"${r.getLong(0)}:${r.getLong(1)}"
+    }
     val files = try df.inputFiles.sorted.toSeq catch { case NonFatal(_) => Seq.empty }
     if (files.isEmpty) return compute
     val meta = files.map { u =>
@@ -206,7 +213,31 @@ object Tables {
       }
       s"$u=${stamp(p.getPath)}"
     }.mkString(",")
-    pinned(fpMemo, df.sparkSession, tag, meta)(compute)
+    val scope = s"$tag:${df.queryExecution.analyzed.semanticHash()}:$content"
+    pinned(fpMemo, df.sparkSession, scope, meta)(compute)
+  }
+
+  /** The session's shuffle-partition count — the one place the library
+    * reads it: [[coPartition]], g52's range partitioning and the planner
+    * strategies' required child distributions. */
+  private[graft] def partitionCount(conf: SQLConf): Int = conf.numShufflePartitions
+
+  /** `df` hash-partitioned on `keys` (round-robin when none are given) to
+    * [[partitionCount]] partitions — an explicit count, pinned for two
+    * reasons:
+    *  - a blocked pair join's shuffle INPUT is small but its OUTPUT is the
+    *    quadratic per-bucket pair enumeration, which AQE's input-size-based
+    *    coalescing cannot see: left alone it merges the post-shuffle
+    *    partitions into ~1 and the whole kernel runs on one core (measured
+    *    at sf1: 41M candidate pairs, load ~1 on 32 cores). An explicit
+    *    count is exempt from coalescing;
+    *  - a one-split scan that feeds a CPU-bound per-row kernel (a signature
+    *    fold, a Lloyd assignment, a Gram fold) would otherwise run on one
+    *    core (measured 30× on PowerIteration's sf0.1 Gram fold).
+    * Sides co-partitioned on their join key join with no further exchange. */
+  def coPartition(df: DataFrame, keys: Column*): DataFrame = {
+    val n = partitionCount(df.sparkSession.sessionState.conf)
+    if (keys.isEmpty) df.repartition(n) else df.repartition(n, keys: _*)
   }
 
   /** Scratch path owned by (`name`, fixture `dir`):

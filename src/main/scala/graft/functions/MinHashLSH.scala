@@ -114,14 +114,12 @@ object MinHashLSH {
       .toDF("id", "bands")
     // candidates carry only (ids, band key) — the raw texts are joined back
     // ONLY for the few candidate pairs, never shuffled all-pairs
-    val banded = sig.select(col("id"), posexplode(col("bands")).as(Seq("band", "bhash")))
+    val banded = sig.select(col("id"), posexplode(col("bands")).as(Seq("band", "bkey")))
       .persist() // both sides of the self-join
-    val cand = banded
-      .join(banded.select(col("id").as("id_b"), col("band").as("band_b"), col("bhash").as("bhash_b")),
-        col("band") === col("band_b") && col("bhash") === col("bhash_b") && col("id") < col("id_b"))
-      .select(col("id").as("a_id"), col("id_b").as("b_id"))
-      .distinct() // same pair can collide in several bands
-    cand
+    // unpinned: MinHash buckets are near-duplicate groups, tiny by
+    // construction, so the planner may broadcast one side
+    graft.sources.Lsh.bandedPairs(banded, "id")
+      .select(col("u").as("a_id"), col("v").as("b_id"))
       .join(txts.select(col("id").as("a_id"), col("txt").as("ta")), "a_id")
       .join(txts.select(col("id").as("b_id"), col("txt").as("tb")), "b_id")
       .select(col("a_id").as[Long], col("b_id").as[Long],

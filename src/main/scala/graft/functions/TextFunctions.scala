@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.UserDefinedFunction
 
@@ -58,6 +58,19 @@ object TextFunctions {
       s"transform(sequence(1, greatest(size($toksCol) - 2, 0)), i -> " +
         s"concat_ws(' ', element_at($toksCol, i), " +
         s"element_at($toksCol, i + 1), element_at($toksCol, i + 2)))"))
+
+  /** The text near-duplicate rule's block key: the first 40 characters of
+    * the lowercased `text`. Candidates pair only within a block. */
+  def blockKey: Column = substring(lower(col("text")), 1, 40)
+
+  /** The text near-duplicate rule's shingle sets: the rows of `docs` with
+    * at least 3 tokens, as `keep` plus `sh`, the distinct word 3-shingles
+    * of the lowercased `text`. Two docs are near-duplicates when their
+    * Jaccard is ≥ 0.4 (`graft.sources.Lsh.textPairs`). */
+  def shingleSets(docs: DataFrame, keep: Column*): DataFrame =
+    docs.withColumn("toks", tokens(lower(col("text"))))
+      .filter(size(col("toks")) >= 3)
+      .select(keep :+ shingles3("toks").as("sh"): _*)
 
   /** Exact Jaccard similarity of two (distinct-element) arrays. */
   def jaccard(a: Column, b: Column): Column =

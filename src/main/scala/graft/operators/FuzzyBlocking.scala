@@ -73,18 +73,11 @@ object FuzzyBlocking {
       .withColumn("salt", explode(expr("sequence(0, nsalt - 1)")))
       .select(col("id").as("doc_a"), col("p").as("pa"), col("pfx"), col("band"),
         col("tile"), col("salt"))
-    // PIN the join's partition count: its shuffle INPUT is tiny (docs +
-    // replicas) but its OUTPUT is the quadratic pair enumeration, which
-    // AQE's input-size-based coalescing cannot see — left alone it merges
-    // the post-shuffle partitions into ~1 and the whole kernel runs on one
-    // core (measured at sf1: 41M candidate pairs, load ~1 on 32 cores). An
-    // explicit numPartitions is exempt from AQE coalescing, and the tile
-    // axis guarantees no single key exceeds ~cap² pairs, so the fixed-count
-    // hash spread is even.
+    // both sides pinned (Tables.coPartition); the tile axis guarantees no
+    // single key exceeds ~cap² pairs, so the fixed-count hash spread is even
     val keys = Seq("pfx", "band", "tile", "salt")
-    val n = docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    lhs.repartition(n, keys.map(col): _*)
-      .join(rhs.repartition(n, keys.map(col): _*), keys)
+    graft.Tables.coPartition(lhs, keys.map(col): _*)
+      .join(graft.Tables.coPartition(rhs, keys.map(col): _*), keys)
       .filter(col("doc_a") < col("doc_b"))
       // cheap length prefilter: skips the DP kernel for sure-misses
       .filter(abs(length(col("pa")) - length(col("pb"))) <= k)

@@ -46,29 +46,16 @@ object PipelineQueries extends QueryModule {
     * side grows with the pool. */
   private def benchShingleIndex(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
-    import graft.sources.SnapshotTable
-    val t = Tables(s, dir)
-    val bdocs = t.documents.filter(col("doc_id") < BenchmarkK)
+    val bdocs = Tables(s, dir).documents.filter(col("doc_id") < BenchmarkK)
     val idxRoot = Tables.scratch("benchidx", dir)
-    // CRC job memoized per (session, root, source-files size+mtime) — r22,
-    // see Tables.memoFingerprint
-    val fingerprint = Tables.memoFingerprint(bdocs, s"benchidx:$idxRoot") {
-      val fpRow = bdocs.agg(count(lit(1)),
-        coalesce(sum(crc32(col("text").cast("binary"))), lit(0L))).head()
-      s"${fpRow.getLong(0)}:${fpRow.getLong(1)}"
-    }
-    if (!SnapshotTable.latestMeta(idxRoot).contains(fingerprint)) {
-      SnapshotTable.commit(
-        bdocs.withColumn("toks", TF.tokens(lower(col("text"))))
-          .filter(size(col("toks")) >= 3)
-          .select(col("doc_id").as("b_id"),
-            explode(TF.shingles3("toks")).as("sh"))
-          .coalesce(1),
-        idxRoot, meta = fingerprint)
-      ()
-    }
-    SnapshotTable.read(s, idxRoot)
+    val fingerprint = Tables.contentFingerprint(bdocs, s"benchidx:$idxRoot")(col("text"))
+    graft.sources.SnapshotTable.readFresh(s, idxRoot, fingerprint)(
+      shingles(bdocs).select(col("doc_id").as("b_id"), col("sh")).coalesce(1))
   }
+
+  /** One (doc_id, sh) row per distinct word 3-shingle of each ≥3-token doc. */
+  private def shingles(docs: org.apache.spark.sql.DataFrame) =
+    TF.shingleSets(docs, col("doc_id")).select(col("doc_id"), explode(col("sh")).as("sh"))
 
   val queries: Seq[(String, QFn)] = Seq(
     // G17: benchmark contamination — which training docs share word
@@ -79,10 +66,7 @@ object PipelineQueries extends QueryModule {
     "g17_contamination_ngram" -> ((s, dir) => {
       val t = Tables(s, dir)
       val bench = benchShingleIndex(s, dir).select(col("sh")).distinct()
-      t.documents.filter(col("doc_id") >= BenchmarkK)
-        .withColumn("toks", TF.tokens(lower(col("text"))))
-        .filter(size(col("toks")) >= 3)
-        .select(col("doc_id"), explode(TF.shingles3("toks")).as("sh"))
+      shingles(t.documents.filter(col("doc_id") >= BenchmarkK))
         .join(broadcast(bench), "sh")
         .groupBy(col("doc_id"))
         .agg(countDistinct(col("sh")).as("n_shared"))
@@ -105,10 +89,7 @@ object PipelineQueries extends QueryModule {
       val bench = benchShingleIndex(s, dir).select(col("sh")).distinct()
       val blob = bench.agg(expr("bloom_sketch(sh, 1048576, 5)").as("bsk"))
         .head().getAs[Array[Byte]](0)
-      t.documents.filter(col("doc_id") >= BenchmarkK)
-        .withColumn("toks", TF.tokens(lower(col("text"))))
-        .filter(size(col("toks")) >= 3)
-        .select(col("doc_id"), explode(TF.shingles3("toks")).as("sh"))
+      shingles(t.documents.filter(col("doc_id") >= BenchmarkK))
         .filter(graft.functions.BloomSketch.containsColumn(blob, col("sh")))
         .join(broadcast(bench), "sh")
         .groupBy(col("doc_id"))
@@ -578,10 +559,7 @@ object PipelineQueries extends QueryModule {
       val t = Tables(s, dir)
       val bench = benchShingleIndex(s, dir)
       val bSize = bench.groupBy("b_id").agg(count(lit(1)).as("b_size"))
-      val corpus = t.documents.filter(col("doc_id") >= BenchmarkK)
-        .withColumn("toks", TF.tokens(lower(col("text"))))
-        .filter(size(col("toks")) >= 3)
-        .select(col("doc_id"), explode(TF.shingles3("toks")).as("sh"))
+      val corpus = shingles(t.documents.filter(col("doc_id") >= BenchmarkK))
       corpus.join(broadcast(bench), "sh")
         .groupBy(col("b_id"), col("doc_id"))
         .agg(count(lit(1)).as("inter"))
@@ -716,34 +694,12 @@ object PipelineQueries extends QueryModule {
     // metadata-scale.
     "g74_hybrid_rrf" -> ((s, dir) => {
       val t = Tables(s, dir)
-      // lexical leg — g58's BM25 (rational idf ×2, k1=1, b=½, fixed-order
-      // 3-term sum), cut to a ranked top-20
-      val terms = Seq("spark", "merge", "vector")
-      val toks = t.documents
-        .select(col("doc_id"), explode(TF.tokens(lower(col("text")))).as("term"))
-      val corpus = toks.agg(count(lit(1)).as("tt"),
-        countDistinct(col("doc_id")).as("nn")).head()
-      val (tt, nn) = (corpus.getLong(0), corpus.getLong(1))
-      val dl = toks.groupBy("doc_id").agg(count(lit(1)).as("dl"))
-      val tf = toks.filter(col("term").isin(terms: _*))
-        .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-      val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
-      val scored = tf.join(broadcast(df), "term").join(dl, "doc_id")
-        .withColumn("idf",
-          (lit(2) * nn - lit(2) * col("df") + lit(1)).cast("double") /
-            (lit(2) * col("df") + lit(1)).cast("double"))
-        .withColumn("tfc",
-          (lit(4) * tt * col("tf")).cast("double") /
-            (lit(2) * tt * col("tf") + lit(tt) + col("dl") * nn).cast("double"))
-        .withColumn("s", col("idf") * col("tfc"))
-      val byTerm = scored.groupBy("doc_id")
-        .pivot("term", terms).agg(first(col("s")))
-      val bmScore = terms.map(c => coalesce(col(s"`$c`"), lit(0d))).reduce(_ + _)
-      // top-k FIRST (parallel TakeOrdered), the rank window only ever sees
-      // the 20 surviving rows — never a global window over the corpus
-      val wLex = Window.orderBy(col("bm25").desc, col("doc_id"))
-      val lex = byTerm.withColumn("bm25", bmScore)
-        .orderBy(col("bm25").desc, col("doc_id")).limit(20)
+      // lexical leg — g58's BM25, cut to a ranked top-20. Top-k FIRST
+      // (parallel TakeOrdered), the rank window only ever sees the 20
+      // surviving rows — never a global window over the corpus
+      val wLex = Window.orderBy(col("score").desc, col("doc_id"))
+      val lex = TextQueries.bm25(t.documents, Seq("spark", "merge", "vector"))
+        .orderBy(col("score").desc, col("doc_id")).limit(20)
         .withColumn("rank_lex", row_number().over(wLex))
         .select("doc_id", "rank_lex")
       // semantic leg — exact cosine top-20 vs doc 0's embedding

@@ -3,6 +3,7 @@ package graft.operators
 import graft.{QueryModule, Tables}
 import graft.functions.{MinHashLSH, TextFunctions => TF}
 import graft.sources.Lsh
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -32,11 +33,7 @@ object TextQueries extends QueryModule {
       dir: String): org.apache.spark.sql.DataFrame =
     Tables.pinned(shingleSetsCache, s, Tables.pathKey(dir),
         Tables.stamp(s"$dir/documents.parquet")) {
-      Tables(s, dir).documents
-        .withColumn("toks", TF.tokens(lower(col("text"))))
-        .filter(size(col("toks")) >= 3)
-        .select(col("doc_id"), TF.shingles3("toks").as("sh"))
-        .localCheckpoint()
+      TF.shingleSets(Tables(s, dir).documents, col("doc_id")).localCheckpoint()
     }
 
   /** The DICTIONARY-ENCODED shingle index shared by the exact set-similarity
@@ -92,13 +89,10 @@ object TextQueries extends QueryModule {
   private def setsimDictJoin(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
     val (intSets, prefix) = dictIndex(s, dir)
-    val n = s.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    val cand = prefix.select(col("doc_id").as("a_id"), col("len").as("alen"),
-        col("r").as("ra"), col("tid"))
-      .repartition(n, col("tid"))
-      .join(prefix.select(col("doc_id").as("b_id"), col("len").as("blen"),
-          col("r").as("rb"), col("tid").as("tidb"))
-        .repartition(n, col("tidb")),
+    val cand = Tables.coPartition(prefix.select(col("doc_id").as("a_id"),
+        col("len").as("alen"), col("r").as("ra"), col("tid")), col("tid"))
+      .join(Tables.coPartition(prefix.select(col("doc_id").as("b_id"),
+          col("len").as("blen"), col("r").as("rb"), col("tid").as("tidb")), col("tidb")),
         col("tid") === col("tidb") && col("a_id") < col("b_id") &&
           col("blen") * 5 >= col("alen") * 2 && col("alen") * 5 >= col("blen") * 2 &&
           least(col("alen") - col("ra"), col("blen") - col("rb")) + 1 >=
@@ -129,32 +123,64 @@ object TextQueries extends QueryModule {
   /** Shared by g2 (pair listing) and g24 (component resolution): 40-char
     * prefix blocking + exact 3-shingle Jaccard ≥ 0.4 over `documents`. */
   private def jaccardPairs(s: org.apache.spark.sql.SparkSession, dir: String) = {
-    val t = Tables(s, dir)
     // r22 (§2.3): the kernel runs on the DICTIONARY-ENCODED shingle sets
     // (dictIndex, shared with g53/g53b/g64) — 8-B longs instead of ~25-B
     // strings through the blocked self-join and the intersect/union. A
     // bijection on the shingle alphabet preserves every |∩| and |∪|, so
     // `jac` is the identical double (g2 rounds it into its output; oracle
-    // re-verified). base re-attaches the blocking key and is pinned — both
-    // self-join sides consume it.
-    val (intSets, _) = dictIndex(s, dir)
-    val base = t.documents
-      .select(col("doc_id"), substring(lower(col("text")), 1, 40).as("blk"))
-      .join(intSets, "doc_id") // inner: exactly the ≥3-token docs
-      .localCheckpoint()
-    // pinned partition count on the block key: the join's shuffle input is
-    // small but its output is the quadratic per-block pair enumeration,
-    // which AQE's input-size-based coalescing cannot see — without the pin
-    // it merges a duplicate-heavy corpus's pair kernel onto ~1 core (the
-    // g30 family documents the same effect; FuzzyBlocking.scala)
-    val n = s.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    val a = base.select(col("doc_id").as("a_id"), col("blk"), col("shi").as("sha"))
-      .repartition(n, col("blk"))
-    val b = base.select(col("doc_id").as("b_id"), col("blk").as("blkb"), col("shi").as("shb"))
-      .repartition(n, col("blkb"))
-    a.join(b, col("blk") === col("blkb") && col("a_id") < col("b_id"))
-      .withColumn("jac", TF.jaccard(col("sha"), col("shb")))
-      .filter(col("jac") >= 0.4)
+    // re-verified). base re-attaches the blocking key, is pinned, and is
+    // co-partitioned on it once — both self-join sides consume it.
+    val base = Tables.coPartition(
+      blockedSets(s, dir, Tables(s, dir).documents).localCheckpoint(), col("blk"))
+    Lsh.textPairs(base, base, _ < _)
+  }
+
+  /** (id, blk, sh) of the ≥3-token docs of `docs`: the block key attached
+    * to the pinned dictionary-encoded shingle sets ([[dictIndex]]). */
+  private def blockedSets(s: org.apache.spark.sql.SparkSession, dir: String,
+      docs: DataFrame) =
+    docs.select(col("doc_id").as("id"), TF.blockKey.as("blk"))
+      .join(dictIndex(s, dir)._1.select(col("doc_id").as("id"), col("shi").as("sh")),
+        "id") // inner: exactly the ≥3-token docs
+
+  /** The per-doc verdict of g49 and i23 (one oracle): each `delta` doc
+    * (doc_id, blk, sh) against the existing-corpus `index` (e_id, e_blk,
+    * e_sh) → (doc_id, n_matches, first_match, best_jac). */
+  private[operators] def dedupVerdicts(delta: DataFrame, index: DataFrame): DataFrame = {
+    val matches = Lsh.textPairs(delta.select(col("doc_id").as("id"), col("blk"), col("sh")),
+        index.select(col("e_id").as("id"), col("e_blk").as("blk"), col("e_sh").as("sh")),
+        (_, _) => lit(true))
+      .groupBy(col("a_id").as("doc_id"))
+      .agg(count(lit(1)).as("n_matches"), min(col("b_id")).as("first_match"),
+        round(max(col("jac")), 6).as("best_jac"))
+    delta.select(col("doc_id")).join(matches, Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("n_matches"), lit(0L)).as("n_matches"),
+        col("first_match"), col("best_jac"))
+  }
+
+  /** g58's BM25 of every doc of `docs` holding one of `terms` →
+    * (doc_id, score); g74's lexical leg too. See g58 for the model. */
+  private[operators] def bm25(docs: DataFrame, terms: Seq[String]): DataFrame = {
+    val toks = docs
+      .select(col("doc_id"), explode(TF.tokens(lower(col("text")))).as("term"))
+    val corpus = toks.agg(count(lit(1)).as("tt"), countDistinct(col("doc_id")).as("nn")).head()
+    val (tt, nn) = (corpus.getLong(0), corpus.getLong(1))
+    val dl = toks.groupBy("doc_id").agg(count(lit(1)).as("dl"))
+    val tf = toks.filter(col("term").isin(terms: _*))
+      .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
+    val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
+    val scored = tf.join(broadcast(df), "term").join(dl, "doc_id")
+      .withColumn("idf",
+        (lit(2) * nn - lit(2) * col("df") + lit(1)).cast("double") /
+          (lit(2) * col("df") + lit(1)).cast("double"))
+      .withColumn("tfc",
+        (lit(4) * tt * col("tf")).cast("double") /
+          (lit(2) * tt * col("tf") + lit(tt) + col("dl") * nn).cast("double"))
+      .withColumn("s", col("idf") * col("tfc"))
+    // fixed-order sum: never reassociated, identical in the oracle
+    scored.groupBy("doc_id").pivot("term", terms).agg(first(col("s")))
+      .select(col("doc_id"),
+        terms.map(c => coalesce(col(s"`$c`"), lit(0d))).reduce(_ + _).as("score"))
   }
 
   /** PERSISTED PAIR TABLE — the dedup pipeline's pair graph committed once
@@ -169,23 +195,11 @@ object TextQueries extends QueryModule {
     * g45 survivor selection, the g62 governance views) read the index —
     * the division of labor a deployment actually has. */
   private def pairIndex(s: org.apache.spark.sql.SparkSession, dir: String) = {
-    import graft.sources.SnapshotTable
-    val t = Tables(s, dir)
     val root = Tables.scratch("pairidx", dir)
-    // CRC job memoized per (session, root, source-files size+mtime) — r22,
-    // see Tables.memoFingerprint
-    val fingerprint = Tables.memoFingerprint(t.documents, s"pairidx:$root") {
-      val fpRow = t.documents.agg(count(lit(1)),
-        coalesce(sum(crc32(col("text").cast("binary"))), lit(0L))).head()
-      s"${fpRow.getLong(0)}:${fpRow.getLong(1)}"
-    }
-    if (!SnapshotTable.latestMeta(root).contains(fingerprint)) {
-      SnapshotTable.commit(
-        jaccardPairs(s, dir).select(col("a_id"), col("b_id")),
-        root, meta = fingerprint)
-      ()
-    }
-    SnapshotTable.read(s, root)
+    val fingerprint =
+      Tables.contentFingerprint(Tables(s, dir).documents, s"pairidx:$root")(col("text"))
+    graft.sources.SnapshotTable.readFresh(s, root, fingerprint)(
+      jaccardPairs(s, dir).select(col("a_id"), col("b_id")))
   }
 
   val queries: Seq[(String, QFn)] = Seq(
@@ -445,56 +459,26 @@ object TextQueries extends QueryModule {
     // == 0 slice; same prefix blocking + exact 3-shingle Jaccard ≥ 0.4 as
     // g2, so the oracle replays it exactly.
     "g49_incremental_dedup" -> ((s, dir) => {
-      import graft.sources.SnapshotTable
       val t = Tables(s, dir)
-      val base = t.documents
-        .withColumn("toks", TF.tokens(lower(col("text"))))
-        .filter(size(col("toks")) >= 3)
-        .select(col("doc_id"), substring(lower(col("text")), 1, 40).as("blk"),
-          TF.shingles3("toks").as("sh"))
-      val n = s.conf.get("spark.sql.shuffle.partitions", "200").toInt
+      val base = TF.shingleSets(t.documents, col("doc_id"), TF.blockKey.as("blk"))
       // the persisted index: committed hash-clustered on the blocking key
       // (each file holds whole blk buckets, the layout a bucketed-table
-      // deployment pins in its catalog); fingerprint in the commit META so a
-      // regenerated fixture under the same path recommits instead of
-      // silently serving the stale index (the r12 lesson). The fingerprint
-      // must be CONTENT-sensitive, not a row count: the sf10 gate caught a
-      // regenerated same-cardinality corpus (salted text, identical count)
-      // being served from the stale index — count + crc32-sum over the text
-      // closes that hole for one cheap scan (a deployment keys the index
-      // version on its ingest ledger instead of hashing the corpus).
+      // deployment pins in its catalog); the corpus's content fingerprint
+      // in the commit META, so a regenerated fixture under the same path
+      // recommits instead of silently serving the stale index (the r12
+      // lesson; a deployment keys the index version on its ingest ledger
+      // instead of hashing the corpus).
       val idxRoot = Tables.scratch("shidx_docs", dir)
-      // CRC job memoized per (session, root, source-files size+mtime) —
-      // r22, see Tables.memoFingerprint
-      val fingerprint = Tables.memoFingerprint(t.documents, s"shidx:$idxRoot") {
-        val fpRow = t.documents
-          .agg(count(lit(1)),
-            coalesce(sum(crc32(col("text").cast("binary"))), lit(0L))).head()
-        s"${fpRow.getLong(0)}:${fpRow.getLong(1)}"
-      }
-      if (!SnapshotTable.latestMeta(idxRoot).contains(fingerprint)) {
-        SnapshotTable.commit(
-          base.filter(col("doc_id") % 5 =!= 0)
-            .select(col("doc_id").as("e_id"), col("blk").as("e_blk"),
-              col("sh").as("e_sh"))
-            .repartition(n, col("e_blk")),
-          idxRoot, meta = fingerprint)
-        ()
-      }
-      // pinned partition counts: same AQE-coalescing exemption as every
-      // pair-enumeration kernel (see jaccardPairs)
-      val delta = base.filter(col("doc_id") % 5 === 0).repartition(n, col("blk"))
-      val existing = SnapshotTable.read(s, idxRoot).repartition(n, col("e_blk"))
-      val matches = delta.join(existing, col("blk") === col("e_blk"))
-        .withColumn("jac", TF.jaccard(col("sh"), col("e_sh")))
-        .filter(col("jac") >= 0.4)
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_matches"), min(col("e_id")).as("first_match"),
-          round(max(col("jac")), 6).as("best_jac"))
-      delta.select(col("doc_id")).join(matches, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("n_matches"), lit(0L)).as("n_matches"),
-          col("first_match"), col("best_jac"))
+      val fingerprint =
+        Tables.contentFingerprint(t.documents, s"shidx:$idxRoot")(col("text"))
+      val existing = graft.sources.SnapshotTable.readFresh(s, idxRoot, fingerprint)(
+        Tables.coPartition(base.filter(col("doc_id") % 5 =!= 0)
+          .select(col("doc_id").as("e_id"), col("blk").as("e_blk"),
+            col("sh").as("e_sh")), col("e_blk")))
+      // both sides co-partitioned on the block key (Tables.coPartition)
+      dedupVerdicts(
+        Tables.coPartition(base.filter(col("doc_id") % 5 === 0), col("blk")),
+        Tables.coPartition(existing, col("e_blk")))
         .orderBy("doc_id")
     }),
 
@@ -510,7 +494,6 @@ object TextQueries extends QueryModule {
     // by min-label as usual) — the oracle is g24's recursive CTE over the
     // FULL pair graph.
     "g64_incremental_components" -> ((s, dir) => {
-      val t = Tables(s, dir)
       // r22 (§2.3 shuffle fewer bytes; §1.2 fewer kernels): the pair
       // kernels run on the DICTIONARY-ENCODED shingle sets (dictIndex,
       // shared with g53/g53b) instead of string arrays — a bijection on the
@@ -518,25 +501,14 @@ object TextQueries extends QueryModule {
       // jac ≥ 0.4 pair set and the resulting labels are identical (the g53
       // argument; oracle re-verified). base re-attaches the blocking key to
       // the pinned encoded sets and is pinned itself — it feeds the three
-      // join sides below.
-      val (intSets, _) = dictIndex(s, dir)
-      val base = t.documents
-        .select(col("doc_id"), substring(lower(col("text")), 1, 40).as("blk"))
-        .join(intSets, "doc_id") // inner: keeps exactly the ≥3-token docs
-        .localCheckpoint()
-      val n = s.conf.get("spark.sql.shuffle.partitions", "200").toInt
-      val isDelta = col("doc_id") % 5 === 0
-      def side(df: org.apache.spark.sql.DataFrame, p: String) = df
-        .select(col("doc_id").as(s"${p}_id"), col("blk").as(s"${p}_blk"),
-          col("shi").as(s"${p}_sh"))
-        .repartition(n, col(s"${p}_blk"))
+      // join sides below, each co-partitioned on the block key.
+      val base = blockedSets(s, dir, Tables(s, dir).documents).localCheckpoint()
+      val isDelta = col("id") % 5 === 0
+      def side(df: DataFrame) = Tables.coPartition(df, col("blk"))
       // yesterday's state: labels over the existing-only pair graph
-      val exist = base.filter(!isDelta)
+      val exist = side(base.filter(!isDelta))
       val oldLabels = graft.plans.ConnectedComponents.labels(
-        side(exist, "a").join(side(exist, "b"),
-            col("a_blk") === col("b_blk") && col("a_id") < col("b_id"))
-          .filter(TF.jaccard(col("a_sh"), col("b_sh")) >= 0.4)
-          .select(col("a_id").as("u"), col("b_id").as("v")))
+        Lsh.textPairs(exist, exist, _ < _).select(col("a_id").as("u"), col("b_id").as("v")))
       // today: pairs touching the delta, in ONE kernel (r22 — was two
       // mirrored blocked joins, delta×base with a<b plus base×delta with
       // a<b, unioned): enumerate (delta, other) per block once, normalize
@@ -545,10 +517,7 @@ object TextQueries extends QueryModule {
       // when both are delta — collapsed by the same distinct the union
       // already needed), at half the candidate enumeration and one
       // exchange+kernel instead of two.
-      val deltaEdges = side(base.filter(isDelta), "a")
-        .join(side(base, "b"),
-          col("a_blk") === col("b_blk") && col("a_id") =!= col("b_id"))
-        .filter(TF.jaccard(col("a_sh"), col("b_sh")) >= 0.4)
+      val deltaEdges = Lsh.textPairs(side(base.filter(isDelta)), side(base), _ =!= _)
         .select(least(col("a_id"), col("b_id")).as("u"),
           greatest(col("a_id"), col("b_id")).as("v"))
         .distinct()
@@ -588,15 +557,9 @@ object TextQueries extends QueryModule {
     "g72_dedup_lsh_recall" -> ((s, dir) => {
       val t = Tables(s, dir)
       val nH = 16; val bands = 4; val rpb = 4
-      // repartition BEFORE the checkpoint: the md5-min signature fold and
-      // the truth-side Jaccard are per-row CPU on what is often a one-file
-      // scan — without the spread they serialize on a single core
-      val n0 = s.conf.get("spark.sql.shuffle.partitions", "200").toInt
-      val base = t.documents
-        .withColumn("toks", TF.tokens(lower(col("text"))))
-        .filter(size(col("toks")) >= 3)
-        .select(col("doc_id"), TF.shingles3("toks").as("sh"))
-        .repartition(n0)
+      // spread BEFORE the checkpoint: the md5-min signature fold and the
+      // truth-side Jaccard are per-row CPU on what is often a one-file scan
+      val base = Tables.coPartition(TF.shingleSets(t.documents, col("doc_id")))
         .localCheckpoint() // consumed by the signature AND both truth sides
       val mh = base.select(col("doc_id"), array((0 until nH).map(i =>
         array_min(transform(col("sh"), x => md5(concat(lit(i + "|"), x))))): _*)
@@ -612,7 +575,8 @@ object TextQueries extends QueryModule {
         .filter(TF.jaccard(col("sha"), col("shb")) >= 0.4)
         .select(col("a_id"), least(col("a_id"), col("b_id")).as("u"),
           greatest(col("a_id"), col("b_id")).as("v"))
-      Lsh.recall(tru, Lsh.bandedPairs(keyed, "doc_id"))
+      Lsh.recall(tru,
+        Lsh.bandedPairs(Tables.coPartition(keyed, col("band"), col("bkey")), "doc_id"))
     }),
 
     // G2c: SimHash near-dup — 64-bit fingerprints from token hashes, banded
@@ -628,24 +592,21 @@ object TextQueries extends QueryModule {
         .as[(Long, String)]
         .map { case (id, txt) => (id, TF.simhash64(txt)) }
         .toDF("id", "fp")
-      val chunks = fps.select(col("id"), col("fp"),
+      // its own banded self-join, not Lsh.bandedPairs: the pairs carry
+      // both fingerprints for the hamming check, where joining them back
+      // onto bandedPairs' candidates measured ~1.7× slower at sf0.1
+      val chunks = Tables.coPartition(fps.select(col("id"), col("fp"),
         posexplode(array((0 until 4).map(i =>
           shiftrightunsigned(col("fp"), i * 16).bitwiseAND(lit(0xffffL))): _*))
-          .as(Seq("chunk", "cval")))
-      // pinned partition count: candidate enumeration is quadratic per
-      // (chunk, cval) bucket — invisible to AQE coalescing (see
-      // FuzzyBlocking.scala for the measured one-core failure mode)
-      val n = s.conf.get("spark.sql.shuffle.partitions", "200").toInt
-      val cand = chunks.repartition(n, col("chunk"), col("cval"))
-        .join(chunks.select(col("id").as("id_b"), col("fp").as("fp_b"),
-            col("chunk").as("chunk_b"), col("cval").as("cval_b"))
-            .repartition(n, col("chunk_b"), col("cval_b")),
+          .as(Seq("chunk", "cval"))), col("chunk"), col("cval"))
+      chunks.join(chunks.select(col("id").as("id_b"), col("fp").as("fp_b"),
+            col("chunk").as("chunk_b"), col("cval").as("cval_b")),
           col("chunk") === col("chunk_b") && col("cval") === col("cval_b") &&
             col("id") < col("id_b"))
         .select(col("id").as("a_id"), col("id_b").as("b_id"),
           bit_count(col("fp").bitwiseXOR(col("fp_b"))).as("hamming"))
         .distinct()
-      cand.filter(col("hamming") <= 6).orderBy("a_id", "b_id")
+        .filter(col("hamming") <= 6).orderBy("a_id", "b_id")
     }),
 
     // G26: corpus vocabulary heavy hitters via MERGEABLE MISRA-GRIES
@@ -748,7 +709,6 @@ object TextQueries extends QueryModule {
       val t = Tables(s, dir)
       val scored = t.documents
         .withColumn("norm", lower(trim(col("text"))))
-        .withColumn("blk", substring(lower(col("text")), 1, 40))
         .withColumn("score", round(TF.qualityScoreCol(col("text")), 6))
       val quality = scored.filter(col("score") >= 3.5)
       val w = Window.partitionBy(col("norm")).orderBy(col("doc_id"))
@@ -760,12 +720,8 @@ object TextQueries extends QueryModule {
       // encoded arrays give the identical jaccard by bijection (the g53
       // argument; oracle re-verified). The main pipeline no longer needs a
       // toks column at all.
-      val (intSets, _) = dictIndex(s, dir)
-      val sh = exact.select(col("doc_id"), col("blk")).join(intSets, "doc_id")
-      val dupB = sh.select(col("doc_id").as("a_id"), col("blk"), col("shi").as("sha"))
-        .join(sh.select(col("doc_id").as("b_id"), col("blk").as("blkb"), col("shi").as("shb")),
-          col("blk") === col("blkb") && col("a_id") < col("b_id"))
-        .filter(TF.jaccard(col("sha"), col("shb")) >= 0.4)
+      val sh = blockedSets(s, dir, exact)
+      val dupB = Lsh.textPairs(sh, sh, _ < _)
         .select(col("b_id").as("doc_id")).distinct()
       exact.join(dupB, Seq("doc_id"), "left_anti")
         .groupBy(col("lang"))
@@ -914,7 +870,7 @@ object TextQueries extends QueryModule {
       val toks = t.documents
         .select(col("doc_id"), col("source"), expr("n_chars div 4").as("tok"))
       val budget = toks.agg(expr("sum(tok) * 3 div 5").as("budget"))
-      val n = s.conf.get("spark.sql.shuffle.partitions", "200").toInt
+      val n = Tables.partitionCount(s.sessionState.conf)
       // localCheckpoint pins ONE physical range partitioning: the offsets
       // branch and the join branch would otherwise recompute the exchange
       // independently, and RangePartitioner's sampled boundaries need not
@@ -1076,33 +1032,9 @@ object TextQueries extends QueryModule {
     // tokens, dl = doc length). Shape at 100 TB: one token explode keyed by
     // doc, per-term df/N/T as a 3-row broadcast, score join keyed by doc —
     // no shuffle wider than the postings list of the query terms.
-    "g58_bm25_topk" -> ((s, dir) => {
-      val t = Tables(s, dir)
-      val terms = Seq("spark", "merge", "vector")
-      val toks = t.documents
-        .select(col("doc_id"), explode(TF.tokens(lower(col("text")))).as("term"))
-      val corpus = toks.agg(count(lit(1)).as("tt"), countDistinct(col("doc_id")).as("nn")).head()
-      val (tt, nn) = (corpus.getLong(0), corpus.getLong(1))
-      val dl = toks.groupBy("doc_id").agg(count(lit(1)).as("dl"))
-      val tf = toks.filter(col("term").isin(terms: _*))
-        .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-      val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
-      val scored = tf.join(broadcast(df), "term").join(dl, "doc_id")
-        .withColumn("idf",
-          (lit(2) * nn - lit(2) * col("df") + lit(1)).cast("double") /
-            (lit(2) * col("df") + lit(1)).cast("double"))
-        .withColumn("tfc",
-          (lit(4) * tt * col("tf")).cast("double") /
-            (lit(2) * tt * col("tf") + lit(tt) + col("dl") * nn).cast("double"))
-        .withColumn("s", col("idf") * col("tfc"))
-      val byTerm = scored.groupBy("doc_id")
-        .pivot("term", terms).agg(first(col("s")))
-      // fixed-order sum: never reassociated, identical in the oracle
-      val score = terms.map(c => coalesce(col(s"`$c`"), lit(0d))).reduce(_ + _)
-      byTerm.withColumn("score", score)
-        .select(col("doc_id"), col("score"))
-        .orderBy(col("score").desc, col("doc_id")).limit(10)
-    })
+    "g58_bm25_topk" -> ((s, dir) =>
+      bm25(Tables(s, dir).documents, Seq("spark", "merge", "vector"))
+        .orderBy(col("score").desc, col("doc_id")).limit(10))
   )
 
   val oracles: Seq[(String, String)] = Seq(

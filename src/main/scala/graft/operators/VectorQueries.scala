@@ -663,7 +663,8 @@ object VectorQueries extends QueryModule {
         .filter(round(expr("cosine_sim(av, bv)"), 6) >= 0.45)
         .select(col("a_id"), least(col("a_id"), col("b_id")).as("u"),
           greatest(col("a_id"), col("b_id")).as("v"))
-      Lsh.recall(tru, Lsh.bandedPairs(keyed, "vec_id"))
+      Lsh.recall(tru,
+        Lsh.bandedPairs(Tables.coPartition(keyed, col("band"), col("bkey")), "vec_id"))
     }),
 
     // G80: TOMBSTONE DELETE — the index-CRUD verb g71/g76/g78 leave open
@@ -912,11 +913,10 @@ object VectorQueries extends QueryModule {
     // wall; the IVF trainers g42/g71/g73 already standardize on 5).
     "g40_kmeans" -> ((s, dir) => {
       val t = Tables(s, dir)
-      val nPart = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
       // spread the per-row assignment kernel across cores: the fixture
       // parquet is one split, and the fit's HOF distance eval is CPU-bound
-      val base = t.embeddings.select(col("vec_id"), vd.as("x"))
-        .repartition(nPart).cache()
+      val base = Tables.coPartition(t.embeddings.select(col("vec_id"), vd.as("x")))
+        .cache()
       val (cents, _) = graft.plans.KMeans.fit(base, "vec_id", "x", 64, 8, 5)
       val (cid, dist) = graft.plans.KMeans.assignCols("x", cents)
       val out = base.select(col("vec_id"), cid.as("cluster"), dist.as("d2"))
@@ -944,11 +944,10 @@ object VectorQueries extends QueryModule {
     // asserted in VectorSpec.
     "g42_kmeans_dedup" -> ((s, dir) => {
       val t = Tables(s, dir)
-      val nPart = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
       // spread the per-row assignment kernel across cores: the fixture
       // parquet is one split, and the fit's HOF distance eval is CPU-bound
-      val base = t.embeddings.select(col("vec_id"), vd.as("x"))
-        .repartition(nPart).cache()
+      val base = Tables.coPartition(t.embeddings.select(col("vec_id"), vd.as("x")))
+        .cache()
       val (cents, _) = graft.plans.KMeans.fit(base, "vec_id", "x", 64, 8, 5)
       val bucketed = base
         .select(col("vec_id"), col("x"),
@@ -1260,10 +1259,8 @@ object VectorQueries extends QueryModule {
     // recall + ADC-identity invariants additionally live in VectorSpec.
     "g55_pq_adc_topk" -> ((s, dir) => {
       val t = Tables(s, dir)
-      val nPart = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
-      val base = withPqSubs(
-        t.embeddings.select(col("vec_id"), col("label"), vd.as("x")))
-        .repartition(nPart).cache()
+      val base = Tables.coPartition(withPqSubs(
+        t.embeddings.select(col("vec_id"), col("label"), vd.as("x")))).cache()
       val (codebooks, query) = pqTrain(base, t)
       // encode: nearest sub-centroid per subspace, all in one projection
       val codes = pqSubCols.zip(codebooks).map { case (sub, cb) =>

@@ -53,7 +53,7 @@ object GraftAsOfStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case j: AsOfJoin =>
       GraftAsOfJoinExec(j.leftKeys, j.rightKeys, j.leftOrder, j.rightOrder,
-        SQLConf.get.numShufflePartitions, planLater(j.left), planLater(j.right)) :: Nil
+        graft.Tables.partitionCount(SQLConf.get), planLater(j.left), planLater(j.right)) :: Nil
     case _ => Nil
   }
 }

@@ -146,12 +146,9 @@ object PowerIteration {
   def gramExact(xc: DataFrame, xcCol: String, d: Int): (Array[Double], Long) = {
     val spark = xc.sparkSession
     import spark.implicits._
-    // spread the d²-per-row kernel across every core: a small cached
-    // input often sits in ONE scan partition, which would serialize the
-    // whole fold (measured 30× on the sf0.1 fixture); the scaled-integer
-    // sums are merge-order independent, so the round-robin reshuffle is
-    // free of determinism risk and moves only n rows
-    val par = spark.sparkContext.defaultParallelism
+    // spread the d²-per-row kernel across every core (Tables.coPartition,
+    // round-robin); the scaled-integer sums are merge-order independent,
+    // so the reshuffle is free of determinism risk and moves only n rows
     // SYMMETRIC fold (r22, §1.2 don't compute what you throw away): C is
     // symmetric and scaled12(xi·xj) is literally the same call for (i,j)
     // and (j,i), so only the upper triangle (d(d+1)/2 products instead of
@@ -159,7 +156,7 @@ object PowerIteration {
     // digits — bit-for-bit the same matrix at ~half the per-row kernel and
     // half the partial-transfer bytes.
     val tri = d * (d + 1) / 2
-    val partials = xc.select(col(xcCol)).repartition(par).as[Seq[Double]]
+    val partials = graft.Tables.coPartition(xc.select(col(xcCol))).as[Seq[Double]]
       .mapPartitions { it =>
         val hi = new Array[Long](tri)
         val lo = new Array[Long](tri)

@@ -97,7 +97,7 @@ object GraftTopKStrategy extends SparkStrategy {
         case c                     => c
       }
       GraftTopKPerKeyExec(k, part, order, alias.toAttribute,
-        SQLConf.get.numShufflePartitions,
+        graft.Tables.partitionCount(SQLConf.get),
         SQLConf.get.getConfString(MaxBufferedRowsKey, "1000000").toLong,
         planLater(input)) :: Nil
     case _ => Nil

@@ -146,23 +146,36 @@ object Ann {
       .filter(col("rn") <= k)
 }
 
-/** Banded LSH candidate generation and its graded recall: any signature
-  * family, split into bands, keyed per band. */
+/** Blocked candidate pairs — banded LSH, the text near-duplicate join —
+  * and the graded recall of banded LSH. */
 object Lsh {
 
   /** Candidate pairs (u < v) of `keyed` (`id`, band, bkey) rows sharing a
-    * bucket in any band. Both sides repartition on the bucket to
-    * `spark.sql.shuffle.partitions` — a pinned count: per-bucket pair
-    * enumeration is quadratic in bucket size, which AQE's coalescing
-    * cannot see. */
-  def bandedPairs(keyed: DataFrame, id: String): DataFrame = {
-    val n = keyed.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    keyed.repartition(n, col("band"), col("bkey"))
-      .join(keyed.select(col(id).as("v"), col("band").as("band_b"),
-          col("bkey").as("bkey_b")).repartition(n, col("band_b"), col("bkey_b")),
+    * bucket in any band. Like [[textPairs]], the self-join adds no exchange
+    * of its own: a caller whose buckets can grow co-partitions `keyed` on
+    * (band, bkey) ([[Tables.coPartition]]), and both sides read that one
+    * shuffle. */
+  def bandedPairs(keyed: DataFrame, id: String): DataFrame =
+    keyed.join(keyed.select(col(id).as("v"), col("band").as("band_b"),
+          col("bkey").as("bkey_b")),
         col("band") === col("band_b") && col("bkey") === col("bkey_b") &&
           col(id) < col("v"))
       .select(col(id).as("u"), col("v")).distinct()
+
+  /** The text near-duplicate join: rows of `a` and `b`, both (id, blk, sh),
+    * in one block whose ids satisfy `pair` and whose shingle sets have
+    * Jaccard ≥ 0.4 → (a_id, b_id, jac). The join adds no exchange of its
+    * own: callers co-partition their sides on `blk` (or leave the planner
+    * to), so a persisted, pre-partitioned side is never re-shuffled. */
+  def textPairs(a: DataFrame, b: DataFrame,
+      pair: (Column, Column) => Column): DataFrame = {
+    def side(df: DataFrame, p: String) = df.select(col("id").as(s"${p}_id"),
+      col("blk").as(s"${p}_blk"), col("sh").as(s"${p}_sh"))
+    side(a, "a").join(side(b, "b"),
+        col("a_blk") === col("b_blk") && pair(col("a_id"), col("b_id")))
+      .withColumn("jac", graft.functions.TextFunctions.jaccard(col("a_sh"), col("b_sh")))
+      .filter(col("jac") >= 0.4)
+      .select(col("a_id"), col("b_id"), col("jac"))
   }
 
   /** Per-anchor recall of the candidates `cand` (u, v) against the exact

@@ -38,12 +38,15 @@ object BloomIndex {
     * DIFFERENT column than the indexed one — the realistic layout where the
     * index key is scattered across every file), and persist the per-file
     * Bloom index on `keyCol` alongside (`_bloomidx/`, underscore-hidden
-    * from table scans). Idempotent per target path: built through
-    * [[graft.Tables.staged]] on the input's row count.
+    * from table scans). Idempotent per target path and input: built
+    * through [[graft.Tables.staged]] on the content fingerprint of every
+    * column of the copy, so a regenerated same-count input rebuilds.
     */
   def writeIndexed(df: DataFrame, path: String, keyCol: String,
       layoutCol: String, nFiles: Int): Unit = {
-    graft.Tables.staged(path, df.count().toString) {
+    val fingerprint = graft.Tables.contentFingerprint(df, s"bloomidx:$path")(
+      to_json(struct(df.columns.toIndexedSeq.map(df.col): _*)))
+    graft.Tables.staged(path, fingerprint) {
       df.repartition(nFiles, col(layoutCol))
         .write.mode("overwrite").parquet(path)
       fileSketches(df.sparkSession, path, keyCol)

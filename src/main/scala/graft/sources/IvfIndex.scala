@@ -42,16 +42,10 @@ object IvfIndex {
   /** Row count + CRC sum over (vec_id, label, embedding) of an embeddings
     * frame. label rides along because the index CONTENT (cells, centroids,
     * postings partitioning) derives from it — any column the index depends
-    * on must change the fingerprint. The CRC job is memoized per session
-    * and source-file stamps ([[Tables.memoFingerprint]]). */
+    * on must change the fingerprint ([[Tables.contentFingerprint]]). */
   private[sources] def contentFingerprint(emb: DataFrame, tag: String): String =
-    Tables.memoFingerprint(emb, tag) {
-      val fpRow = emb.agg(count(lit(1)),
-        coalesce(sum(crc32(concat_ws(",", col("vec_id"), col("label"),
-          concat_ws(",", transform(col("embedding"), x => x.cast("string"))))
-          .cast("binary"))), lit(0L))).head()
-      s"${fpRow.getLong(0)}:${fpRow.getLong(1)}"
-    }
+    Tables.contentFingerprint(emb, tag)(concat_ws(",", col("vec_id"), col("label"),
+      concat_ws(",", transform(col("embedding"), x => x.cast("string")))))
 
   /** Build + persist (idempotent per content fingerprint). */
   def write(emb: DataFrame, path: String): Unit = {
@@ -206,12 +200,8 @@ object IvfIndex {
     * like m16's deletion vectors fold into a purge). Idempotent per
     * tombstone-set fingerprint. */
   def delete(ids: DataFrame, path: String): Unit = {
-    val fingerprint = Tables.memoFingerprint(ids, s"ivftomb:$path") {
-      val fpRow = ids.agg(count(lit(1)),
-        coalesce(sum(crc32(col("vec_id").cast("string").cast("binary"))),
-          lit(0L))).head()
-      s"${fpRow.getLong(0)}:${fpRow.getLong(1)}"
-    }
+    val fingerprint =
+      Tables.contentFingerprint(ids, s"ivftomb:$path")(col("vec_id").cast("string"))
     Tables.staged(s"$path/tombstones", fingerprint) {
       ids.select(col("vec_id").as("__dead_id"))
         .coalesce(1).write.mode("overwrite").parquet(s"$path/tombstones")

@@ -291,6 +291,15 @@ object SnapshotTable {
     if (Files.exists(p)) Some(text(p)) else None
   }
 
+  /** `root`'s latest version, after committing `df` as a new one when the
+    * latest commit's meta is not `meta` — a derived index kept fresh on its
+    * source's fingerprint (the commit meta). */
+  def readFresh(spark: SparkSession, root: String, meta: String)(
+      df: => DataFrame): DataFrame = {
+    if (!latestMeta(root).contains(meta)) commit(df, root, meta)
+    read(spark, root)
+  }
+
   /** Commit metadata of the CURRENT version (what LATEST points to). */
   def latestMeta(root: String): Option[String] =
     latestVersion(root).flatMap(versionMeta(root, _))

@@ -39,21 +39,13 @@ object ZoneMap {
     * spanning the whole domain.
     */
   def writeClustered(df: DataFrame, path: String, clusterCol: String, nFiles: Int): Unit = {
-    // the marker carries a content fingerprint, so a caller that regenerates
-    // the INPUT under the same target path gets a fresh clustered copy +
-    // zone map instead of silently reading the stale one; an unchanged input
-    // still skips the rewrite (one agg pass vs a full rewrite). Count alone
-    // is NOT content-sensitive — a regenerated same-cardinality input (the
-    // failure the sf10 gate caught on g49's shingle index) must also flip
-    // the marker, so the cluster column's crc32 sum rides along.
-    // CRC job memoized per (session, path, source-files size+mtime) — r22,
-    // see Tables.memoFingerprint
-    val fingerprint = graft.Tables.memoFingerprint(df, s"zonemap:$path") {
-      val fpRow = df.agg(count(lit(1)),
-        coalesce(sum(crc32(col(clusterCol).cast("string").cast("binary"))),
-          lit(0L))).head()
-      s"${fpRow.getLong(0)}:${fpRow.getLong(1)}"
-    }
+    // the marker carries a content fingerprint of the cluster column, so a
+    // caller that regenerates the INPUT under the same target path gets a
+    // fresh clustered copy + zone map instead of silently reading the stale
+    // one; an unchanged input still skips the rewrite (one agg pass vs a
+    // full rewrite)
+    val fingerprint = graft.Tables.contentFingerprint(df, s"zonemap:$path")(
+      col(clusterCol).cast("string"))
     graft.Tables.staged(path, fingerprint) {
       df.repartitionByRange(nFiles, col(clusterCol))
         .sortWithinPartitions(clusterCol)

@@ -778,6 +778,50 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("Window"), p)
   }
 
+  test("g2, g53, g2c, g30: the pinned pair-join exchanges keep every partition under AQE") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive._
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    // AQE coalesces a small shuffle's reads into ~1 partition; the pair
+    // joins' exchanges (Tables.coPartition) must stay at the session's 4
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val joinKeys = Seq(
+      "g2_dedup_near_jaccard" -> Seq(Set("blk")),
+      "g53_setsim_prefix" -> Seq(Set("tid"), Set("tidb")),
+      "g2c_dedup_simhash" -> Seq(Set("chunk", "cval")),
+      "g30_fuzzy_pairs" -> Seq(Set("pfx", "band", "tile", "salt")))
+    // every shuffle of a final adaptive plan, with the AQE read over it
+    def shuffles(p: SparkPlan, read: Option[AQEShuffleReadExec])
+        : Seq[(Option[AQEShuffleReadExec], ShuffleExchangeLike)] = p match {
+      case a: AdaptiveSparkPlanExec => shuffles(a.executedPlan, None)
+      case r: AQEShuffleReadExec => shuffles(r.child, Some(r))
+      case q: ShuffleQueryStageExec => (read -> q.shuffle) +: shuffles(q.shuffle.child, None)
+      case q: QueryStageExec => shuffles(q.plan, None)
+      case o => o.children.flatMap(shuffles(_, None))
+    }
+    joinKeys.foreach { case (name, keySets) =>
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      df.collect() // runs this plan, so AQE finalizes it
+      val plan = df.queryExecution.executedPlan
+      assert(plan.toString.contains("isFinalPlan=true"), plan)
+      val pinned = shuffles(plan, None).filter { case (_, e) =>
+        e.outputPartitioning match {
+          case h: HashPartitioning => keySets.contains(h.expressions.collect {
+            case a: Attribute => a.name }.toSet)
+          case _ => false
+        }
+      }
+      assert(pinned.nonEmpty, s"$name: no exchange on ${keySets.mkString(" / ")}:\n$plan")
+      pinned.foreach { case (read, e) =>
+        assert(e.numPartitions == 4, s"$name: ${e.numPartitions} partitions:\n$plan")
+        assert(read.forall(r => !r.isCoalescedRead && r.partitionSpecs.size == 4),
+          s"$name: AQE coalesced a pinned pair-join exchange:\n$plan")
+      }
+    }
+  }
+
   test("g49: delta dedup serves the existing side from the persisted snapshot index") {
     val df = SparkEntry.queries("g49_incremental_dedup")(spark, sfDir)
     df.count()

@@ -581,6 +581,39 @@ class WarehouseSpec extends AnyFunSuite {
     assert(got == want && got.nonEmpty)
   }
 
+  test("bloom index: an input regenerated in place with the same row count rebuilds the copy") {
+    import graft.sources.BloomIndex
+    val t = Tables(spark, sfDir)
+    val tmp = System.getProperty("java.io.tmpdir")
+    val src = s"$tmp/graft_bloom_regen_src_${Tables.pathKey(sfDir)}"
+    val bpath = s"$tmp/graft_bloom_regen_spec_${Tables.pathKey(sfDir)}"
+    Tables.rmrf(src); Tables.rmrf(bpath)
+    val keys = Seq("1", "7", "25")
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("o_orderkey").collect().map(_.getLong(0)).sorted.toSeq
+    // write `df` as the input, index it into the one path, look the keys up
+    def lookup(df: org.apache.spark.sql.DataFrame) = {
+      df.write.mode("overwrite").parquet(src)
+      BloomIndex.writeIndexed(spark.read.parquet(src), bpath, "o_custkey", "o_orderkey",
+        nFiles = 4)
+      ids(BloomIndex.prunedRead(spark, bpath, "o_custkey", keys))
+    }
+    val a = t.orders.select("o_orderkey", "o_custkey")
+    val b = a.withColumn("o_custkey", col("o_custkey") + 1) // same count, other rows
+    def truth(df: org.apache.spark.sql.DataFrame) =
+      ids(df.filter(col("o_custkey").isin(1L, 7L, 25L)))
+    assert(truth(a) != truth(b))
+    assert(lookup(a) == truth(a))
+    assert(lookup(b) == truth(b), "served the stale copy of the first input")
+    // another frame over the very same input files is another input too
+    BloomIndex.writeIndexed(
+      spark.read.parquet(src).withColumn("o_custkey", col("o_custkey") - 1),
+      bpath, "o_custkey", "o_orderkey", nFiles = 4)
+    assert(ids(BloomIndex.prunedRead(spark, bpath, "o_custkey", keys)) == truth(a),
+      "a second frame over the same files reused the first one's fingerprint")
+    Tables.rmrf(src); Tables.rmrf(bpath)
+  }
+
   test("deletion vectors: deletes never rewrite data files; reads equal the plain filter") {
     import graft.sources.{DeletionVectors, SnapshotTable}
     val t = Tables(spark, sfDir)

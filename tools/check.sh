@@ -16,8 +16,11 @@ shift 2>/dev/null || true
 # graft.sources.Ann. The snapshot-table layout (`_snapshots/`, the
 # per-version `data/v<N>` dirs) lives in graft.sources.SnapshotTable; the
 # only other spellings are the two lines where m23 and m24 plant graded
-# crash debris, marked `// graded crash debris`. Fail fast when a copy
-# grows back elsewhere.
+# crash debris, marked `// graded crash debris`. The session's
+# shuffle-partition count is read only by graft.Tables (coPartition and
+# partitionCount; session builders' `.config(...)` and startStream's conf
+# are writes), and the near-duplicate block key is spelled only in
+# graft.functions.TextFunctions. Fail fast when a copy grows back elsewhere.
 owned() { grep -rnE "$1" src/main --include='*.scala' | grep -vE "^src/main/scala/graft/($2):" || true; }
 strays="$(owned 'def rmrf\b|System\.identityHashCode' Tables.scala
   owned 'createOrReplaceTempFunction' GraftExtensions.scala
@@ -28,6 +31,9 @@ strays="$(owned 'def rmrf\b|System\.identityHashCode' Tables.scala
   owned 'newSession\(\)' ''
   owned 'def (dotd|round6|topCells|queryVec)\b|cosine_sim\(transform\(embedding' \
     sources/Ann.scala
+  owned 'conf\.get\("spark\.sql\.shuffle\.partitions"|numShufflePartitions|defaultParallelism' \
+    Tables.scala
+  owned 'substring\(lower\(col\("text"\)\), 1, 40\)' functions/TextFunctions.scala
   owned '"_snapshots"|data/v[$0-9(]|"data", "v' sources/SnapshotTable.scala |
     grep -vE '^src/main/scala/graft/operators/WarehouseQueries.scala:[0-9]+:.*// graded crash debris$' || true)"
 if [ -n "$strays" ]; then
