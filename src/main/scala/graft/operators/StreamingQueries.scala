@@ -846,7 +846,7 @@ object StreamingQueries extends QueryModule {
       // standard serving posture (i24 pins its index the same way); at
       // 100 TB this is the warm block-partitioned index executors hold.
       val existing = Tables.coPartition(
-        SnapshotTable.readVersion(s, idxRoot, pinned), col("e_blk")).persist()
+        SnapshotTable.read(s, idxRoot, pinned), col("e_blk")).persist()
       // a micro-batch frame lives on the stream's session, whose shuffle
       // partitions are the stream's (startStream): the delta side takes
       // this session's count, so it lands in the index's partitions
@@ -952,9 +952,10 @@ object StreamingQueries extends QueryModule {
     // cannot be retracted), so a pipeline following a table through
     // UPDATE/DELETE/MERGE needs the source to serve ROW-LEVEL CHANGES
     // instead of rows. Composes the two halves the engine already proves:
-    // the version-offset table stream (i29) and the m42 `changesBetween`
-    // kernel — each streamed version serves its own change set tagged
-    // `_change_type`/`_n`/`_commit_version`, so appends stay O(delta)
+    // the version-offset table stream (i29) and the m42 change feed
+    // (`SnapshotTable.changes`) — each streamed version serves its own
+    // change set tagged `_change_type`/`_n`/`_commit_version`, so appends
+    // stay O(delta)
     // (delta files only), a rewrite emits its grouped multiset diff, and
     // the union ledger is independent of how versions pack into
     // micro-batches — which is what licenses the FULL VALUE ORACLE across

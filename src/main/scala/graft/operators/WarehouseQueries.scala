@@ -150,8 +150,8 @@ object WarehouseQueries extends QueryModule {
       def summarize(df: org.apache.spark.sql.DataFrame, v: Int) =
         df.agg(count(lit(1)).as("n_rows"), Tables.dsum(col("o_totalprice")).as("rev"))
           .select(lit(v).as("version"), col("n_rows"), round(col("rev"), 6).as("revenue"))
-      summarize(SnapshotTable.readVersion(s, root, 1), 1)
-        .unionByName(summarize(SnapshotTable.readVersion(s, root, 2), 2))
+      summarize(SnapshotTable.read(s, root, 1), 1)
+        .unionByName(summarize(SnapshotTable.read(s, root, 2), 2))
         .orderBy("version")
     }),
 
@@ -176,7 +176,7 @@ object WarehouseQueries extends QueryModule {
       def summarize(df: org.apache.spark.sql.DataFrame, v: Int) =
         df.agg(count(lit(1)).as("n_rows"), Tables.dsum(col("o_totalprice")).as("rev"))
           .select(lit(v).as("version"), col("n_rows"), round(col("rev"), 6).as("revenue"))
-      (1 to 3).map(v => summarize(SnapshotTable.readVersion(s, root, v), v))
+      (1 to 3).map(v => summarize(SnapshotTable.read(s, root, v), v))
         .reduce(_ unionByName _).orderBy("version")
     }),
 
@@ -202,7 +202,7 @@ object WarehouseQueries extends QueryModule {
       SnapshotTable.commit(SnapshotTable.read(s, root).repartition(2), root,
         meta = "compact")
       def summarize(v: Long, tag: String) =
-        SnapshotTable.readVersion(s, root, v)
+        SnapshotTable.read(s, root, v)
           .agg(count(lit(1)).as("n_rows"), Tables.dsum(col("o_totalprice")).as("rev"))
           .select(lit(tag).as("phase"), col("n_rows"), round(col("rev"), 6).as("revenue"))
       summarize(4, "pre").unionByName(summarize(5, "post")).orderBy("phase")
@@ -340,7 +340,7 @@ object WarehouseQueries extends QueryModule {
         df.filter(col("o_totalprice") <= 0 || col("o_orderkey").isNull).count() == 0
       def stageAndAudit(batch: org.apache.spark.sql.DataFrame): (Long, Boolean) = {
         val v = SnapshotTable.prepare(base.unionByName(batch), root)
-        val ok = audit(SnapshotTable.readVersion(s, root, v))
+        val ok = audit(SnapshotTable.read(s, root, v))
         if (ok) SnapshotTable.swap(root, v)
         (v, ok)
       }
@@ -419,7 +419,7 @@ object WarehouseQueries extends QueryModule {
       }
       def probe(asOf: String) = {
         val v = resolve(asOf)
-        SnapshotTable.readVersion(s, root, v)
+        SnapshotTable.read(s, root, v)
           .agg(count(lit(1)).as("n_rows"),
             floor(sum(col("o_totalprice").cast(Tables.dec))).cast("long").as("revenue"))
           .select(lit(asOf).as("as_of"), lit(v).as("version"),
@@ -596,14 +596,15 @@ object WarehouseQueries extends QueryModule {
 
     // M19: RENAME / WIDEN / DROP schema evolution via manifest-recorded
     // COLUMN IDENTITY (Iceberg-style field ids, sources/SnapshotTable
-    // commitEvo/appendEvo/readEvo) — the evolution verbs m18's footer-union
-    // cannot express, because a renamed column looks like drop+add without
-    // an id. Four generations share one table: v1 writes (status STRING,
-    // price INT, note STRING); v2 RENAMES status→order_status; v3 WIDENS
-    // price INT→BIGINT; v4 DROPS note. No generation's files are ever
-    // rewritten (WarehouseSpec pins v1's files byte-identical and their
-    // footers still carrying the OLD physical name and int32 type) — the
-    // evolved read maps every generation to the current schema by field id.
+    // commitEvo/appendEvo) — the evolution verbs m18's footer-union cannot
+    // express, because a renamed column looks like drop+add without an id.
+    // Four generations share one table: v1 writes (status STRING, price
+    // INT, note STRING); v2 RENAMES status→order_status; v3 WIDENS price
+    // INT→BIGINT; v4 DROPS note. No generation's files are ever rewritten
+    // (WarehouseSpec pins v1's files byte-identical and their footers still
+    // carrying the OLD physical name and int32 type) — SnapshotTable.read
+    // sees the schema sidecar and maps every generation to the current
+    // schema by field id.
     // Oracle: the logical content is generation-independent, so DuckDB
     // recomputes it straight from the raw table.
     "m19_schema_evo_rename_widen" -> ((s, dir) => {
@@ -636,7 +637,7 @@ object WarehouseQueries extends QueryModule {
           floor(col("o_totalprice")).cast("bigint").as("price")),
         root, Seq(key, EvoField(2, "order_status", "string"),
           EvoField(3, "price", "bigint")))
-      SnapshotTable.readEvo(s, root)
+      SnapshotTable.read(s, root)
         .groupBy((col("o_orderkey") % 4).as("gen"), col("order_status"))
         .agg(count(lit(1)).as("n"), sum(col("price")).as("price_sum"))
         .orderBy("gen", "order_status")
@@ -758,7 +759,7 @@ object WarehouseQueries extends QueryModule {
           .select(lit(tag).as("side"), col("n_rows"), col("revenue"))
       ledger(SnapshotTable.read(s, src), "source")
         .unionByName(ledger(SnapshotTable.read(s, dst), "clone"))
-        .unionByName(ledger(SnapshotTable.readVersion(s, dst, cv), "clone_v1"))
+        .unionByName(ledger(SnapshotTable.read(s, dst, cv), "clone_v1"))
         .orderBy("side")
     }),
 
@@ -892,7 +893,7 @@ object WarehouseQueries extends QueryModule {
       // the incident: a full-table overwrite that silently dropped rows
       SnapshotTable.commit(slice(0).filter(col("o_orderkey") % 10 < 5), root)
       val nv = SnapshotTable.rollbackTo(root, 2L)
-      val badRows = SnapshotTable.readVersion(s, root, 3L).count()
+      val badRows = SnapshotTable.read(s, root, 3L).count()
       SnapshotTable.read(s, root)
         .groupBy((col("o_orderkey") % 10).as("bucket"))
         .agg(count(lit(1)).as("n"), Tables.dsum(col("o_totalprice")).as("rev"))
@@ -1920,7 +1921,7 @@ object WarehouseQueries extends QueryModule {
   def m25Read(s: org.apache.spark.sql.SparkSession, root: String): org.apache.spark.sql.DataFrame = {
     val legs = SnapshotTable.partitionedGenerations(root).map { case (_, spec, fs, base) =>
       val df = s.read.option("basePath", base)
-        .parquet(fs.map(SnapshotTable.resolveEntry(root, _)): _*)
+        .parquet(fs.map(SnapshotTable.resolveEntry(root, _)): _*) // partitioned-generation read
       // the hidden-partitioning translation: the same data predicate,
       // projected onto whatever partition columns THIS generation has
       val pruned = spec match {

@@ -120,10 +120,10 @@ private[plans] object FileGranularDml {
     val files = SnapshotTable.manifestFiles(root, latest)
     // physical path (as input_file_name reports it, URI-decoded) → entry
     val byPath = files.map { f =>
-      val abs = SnapshotTable.resolveEntry(root, f)
+      val abs = SnapshotTable.resolveEntry(root, f) // scan path of an entry, no read
       java.nio.file.Paths.get(abs).toAbsolutePath.normalize.toString -> f
     }.toMap
-    val filtered = SnapshotTable.readCurrent(spark, root)
+    val filtered = SnapshotTable.read(spark, root)
       .withColumn("__graft_file", input_file_name())
       .filter(coalesce(pred, lit(false)))
     // the predicate evaluates twice (discovery, then the rewrite) — for a
@@ -167,7 +167,7 @@ case class GraftUpdateCommand(root: String, assigns: Seq[(String, String)],
     AttributeReference("n_updated", LongType, nullable = false)())
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val t = SnapshotTable.readCurrent(spark, root)
+    val t = SnapshotTable.read(spark, root)
     val pred = whereSql.map(expr).getOrElse(lit(true))
     val byName = assigns.map { case (c, e) => c.toLowerCase -> e }.toMap
     require(byName.size == assigns.size, "UPDATE: duplicate SET column")
@@ -180,7 +180,8 @@ case class GraftUpdateCommand(root: String, assigns: Seq[(String, String)],
       val v = SnapshotTable.commitFiles(root, carry, meta = "update:0")
       return Seq(Row(v, 0L))
     }
-    val updated = SnapshotTable.readFilesCurrent(spark, root, touched)
+    val updated = SnapshotTable.readFiles(spark, root, touched,
+      SnapshotTable.currentVersion(root))
       .select(t.schema.fields.map { f =>
         byName.get(f.name.toLowerCase) match {
           // cast back to the stored type so a widened assignment expression
@@ -218,7 +219,8 @@ case class GraftDeleteCommand(root: String, whereSql: Option[String])
       val v = SnapshotTable.commitFiles(root, carry, meta = "delete:0")
       return Seq(Row(v, 0L))
     }
-    val kept = SnapshotTable.readFilesCurrent(spark, root, touched)
+    val kept = SnapshotTable.readFiles(spark, root, touched,
+      SnapshotTable.currentVersion(root))
       .filter(!coalesce(pred, lit(false)))
     // a delete that empties the table still needs a manifest: commitFiles
     // refuses empty ones, so the rewrite side writes even a 0-row file set
@@ -262,7 +264,7 @@ private[plans] object GraftKeyedAppendGuard {
             .getOrElse("")}; appending it would corrupt the keyed change feed")
       if (spark.conf.get("spark.graft.validateKeyOnAppend", "false").toBoolean) {
         // column-pruned: only the key columns of the current table are read
-        val probe = SnapshotTable.readCurrent(spark, root)
+        val probe = SnapshotTable.read(spark, root)
           .select(keyNames.map(c => col(c).as(s"__e_$c")): _*)
         val cond = keyNames.map(c => col(c) <=> col(s"__e_$c")).reduce(_ && _)
         val hit = staged.join(probe, cond, "inner").limit(1).collect()
@@ -289,7 +291,7 @@ case class GraftInsertCommand(root: String, cols: Seq[String],
     AttributeReference("n_inserted", LongType, nullable = false)())
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val t = SnapshotTable.readCurrent(spark, root)
+    val t = SnapshotTable.read(spark, root)
     val fields = t.schema.fields.toSeq
     val src = spark.sql(sourceSql)
     val names = if (cols.isEmpty) fields.map(_.name) else cols
@@ -353,7 +355,7 @@ case class GraftDescribeDetailCommand(root: String) extends LeafRunnableCommand 
     // sidecar-first with foreign (shallow-clone) entries resolved — the
     // same resolution the commit path uses
     val sized = SnapshotTable.currentSizes(root)
-    val nCols = SnapshotTable.readCurrent(spark, root).schema.fields.length
+    val nCols = SnapshotTable.read(spark, root).schema.fields.length
     Seq(Row(v, sized.size.toLong, sized.map(_._2).sum, nCols.toLong))
   }
 }
@@ -460,14 +462,8 @@ case class GraftOptimizeCommand(root: String, smallerThan: Option[Long],
     if (rewrite.isEmpty)
       return Seq(Row(latest, files.size.toLong, 0L, files.size.toLong))
     // an EVOLVED table's files span schema generations (renamed/widened
-    // columns under old physical names) — a plain multi-file read would
-    // infer one footer's schema and silently corrupt the others' columns;
-    // resolve each generation by field id, exactly like the read path
-    val df =
-      if (SnapshotTable.hasEvoSchema(root))
-        SnapshotTable.readFilesEvo(spark, root, rewrite,
-          SnapshotTable.ensureEvoSchema(spark, root))
-      else SnapshotTable.readFiles(spark, root, rewrite)
+    // columns under old physical names): readFiles resolves each by field id
+    val df = SnapshotTable.readFiles(spark, root, rewrite, latest)
     val packed =
       if (zorderCols.isEmpty) df.repartition(targetFiles)
       else {
@@ -519,7 +515,7 @@ case class GraftCopyIntoCommand(root: String, fromDir: String)
     val fresh = candidates.filterNot(loaded)
     val latest = SnapshotTable.currentVersion(root)
     if (fresh.isEmpty) return Seq(Row(latest, 0L, 0L))
-    val target = SnapshotTable.readCurrent(spark, root)
+    val target = SnapshotTable.read(spark, root)
     // SCHEMA ENFORCEMENT (the Databricks COPY INTO contract): each fresh
     // file's footer schema must carry exactly the target's columns with
     // upcastable types — a drifted landing file (renamed/missing column,
@@ -648,7 +644,7 @@ case class GraftRestoreCommand(root: String, toVersion: Long)
   override def run(spark: SparkSession): Seq[Row] = {
     val v = SnapshotTable.rollbackTo(root, toVersion)
     // footer-count of the restored snapshot: row-group metadata only
-    val n = SnapshotTable.readCurrent(spark, root).count()
+    val n = SnapshotTable.read(spark, root).count()
     Seq(Row(v, n))
   }
 }
@@ -851,7 +847,7 @@ case class GraftMergeCommand(root: String, sourceSql: String, key: String,
     AttributeReference("n_rows", LongType, nullable = false)())
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val target = SnapshotTable.readCurrent(spark, root)
+    val target = SnapshotTable.read(spark, root)
     val src = spark.sql(sourceSql)
     val ch = deleteWhen match {
       case Some((opc, del)) =>
@@ -913,7 +909,7 @@ case class GraftMergeColsCommand(root: String, sourceSql: String,
 
   override def run(spark: SparkSession): Seq[Row] = {
     import org.apache.spark.sql.expressions.Window
-    val target = SnapshotTable.readCurrent(spark, root)
+    val target = SnapshotTable.read(spark, root)
     val srcRaw = spark.sql(sourceSql)
     val srcCols = srcRaw.columns.toSeq
     keys.foreach { k =>
@@ -1735,9 +1731,7 @@ object GraftSqlParser {
           out = cPat.replaceAllIn(out, m => {
             val (v1, v2) = (m.group(1).toLong, m.group(2).toLong)
             val view = s"__graft_changes_${name}_v${v1}_v$v2"
-            (if (SnapshotTable.keyedFeedApplies(root, v1))
-              SnapshotTable.keyedChangesBetween(session, root, v1, v2)
-            else SnapshotTable.changesBetween(session, root, v1, v2))
+            SnapshotTable.changes(session, root, v1, v2)
               .createOrReplaceTempView(view)
             view
           })
@@ -1747,14 +1741,14 @@ object GraftSqlParser {
             val v = m.group(1).toLong
             val view = s"__graft_snap_${name}_v$v"
             // evolution-aware: the schema resolves as of THAT version
-            SnapshotTable.readVersionCurrent(session, root, v)
+            SnapshotTable.read(session, root, v)
               .createOrReplaceTempView(view)
             view
           })
           val bPat = ("(?i)\\b" + Regex.quote(name) + "\\b").r
           if (bPat.findFirstIn(out).isDefined) {
             val view = s"__graft_snap_${name}_latest"
-            SnapshotTable.readCurrent(session, root)
+            SnapshotTable.read(session, root)
               .createOrReplaceTempView(view)
             out = bPat.replaceAllIn(out, view)
           }

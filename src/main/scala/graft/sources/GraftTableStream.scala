@@ -31,7 +31,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructType}
   *    batches carry ROW-LEVEL CHANGES instead of raw rows — the table's
   *    columns plus `_change_type` ('insert'/'delete'), `_n` (multiset
   *    multiplicity) and `_commit_version` — served PER VERSION via
-  *    [[SnapshotTable.changesBetween]], so appends still cost O(delta)
+  *    [[SnapshotTable.changes]], so appends still cost O(delta)
   *    while rewrites emit their multiset diff instead of refusing: a
   *    downstream pipeline follows the table through UPDATE/DELETE/MERGE.
   *    Because every version's changes are tagged with that version, the
@@ -96,7 +96,7 @@ class GraftTableStream extends StreamSourceProvider with DataSourceRegister {
   override def sourceSchema(ctx: SQLContext, schema: Option[StructType],
       providerName: String, parameters: Map[String, String]): (String, StructType) = {
     val base = schema.getOrElse(
-      SnapshotTable.readCurrent(ctx.sparkSession, root(parameters)).schema)
+      SnapshotTable.read(ctx.sparkSession, root(parameters)).schema)
     (s"graft_table(${root(parameters)})",
       if (isCdf(parameters)) cdfSchema(base) else base)
   }
@@ -245,8 +245,8 @@ private[sources] class GraftTableStreamSource(ctx: SQLContext, root: String,
       lazy val sameShape = (pinGen, curGen) match {
         case (Some(a), Some(b)) => a == b
         case (None, None) => pin == latest ||
-          SnapshotTable.readVersionCurrent(spark, root, pin).schema ==
-            SnapshotTable.readVersionCurrent(spark, root, latest).schema
+          SnapshotTable.read(spark, root, pin).schema ==
+            SnapshotTable.read(spark, root, latest).schema
         case _ => false
       }
       if (sameShape) pin
@@ -281,7 +281,7 @@ private[sources] class GraftTableStreamSource(ctx: SQLContext, root: String,
   private val startSchemaGen = SnapshotTable.schemaAt(root, pinnedVersion)
 
   private val baseSchema: StructType =
-    SnapshotTable.readVersionCurrent(spark, root, pinnedVersion).schema
+    SnapshotTable.read(spark, root, pinnedVersion).schema
 
   override val schema: StructType =
     if (cdf) baseSchema.add("_change_type", StringType).add("_n", LongType)
@@ -340,28 +340,17 @@ private[sources] class GraftTableStreamSource(ctx: SQLContext, root: String,
     throw new UnsupportedOperationException(
       "graft table stream: latestOffset(Offset, ReadLimit) drives this source")
 
-  /** Whether version `v`'s window streams KEYED changes (m43): the table
-    * declared a key AND the window start (v-1) is at-or-after the version
-    * the key was VALIDATED against — pre-declaration windows may hold
-    * duplicate keys and take the keyless multiset diff instead (same
-    * columns, so the sink schema is identical either way). Resolved
-    * per-version so a key declared MID-history routes each side correctly. */
-  private def keyed(v: Long): Boolean =
-    SnapshotTable.keyedFeedApplies(root, v - 1)
-
   /** One version's row-level changes under the CDF contract: (v-1, v]
-    * through [[SnapshotTable.keyedChangesBetween]] /
-    * [[SnapshotTable.changesBetween]] (both treat v1 = 0 as the empty
-    * table, so version 1 is the table's birth — every row an insert) —
-    * O(delta) on append lineage, a diff only across rewrites. Tagged with
-    * the commit version so the union ledger is
-    * micro-batch-packing-independent. */
+    * through [[SnapshotTable.changes]] (v1 = 0 is the empty table, so
+    * version 1 is the table's birth — every row an insert), which picks
+    * the keyed kernel per version once the key's validation version is
+    * reached (same columns either way) — O(delta) on append lineage, a diff
+    * only across rewrites. Tagged with the commit version so the union
+    * ledger is micro-batch-packing-independent. */
   private def versionChanges(v: Long): DataFrame = {
     val gen = SnapshotTable.schemaAt(root, v)
     val cols = baseSchema.fieldNames.toSeq
-    val raw =
-      if (keyed(v)) SnapshotTable.keyedChangesBetween(spark, root, v - 1, v)
-      else SnapshotTable.changesBetween(spark, root, v - 1, v)
+    val raw = SnapshotTable.changes(spark, root, v - 1, v)
     val base =
       if (gen == startSchemaGen) raw
       else {
@@ -413,49 +402,25 @@ private[sources] class GraftTableStreamSource(ctx: SQLContext, root: String,
           .getOrElse(spark.createDataFrame(
             new java.util.ArrayList[org.apache.spark.sql.Row](), schema))
       } else {
-        val f1 =
-          if (v1 == 0L) Seq.empty[String]
-          else SnapshotTable.manifestFiles(root, v1)
-        val f2 = SnapshotTable.manifestFiles(root, v2)
-        require(f1.toSet.subsetOf(f2.toSet),
-          s"graft table stream: versions ($v1, $v2] of $root are not " +
-            "append-only — a rewrite (UPDATE/DELETE/MERGE/OPTIMIZE) cannot " +
-            "stream as a row feed (already-emitted rows cannot be " +
-            "retracted); use option(\"readChangeFeed\", \"true\") to follow " +
-            "rewrites as row-level changes, or restart from the rewritten " +
-            "version with startingVersion")
-        val delta = f2.filterNot(f1.toSet)
         // every delta file must have been written under THE STREAM'S schema:
         // an ALTER TABLE mid-stream (or a pre-evolution generation reached by
         // startingVersion 0) would otherwise be force-read under the wrong
-        // names and silently NULL-fill renamed columns
-        delta.foreach { f =>
-          require(SnapshotTable.schemaAt(root, SnapshotTable.entryGeneration(f)) ==
-              startSchemaGen,
-            s"graft table stream: file $f of $root was written under a " +
-              "different schema than the stream started with — a stream " +
-              "cannot re-shape emitted rows; restart it (startingVersion) " +
-              "after the schema change")
-        }
-        // PLAIN table (no field-id metadata): the generation check above
-        // is vacuous (None == None), so a reshaped append must be caught
-        // from the delta FOOTERS — a forced-schema read would silently
-        // NULL-fill renamed/missing columns into emitted rows
-        if (startSchemaGen.isEmpty && delta.nonEmpty) {
-          val ft = spark.read.option("mergeSchema", "true")
-            .parquet(delta.map(SnapshotTable.resolveEntry(root, _)): _*)
-            .schema.fields.map(f => f.name -> f.dataType).toMap
-          val want = baseSchema.fields.map(f => f.name -> f.dataType).toMap
-          require(ft == want,
-            s"graft table stream: versions ($v1, $v2] of $root carry files " +
-              "whose physical schema differs from the stream's — the table " +
-              "was reshaped without field-id evolution metadata; restart " +
-              "with a fresh checkpoint past the schema change")
-        }
-        if (delta.isEmpty) spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-        else spark.read.schema(schema).parquet(
-          delta.map(SnapshotTable.resolveEntry(root, _)): _*)
+        // names and silently NULL-fill renamed columns into emitted rows
+        SnapshotTable.appendedRows(spark, root, v1, v2, schema, startSchemaGen,
+          s"graft table stream: versions ($v1, $v2] of $root carry files " +
+            "whose physical schema differs from the stream's — the table " +
+            "was reshaped without field-id evolution metadata; restart " +
+            "with a fresh checkpoint past the schema change")
+          .getOrElse(throw new IllegalArgumentException(
+            s"graft table stream: versions ($v1, $v2] of $root are not " +
+              "append-only under the stream's schema — a rewrite " +
+              "(UPDATE/DELETE/MERGE/OPTIMIZE) cannot stream as a row feed " +
+              "(already-emitted rows cannot be retracted), nor can files " +
+              "written under a different schema than the stream started " +
+              "with (a stream cannot re-shape emitted rows); use " +
+              "option(\"readChangeFeed\", \"true\") to follow rewrites as " +
+              "row-level changes, or restart past the rewrite or the schema " +
+              "change with startingVersion"))
       }
     org.apache.spark.sql.classic.GraftSqlBridge.streamingDf(
       spark, batch.queryExecution.toRdd, schema)

@@ -5,7 +5,8 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Manifest-based transactional table — the commit layer under the
   * warehouse band, the SQL DML surface, the exactly-once streaming sinks and
@@ -44,8 +45,22 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * version and costs only disk space ([[removeOrphans]] reclaims it); the
   * metadata of N becomes visible through the same rename as its data, so
   * an exactly-once sink gets data and applied-marker as one event. Old
-  * manifests stay readable — time travel is [[readVersion]] on an older N
-  * — until [[expire]] removes them.
+  * manifests stay readable — time travel is [[read]] of an older N — until
+  * [[expire]] removes them.
+  *
+  * Reads. Three entry points, and the table's own metadata picks the
+  * kernel behind each; no caller branches on table kind. [[read]] of a
+  * version and [[readFiles]] of a manifest subset resolve each file
+  * generation BY FIELD ID when a schema sidecar is in effect at that
+  * version (evolved tables, uncached), and read the files flat otherwise
+  * (plain tables, the flat version read cached by [[cachedScan]]).
+  * [[changes]] between two versions is KEYED when a key is declared and the
+  * window starts at or after the version it was validated at, keyless
+  * otherwise; a window whose ends sit under different sidecars splits at
+  * each schema change and projects to the end's schema by field id (a keyed
+  * window from the table's birth, v1 = 0, does not split). Append lineage
+  * costs O(delta) in both feeds and in the table stream's row feed, all
+  * through [[appendedRows]].
   *
   * Two commit disciplines; a table's writers pick one. Plain commits are
   * last-writer-wins on LATEST (single-writer pipelines, streaming sinks).
@@ -603,8 +618,8 @@ object SnapshotTable {
     * vacuum — production formats track this with a retention lease; the
     * fixture discipline is that a cloned source outlives its clones).
     * Shallow clones cover PLAIN tables; field-id-evolved tables need a
-    * deep clone (readEvo refuses foreign entries — its generation numbers
-    * and schema sidecars are root-local). Returns the clone's committed
+    * deep clone ([[read]] refuses their foreign entries — generation
+    * numbers and schema sidecars are root-local). Returns the clone's committed
     * version (1). */
   def cloneFrom(srcRoot: String, dstRoot: String): Long = {
     val sv = currentVersion(srcRoot)
@@ -616,13 +631,6 @@ object SnapshotTable {
       knownSizes = fileSizes(srcRoot, sv).map { case (f, n) =>
         src.resolve(f).toString -> n }))
   }
-
-  /** Read a subset of manifest entries (foreign shallow-clone entries
-    * resolved) under one uniform physical schema — the non-evolved
-    * maintenance read. */
-  def readFiles(spark: SparkSession, root: String,
-      files: Seq[String]): DataFrame =
-    spark.read.parquet(files.map(resolveEntry(root, _)): _*)
 
   /** Current-version manifest sizes with foreign entries resolved — the
     * DESCRIBE DETAIL read: sidecar first, one stat per missing entry. */
@@ -653,31 +661,64 @@ object SnapshotTable {
     }
   }
 
-  /** Read a SUBSET of an evolved table's files, each generation resolved
-    * to `current` by field id (the readEvo projection restricted to a file
-    * list) — what OPTIMIZE needs to rewrite mixed-generation files without
-    * corrupting renamed/widened columns. */
-  def readFilesEvo(spark: SparkSession, root: String,
-      files: Seq[String], current: Seq[EvoField]): DataFrame =
-    files.groupBy(entryGeneration).toSeq.sortBy(_._1).map { case (w, fs) =>
-      spark.read.parquet(fs.map(resolveEntry(root, _)): _*)
-        .select(byFieldId(schemaAt(root, w).getOrElse(current), current): _*)
-    }.reduce(_.unionByName(_))
+  /** Manifest entries read under the field-id schema `evo` — every file
+    * generation under ITS OWN physical schema (the sidecar in effect at its
+    * write version), resolved to `evo` by field id: renamed columns come
+    * back under their new name, narrower generations upcast to the widened
+    * type, dropped columns vanish, later-added columns null-fill. One scan
+    * per schema GENERATION (bounded by the number of schema changes, never
+    * by file count), unioned by name — at 100 TB a handful of parquet scans
+    * with per-scan projections, no data rewrite ever. Without `evo` (a
+    * plain table) one flat parquet read, foreign entries resolved. */
+  private def scan(spark: SparkSession, root: String, files: Seq[String],
+      evo: Option[Seq[EvoField]]): DataFrame = evo match {
+    case None => spark.read.parquet(files.map(resolveEntry(root, _)): _*)
+    case Some(target) =>
+      files.groupBy(entryGeneration).toSeq.sortBy(_._1).map { case (w, fs) =>
+        spark.read.parquet(fs.map(resolveEntry(root, _)): _*)
+          .select(byFieldId(schemaAt(root, w).getOrElse(target), target): _*)
+      }.reduce(_.unionByName(_))
+  }
 
-  /** Read a specific committed (or prepared) version — time travel. */
-  def readVersion(spark: SparkSession, root: String, v: Long): DataFrame = {
+  /** A subset of manifest entries under the schema in effect at version
+    * `asOf` — by field id on an evolved table, flat on a plain one. What
+    * file-granular DML and OPTIMIZE rewrite (mixed-generation files without
+    * corrupting renamed/widened columns) and the keyed feed diffs. */
+  def readFiles(spark: SparkSession, root: String, files: Seq[String],
+      asOf: Long): DataFrame =
+    scan(spark, root, files, schemaAt(root, asOf))
+
+  /** Committed (or prepared) version `v` — time travel. With a schema
+    * sidecar in effect at `v` the manifest AND the schema resolve as of
+    * `v`, so a read of a pre-rename version comes back under the old column
+    * name (what `VERSION AS OF` means on an evolving table); a plain
+    * version's analyzed scan is cached. */
+  def read(spark: SparkSession, root: String, v: Long): DataFrame = {
     val bytes = manifestBytes(root, v)
-    cachedScan(spark, root, "flat", v, bytes) {
-      val entries = lines(new String(bytes, UTF_8))
-      // a PARTITIONED generation stores its partition columns in directory
-      // names, not file footers — a flat file-list read would silently DROP
-      // those columns (and a DML rewrite would then commit the loss). Refuse
-      // loudly; the generation-aware reader owns this layout.
-      require(!entries.exists(_.matches(".*/[^/]+=[^/]*/.*")),
-        s"snapshot v$v at $root has partitioned-generation data files — " +
-          "read via partitionedGenerations (the per-generation spec decides " +
-          "the partition columns; a flat file read would silently drop them)")
-      spark.read.parquet(entries.map(resolveEntry(root, _)): _*)
+    val files = lines(new String(bytes, UTF_8))
+    val evo = schemaAt(root, v)
+    // a PARTITIONED generation stores its partition columns in directory
+    // names, not file footers — a flat file-list read would silently DROP
+    // those columns (and a DML rewrite would then commit the loss). Refuse
+    // loudly; the generation-aware reader owns this layout.
+    require(!files.exists(_.matches(".*/[^/]+=[^/]*/.*")),
+      s"snapshot v$v at $root has partitioned-generation data files — " +
+        (if (evo.isDefined) "field-id evolution does not compose with " +
+          "partition-spec layouts"
+        else "read via partitionedGenerations (the per-generation spec " +
+          "decides the partition columns; a flat file read would silently " +
+          "drop them)"))
+    if (evo.isEmpty) cachedScan(spark, root, "flat", v, bytes)(scan(spark, root, files, evo))
+    else {
+      // field-id evolution keys the physical schema on THIS table's version
+      // number in each entry's path, and the sidecars live under THIS root —
+      // a shallow clone's foreign entries would resolve generation numbers
+      // against the SOURCE's history. Evolution across a clone needs a deep
+      // clone (or sidecar copy); refuse loudly rather than mis-resolve.
+      require(!files.exists(f => Paths.get(f).isAbsolute),
+        s"snapshot v$v at $root has foreign (cloned) manifest entries — " +
+          "field-id evolution does not compose with shallow clones")
+      scan(spark, root, files, evo)
     }
   }
 
@@ -694,7 +735,7 @@ object SnapshotTable {
   def readEvolved(spark: SparkSession, root: String): DataFrame = {
     val v = currentVersion(root)
     val bytes = manifestBytes(root, v)
-    // cached like readVersion — mergeSchema additionally prices a
+    // cached like a flat read — mergeSchema additionally prices a
     // distributed footer-union job per call, so the resolution saving is
     // even larger here (the add-column CHANGES feeds re-read per sub-window)
     cachedScan(spark, root, "merged", v, bytes) {
@@ -705,7 +746,7 @@ object SnapshotTable {
 
   /** Read the current snapshot (what LATEST points to). */
   def read(spark: SparkSession, root: String): DataFrame =
-    readVersion(spark, root, currentVersion(root))
+    read(spark, root, currentVersion(root))
 
   // ---- field-id schema evolution (rename / widen / drop / add) ----------
 
@@ -731,46 +772,6 @@ object SnapshotTable {
     * identical, which is the whole point of metadata-level evolution. */
   def appendEvo(df: DataFrame, root: String, fields: Seq[EvoField]): Long =
     swap(root, stage(root, currentFiles(root), df, schema = fields))
-
-  /** Evolution-aware read: every file generation is read under ITS OWN
-    * physical schema (the sidecar in effect at its write version) and
-    * resolved to the CURRENT schema by field id — renamed columns come back
-    * under their new name, narrower generations upcast to the widened type,
-    * dropped columns vanish, later-added columns null-fill. One scan job
-    * per schema GENERATION (bounded by the number of schema changes, never
-    * by file count), unioned by name — at 100 TB this plans as a handful of
-    * parquet scans with per-scan projections, no data rewrite ever. */
-  def readEvo(spark: SparkSession, root: String): DataFrame =
-    readEvoAt(spark, root, currentVersion(root))
-
-  /** [[readEvo]] at a specific version — evolution-aware TIME TRAVEL: the
-    * manifest AND the schema both resolve as of `v`, so a read of the
-    * pre-rename version comes back under the old column name (exactly what
-    * `VERSION AS OF` means on an evolving table). */
-  def readEvoAt(spark: SparkSession, root: String, v: Long): DataFrame = {
-    val current = schemaAt(root, v).getOrElse(
-      throw new IllegalStateException(s"no evolution schema at $root as of v$v"))
-    val files = manifestFiles(root, v)
-    // same refusal as readVersion: a partitioned generation keeps columns
-    // in DIRECTORY names — a flat file read would silently drop them
-    require(!files.exists(_.matches(".*/[^/]+=[^/]*/.*")),
-      s"snapshot v$v at $root has partitioned-generation data files — " +
-        "field-id evolution does not compose with partition-spec layouts")
-    // field-id evolution keys the physical schema on THIS table's version
-    // number in each entry's path, and the sidecars live under THIS root —
-    // a shallow clone's foreign entries would resolve generation numbers
-    // against the SOURCE's history. Evolution across a clone needs a deep
-    // clone (or sidecar copy); refuse loudly rather than mis-resolve.
-    require(!files.exists(f => Paths.get(f).isAbsolute),
-      s"readEvo: $root has foreign (cloned) manifest entries — " +
-        "field-id evolution does not compose with shallow clones")
-    readFilesEvo(spark, root, files, current)
-  }
-
-  /** Whether the table has field-id evolution metadata in effect at its
-    * current version (the switch between the plain and evolved read path). */
-  def hasEvoSchema(root: String): Boolean =
-    latestVersion(root).exists(schemaAt(root, _).isDefined)
 
   /** The evolution schema at the current version, BOOTSTRAPPING it from the
     * physical parquet schema if the table predates evolution: ids are
@@ -802,96 +803,92 @@ object SnapshotTable {
 
 
   /** ROW-LEVEL CHANGE FEED between two committed versions (Delta's
-    * `table_changes`, keyless): what a downstream consumer replays to
-    * bring a derived table current without rescanning the source. Output
-    * schema = the table's columns + `_change_type` ('insert'/'delete') +
-    * `_n` (the multiset multiplicity of that row-shape's change).
-    *
-    * Two physical paths, chosen by LINEAGE:
-    *  - APPEND lineage (v1's manifest ⊆ v2's — what INSERT/COPY INTO
-    *    produce): the changes are exactly the delta files' rows, so the
-    *    feed costs **O(delta)** — one scan of the new files, no diff, at
-    *    any table size. This is the path a 100 TB append-mostly table
-    *    serves from.
-    *  - REWRITE lineage (UPDATE/DELETE/MERGE/OPTIMIZE rewrote files): a
-    *    grouped multiset diff — both versions aggregate by ALL columns
-    *    (null-safe) and the count difference per row-shape emits as
-    *    insert/delete. O(v1 + v2), inherent to keyless CDC across a
-    *    rewrite (a keyed table would use its key; OPTIMIZE-style pure
-    *    re-layouts diff to zero rows, correctly).
-    *
-    * A window that CROSSES a schema change splits at every boundary and
-    * projects each sub-window to the v2 schema by field id
-    * ([[changesEvolving]]) — additive evolution only; DROP/narrowing
-    * crossings refuse. */
-  def changesBetween(spark: SparkSession, root: String, v1: Long,
+    * `table_changes`): what a downstream consumer replays to bring a
+    * derived table current without rescanning the source. Output = the
+    * table's columns + `_change_type` + `_n`. The table's metadata picks
+    * the kernel:
+    *  - KEYED (m43, Delta's CDF with row tracking) when a key is declared
+    *    and `v1` is at or after the version it was VALIDATED against
+    *    ([[keyDeclaredAt]]): only the exchanged files are diffed, updates
+    *    emit update_preimage/update_postimage, `_n` is always 1. A window
+    *    starting in pre-declaration history may hold duplicate keys, which
+    *    would fan out the key join into wrong multiplicities, so it takes
+    *    the keyless kernel instead.
+    *  - KEYLESS otherwise: 'insert'/'delete' with `_n` the multiset
+    *    multiplicity of that row-shape's change. Append lineage (v1's
+    *    manifest ⊆ v2's — INSERT/COPY INTO) reads only the delta files,
+    *    **O(delta)** at any table size; a rewrite (UPDATE/DELETE/MERGE/
+    *    OPTIMIZE) takes the grouped null-safe multiset diff, O(v1 + v2),
+    *    inherent to keyless CDC (pure re-layouts diff to zero rows).
+    * A window whose ends sit under different schema sidecars splits at
+    * every schema change and projects each sub-window to the v2 schema by
+    * field id ([[schemaCrossingChanges]]) — additive evolution only; DROP and
+    * narrowing crossings refuse. A keyed window from the table's birth
+    * (v1 = 0) takes the keyed kernel directly, reading every file under
+    * the v2 schema. Correctness is ENDPOINT semantics (net change between
+    * v1 and v2), like Delta CDF over a version range. */
+  def changes(spark: SparkSession, root: String, v1: Long,
       v2: Long): DataFrame = {
     require(v1 <= v2, s"CHANGES BETWEEN $v1 AND $v2: versions out of order")
-    if (schemaAt(root, v1) == schemaAt(root, v2))
-      changesWindow(spark, root, v1, v2)
-    else changesEvolving(spark, root, v1, v2)
+    val keys = declaredKey(root).filter(_ => v1 >= keyDeclaredAt(root))
+    if (schemaAt(root, v1) != schemaAt(root, v2) && !(keys.isDefined && v1 == 0))
+      schemaCrossingChanges(spark, root, v1, v2, keys)
+    else changesWindow(spark, root, v1, v2, keys)
   }
 
-  /** One same-schema window of the change feed — the original m42 kernel:
-    * append lineage reads only the delta files (O(delta)); a rewrite takes
-    * the grouped null-safe multiset diff (O(v1 + v2), inherent to keyless
-    * CDC across a rewrite). */
+  /** The rows `v2` appended over `v1` (0 = the empty table), read under
+    * `schema`, the shape of generation `gen` — the O(delta) read of append
+    * lineage behind the keyless feed's fast path and the table stream's
+    * row feed. None when the window is not append lineage (v1's manifest ⊄
+    * v2's) or a delta file was written under another generation than `gen`
+    * (a RESTORE re-adding pre-evolution files, an ALTER since a stream
+    * started): a forced-name read would NULL-fill renamed columns. A plain
+    * table (`gen` None) has no sidecar pinning its files' shape, so the
+    * delta FOOTERS must match `schema`; a table reshaped by an append
+    * (library-level misuse — the SQL surface always aligns) refuses with
+    * `reshaped`, because every read of it would silently NULL-fill or
+    * misread. */
+  private[sources] def appendedRows(spark: SparkSession, root: String,
+      v1: Long, v2: Long, schema: StructType, gen: Option[Seq[EvoField]],
+      reshaped: => String): Option[DataFrame] = {
+    val f1 = if (v1 == 0L) Set.empty[String] else manifestFiles(root, v1).toSet
+    val f2 = manifestFiles(root, v2)
+    val delta = f2.filterNot(f1)
+    val paths = delta.map(resolveEntry(root, _))
+    def shape(s: StructType) = s.fields.map(f => f.name -> f.dataType).toMap
+    if (gen.isEmpty && delta.nonEmpty) require(shape(spark.read
+      .option("mergeSchema", "true").parquet(paths: _*).schema) == shape(schema),
+      reshaped)
+    if (!f1.subsetOf(f2.toSet) ||
+        delta.exists(f => schemaAt(root, entryGeneration(f)) != gen)) None
+    else if (delta.isEmpty) Some(spark.createDataFrame(
+      new java.util.ArrayList[Row](), schema))
+    else Some(spark.read.schema(schema).parquet(paths: _*))
+  }
+
+  /** One same-schema window of the change feed: the keyed kernel when
+    * `keys` is given, else the m42 kernel — append lineage through
+    * [[appendedRows]], a rewrite through the grouped null-safe multiset
+    * diff. */
   private def changesWindow(spark: SparkSession, root: String, v1: Long,
-      v2: Long): DataFrame = {
+      v2: Long, keys: Option[Seq[String]]): DataFrame = {
     import org.apache.spark.sql.functions._
-    val b = readVersionCurrent(spark, root, v2)
+    if (keys.isDefined) return keyedChangesWindow(spark, root, v1, v2, keys.get)
+    val b = read(spark, root, v2)
     val cols = b.columns.toSeq
+    def inserts(df: DataFrame) =
+      df.groupBy(cols.map(col): _*).agg(count(lit(1)).as("_n"))
+        .withColumn("_change_type", lit("insert"))
+        .select(cols.map(col) ++ Seq(col("_change_type"), col("_n")): _*)
     // v1 = 0 is the EMPTY table (the stream's first window — the table's
     // birth): every v2 row is an insert, read generation-aware
-    if (v1 == 0L)
-      return b.groupBy(cols.map(col): _*).agg(count(lit(1)).as("_n"))
-        .withColumn("_change_type", lit("insert"))
-        .select(cols.map(col) ++ Seq(col("_change_type"), col("_n")): _*)
-    val f1 = manifestFiles(root, v1)
-    val f2 = manifestFiles(root, v2)
-    val delta = f2.filterNot(f1.toSet)
-    // the fast path needs every DELTA file's physical schema to BE the
-    // window's schema: ordinarily true (the window's commits wrote them
-    // under the constant schema the require above pins), but a RESTORE
-    // can re-add files from a pre-evolution generation — those must take
-    // the field-id diff path, not a forced-name read that would NULL-fill
-    // renamed columns
-    val windowSchema = schemaAt(root, v2)
-    val deltaSameSchema = windowSchema match {
-      case Some(_) =>
-        delta.forall(f => schemaAt(root, entryGeneration(f)) == windowSchema)
-      case None =>
-        // PLAIN table: no sidecar pins the physical schema, so a reshaped
-        // append (library-level misuse — the SQL surface always aligns)
-        // must be detected from the delta FOOTERS: a forced-name read
-        // would silently NULL-fill renamed/missing columns, and the
-        // multiset fallback's un-merged multi-file read is just as
-        // unsound — refuse loudly instead
-        delta.isEmpty || {
-          val ft = spark.read.option("mergeSchema", "true")
-            .parquet(delta.map(resolveEntry(root, _)): _*)
-            .schema.fields.map(f => f.name -> f.dataType).toMap
-          val want = b.schema.fields.map(f => f.name -> f.dataType).toMap
-          require(ft == want,
-            s"CHANGES BETWEEN $v1 AND $v2: the delta files' physical " +
-              "schema differs from the table's, and the table has no " +
-              "field-id evolution metadata — the diff is not well-defined; " +
-              "evolve schemas through ALTER TABLE (schema sidecars)")
-          true
-        }
-    }
-    if (f1.toSet.subsetOf(f2.toSet) && deltaSameSchema) {
-      if (delta.isEmpty)
-        return b.limit(0)
-          .withColumn("_change_type", lit(""))
-          .withColumn("_n", lit(0L))
-      spark.read.schema(b.schema)
-        .parquet(delta.map(resolveEntry(root, _)): _*)
-        .groupBy(cols.map(col): _*).agg(count(lit(1)).as("_n"))
-        .withColumn("_change_type", lit("insert"))
-        .select(cols.map(col) ++ Seq(col("_change_type"), col("_n")): _*)
-    } else {
-      val a = readVersionCurrent(spark, root, v1)
+    if (v1 == 0L) return inserts(b)
+    appendedRows(spark, root, v1, v2, b.schema, schemaAt(root, v2),
+      s"CHANGES BETWEEN $v1 AND $v2: the delta files' physical schema " +
+        "differs from the table's, and the table has no field-id evolution " +
+        "metadata — the diff is not well-defined; evolve schemas through " +
+        "ALTER TABLE (schema sidecars)").map(inserts).getOrElse {
+      val a = read(spark, root, v1)
       val ga = a.groupBy(cols.map(col): _*).agg(count(lit(1)).as("__na"))
         .select(cols.map(c => col(c).as(s"__a_$c")) :+ col("__na"): _*)
       val gb = b.groupBy(cols.map(col): _*).agg(count(lit(1)).as("__nb"))
@@ -909,15 +906,6 @@ object SnapshotTable {
           abs(col("__delta")).as("_n")): _*)
     }
   }
-
-  /** Read a manifest-entry subset under the table's CURRENT schema — the
-    * generation-aware twin of [[readFiles]], used by file-granular DML and
-    * the keyed change feed. */
-  def readFilesCurrent(spark: SparkSession, root: String,
-      files: Seq[String]): DataFrame =
-    if (hasEvoSchema(root)) readFilesEvo(spark, root, files,
-      ensureEvoSchema(spark, root))
-    else readFiles(spark, root, files)
 
   /** DECLARED PRIMARY KEY of the table (the m43 keyed-CDC contract): a
     * metadata sidecar (`_snapshots/table.key` — line 1 the comma-separated
@@ -952,11 +940,6 @@ object SnapshotTable {
       .map(_.stripPrefix("@declared:").trim.toLong).getOrElse(0L)
   }
 
-  /** Whether window-start `v1` may serve the KEYED diff: a key is declared
-    * and `v1` is at-or-after the version it was validated against. */
-  def keyedFeedApplies(root: String, v1: Long): Boolean =
-    declaredKey(root).isDefined && v1 >= keyDeclaredAt(root)
-
   /** Declare (or replace) the table's primary key after validating that
     * the CURRENT version is unique and non-null on it. The sidecar records
     * that version (see [[keyDeclaredAt]]) and lands via stage+ATOMIC_MOVE —
@@ -964,7 +947,7 @@ object SnapshotTable {
     * observe a torn/empty key file and silently route the keyless feed. */
   def declareKey(spark: SparkSession, root: String, keys: Seq[String]): Unit = {
     import org.apache.spark.sql.functions.{col, count, lit}
-    val t = readCurrent(spark, root)
+    val t = read(spark, root)
     keys.foreach(k => require(t.columns.exists(_.equalsIgnoreCase(k)),
       s"SET KEY: unknown column $k"))
     val kc = keys.map(col)
@@ -996,56 +979,22 @@ object SnapshotTable {
       }
     }
 
-  /** KEYED row-level change feed (m43 — Delta's CDF with row tracking):
-    * when the table has a [[declaredKey]], changes between two versions
-    * diff ONLY the rewritten files — `removed = v1 ∖ v2` holds every
-    * changed key's preimage, `added = v2 ∖ v1` every postimage, and a key
-    * whose row moved files unchanged cancels out — so the feed costs
-    * O(rewritten files) at ANY table size, never O(v1 + v2) like the
-    * keyless multiset diff (untouched files are never read; with
-    * file-granular UPDATE/DELETE the rewritten set IS the touched rows'
-    * files). Output = the table's columns + `_change_type`
-    * ('insert'/'delete'/'update_preimage'/'update_postimage') + `_n`
-    * (always 1 — keys are unique; kept for shape-compatibility with the
-    * keyless feed). A window crossing a schema change splits at every
-    * ALTER boundary and projects each keyed sub-window to the v2 schema by
-    * field id, exactly like [[changesBetween]] (additive evolution only —
-    * DROP/narrowing crossings refuse). Correctness is ENDPOINT semantics
-    * (net change between v1 and v2), exactly like Delta CDF over a version
-    * range. */
-  def keyedChangesBetween(spark: SparkSession, root: String, v1: Long,
-      v2: Long): DataFrame = {
-    require(declaredKey(root).isDefined,
-      s"keyedChangesBetween: $root has no declared key")
-    require(v1 <= v2, s"CHANGES BETWEEN $v1 AND $v2: versions out of order")
-    // the key was validated at declaration time only — a window STARTING
-    // in pre-declaration history may hold duplicate keys, which would fan
-    // out the key join and emit wrong multiplicities silently; such windows
-    // route to the keyless multiset diff at the call sites
-    require(v1 >= keyDeclaredAt(root),
-      s"keyedChangesBetween: window start v$v1 predates the key " +
-        s"declaration (validated at v${keyDeclaredAt(root)}) — uniqueness " +
-        "is unknown there; use the keyless feed")
-    // a window that CROSSES a schema change splits at every ALTER boundary
-    // and projects each keyed sub-window to the v2 schema by field id —
-    // the m43×m44 composition (r20); same-schema windows take the direct
-    // kernel below
-    if (v1 != 0 && schemaAt(root, v1) != schemaAt(root, v2))
-      return changesEvolvingWith(spark, root, v1, v2, keyed = true)
-    keyedChangesWindow(spark, root, v1, v2)
-  }
-
-  /** One same-schema window of the KEYED feed — the m43 kernel (see
-    * [[keyedChangesBetween]] for the contract and cost model). The declared
-    * key columns resolve BY NAME against the window-end schema; a key
-    * column renamed after declaration refuses loudly (re-declare the key
-    * under the new name) rather than mis-joining. */
+  /** One same-schema window of the KEYED feed — the m43 kernel. Changes
+    * diff ONLY the exchanged files: `removed = v1 ∖ v2` holds every changed
+    * key's preimage, `added = v2 ∖ v1` every postimage, and a key whose row
+    * moved files unchanged cancels out — so the feed costs O(rewritten
+    * files) at ANY table size, never O(v1 + v2) like the keyless multiset
+    * diff (with file-granular UPDATE/DELETE the rewritten set IS the
+    * touched rows' files). `_change_type` is 'insert'/'delete'/
+    * 'update_preimage'/'update_postimage'; `_n` is always 1 (keys are
+    * unique; kept for shape-compatibility with the keyless feed). The
+    * declared key columns resolve BY NAME against the window-end schema;
+    * a key column renamed after declaration refuses loudly (re-declare the
+    * key under the new name) rather than mis-joining. */
   private def keyedChangesWindow(spark: SparkSession, root: String, v1: Long,
-      v2: Long): DataFrame = {
+      v2: Long, keys: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions._
-    val keys = declaredKey(root).getOrElse(throw new IllegalStateException(
-      s"keyedChangesBetween: $root has no declared key"))
-    val cur = readVersionCurrent(spark, root, v2)
+    val cur = read(spark, root, v2)
     val cols = cur.columns.toSeq
     val f1 = if (v1 == 0) Seq.empty[String] else manifestFiles(root, v1)
     val f2 = manifestFiles(root, v2)
@@ -1058,14 +1007,10 @@ object SnapshotTable {
     // the table's LATEST — an ALTER committed after v2 must not re-shape a
     // historical feed
     def side(files: Seq[String]): DataFrame =
-      if (files.isEmpty) cur.limit(0)
-      else schemaAt(root, v2) match {
-        case Some(fields) => readFilesEvo(spark, root, files, fields)
-        case None => readFiles(spark, root, files)
-      }
+      if (files.isEmpty) cur.limit(0) else readFiles(spark, root, files, v2)
     val keyCols = keys.map(k => cols.find(_.equalsIgnoreCase(k)).getOrElse(
       throw new IllegalStateException(
-        s"keyedChangesBetween: declared key column $k missing from schema")))
+        s"keyed CHANGES: declared key column $k missing from schema")))
     val nonKey = cols.filterNot(c => keyCols.exists(_.equalsIgnoreCase(c)))
     if (removed.isEmpty) {
       // pure append: every added row is an insert — O(delta), no join
@@ -1104,9 +1049,10 @@ object SnapshotTable {
   /** SCHEMA-CROSSING change feed (m44, closing the r18 verdict's "what's
     * missing #5"): when the window straddles ALTER TABLE commits, split it
     * at every schema boundary, serve each sub-window under ITS generation
-    * with the m42 kernel, and PROJECT each piece to the v2 schema by FIELD
-    * ID — pre-ALTER preimages come back under renamed names, upcast to
-    * widened types, and NULL-filled on added columns (the Delta
+    * with the window kernel (keyed per sub-window when `keys` is given —
+    * the m43×m44 composition, r20), and PROJECT each piece to the v2 schema
+    * by FIELD ID — pre-ALTER preimages come back under renamed names,
+    * upcast to widened types, and NULL-filled on added columns (the Delta
     * `schemaTrackingLocation` answer). ADDITIVE evolution only: a window
     * crossing a DROP refuses (the dropped column's values cannot be
     * replayed), as does one crossing a narrowing (ALTER itself only widens,
@@ -1114,17 +1060,8 @@ object SnapshotTable {
     * rewrote files AND changed schema refuses — that diff is not
     * well-defined; metadata-only ALTERs (the SQL path) and appendEvo
     * deltas (new files under the new schema) both serve cleanly. */
-  private def changesEvolving(spark: SparkSession, root: String, v1: Long,
-      v2: Long): DataFrame =
-    changesEvolvingWith(spark, root, v1, v2, keyed = false)
-
-  /** The generalized schema-crossing kernel: `keyed = true` runs the m43
-    * KEYED diff per sub-window instead of the keyless multiset kernel (the
-    * m43×m44 composition, r20) — each sub-window diffs only exchanged
-    * files under ITS generation and the pre/postimage rows project to the
-    * v2 schema by field id; same refusal matrix either way. */
-  private def changesEvolvingWith(spark: SparkSession, root: String, v1: Long,
-      v2: Long, keyed: Boolean): DataFrame = {
+  private def schemaCrossingChanges(spark: SparkSession, root: String, v1: Long,
+      v2: Long, keys: Option[Seq[String]]): DataFrame = {
     import org.apache.spark.sql.functions._
     val target = schemaAt(root, v2).getOrElse(throw new IllegalArgumentException(
       s"CHANGES BETWEEN $v1 AND $v2 crosses a schema change — the diff " +
@@ -1141,13 +1078,12 @@ object SnapshotTable {
     def project(df: DataFrame, wEnd: Long): DataFrame =
       projectFeedTo(df, root, wEnd, target)
     def window(lo: Long, hi: Long): DataFrame =
-      if (keyed) keyedChangesWindow(spark, root, lo, hi)
-      else changesWindow(spark, root, lo, hi)
+      changesWindow(spark, root, lo, hi, keys)
     // a boundary version's own delta (b-1, b]: empty for the metadata-only
     // SQL ALTER (manifest carried), the appended files for appendEvo —
-    // readFilesEvo resolves them straight to the target schema (keyed
-    // tables emit one _n=1 insert per row, the m43 shape; keyless ones the
-    // grouped multiset shape)
+    // read straight under the target schema by field id (keyed tables emit
+    // one _n=1 insert per row, the m43 shape; keyless ones the grouped
+    // multiset shape)
     def boundary(b: Long): Option[DataFrame] = {
       val fPrev =
         if (b - 1 == 0) Seq.empty[String] else manifestFiles(root, b - 1)
@@ -1157,14 +1093,13 @@ object SnapshotTable {
           "changing schema — that diff is not well-defined (read each " +
           "side explicitly)")
       val delta = fB.filterNot(fPrev.toSet)
-      if (delta.isEmpty) None
-      else if (keyed) Some(readFilesEvo(spark, root, delta, target)
-        .withColumn("_change_type", lit("insert")).withColumn("_n", lit(1L))
-        .select(tgtCols.map(col) ++ Seq(col("_change_type"), col("_n")): _*))
-      else Some(readFilesEvo(spark, root, delta, target)
-        .groupBy(tgtCols.map(col): _*).agg(count(lit(1)).as("_n"))
-        .withColumn("_change_type", lit("insert"))
-        .select(tgtCols.map(col) ++ Seq(col("_change_type"), col("_n")): _*))
+      if (delta.isEmpty) None else {
+        val rows = scan(spark, root, delta, Some(target))
+        Some((if (keys.isDefined) rows.withColumn("_n", lit(1L))
+          else rows.groupBy(tgtCols.map(col): _*).agg(count(lit(1)).as("_n")))
+          .withColumn("_change_type", lit("insert"))
+          .select(tgtCols.map(col) ++ Seq(col("_change_type"), col("_n")): _*))
+      }
     }
     // only REAL schema changes are boundaries: commitEvo/appendEvo may
     // re-write a content-identical sidecar every batch, and splitting (or
@@ -1181,7 +1116,7 @@ object SnapshotTable {
     }
     if (v2 > lo) pieces += project(window(lo, v2), v2)
     pieces.reduceOption(_.unionByName(_)).getOrElse(
-      readVersionCurrent(spark, root, v2).limit(0)
+      read(spark, root, v2).limit(0)
         .withColumn("_change_type", lit("")).withColumn("_n", lit(0L)))
   }
 
@@ -1260,20 +1195,4 @@ object SnapshotTable {
         tsLike.findFirstIn(m).isDefined && m <= ts))
       .lastOption
   }
-
-  /** The current snapshot through the RIGHT read path: evolved tables
-    * resolve names/types by field id, plain tables read their manifests
-    * directly. What every SQL statement (reads and DML targets) uses once
-    * ALTER TABLE exists — DML over an evolved table then rewrites/appends
-    * under the CURRENT schema, and the new generation resolves against the
-    * newest sidecar, so evolution and DML compose. */
-  def readCurrent(spark: SparkSession, root: String): DataFrame =
-    if (hasEvoSchema(root)) readEvo(spark, root)
-    else read(spark, root)
-
-  /** [[readCurrent]] at a specific version — `VERSION AS OF` on a possibly
-    * evolved table (schema resolved as of that version). */
-  def readVersionCurrent(spark: SparkSession, root: String, v: Long): DataFrame =
-    if (schemaAt(root, v).isDefined) readEvoAt(spark, root, v)
-    else readVersion(spark, root, v)
 }

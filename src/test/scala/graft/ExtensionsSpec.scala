@@ -679,7 +679,7 @@ class ExtensionsSpec extends AnyFunSuite {
     try {
       spark.sql(s"INSERT INTO $name VALUES (3, 'c'), (7, 'x')") // v2 append
       // APPEND lineage: the feed reads ONLY the delta files — O(delta)
-      val feed12 = SnapshotTable.changesBetween(spark, s"$dir/t", 1, 2)
+      val feed12 = SnapshotTable.changes(spark, s"$dir/t", 1, 2)
       assert(feed12.inputFiles.forall(_.contains("/data/v2/")),
         s"append-lineage feed read beyond the delta: ${feed12.inputFiles.toSeq}")
       val f12 = feed12.collect()
@@ -706,7 +706,7 @@ class ExtensionsSpec extends AnyFunSuite {
         .toSet
       assert(f34 == Set((7L, "x", "delete", 2L)), f34)
       // identical versions diff to the empty feed (RESTORE-style lineage)
-      assert(SnapshotTable.changesBetween(spark, s"$dir/t", 4, 4).count() == 0)
+      assert(SnapshotTable.changes(spark, s"$dir/t", 4, 4).count() == 0)
       // DESCRIBE DETAIL: version/file-count from the manifest, byte total
       // from the sizes sidecar (metadata-only), column count from schema
       val det = spark.sql(s"DESCRIBE DETAIL $name").head()

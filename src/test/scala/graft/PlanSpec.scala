@@ -9,10 +9,18 @@ import org.scalatest.funsuite.AnyFunSuite
 class PlanSpec extends AnyFunSuite {
   import TestSpark._
 
+  /** The plan that ran: `collect()` executes THIS plan, so its adaptive
+    * stages finalize (`count()` would run a different, aggregated plan and
+    * leave this one at its initial AQE form). Only the root line is
+    * checked: the plan's own `== Initial Plan ==` section keeps a DPP
+    * subquery at `isFinalPlan=false` by design. */
   private def finalPlan(name: String): String = {
     val df = SparkEntry.queries(name)(spark, sfDir)
-    df.count() // finalize AQE
-    df.queryExecution.executedPlan.toString
+    df.collect()
+    val p = df.queryExecution.executedPlan.toString
+    assert(!p.linesIterator.next().contains("isFinalPlan=false"),
+      s"$name: AQE plan not final:\n$p")
+    p
   }
 
   test("b2: predicates and column pruning reach the parquet scan") {

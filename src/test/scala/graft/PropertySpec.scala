@@ -182,7 +182,7 @@ class PropertySpec extends AnyFunSuite {
       def counts(rs: Seq[(Option[Long], String)]) =
         rs.groupBy(identity).map { case (r, g) => r -> g.size.toLong }
       val c1 = counts(r1); val c2 = counts(r2)
-      val feed = SnapshotTable.changesBetween(spark, root, 1, 2).collect()
+      val feed = SnapshotTable.changes(spark, root, 1, 2).collect()
         .map(r => ((if (r.isNullAt(0)) None else Some(r.getLong(0)),
           r.getString(1)), r.getString(2), r.getLong(3)))
       val applied = scala.collection.mutable.Map(c1.toSeq: _*)

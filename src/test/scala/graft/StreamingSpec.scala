@@ -328,7 +328,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(SnapshotTable.versionMeta(root, 1).contains("0"))
     assert(SnapshotTable.versionMeta(root, 2).contains("1"))
     // time travel into the mid-stream state: version 1 holds only batch 0
-    val v1 = SnapshotTable.readVersion(spark, root, 1)
+    val v1 = SnapshotTable.read(spark, root, 1)
       .agg(sum("n")).head().getLong(0)
     assert(v1 > 0 && v1 < totalEvents, s"v1 should be a strict prefix, got $v1")
   }

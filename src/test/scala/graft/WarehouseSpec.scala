@@ -11,7 +11,7 @@ class WarehouseSpec extends AnyFunSuite {
 
   private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
-  test("readVersion refuses a partitioned-generation manifest instead of dropping columns") {
+  test("read refuses a partitioned-generation manifest instead of dropping columns") {
     import spark.implicits._
     import graft.sources.SnapshotTable
     val root = java.nio.file.Files.createTempDirectory("graft_partguard").toString
@@ -168,7 +168,7 @@ class WarehouseSpec extends AnyFunSuite {
     val v2 = Seq((1L, 11.0), (2L, 20.0), (3L, 30.0)).toDF("k", "v")
     assert(SnapshotTable.commit(v2, root) == 2L)
     // time travel: v1 still fully readable after v2 is current
-    assert(SnapshotTable.readVersion(s, root, 1).count() == 2)
+    assert(SnapshotTable.read(s, root, 1).count() == 2)
     assert(SnapshotTable.read(s, root).count() == 3)
     // CRASH between prepare and swap: data files + manifest for v3 exist on
     // disk, but readers must still resolve the complete v2 — never a torn
@@ -243,7 +243,7 @@ class WarehouseSpec extends AnyFunSuite {
     assert(SnapshotTable.read(s, root).collect().map(_.getLong(0)).toSeq == Seq(3L))
     assert(SnapshotTable.latestVersion(root).contains(3L))
     // expired versions fail CLEANLY at manifest resolution (no torn reads)
-    intercept[IllegalArgumentException] { SnapshotTable.readVersion(s, root, 1) }
+    intercept[IllegalArgumentException] { SnapshotTable.read(s, root, 1) }
     assert(SnapshotTable.versionMeta(root, 2).isEmpty, "expired meta must go too")
     // their data dirs are actually gone — the disk is reclaimed
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(root, "data", "v1")))
@@ -269,7 +269,7 @@ class WarehouseSpec extends AnyFunSuite {
     // references them (the append-sharing case a naive per-version dir
     // delete would corrupt)
     assert(SnapshotTable.expire(root, keepLast = 1) == Seq(1L))
-    intercept[IllegalArgumentException] { SnapshotTable.readVersion(s, root, 1) }
+    intercept[IllegalArgumentException] { SnapshotTable.read(s, root, 1) }
     assert(JF.exists(JP.get(root, "data", "v1")), "v1 files still referenced by v2")
     assert(SnapshotTable.read(s, root).orderBy("k")
       .collect().map(_.getLong(0)).toSeq == Seq(1L, 2L))
@@ -292,18 +292,18 @@ class WarehouseSpec extends AnyFunSuite {
     SnapshotTable.commit((1L to 10L).toDF("k").repartition(4), root)
     SnapshotTable.append((11L to 20L).toDF("k").repartition(4), root)
     SnapshotTable.append((21L to 30L).toDF("k").repartition(4), root)
-    val fragFiles = SnapshotTable.readVersion(s, root, 3).inputFiles.length
+    val fragFiles = SnapshotTable.read(s, root, 3).inputFiles.length
     assert(fragFiles == 12, s"expected 12 fragment files, got $fragFiles")
     // compact = rewrite the same rows into 2 files, commit as v4
     SnapshotTable.commit(SnapshotTable.read(s, root).repartition(2), root,
       meta = "compact")
-    val compFiles = SnapshotTable.readVersion(s, root, 4).inputFiles.length
+    val compFiles = SnapshotTable.read(s, root, 4).inputFiles.length
     assert(compFiles == 2, s"expected 2 compacted files, got $compFiles")
     assert(SnapshotTable.latestMeta(root).contains("compact"))
     // content-invariant, and the PRE-compaction version stays time-travelable
     assert(SnapshotTable.read(s, root).orderBy("k").collect().map(_.getLong(0))
       .toSeq == (1L to 30L))
-    assert(SnapshotTable.readVersion(s, root, 3).orderBy("k").collect()
+    assert(SnapshotTable.read(s, root, 3).orderBy("k").collect()
       .map(_.getLong(0)).toSeq == (1L to 30L))
     // vacuum to the compacted version only: every fragment dir is
     // unreferenced now and reclaimed; the table still reads in full
@@ -362,7 +362,7 @@ class WarehouseSpec extends AnyFunSuite {
     SnapshotTable.commit(Seq((1L, 1.0), (2L, 2.0)).toDF("k", "v"), root)
     SnapshotTable.append(Seq((3L, 3.0)).toDF("k", "v"), root) // LATEST = 2
     val before = SnapshotTable.read(s, root).orderBy("k").collect().toSeq
-    val v1Before = SnapshotTable.readVersion(s, root, 1L).count()
+    val v1Before = SnapshotTable.read(s, root, 1L).count()
     // plant both orphan kinds: task-retry debris in a live version dir,
     // and a staged-but-never-swapped v3 from a crashed writer
     JF.write(JP.get(root, "data", "v1", "part-retry-debris.parquet"),
@@ -378,7 +378,7 @@ class WarehouseSpec extends AnyFunSuite {
     // reads were never polluted and are untouched by the sweep; time travel
     // to v1 still works (its manifest + listed files survive)
     assert(SnapshotTable.read(s, root).orderBy("k").collect().toSeq == before)
-    assert(SnapshotTable.readVersion(s, root, 1L).count() == v1Before)
+    assert(SnapshotTable.read(s, root, 1L).count() == v1Before)
     // idempotent: a second sweep finds nothing
     assert(SnapshotTable.removeOrphans(root).isEmpty)
     // a crashed PARTITIONED writer leaves a staged dir with SUBDIRECTORIES
@@ -460,7 +460,7 @@ class WarehouseSpec extends AnyFunSuite {
           case (_, _, fs, dir) => s.read.option("basePath", dir)
             .parquet(fs.map(ST.resolveEntry(root, _)): _*).select("k", "v")
         }.reduce(_ unionByName _)
-        else ST.readCurrent(s, root)
+        else ST.read(s, root)
       assert(read.as[(Long, Double)].collect().toSeq.sorted == rows, kind)
     }
   }
@@ -665,7 +665,7 @@ class WarehouseSpec extends AnyFunSuite {
       "post-purge view != plain filter")
     assert(fileState() == before, "purge touched a v1 data file in place")
     // the pre-purge version still serves the pre-delete rows exactly
-    assert(keys(SnapshotTable.readVersion(spark, root, 1L)) == keys(data),
+    assert(keys(SnapshotTable.read(spark, root, 1L)) == keys(data),
       "v1 no longer time-travelable after the purge commit")
     // and a doubly-applied DV read over v2 remains idempotent: rewritten
     // files miss the DV join, cold files re-apply the same bitmap
@@ -673,7 +673,7 @@ class WarehouseSpec extends AnyFunSuite {
     assert(keys(again) == want)
   }
 
-  test("field-id evolution: rename/widen/drop never rewrite old files; readEvo maps by id") {
+  test("field-id evolution: rename/widen/drop never rewrite old files; read maps by id") {
     import graft.sources.{EvoField, SnapshotTable}
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
@@ -706,10 +706,10 @@ class WarehouseSpec extends AnyFunSuite {
     assert(v1Schema.fieldNames.contains("status") &&
       v1Schema("price").dataType.typeName == "integer",
       s"old footer must keep old physical schema, got $v1Schema")
-    val out = SnapshotTable.readEvo(spark, root)
+    val out = SnapshotTable.read(spark, root)
       .orderBy("k").collect().map(r => (r.getLong(0), r.getLong(1),
         Option(r.getString(2)))).toSeq
-    assert(SnapshotTable.readEvo(spark, root).columns.toSeq == Seq("k", "price", "tag"),
+    assert(SnapshotTable.read(spark, root).columns.toSeq == Seq("k", "price", "tag"),
       "dropped column must vanish; surviving columns under current names")
     assert(out == Seq((1L, 10L, None), (2L, 20L, None), (3L, 30L, None),
       (4L, 40L, Some("x"))),
@@ -1071,7 +1071,7 @@ class WarehouseSpec extends AnyFunSuite {
     SnapshotTable.commit(Seq((1L, 1.0)).toDF("k", "v"), s"$d1/t")
     SnapshotTable.append(Seq((2L, 2.0)).toDF("k", "v2"), s"$d1/t") // reshaped!
     val e1 = intercept[Exception](
-      SnapshotTable.changesBetween(spark, s"$d1/t", 1, 2).collect())
+      SnapshotTable.changes(spark, s"$d1/t", 1, 2).collect())
     assert(e1.getMessage.contains("field-id evolution metadata"), e1.getMessage)
     // (2) a CONTENT-IDENTICAL schema sidecar is not a boundary: a rewrite
     // that re-writes the same fields (a recompute pipeline's habit) must
@@ -1082,7 +1082,7 @@ class WarehouseSpec extends AnyFunSuite {
       s"$d2/t", fields)
     SnapshotTable.commitEvo(Seq((1L, 1.0), (2L, 5.0)).toDF("k", "v"),
       s"$d2/t", fields) // rewrite WITH an identical sidecar
-    val f12 = SnapshotTable.changesBetween(spark, s"$d2/t", 1, 2).collect()
+    val f12 = SnapshotTable.changes(spark, s"$d2/t", 1, 2).collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getString(2))).toSet
     assert(f12 == Set((2L, 2.0, "delete"), (2L, 5.0, "insert")), f12.toString)
     // ...and inside a CROSSING window, a post-ALTER rewrite carrying a
@@ -1093,7 +1093,7 @@ class WarehouseSpec extends AnyFunSuite {
     SnapshotTable.commitSchemaChange(s"$d2/t", fields3, meta = "alter")  // v3
     SnapshotTable.commitEvo(Seq((1L, 1.0, "x"), (2L, 5.0, "y"))
       .toDF("k", "v", "note"), s"$d2/t", fields3)                        // v4
-    val f14 = SnapshotTable.changesBetween(spark, s"$d2/t", 1, 4).collect()
+    val f14 = SnapshotTable.changes(spark, s"$d2/t", 1, 4).collect()
       .map(r => (r.getLong(0), r.getDouble(1),
         Option(r.getString(2)).getOrElse("-"), r.getString(3))).toSet
     assert(f14 == Set(
@@ -1136,20 +1136,20 @@ class WarehouseSpec extends AnyFunSuite {
     try {
       spark.sql(s"ALTER TABLE $name SET KEY (k)")
       assert(SnapshotTable.keyDeclaredAt(root) == 2L)
-      // the keyed kernel REFUSES a pre-declaration window start (duplicate
-      // keys there would fan out the key join into wrong multiplicities)
-      val e = intercept[Exception](
-        SnapshotTable.keyedChangesBetween(spark, root, 1, 2).collect())
-      assert(e.getMessage.contains("predates the key declaration"),
-        e.getMessage)
-      // ...and SQL routes that window to the KEYLESS multiset diff, whose
-      // multiplicities are exact: two (1, *) shapes deleted, one inserted
-      val f12 = spark.sql(
-        s"SELECT k, v, _change_type, _n FROM $name CHANGES BETWEEN 1 AND 2")
-        .collect().map(r => (r.getLong(0), r.getDouble(1), r.getString(2),
-          r.getLong(3))).toSet
-      assert(f12 == Set((1L, 1.0, "delete", 1L), (1L, 2.0, "delete", 1L),
-        (1L, 3.0, "insert", 1L)), f12.toString)
+      // a pre-declaration window start never reaches the keyed kernel
+      // (duplicate keys there would fan out the key join into wrong
+      // multiplicities): the feed itself and SQL both route it to the
+      // KEYLESS multiset diff, whose multiplicities are exact — two (1, *)
+      // shapes deleted, one inserted
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select("k", "v", "_change_type", "_n").collect()
+          .map(r => (r.getLong(0), r.getDouble(1), r.getString(2),
+            r.getLong(3))).toSet
+      val keyless = Set((1L, 1.0, "delete", 1L), (1L, 2.0, "delete", 1L),
+        (1L, 3.0, "insert", 1L))
+      assert(rows(SnapshotTable.changes(spark, root, 1, 2)) == keyless)
+      val f12 = rows(spark.sql(s"SELECT * FROM $name CHANGES BETWEEN 1 AND 2"))
+      assert(f12 == keyless, f12.toString)
       // windows starting AT/after the declaration serve keyed semantics
       spark.sql(s"UPDATE $name SET v = v + 1 WHERE k = 2")
       val f23 = spark.sql(
@@ -1159,5 +1159,64 @@ class WarehouseSpec extends AnyFunSuite {
       assert(f23 == Set((2L, 5.0, "update_preimage"),
         (2L, 6.0, "update_postimage")), f23.toString)
     } finally GraftDmlRegistry.unregister(name)
+  }
+
+  test("snapshot table: read, readFiles and changes pick their kernel from the table's metadata") {
+    val s = spark
+    import s.implicits._
+    import graft.sources.{EvoField, SnapshotTable => ST}
+    // every kind runs one history: v1 commit, v2 append, (keyed kinds
+    // declare the key here, validated at v2), v3 full rewrite changing k=2,
+    // v4 a metadata-only commit — for the evolved kinds the ALTER that
+    // renames n to m and widens it int -> bigint — and v5 an append
+    val altered = Seq(EvoField(1, "k", "bigint"), EvoField(2, "m", "bigint"))
+    def history(evolved: Boolean, keyed: Boolean): String = {
+      val root = java.nio.file.Files.createTempDirectory("graft_snap_kinds").toString
+      ST.commit(Seq((1L, 10), (2L, 20)).toDF("k", "n"), root)
+      ST.append(Seq((3L, 30)).toDF("k", "n"), root)
+      if (keyed) ST.declareKey(s, root, Seq("k"))
+      ST.commit(Seq((1L, 10), (2L, 21), (3L, 30)).toDF("k", "n"), root)
+      if (evolved) {
+        ST.ensureEvoSchema(s, root)
+        ST.commitSchemaChange(root, altered, "alter")
+        ST.appendEvo(Seq((4L, 40L)).toDF("k", "m"), root, altered)
+      } else {
+        ST.commitFiles(root, ST.manifestFiles(root, 3L))
+        ST.append(Seq((4L, 40)).toDF("k", "n"), root)
+      }
+      root
+    }
+    def shown(df: org.apache.spark.sql.DataFrame): (String, Set[String]) =
+      (df.columns.mkString(","), df.collect().map(_.mkString(",")).toSet)
+    val before = "k,n"
+    val keyless23 = Set("2,20,delete,1", "2,21,insert,1")
+    val keyed23 = Set("2,20,update_preimage,1", "2,21,update_postimage,1")
+    val feed = ",_change_type,_n"
+    // (kind, evolved, keyed, latest columns, window (2, 3], window (2, 5])
+    val kinds = Seq(
+      ("plain", false, false, before, keyless23),
+      ("field-id evolved", true, false, "k,m", keyless23),
+      ("keyed", false, true, before, keyed23),
+      ("keyed across an ALTER", true, true, "k,m", keyed23))
+    kinds.foreach { case (kind, evolved, keyed, cols, window23) =>
+      val root = history(evolved, keyed)
+      assert(ST.keyDeclaredAt(root) == (if (keyed) 2L else 0L), kind)
+      assert(shown(ST.read(s, root)) ==
+        (cols, Set("1,10", "2,21", "3,30", "4,40")), kind)
+      // time travel to before the ALTER: the old column names
+      assert(shown(ST.read(s, root, 2L)) ==
+        (before, Set("1,10", "2,20", "3,30")), kind)
+      // a file subset (both of v2's generations) under the latest schema
+      assert(shown(ST.readFiles(s, root, ST.manifestFiles(root, 2L), 5L)) ==
+        (cols, Set("1,10", "2,20", "3,30")), kind)
+      // a same-schema window: the keyed kernel pairs k=2's pre/postimage
+      assert(shown(ST.changes(s, root, 2L, 3L)) == (before + feed, window23), kind)
+      // across the ALTER: split at v4, projected to the v5 names
+      assert(shown(ST.changes(s, root, 2L, 5L)) ==
+        (cols + feed, window23 + "4,40,insert,1"), kind)
+      // a window starting before the key's validation version is keyless
+      assert(shown(ST.changes(s, root, 1L, 3L)) ==
+        (before + feed, keyless23 + "3,30,insert,1"), kind)
+    }
   }
 }
