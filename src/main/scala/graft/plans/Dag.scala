@@ -9,6 +9,9 @@ import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** SURVEY §2 J — the orchestration component (the reference's nominal
   * domain): declare Spark jobs + dependencies as a typed DAG, execute
@@ -49,6 +52,25 @@ final case class JobRun(
     error: Option[String])
 
 object Dag {
+
+  /** A job output that already exists, so [[Dag.run]] records it without a
+    * `count()`: rows held by the driver (`LocalRelation`), or a scan of
+    * committed files (`LogicalRelation` over a `HadoopFsRelation`), bare or
+    * under a projection of plain columns. Nothing in such a plan can fail
+    * at execution except reading the files themselves. A filter, a join or
+    * a computed column is work, and still materializes. */
+  private def outputExists(df: DataFrame): Boolean = {
+    def fileScan(p: LogicalPlan) = p match {
+      case r: LogicalRelation => r.relation.isInstanceOf[HadoopFsRelation]
+      case _ => false
+    }
+    df.queryExecution.optimizedPlan match {
+      case _: LocalRelation => true
+      case Project(cols, child) =>
+        cols.forall(_.isInstanceOf[AttributeReference]) && fileScan(child)
+      case p => fileScan(p)
+    }
+  }
 
   /** DYNAMIC TASK MAPPING (Airflow 2.3's `expand()`): the task COUNT is
     * runtime data, not DAG-authoring data. Stage 1 runs `prelude` as an
@@ -117,10 +139,15 @@ final class Dag(val jobs: Seq[Job]) {
   }
 
   /** J2+J3+J4: execute the DAG. Each job materializes once (count) so
-    * failures surface here; branches whose deps are all satisfied run
-    * concurrently on a fixed pool. Failed jobs retry up to `retries` times
-    * with linear backoff; jobs downstream of a failure are skipped. Returns
-    * per-job run records (J4 lineage included) and the completed DataFrames.
+    * failures surface here, unless its output already exists (see
+    * [[Dag.outputExists]]: rows the driver holds, or a plain scan of
+    * committed files), which is recorded without launching a Spark job.
+    * That rule has one visible consequence: a committed file that is
+    * corrupt fails its first consumer, not the node that returned the scan.
+    * Branches whose deps are all satisfied run concurrently on a fixed
+    * pool. Failed jobs retry up to `retries` times with linear backoff; jobs
+    * downstream of a failure are skipped. Returns per-job run records (J4
+    * lineage, from `inputFiles`, included) and the completed DataFrames.
     */
   def run(spark: SparkSession, parallelism: Int = 4, backoffMs: Long = 10)
       : (Map[String, DataFrame], Seq[JobRun]) = {
@@ -166,18 +193,15 @@ final class Dag(val jobs: Seq[Job]) {
               attempt += 1
               try {
                 val df = job.run(spark, depMap)
-                // materialize: a job is "done" when its output exists. A
-                // DRIVER-LOCAL output (LocalRelation — e.g. a version-fresh
-                // node's skip marker, j17's 334-of-337 case) already exists
-                // in driver memory: counting it would launch a real cluster
-                // job per skipped node just to scan rows the driver holds,
-                // which at inventory scale dominates the whole run (measured
-                // 5.7 s -> the 3 dirty nodes' cost). Anything with a remote
-                // subtree still materializes through count().
-                df.queryExecution.optimizedPlan match {
-                  case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => ()
-                  case _ => df.count()
-                }
+                // materialize: a job is "done" when its output exists. An
+                // output that exists already is not counted: driver-held
+                // rows (j17's version-fresh skip markers, whose counts were
+                // 5.7 s of an inventory run) or a plain scan of committed
+                // files (a fixture, j5's read-back), so a corrupt committed
+                // file fails its first consumer, not this node. Anything
+                // that filters or computes counts here, since it can fail
+                // at execution.
+                if (!Dag.outputExists(df)) df.count()
                 result = Some(df)
               } catch {
                 case NonFatal(e) =>

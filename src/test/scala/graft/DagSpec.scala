@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions.{assert_true, col, count, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.plans.{Dag, Job}
@@ -10,6 +12,38 @@ class DagSpec extends AnyFunSuite {
 
   private def noop(name: String, deps: String*) =
     Job(name, deps.toSeq, 0, (s, _) => Tables(s, sfDir).region)
+
+  /** `body`'s result and the number of Spark jobs it launched. A listener
+    * counts job starts between two one-task fence jobs: the listener bus is
+    * asynchronous, but it delivers in order, so once the second fence's
+    * start arrives every job `body` launched has been counted (the status
+    * store lags the same way, and keeps only the last 1000 jobs). */
+  private def jobsLaunched[T](body: => T): (Int, T) = {
+    val sc = spark.sparkContext
+    val fenceKey = "graft.dagspec.fence"
+    val seen = new java.util.concurrent.atomic.AtomicInteger(0)
+    val fences = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val counting = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(fenceKey))) match {
+          case Some(f) => counting.set(f == "open"); fences.put(f)
+          case None => if (counting.get()) { seen.incrementAndGet(); () }
+        }
+    }
+    def fence(f: String): Unit = {
+      sc.setLocalProperty(fenceKey, f)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(fenceKey, null)
+      assert(fences.poll(60, java.util.concurrent.TimeUnit.SECONDS) == f)
+    }
+    sc.addSparkListener(listener)
+    try {
+      fence("open")
+      val r = body
+      fence("close")
+      (seen.get(), r)
+    } finally sc.removeSparkListener(listener)
+  }
 
   test("cycle detection rejects the DAG at construction") {
     val e = intercept[IllegalArgumentException] {
@@ -51,12 +85,11 @@ class DagSpec extends AnyFunSuite {
     // and must still flow to downstream jobs and the returned dfs map.
     val spark2 = spark
     import spark2.implicits._
-    val before = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
-    val (dfsLocal, runsLocal) = new Dag(Seq(
+    val (jobs, (dfsLocal, runsLocal)) = jobsLaunched(new Dag(Seq(
       Job("local", Nil, 0, (s, _) => Seq((1L, "fresh")).toDF("v", "tag"))
-    )).run(spark, parallelism = 2)
+    )).run(spark, parallelism = 2))
     // the whole point: zero Spark jobs launched for a driver-held output
-    assert(spark.sparkContext.statusTracker.getJobIdsForGroup(null).length == before)
+    assert(jobs == 0)
     assert(runsLocal.head.status == "ok" && runsLocal.head.inputs.isEmpty)
     assert(dfsLocal("local").count() == 1L) // output exists and is correct
     // and it still flows to a downstream job like any materialized output
@@ -67,6 +100,85 @@ class DagSpec extends AnyFunSuite {
     assert(runs.map(r => r.name -> r.status).toMap ==
       Map("local" -> "ok", "consumer" -> "ok"))
     assert(dfs("consumer").collect().map(_.getLong(0)).toSeq == Seq(1L))
+  }
+
+  test("outputs that already exist (a fixture scan, its plain columns, committed files) launch no job and stay consumable") {
+    val out = java.nio.file.Files.createTempDirectory("dagspec_scan").toString + "/nation"
+    try {
+      val t = Tables(spark, sfDir)
+      t.nation.select(col("n_nationkey"), col("n_name")).write.parquet(out)
+      // built before the count: a bare read.parquet infers its schema with
+      // a job of its own, and the first read of a fixture resolves it once
+      val written = spark.read.parquet(out)
+      t.region; t.nation
+      val (jobs, (dfs, runs)) = jobsLaunched(new Dag(Seq(
+        Job("scan", Nil, 0, (s, _) => Tables(s, sfDir).region),
+        Job("cols", Nil, 0, (s, _) =>
+          Tables(s, sfDir).nation.select(col("n_name"), col("n_nationkey"))),
+        Job("written", Nil, 0, (_, _) => written)
+      )).run(spark, parallelism = 3))
+      assert(jobs == 0, runs)
+      val byName = runs.map(r => r.name -> r).toMap
+      assert(runs.forall(_.status == "ok"), runs)
+      assert(byName("scan").inputs == Seq("region.parquet"))
+      assert(byName("cols").inputs == Seq("nation.parquet"))
+      assert(byName("written").inputs.nonEmpty &&
+        byName("written").inputs.forall(_.startsWith("part-")), byName("written"))
+      // each one flows downstream like any materialized output
+      val (dfs2, runs2) = new Dag(Seq(
+        Job("scan", Nil, 0, (_, _) => dfs("scan")),
+        Job("cols", Nil, 0, (_, _) => dfs("cols")),
+        Job("written", Nil, 0, (_, _) => dfs("written")),
+        Job("joined", Seq("scan", "cols", "written"), 0, (_, d) =>
+          d("cols").join(d("written"), Seq("n_nationkey", "n_name"))
+            .agg(count(lit(1)).as("n"))
+            .crossJoin(d("scan").agg(count(lit(1)).as("regions"))))
+      )).run(spark, parallelism = 2)
+      assert(runs2.forall(_.status == "ok"), runs2)
+      val row = dfs2("joined").head()
+      assert(row.getLong(0) == 25L && row.getLong(1) == 5L)
+    } finally Tables.rmrf(new java.io.File(out).getParent)
+  }
+
+  test("work still materializes: filters and aggregates launch a job; an execution-time failure fails its own node") {
+    Tables(spark, sfDir).nation
+    def jobsOf(df: org.apache.spark.sql.SparkSession => org.apache.spark.sql.DataFrame) = {
+      val (jobs, (_, runs)) = jobsLaunched(new Dag(Seq(Job("work", Nil, 0,
+        (s, _) => df(s)))).run(spark))
+      assert(runs.head.status == "ok", runs)
+      jobs
+    }
+    assert(jobsOf(s => Tables(s, sfDir).nation.filter(col("n_regionkey") === 1)) >= 1)
+    assert(jobsOf(s => Tables(s, sfDir).nation.groupBy(col("n_regionkey")).count()) >= 1)
+    // the frame builds fine; only running it fails, so only count() sees
+    // it (a filter: count() would prune a failing select column unread)
+    val (_, runs) = new Dag(Seq(
+      Job("bad", Nil, 1, (s, _) =>
+        Tables(s, sfDir).region.filter(assert_true(lit(false)).isNull)),
+      Job("child", Seq("bad"), 0, (s, d) => d("bad"))
+    )).run(spark)
+    val byName = runs.map(r => r.name -> r).toMap
+    assert(byName("bad").status == "failed" && byName("bad").attempts == 2, byName("bad"))
+    assert(byName("child").status == "skipped", byName("child"))
+  }
+
+  test("j5 launches 5 Spark jobs per evaluation; its read-back schema is the inferred one") {
+    val t = Tables(spark, sfDir)
+    t.customer // the fixture's one-time resolution is not j5's work
+    val (jobs, df) = jobsLaunched(SparkEntry.queries("j5_dag_incremental")(spark, sfDir))
+    assert(jobs == 5)
+    assert(df.collect().map(r => (r.getString(0), r.getInt(1), r.getInt(2))).toSeq ==
+      Seq(("load_customer", 1, 0), ("nation_counts", 1, 0), ("segment_counts", 1, 0)))
+    // the column types j5 writes: long and int keys, a string, a count
+    val dims = t.customer.select(col("c_custkey"), col("c_mktsegment"), col("c_nationkey"))
+    val base = java.nio.file.Files.createTempDirectory("dagspec_j5").toString
+    try Seq(dims, dims.groupBy(col("c_mktsegment")).agg(count(lit(1)).as("n")),
+        dims.groupBy(col("c_nationkey")).agg(count(lit(1)).as("n"))).zipWithIndex.foreach {
+      case (body, i) =>
+        val p = s"$base/$i"
+        body.coalesce(1).write.parquet(p)
+        assert(spark.read.schema(body.schema).parquet(p).schema == spark.read.parquet(p).schema)
+    } finally Tables.rmrf(base)
   }
 
   test("retry succeeds after transient failures and records attempts") {

@@ -146,6 +146,18 @@ class StreamingSpec extends AnyFunSuite {
     assert(views.isEmpty, s"leaked sink views: ${views.toSeq}")
   }
 
+  test("a second i1 run compiles no new classes; the caller's session keeps no isolation conf") {
+    // each stream runs on a session clone; with its own artifact
+    // classloader every start recompiled the same generated classes
+    val key = "spark.sql.artifact.isolation.enabled"
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    SparkEntry.queries("i1_stream_tumbling")(spark, sfDir).collect()
+    val before = compiles.getCount
+    SparkEntry.queries("i1_stream_tumbling")(spark, sfDir).collect()
+    assert(compiles.getCount - before == 0, "classes compiled by a second i1 run")
+    assert(spark.conf.getAll.get(key).isEmpty)
+  }
+
   test("a StreamingQueryListener on the caller's session sees i1 start, progress and terminate") {
     // guards the choice to start streams on the caller's session: a stream
     // started on a clone reports nothing to the caller's listeners

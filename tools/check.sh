@@ -11,7 +11,10 @@ shift 2>/dev/null || true
 # identity and scoped conf (Tables.withConf) live in graft.Tables, SQL
 # function registration in graft.GraftExtensions, and the one conf write on
 # a caller's session — around a stream start — in StreamingQueries'
-# startStream. newSession() would bypass the conf owner. The vector
+# startStream, which is also the one place a stream starts (`.start(` or
+# `.toTable(` of a DataStreamWriter), so every stream runs under its confs,
+# the shared codegen cache included. newSession() would bypass the conf
+# owner. The vector
 # numerics and the serve cut (HALF_UP 6dp cosine, lower-id ties) live in
 # graft.sources.Ann. The snapshot-table layout (`_snapshots/`, the
 # per-version `data/v<N>` dirs) lives in graft.sources.SnapshotTable; the
@@ -30,8 +33,9 @@ owned() { grep -rnE "$1" src/main --include='*.scala' | grep -vE "^src/main/scal
 strays="$(owned 'def rmrf\b|System\.identityHashCode' Tables.scala
   owned 'createOrReplaceTempFunction' GraftExtensions.scala
   owned 'conf\.(set|unset)\(' 'Tables.scala|operators/StreamingQueries.scala'
+  owned '\.(start|toTable)\(' operators/StreamingQueries.scala
   awk '/ def startStream\(/ {h = 1} h && /^  }$/ {h = 0}
-    !h && /conf\.(set|unset)\(/ {print FILENAME ":" FNR ":" $0}' \
+    !h && /conf\.(set|unset)\(|\.(start|toTable)\(/ {print FILENAME ":" FNR ":" $0}' \
     src/main/scala/graft/operators/StreamingQueries.scala
   owned 'newSession\(\)' ''
   owned 'def (dotd|round6|topCells|queryVec)\b|cosine_sim\(transform\(embedding' \
